@@ -118,10 +118,10 @@ def _require_green_suite() -> dict:
     # just split across N concurrent pytest subprocesses (each its own
     # local[8] session; 4 shards saturate the 32-core box).
     # SPARK_GRAFT_GATE_SHARDS=1 restores the single-process gate.
-    n_shards = int(os.environ.get("SPARK_GRAFT_GATE_SHARDS", "4"))
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    from run_suite_sharded import gate_shards, run_sharded
+    n_shards = gate_shards()
     if n_shards > 1:
-        sys.path.insert(0, os.path.join(repo, "tools"))
-        from run_suite_sharded import run_sharded
         res = run_sharded(n_shards, deselect, env=env)
         summary, rc, failed = res["summary"], res["rc"], res["failed"]
     else:

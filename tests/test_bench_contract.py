@@ -385,3 +385,55 @@ def test_scratch_dirs_cover_spark_local_dirs(monkeypatch):
     monkeypatch.delenv("SPARK_LOCAL_DIRS")
     monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF")
     assert bench._scratch_dirs() == [tempfile.gettempdir()]
+
+
+def _sharded_runner():
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    import run_suite_sharded
+    return run_suite_sharded
+
+
+def test_gate_shards_garbage_falls_back_to_default(monkeypatch):
+    """A non-integer SPARK_GRAFT_GATE_SHARDS runs the default sharded
+    gate instead of raising ValueError."""
+    import subprocess
+    rss = _sharded_runner()
+    calls = []
+
+    class P:
+        returncode = 0
+        stdout = "3 passed in 1.00s"
+        stderr = ""
+
+    def fake_run(cmd, **kw):
+        calls.append(cmd)
+        return P()
+
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_REQUIRE_GREEN", raising=False)
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    for raw in ("four", "", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_GATE_SHARDS", raw)
+        assert rss.gate_shards() == rss.DEFAULT_SHARDS
+        calls.clear()
+        out = bench._require_green_suite()
+        assert out["tests_green"] is True
+        assert len(calls) == rss.DEFAULT_SHARDS
+    monkeypatch.setenv("SPARK_GRAFT_GATE_SHARDS", "2")
+    assert rss.gate_shards() == 2
+
+
+def test_sharded_gate_names_a_shard_that_dies_early():
+    """A shard that exits before pytest prints its summary (here: a
+    plugin that cannot be imported) fails the gate, and the tail of its
+    stderr names the crash in the shard summary and the failed list."""
+    rss = _sharded_runner()
+    res = rss.run_sharded(2, ["-p", "no_such_plugin_xyz"])
+    assert res["rc"] == 1
+    assert len(res["shard_summaries"]) == 2
+    assert all("no_such_plugin_xyz" in s for s in res["shard_summaries"])
+    assert any("no_such_plugin_xyz" in f for f in res["failed"])
+    assert len(res["failed"][0]) < 400

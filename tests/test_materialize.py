@@ -189,3 +189,26 @@ def test_session_caches_evict_dead_app_entries(spark):
     cache = {("app-dead", 1): "x", (app, 2): "y"}
     _evict_dead_apps(cache, app)
     assert cache == {(app, 2): "y"}
+
+
+def test_widen_width_degenerate_stats(spark, monkeypatch):
+    """A join over a relation without size statistics (a parallelized
+    list defaults to Long.MaxValue) estimates sizeInBytes at or above
+    Long.MaxValue, and SPARK_GRAFT_WIDEN_KB may hold garbage: the width
+    still lands in [WIDEN_MIN_TASKS, target] and nothing raises."""
+    from vectordb_testbricks_spark.materialize import (
+        WIDEN_MIN_TASKS, _widen_width)
+    unsized = spark.createDataFrame([(i,) for i in range(10)], "k long")
+    joined = unsized.join(spark.range(100).withColumnRenamed("id", "k"),
+                          "k")
+    size = int(joined._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    assert size >= 2 ** 63 - 1
+    target = WIDEN_MIN_TASKS + 4
+    for raw in (None, "not-a-number", "", "-3", "0", "1e3", str(2 ** 70)):
+        if raw is None:
+            monkeypatch.delenv("SPARK_GRAFT_WIDEN_KB", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_WIDEN_KB", raw)
+        for df in (joined, unsized):
+            assert WIDEN_MIN_TASKS <= _widen_width(df, target) <= target, raw

@@ -1571,3 +1571,109 @@ def test_prepare_search_pool_prepared_plans_match_adhoc(spark, tables):
         assert sorted(map(tuple, prepared.collect())) == want
         # re-execution of the same prepared plan stays identical
         assert sorted(map(tuple, prepared.collect())) == want
+
+
+# ------------------------------------ query sides as local relations
+
+#: query values whose exact transfer matters: a negative zero, a
+#: subnormal-range magnitude and one near the double range's top
+_EDGE_VALUES = [-0.0, 1e-300, 1e300]
+
+
+def _rdd_relation(spark, rows, schema):
+    """The former query-side builder: a parallelized list."""
+    return spark.createDataFrame(rows, schema)
+
+
+def _bits(values):
+    import struct
+    return [struct.pack(">d", v) for v in values]
+
+
+def test_local_query_relation_is_bit_exact(spark):
+    """queries_df carries every double bit-for-bit, -0.0 included, and
+    matches the parallelized-list relation row for row."""
+    from vectordb_testbricks_spark.operators import search
+    vecs = [_EDGE_VALUES + [0.1], [2.5, -1.0, 1e-300, -0.0]]
+    got = search.queries_df(spark, vecs).collect()
+    assert [r.query_id for r in got] == [0, 1]
+    assert [_bits(r.qvec) for r in got] == [_bits(v) for v in vecs]
+    old = _rdd_relation(spark, [(i, v) for i, v in enumerate(vecs)],
+                        search.queries_df(spark, vecs).schema).collect()
+    assert [_bits(r.qvec) for r in got] == [_bits(r.qvec) for r in old]
+
+
+@pytest.mark.parametrize("nq", [1, 4])
+def test_knn_local_query_side_matches_rdd_side(spark, nq):
+    """kNN over the local query relation returns the rows, scores and
+    ranks the parallelized-list relation returned, for edge values."""
+    import random
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    rnd = random.Random(nq)
+    base = spark.createDataFrame(
+        [(i, [rnd.uniform(-2, 2) for _ in range(4)]) for i in range(60)],
+        "id long, vec array<double>")
+    vecs = [[_EDGE_VALUES[(q + j) % 3] if j < 2 else rnd.uniform(-1, 1)
+             for j in range(4)] for q in range(nq)]
+    local = queries_df(spark, vecs)
+    old = _rdd_relation(spark, [(i, v) for i, v in enumerate(vecs)],
+                        local.schema)
+    for metric in ("IP", "L2"):
+        hits = [sorted(tuple(r) for r in knn_search(
+                    base, q, "vec", "id", metric=metric, k=5).collect())
+                for q in (local, old)]
+        assert hits[0] == hits[1] and len(hits[0]) == 5 * nq, metric
+
+
+def test_bm25_and_sparse_local_query_sides_match_rdd_sides(spark,
+                                                           monkeypatch):
+    """BM25 and both sparse paths build their query sides with
+    search.local_relation; swapping in the parallelized-list builder
+    changes no row, score or rank."""
+    from vectordb_testbricks_spark.operators import search
+    from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 3} spark w{i % 11}") for i in range(80)],
+        "doc_id long, text string")
+    texts = ["spark w1", "w2 w2 w5", "nothing matches"]
+    sparse = _sparse_corpus(spark, n=300, vocab=20)
+    qmaps = [{"t1": _EDGE_VALUES[0], "t2": 1.0, "t3": 0.5},
+             {"t4": _EDGE_VALUES[1], "t5": 2.0},
+             {"t6": _EDGE_VALUES[2], "t7": -1.0}]
+    postings = search.sparse_postings(sparse, "svec", "id")
+
+    def run():
+        return [
+            sorted(tuple(r) for r in bm25_search_many(
+                docs, texts, "doc_id", "text", k=4).collect()),
+            sorted(tuple(r) for r in search.sparse_search_many(
+                sparse, qmaps, "svec", "id", k=4).collect()),
+            sorted(tuple(r) for r in search.sparse_search_postings_many(
+                postings, qmaps, "id", k=4).collect()),
+        ]
+
+    new = run()
+    monkeypatch.setattr(search, "local_relation", _rdd_relation)
+    assert run() == new
+    assert all(new), new
+
+
+def test_lsh_candidate_regimes_identical_on_duplicate_ids(spark):
+    """Both candidate-pair regimes of lsh_candidate_pairs emit the same
+    pairs on an input that repeats an id: the small-corpus bucket-local
+    emit drops id_a == id_b exactly as the self-join's id_a < id_b does."""
+    from vectordb_testbricks_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_signatures)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (1, "alpha beta gamma delta"),
+         (2, "alpha beta gamma delta"), (3, "one two three four five"),
+         (3, "one two three four five six"), (4, "unrelated words here")],
+        "doc_id long, text string")
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    small = sorted(tuple(r) for r in lsh_candidate_pairs(
+        sigs, "doc_id", n_docs=6).collect())
+    joined = sorted(tuple(r) for r in lsh_candidate_pairs(
+        sigs, "doc_id").collect())
+    assert small == joined
+    assert (1, 2) in small and all(a < b for a, b in small)

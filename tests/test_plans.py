@@ -518,3 +518,50 @@ def test_fusion_agg_and_rerank_share_one_exchange(spark):
     assert len(ex_lines) == 1, p
     assert "query_id" in ex_lines[0], p
     assert "doc_id" not in ex_lines[0], p
+
+
+def test_loaded_collection_requests_build_without_jobs(spark, tmp_path):
+    """Serving a loaded collection launches no Spark job before the
+    action: read() returns the handle load() cached (memoized per commit,
+    no parquet listing or schema inference per request), and the kNN
+    query side is a driver-local relation (LocalTableScan) instead of a
+    parallelized RDD (Scan ExistingRDD) whose broadcast fans out over
+    every default partition."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.operators.query import (
+        count_star, query_by_pk)
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    from vectordb_testbricks_spark.schema import FieldSpec, SchemaSpec
+    mgr = CollectionManager(spark, str(tmp_path / "wh"))
+    mgr.create_collection(SchemaSpec("srv", [
+        FieldSpec("pk", "INT64", primary=True),
+        FieldSpec("category", "INT64"),
+        FieldSpec("emb", "FLOAT_VECTOR", dim=4)]))
+    mgr.insert("srv", spark.range(40).select(
+        F.col("id").alias("pk"), (F.col("id") % 5).alias("category"),
+        F.array(*[(F.col("id") + i).cast("float") for i in range(4)])
+        .alias("emb")))
+    mgr.load("srv")
+    mgr.read("srv").count()
+
+    sc = spark.sparkContext
+    group = "test-loaded-collection-build"
+    sc.setJobGroup(group, "request build only")
+    try:
+        base = mgr.read("srv")
+        knn = knn_search(base, queries_df(spark, [[1.0, 0.5, -0.0, 2.0]]),
+                         "emb", "pk", metric="COSINE", k=3,
+                         flt="category > 1")
+        cnt = count_star(mgr.read("srv"), "category > 1")
+        pks = query_by_pk(mgr.read("srv"), "pk", [3, 7])
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert base is mgr._loaded["srv"]
+    p = _plan(knn)
+    assert "LocalTableScan [query_id" in p, p
+    assert "ExistingRDD" not in p, p
+    assert len(knn.collect()) == 3
+    assert cnt.collect()[0]["cnt"] == 24
+    assert sorted(r.pk for r in pks.collect()) == [3, 7]

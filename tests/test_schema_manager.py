@@ -1388,3 +1388,139 @@ def test_text_embedding_search_rejects_none_query(mgr, spark):
         .withColumn("sv", F.lit(None).cast("map<int,float>")))
     with pytest.raises(ValueError, match=r"position \[0\] is None"):
         mgr.text_embedding_search("noneq2", [None], k=1)
+
+
+# ------------------------------------------------------ commit-stamped memo
+
+def _served_state(mgr, name="fts_coll"):
+    """What a serving request sees: read()'s columns and rows and the
+    BM25 stats function_tables() returns."""
+    df = mgr.read(name)
+    cols = [c for c in ("doc_id", "text") if c in df.columns]
+    rows = sorted(tuple(r) for r in df.select(*cols).collect())
+    _, stats = mgr.function_tables(name)
+    terms = sorted((r.term, r.df_t, r.n_docs) for r in stats.collect())
+    return tuple(df.columns), rows, terms
+
+
+def _assert_serves_current(mgr, name="fts_coll"):
+    """The memoized state equals what a fresh manager (empty memo) builds
+    from disk, its scan reads only the current data version, and a
+    repeated call is a memo hit (the same objects)."""
+    state = _served_state(mgr, name)
+    assert state == _served_state(
+        CollectionManager(mgr.spark, mgr.warehouse), name)
+    version = f"/{os.path.basename(mgr._data_dir(name))}/"
+    assert all(version in f for f in mgr.read(name).inputFiles())
+    assert mgr.read(name) is mgr.read(name)
+    assert mgr.function_tables(name) is mgr.function_tables(name)
+    return state
+
+
+def test_read_memo_follows_every_locked_write(mgr, spark):
+    """Every write through the writer lock replaces the COMMIT token, so
+    read() and function_tables() serve the new state after each of them
+    — appends into the current version dir (insert) included, which
+    change no path a reader resolves."""
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(1, "alpha beta"), (2, "alpha"),
+                                         (3, "gamma")]))
+    states = [_assert_serves_current(mgr)]
+    steps = [
+        lambda: mgr.insert("fts_coll", _docs(spark, [(4, "delta alpha")])),
+        lambda: mgr.upsert("fts_coll", _docs(spark, [(1, "omega")])),
+        lambda: mgr.partial_update("fts_coll", spark.createDataFrame(
+            [(2, "beta beta")], "doc_id long, text string")),
+        lambda: mgr.delete("fts_coll", "doc_id == 3"),
+        lambda: mgr.add_field("fts_coll", FieldSpec(
+            "extra", "INT64", nullable=True)),
+        lambda: mgr.drop_field("fts_coll", "extra"),
+        lambda: mgr.force_merge("fts_coll"),
+        lambda: mgr.truncate_collection("fts_coll"),
+        lambda: mgr.insert("fts_coll", _docs(spark, [(9, "zeta")])),
+    ]
+    for step in steps:
+        step()
+        states.append(_assert_serves_current(mgr))
+    # every step but force_merge changed what a request sees
+    changed = [a != b for a, b in zip(states, states[1:])]
+    assert changed == [True] * 6 + [False, True, True]
+
+
+def test_read_memo_drop_recreate_and_alias_repoint(mgr, spark):
+    """Dropping evicts the memo; a collection re-created under the same
+    name (by this or another manager, even before its first write) is
+    read afresh, and an alias follows its repointing."""
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(1, "alpha")]))
+    _assert_serves_current(mgr)
+    mgr.drop_collection("fts_coll")
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(7, "beta")]))
+    assert _assert_serves_current(mgr)[1] == [(7, "beta")]
+    # another manager drops and re-creates with a different schema and
+    # writes nothing: the new schema is still what read() returns
+    other = CollectionManager(spark, mgr.warehouse)
+    other.drop_collection("fts_coll")
+    other.create_collection(SchemaSpec("fts_coll", [
+        FieldSpec("doc_id", "INT64", primary=True),
+        FieldSpec("text", "VARCHAR", max_length=64, enable_analyzer=True),
+        FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
+        FieldSpec("lang", "VARCHAR", max_length=8, nullable=True),
+    ], functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
+    cols, rows, terms = _assert_serves_current(mgr)
+    assert "lang" in cols and rows == [] and terms == []
+
+    _mk_fts(mgr, "fts_b")
+    mgr.insert("fts_b", _docs(spark, [(5, "gamma")]))
+    mgr.alter_alias("serving", "fts_coll")
+    assert _served_state(mgr, "serving")[1] == []
+    mgr.alter_alias("serving", "fts_b")
+    assert _served_state(mgr, "serving")[1] == [(5, "gamma")]
+
+
+def test_read_memo_sees_another_managers_writes(mgr, spark):
+    """A second manager on the same warehouse (another process, in
+    production) writes while the first one serves reads: the COMMIT
+    token is what the first observes, so its next read() and
+    function_tables() serve the other's commit."""
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(1, "alpha")]))
+    mgr.load("fts_coll")
+    assert mgr.read("fts_coll") is mgr._loaded["fts_coll"]
+    before = _assert_serves_current(mgr)
+    writer = CollectionManager(spark, mgr.warehouse)
+    writer.insert("fts_coll", _docs(spark, [(2, "alpha beta")]))
+    mgr.release("fts_coll")     # a loaded plan is cached until reloaded
+    after = _assert_serves_current(mgr)
+    assert after[1] == [(1, "alpha"), (2, "alpha beta")]
+    assert ("alpha", 2, 2) in after[2] and after != before
+    writer.delete("fts_coll", "doc_id == 1")
+    assert _assert_serves_current(mgr)[1] == [(2, "alpha beta")]
+
+
+def test_read_memo_skips_scoped_reads_and_ttl_clock(mgr, spark):
+    """Partition-scoped, snapshot and ``now`` reads build a fresh scan;
+    a TTL collection memoizes its scan only and applies the TTL filter
+    per call."""
+    import datetime
+    _mk(mgr, "scoped", partitions=["p0", "p1"])
+    mgr.insert("scoped", _rows(spark, 4), partition_name="p0")
+    mgr.insert("scoped", _rows(spark, 3, start=10), partition_name="p1")
+    assert mgr.read("scoped") is mgr.read("scoped")
+    scoped = mgr.read("scoped", partition_names=["p1"])
+    assert scoped is not mgr.read("scoped", partition_names=["p1"])
+    assert scoped.count() == 3
+    sid = mgr.create_snapshot("scoped")
+    mgr.delete("scoped", "id < 2")
+    assert mgr.read("scoped", snapshot_id=sid).count() == 7
+    assert mgr.read("scoped").count() == 5
+
+    mgr.create_collection(SchemaSpec("ttl_m", [
+        FieldSpec("id", "INT64", primary=True)], ttl_seconds=60))
+    mgr.insert("ttl_m", spark.range(3))
+    a, b = mgr.read("ttl_m"), mgr.read("ttl_m")
+    assert a is not b and a.count() == b.count() == 3
+    later = datetime.datetime.now(datetime.timezone.utc) \
+        + datetime.timedelta(hours=1)
+    assert mgr.read("ttl_m", now=later).count() == 0

@@ -28,6 +28,22 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+DEFAULT_SHARDS = 4
+
+#: a pytest -q summary line ("1 failed, 10 passed in 5.00s", "no tests ran
+#: in 0.01s"); a shard whose last line is not one died before reporting
+_SUMMARY = re.compile(r"(\d+ (passed|failed|errors?|skipped|deselected)"
+                      r"|no tests ran)\b.* in \d")
+
+
+def gate_shards() -> int:
+    """``SPARK_GRAFT_GATE_SHARDS`` as an int, :data:`DEFAULT_SHARDS` when
+    it is unset or not an integer (a typo must not crash the gate)."""
+    try:
+        return int(os.environ.get("SPARK_GRAFT_GATE_SHARDS", ""))
+    except ValueError:
+        return DEFAULT_SHARDS
+
 #: Rough serial cost weights (seconds, measured r13 on the build host —
 #: used only for shard balancing; wrong weights cost balance, never
 #: correctness). Files not listed weigh in by size.
@@ -78,6 +94,7 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
     shards = _shard_files(n_shards)
     procs = []
     outs: list[str] = [""] * len(shards)
+    errs: list[str] = [""] * len(shards)
 
     def run_one(i: int, files: list[str]) -> None:
         p = subprocess.run(
@@ -86,6 +103,7 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
             cwd=REPO, capture_output=True, text=True,
             env=env if env is not None else os.environ.copy())
         outs[i] = p.stdout or ""
+        errs[i] = p.stderr or ""
         procs[i] = p.returncode
 
     threads = []
@@ -99,10 +117,18 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
 
     passed = failed = errors = deselected = skipped = 0
     failed_tests: list[str] = []
+    crashes: list[str] = []
     shard_summaries: list[str] = []
-    for out in outs:
+    for i, out in enumerate(outs):
         tail = [ln for ln in out.strip().splitlines() if ln]
         summary = tail[-1] if tail else ""
+        if not _SUMMARY.search(summary):
+            # the shard died before pytest reported: name the crash from
+            # the end of its stderr
+            err = " | ".join(errs[i].strip().splitlines()[-3:])
+            summary = (f"shard {i} exited {procs[i]} without a pytest "
+                       f"summary: {err[-300:] or 'no stderr'}")
+            crashes.append(summary)
         shard_summaries.append(summary)
         for kind, pat in (("passed", r"(\d+) passed"),
                           ("failed", r"(\d+) failed"),
@@ -125,10 +151,8 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
         failed_tests += [ln.split(" - ")[0][:160] for ln in tail
                          if ln.startswith(("FAILED", "ERROR"))]
     seconds = time.time() - t0
-    rc = 0 if all(p == 0 for p in procs) else 1
-    # a shard that crashed before printing a summary must fail the gate
-    if any(not s for s in shard_summaries):
-        rc = rc or 1
+    # a shard that crashed before printing a summary fails the gate
+    rc = 0 if all(p == 0 for p in procs) and not crashes else 1
     bits = [f"{passed} passed"]
     if failed:
         bits.insert(0, f"{failed} failed")
@@ -140,16 +164,15 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
         bits.append(f"{deselected} deselected")
     summary = (", ".join(bits)
                + f" in {seconds:.2f}s ({len(shards)} shards)")
-    return {"rc": rc, "summary": summary, "failed": failed_tests[:8],
+    return {"rc": rc, "summary": summary,
+            "failed": (crashes + failed_tests)[:8],
             "seconds": round(seconds, 1),
             "shard_summaries": shard_summaries}
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--shards", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_GATE_SHARDS",
-                                               "4")))
+    ap.add_argument("--shards", type=int, default=gate_shards())
     args, extra = ap.parse_known_args()
     res = run_sharded(args.shards, extra)
     for i, s in enumerate(res["shard_summaries"]):

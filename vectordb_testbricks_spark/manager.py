@@ -16,6 +16,11 @@ validation). At cluster scale the same layout maps onto object storage;
 ``partitionBy`` + partition-column predicates give Catalyst partition
 pruning, which is the reference's partition-key speedup
 (parkey_query_n_search.py:149-202).
+
+Serving reads are memoized per manager (see :class:`CollectionManager`):
+every locked write replaces ``<collection>/COMMIT`` with a fresh token, and
+``read()`` / ``function_tables()`` reuse the DataFrames built for the
+current token instead of re-listing the parquet dirs per request.
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ import dataclasses
 import json
 import os
 import shutil
+import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,7 +64,33 @@ def _spec_from_json(s: str) -> SchemaSpec:
 
 
 class CollectionManager:
-    """Warehouse-backed collection catalog."""
+    """Warehouse-backed collection catalog.
+
+    Read memo contract. ``read()`` (the plain current-version read) and
+    ``function_tables()`` return the DataFrame they built the last time
+    for the same commit, so a loaded collection is served without
+    re-listing its parquet dirs or re-inferring their schemas per request;
+    on a loaded collection without TTL, ``read()`` returns the very handle
+    ``load()`` cached. This holds because:
+
+    * collection files change only through the manager's writer lock
+      (:meth:`_write_lock`), which on exit atomically replaces
+      ``<collection>/COMMIT`` with a fresh token (tmp file +
+      ``os.replace``). That token is what readers in other processes
+      observe: a second manager on the same warehouse sees another
+      manager's commit at its next call and rebuilds;
+    * the memo key also carries the resolved data (or sidecar) dir and,
+      for ``function_tables()``, whether the stats PENDING marker
+      exists, so a flip of CURRENT inside a write and a crash marker
+      are seen without a new token;
+    * external collections and ``partition_names`` / ``now`` /
+      ``snapshot_id`` reads are not memoized; TTL collections memoize the
+      scan only and apply the TTL filter per call, so the clock is read
+      at each caller's action.
+
+    One entry per (collection, kind), replaced when its key moves and
+    evicted by :meth:`drop_collection`; a miss builds exactly the
+    DataFrame an unmemoized call would."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -65,6 +98,8 @@ class CollectionManager:
         os.makedirs(warehouse, exist_ok=True)
         self._aliases_file = os.path.join(warehouse, "_aliases.json")
         self._loaded: dict[str, DataFrame] = {}
+        self._memo: dict[tuple[str, str], tuple[tuple, object]] = {}
+        self._memo_lock = threading.Lock()
 
     # ------------------------------------------------------------- paths
     def _dir(self, name: str) -> str:
@@ -83,6 +118,40 @@ class CollectionManager:
 
     def _schema_file(self, name: str) -> str:
         return os.path.join(self._dir(name), "schema.json")
+
+    # ------------------------------------------------------ commit memo
+    def _commit_file(self, real: str) -> str:
+        return os.path.join(self._dir(real), "COMMIT")
+
+    def _publish_commit(self, real: str) -> None:
+        """Publish a commit: replace COMMIT atomically with a fresh token
+        (a new file each time, so no reader sees a partial token)."""
+        tmp = self._commit_file(real) + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(uuid.uuid4().hex)
+        os.replace(tmp, self._commit_file(real))
+
+    def _commit_token(self, real: str) -> str | None:
+        """The token of the collection's last commit (None before any)."""
+        try:
+            with open(self._commit_file(real)) as fh:
+                return fh.read()
+        except FileNotFoundError:
+            return None
+
+    def _memoized(self, real: str, kind: str, key: tuple, build):
+        """``build()``'s value for ``key``, reused while the collection's
+        ``kind`` entry still carries ``key``. Callers read ``key`` from
+        disk BEFORE building, so a commit that lands mid-build leaves the
+        entry under the older key and the next call rebuilds."""
+        with self._memo_lock:
+            hit = self._memo.get((real, kind))
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        value = build()
+        with self._memo_lock:
+            self._memo[(real, kind)] = (key, value)
+        return value
 
     # ----------------------------------------------------------- aliases
     def _read_aliases(self) -> dict[str, str]:
@@ -119,6 +188,8 @@ class CollectionManager:
         os.makedirs(self._dir(spec.name))
         with open(self._schema_file(spec.name), "w") as fh:
             fh.write(_spec_to_json(spec))
+        # a re-created name must not match memo entries of the old one
+        self._publish_commit(spec.name)
 
     def has_collection(self, name: str) -> bool:
         return os.path.exists(self._schema_file(self.resolve(name)))
@@ -128,6 +199,9 @@ class CollectionManager:
         stale = self._loaded.pop(real, None)
         if stale is not None:  # don't leave cached blocks of deleted data
             stale.unpersist()
+        with self._memo_lock:
+            for key in [k for k in self._memo if k[0] == real]:
+                del self._memo[key]
         shutil.rmtree(self._dir(real), ignore_errors=True)
         aliases = {a: c for a, c in self._read_aliases().items() if c != real}
         with open(self._aliases_file, "w") as fh:
@@ -203,7 +277,11 @@ class CollectionManager:
         stats deltas — assumes ONE writer per collection at a time; this
         makes the assumption mechanical instead of documentation-only for
         same-host concurrent writers (threads or processes). On object
-        storage the equivalent is the catalog/metastore commit lock."""
+        storage the equivalent is the catalog/metastore commit lock.
+
+        On exit — also when the write fails part-way — the COMMIT token
+        is replaced before the lock is released, which invalidates every
+        manager's read memo for the collection."""
         if self.is_external(real):
             # External Collections are read-only (feature-inventory §5
             # "禁止写操作"); every mutating path funnels through this
@@ -219,7 +297,10 @@ class CollectionManager:
                 fcntl.flock(fh, fcntl.LOCK_EX)
             except ImportError:      # non-POSIX: documented single-writer
                 pass
-            yield
+            try:
+                yield
+            finally:
+                self._publish_commit(real)
 
     def insert(self, name: str, df: DataFrame,
                partition_name: str | None = None) -> None:
@@ -404,7 +485,6 @@ class CollectionManager:
         manifest) scaled down to a local warehouse; one previous version is
         retained (pre-rewrite DataFrame handles stay readable until the
         next rewrite), older versions and crash orphans are swept."""
-        import uuid
         real = self.resolve(name)
         d = self._dir(real)
         spec = self.describe_collection(real)
@@ -652,7 +732,6 @@ class CollectionManager:
         :meth:`_overwrite` (readers never see a partial sidecar). The stats
         delta log is compacted here: the fresh version holds exactly one
         (term, df_t) row per term and one global row."""
-        import uuid
         state = self.read(real)
         for fn in self._bm25_functions(spec):
             root = self._fn_root(real, fn.name)
@@ -690,11 +769,19 @@ class CollectionManager:
         partial per insert batch, compacted on rewrite). The tf table is
         never aggregated at search time: at scale it is the largest
         derived table in the system (~|tokens| rows), while the delta log
-        is vocab-sized (plan guard: tests/test_plans.py)."""
+        is vocab-sized (plan guard: tests/test_plans.py). Memoized per
+        commit (see the class docstring)."""
         spec = self.describe_collection(name)
         fn = self._resolve_function(spec, fn_name)
         real = self.resolve(name)
         base = self._fn_data_dir(real, fn.name)
+        key = (base, self._commit_token(real),
+               os.path.exists(self._stats_pending_path(base)))
+        return self._memoized(real, f"fn:{fn.name}", key,
+                              lambda: self._function_tables(spec, base))
+
+    def _function_tables(self, spec: SchemaSpec, base: str
+                         ) -> tuple[DataFrame, DataFrame]:
         pk = spec.pk.name
         if not self._parquet_nonempty(os.path.join(base, "tf")):
             from pyspark.sql import types as T
@@ -779,7 +866,10 @@ class CollectionManager:
         is computed from (defaults to ``current_timestamp()``). Injectable so
         expiry is testable deterministically instead of racing JVM startup
         against a small ``ttl_seconds``. ``snapshot_id`` reads the pinned
-        version a :meth:`create_snapshot` recorded instead of CURRENT."""
+        version a :meth:`create_snapshot` recorded instead of CURRENT.
+
+        The plain current-version read is memoized per commit (see the
+        class docstring); the other forms build a fresh scan."""
         real = self.resolve(name)
         spec = self.describe_collection(real)
         if self.is_external(real):
@@ -791,24 +881,15 @@ class CollectionManager:
                     f"{real!r} is external: snapshots live with the "
                     f"SOURCE collection")
             return self._read_external(real, spec, partition_names)
-        data = (self._snapshot_data_dir(real, snapshot_id)
-                if snapshot_id is not None else self._data_dir(real))
-        # a truncated collection's version dir holds only _SUCCESS — no
-        # partition subdirs, no part files — and spark.read.parquet on
-        # it raises. (The partition subdirs themselves start with "_"
-        # because the column is named _partition, so probe for them and
-        # for part files explicitly, not for "non-hidden entries".)
-        if not os.path.exists(data) or not any(
-                e.startswith((f"{PARTITION_COL}=", "part-"))
-                for e in os.listdir(data)):
-            st = spec.to_struct_type().add(PARTITION_COL, "string")
-            if spec.ttl_seconds or spec.ttl_field:
-                # the TTL filter below references the stamp column; the
-                # empty frame must carry it or a never-written TTL
-                # collection crashes every read
-                st = st.add(INGEST_TS_COL, "timestamp")
-            return self.spark.createDataFrame([], st)
-        df = self.spark.read.parquet(data)
+        if snapshot_id is None and not partition_names and now is None:
+            data = self._data_dir(real)
+            df = self._memoized(real, "read",
+                                (data, self._commit_token(real)),
+                                lambda: self._scan(spec, data))
+        else:
+            df = self._scan(spec, self._snapshot_data_dir(real, snapshot_id)
+                            if snapshot_id is not None
+                            else self._data_dir(real))
         if partition_names:
             df = df.filter(F.col(PARTITION_COL).isin(partition_names))
         if spec.ttl_seconds or spec.ttl_field:
@@ -826,6 +907,25 @@ class CollectionManager:
             df = df.filter(
                 F.when(ttl.isNull(), F.lit(True)).otherwise(alive))
         return df
+
+    def _scan(self, spec: SchemaSpec, data: str) -> DataFrame:
+        """The parquet scan of one data version dir, unfiltered."""
+        # a truncated collection's version dir holds only _SUCCESS — no
+        # partition subdirs, no part files — and spark.read.parquet on
+        # it raises. (The partition subdirs themselves start with "_"
+        # because the column is named _partition, so probe for them and
+        # for part files explicitly, not for "non-hidden entries".)
+        if not os.path.exists(data) or not any(
+                e.startswith((f"{PARTITION_COL}=", "part-"))
+                for e in os.listdir(data)):
+            st = spec.to_struct_type().add(PARTITION_COL, "string")
+            if spec.ttl_seconds or spec.ttl_field:
+                # the TTL read filter references the stamp column; the
+                # empty frame must carry it or a never-written TTL
+                # collection crashes every read
+                st = st.add(INGEST_TS_COL, "timestamp")
+            return self.spark.createDataFrame([], st)
+        return self.spark.read.parquet(data)
 
     def _external_file(self, real: str) -> str:
         return os.path.join(self._dir(real), "EXTERNAL.json")
@@ -1104,7 +1204,6 @@ class CollectionManager:
         the rewrite retention sweep, the natural shape on a
         versioned-dir warehouse (object-store snapshots work the same
         way). Read it back with ``read(name, snapshot_id=...)``."""
-        import uuid
         real = self.resolve(name)
         with self._write_lock(real):
             snaps = self._read_snapshots(real)
@@ -1134,7 +1233,6 @@ class CollectionManager:
         manifest). The heavy write happens HERE; commit is the cheap
         visibility flip. ``insert()`` remains the auto_commit path."""
         import json
-        import uuid
         real = self.resolve(name)
         if self.is_external(real):
             # the writer-lock guard can't cover this path (staging takes

@@ -170,11 +170,11 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     # through the broadcast join (plan guard: tests/test_plans.py).
     from vectordb_testbricks_spark.functions.text import (
         analyzer_kwargs, py_tokenize)
-    spark = docs.sparkSession
+    from vectordb_testbricks_spark.operators import search
     kw = analyzer_kwargs(analyzer)
     qterm_rows = [(qid, t) for qid, text in enumerate(query_texts)
                   for t in py_tokenize(text, **kw)]
-    qterms_df = spark.createDataFrame(qterm_rows,
+    qterms_df = search.local_relation(docs.sparkSession, qterm_rows,
                                       "query_id int, term string")
     all_terms = sorted({t for _, t in qterm_rows})
     # every query analyzed to zero terms: nothing can match (isin with an
@@ -190,5 +190,4 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
         contribs = contribs.repartition("query_id")
     scored = (contribs.groupBy("query_id", id_col)
               .agg(F.sum("contrib").alias("score")))
-    from vectordb_testbricks_spark.operators.search import _ranked
-    return _ranked(scored, id_col, asc=False, k=k)
+    return search._ranked(scored, id_col, asc=False, k=k)

@@ -41,9 +41,36 @@ from vectordb_testbricks_spark.functions.vector import (
     score_expr, sparse_dot_map, to_double_array)
 
 
+def local_relation(spark, rows: list[tuple],
+                   schema: T.StructType | str) -> DataFrame:
+    """Driver-literal rows as a ``LocalRelation`` (plans as
+    ``LocalTableScan``), the shape of every query side built here.
+
+    ``spark.createDataFrame(list)`` parallelizes the list into an RDD
+    (``Scan ExistingRDD``), and broadcasting it runs a job over every
+    default partition. Handing Spark an Arrow table instead keeps the rows
+    on the driver (up to ``spark.sql.execution.arrow.localRelationThreshold``,
+    48 MB by default; larger tables are parallelized). The values cross as
+    Arrow buffers, so doubles arrive bit-exact (``-0.0``, NaN, extreme
+    magnitudes) with no literal parsing, and the columns stay relation
+    attributes: a ``query_id`` here is never a foldable literal, so top-k
+    windows keep their partition spec."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def queries_df(spark, vectors: list[list[float]]) -> DataFrame:
     """Build the (query_id, qvec) side from literal query vectors."""
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(vectors)],
         T.StructType([
             T.StructField("query_id", T.IntegerType(), False),
@@ -243,7 +270,7 @@ def sparse_search_many(base: DataFrame, query_maps: list[dict], map_col: str,
     """V6 at nq>1: one {index: weight} dict per query, ``query_id`` =
     position in ``query_maps``.
 
-    The query side is a tiny broadcast relation, not a literal map: a
+    The query side is a tiny broadcast local relation, not a literal map: a
     foldable query_id would constant-fold the top-k window's partition spec
     away (WindowExec "No Partition Defined"); as an attribute the per-query
     ranking stays partitioned at any nq.
@@ -253,7 +280,8 @@ def sparse_search_many(base: DataFrame, query_maps: list[dict], map_col: str,
         pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
         base = base.filter(pred)
     key_sql = _sparse_key_sql(query_maps)
-    qdf = base.sparkSession.createDataFrame(
+    qdf = local_relation(
+        base.sparkSession,
         [(i, {k_: float(v) for k_, v in m.items()})
          for i, m in enumerate(query_maps)],
         f"query_id int, qmap map<{key_sql},double>")
@@ -334,8 +362,8 @@ def sparse_search_postings_many(
     key_sql = _sparse_key_sql(query_maps)
     qrows = [(i, k_, float(w)) for i, m in enumerate(query_maps)
              for k_, w in m.items()]
-    qdf = spark.createDataFrame(
-        qrows, f"query_id int, _qk {key_sql}, _qw double")
+    qdf = local_relation(
+        spark, qrows, f"query_id int, _qk {key_sql}, _qw double")
     keys = sorted({r[1] for r in qrows})
     if keys:
         # literal In() — this is the predicate that reaches the scan
