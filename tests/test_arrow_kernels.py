@@ -586,6 +586,7 @@ class TestCodeOrderPostingMemo:
         or every steady-state search re-runs the index build."""
         from vectordb_testbricks_spark.materialize import shared_persist
         from vectordb_testbricks_spark.operators import dedup
+        from vectordb_testbricks_spark.session import forget
         codes = shared_persist(
             dedup._token_codes(edge_docs, "doc_id", "text", 3))
         try:
@@ -602,7 +603,7 @@ class TestCodeOrderPostingMemo:
                 for r in rs.collect())
             assert key(p2) == key(jvm)
             # explicit eviction protects the two-phase unpersist path
-            dedup.drop_posting_memo(p1)
+            forget(lambda slot, v: v is p1)
             p3 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
                                             "arrow", n_docs=9)
             assert p3 is not p1
@@ -615,4 +616,4 @@ class TestCodeOrderPostingMemo:
             # or jvm were never bound
             for h in (locals().get("p3"), locals().get("jvm")):
                 if h is not None:
-                    dedup.drop_posting_memo(h)
+                    forget(lambda slot, v, h=h: v is h)

@@ -164,31 +164,30 @@ def test_ntz_source_is_watermarkable_end_to_end(spark, tmp_path):
 
 
 def test_session_caches_evict_dead_app_entries(spark):
-    """ADVICE r12: module-level session caches (keyed by applicationId)
-    must not accumulate entries from stopped SparkContexts — on an
-    applicationId change, _session_key drops the previous application's
-    entries from every registered cache (last-app-wins), and the
-    catalog/dedup memos evict dead-app keys on insert."""
-    import __spark_entry__ as E
-    from vectordb_testbricks_spark.catalog import _evict_dead_apps
+    """ADVICE r12: session-memo entries (keyed by applicationId) must not
+    accumulate across stopped SparkContexts — on an applicationId change
+    session_memo drops the previous application's entries for every
+    slot kind, entry-, catalog- and dedup-style alike (last-app-wins),
+    while live-app entries stay."""
+    from vectordb_testbricks_spark import session
 
-    app = spark.sparkContext.applicationId
-    # simulate a stale previous application
-    E._LAST_APP_ID[0] = "app-dead"
-    E._BM25_CACHE[("app-dead", "/x", None)] = ("stale",)
-    E._IVF_CACHE[("app-dead", "/x")] = "stale"
-    live_marker = (app, "/keep", None)
-    E._BM25_CACHE[live_marker] = ("live",)
-    assert E._session_key(spark) == app
-    assert not [k for k in E._BM25_CACHE if k[0] == "app-dead"]
-    assert not [k for k in E._IVF_CACHE if k[0] == "app-dead"]
-    assert E._BM25_CACHE.get(live_marker) == ("live",)   # live entries stay
-    del E._BM25_CACHE[live_marker]
-
-    # the helper the catalog/dedup memos use at insert time
-    cache = {("app-dead", 1): "x", (app, 2): "y"}
-    _evict_dead_apps(cache, app)
-    assert cache == {(app, 2): "y"}
+    slots = [("bm25_tables", "/x", None), ("ivf", "/x"),
+             ("table", "/x/documents.parquet"),
+             ("posting", 1234, 0.7, 50, "arrow")]
+    # simulate a stale previous application holding one entry per kind
+    with session._LOCK:
+        session._APP[0] = "app-dead"
+        for slot in slots:
+            session._TABLE[("app-dead", slot)] = "stale"
+    live = ("bm25_tables", "/keep", None)
+    assert session.session_memo(spark, live, lambda: "live") == "live"
+    assert not [k for k in session._TABLE if k[0] == "app-dead"]
+    # live entries stay: a second lookup is a hit, not a rebuild
+    assert session.session_memo(spark, live, lambda: "rebuilt") == "live"
+    for slot in slots:
+        assert session.session_memo(spark, slot, lambda: "fresh") == "fresh"
+    session.forget(lambda slot, v: slot == live or slot in slots)
+    assert not [k for k in session._TABLE if k[1] == live or k[1] in slots]
 
 
 def test_widen_width_degenerate_stats(spark, monkeypatch):

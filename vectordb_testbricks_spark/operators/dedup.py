@@ -34,6 +34,7 @@ from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
     BARRIER_MIN_ROWS, barrier_if_large, materialize_barrier,
     parallelize_small, shared_persist)
+from vectordb_testbricks_spark.session import forget, session_memo
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime), the classic minhash modulus
 NUM_HASHES = 16
@@ -429,39 +430,6 @@ NGRAM_BLACKLIST_MAX = 2_000_000
 #: kernel unwidened.
 PIGEONHOLE_MIN_ROWS = 100_000
 
-#: Session-lifetime memo of code-order posting tables, keyed by
-#: (applicationId, semanticHash of the codes plan, threshold, max_df,
-#: impl). The posting table IS the persisted inverted index ("steady-
-#: state searches reuse it" — ngram_candidate_pairs docstring), and the
-#: rarity order achieves that reuse automatically through CacheManager
-#: plan equality. The CODE order could not (r12, measured): its Arrow
-#: kernel closes over a fresh ``SparkContext.broadcast`` per call, so
-#: two calls' ``mapInArrow`` plans are never plan-equal — every steady-
-#: state search re-ran the whole posting build (and, through AQE's
-#: concurrent self-join legs racing the cold cache, ran it TWICE), and
-#: every call leaked one more InMemoryRelation. Memoizing the DataFrame
-#: handle restores the intended one-build-per-corpus behavior; no rows
-#: are memoized — the handle's cache is filled (and refilled after any
-#: unpersist) from the parquet-backed lineage like every other persisted
-#: intermediate. semanticHash keys on the CODES PLAN, so a different
-#: corpus/analyzer/session can never alias. Entries from dead
-#: applicationIds are evicted on the next insert (ADVICE r12).
-#:
-#: IMMUTABLE-INPUT CONTRACT (ADVICE r12): a plan's semanticHash does not
-#: see file contents, so the memo assumes the codes relation's
-#: underlying storage never changes within one session. Every current
-#: caller builds codes over immutable fixtures or fresh temp dirs; code
-#: that rewrites an input path in-place must ``drop_posting_memo`` first
-#: (the manager's mutable collections use versioned storage and never
-#: route through these memos).
-_POSTING_MEMO: dict[tuple, DataFrame] = {}
-
-#: Same lifetime/keying for the over-max_df blacklist (a sorted list of
-#: codes): it is a property of the corpus' code sets — index-build
-#: metadata, not a query result — and recomputing it was one full
-#: explode+aggregate driver action per steady-state search.
-_BLACKLIST_MEMO: dict[tuple, list] = {}
-
 
 def _codes_plan_key(codes: DataFrame) -> int | None:
     """Stable identity of the codes relation across repeated operator
@@ -471,15 +439,6 @@ def _codes_plan_key(codes: DataFrame) -> int | None:
         return codes._jdf.queryExecution().analyzed().semanticHash()
     except Exception:                                   # noqa: BLE001
         return None
-
-
-def drop_posting_memo(df: DataFrame) -> None:
-    """Forget memo entries resolving to ``df`` — callers that explicitly
-    unpersist a staged posting table (the two-phase 100M path) must also
-    evict it here, or a later call would be handed a cold, unpersisted
-    handle instead of rebuilding a persisted one."""
-    for k in [k for k, v in _POSTING_MEMO.items() if v is df]:
-        del _POSTING_MEMO[k]
 
 
 def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
@@ -559,6 +518,29 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     twin (broadcast anti-join + per-doc window), kept for identity
     tests and pure-JVM deployments. NULL codes never post on either
     path (the rarity build drops them at its df join)."""
+    codes = shared_persist(codes)
+    plan_key = _codes_plan_key(codes)
+
+    def build():
+        return _build_code_order_postings(codes, id_col, threshold, max_df,
+                                          impl, n_docs, plan_key)
+
+    if plan_key is None:
+        return build()
+    # memoized per codes plan: the Arrow build closes over a fresh
+    # broadcast per call, so CacheManager plan equality can never reuse
+    # it and every steady-state search would re-run the index build (r12).
+    # No rows are memoized; immutable-input contract: session_memo.
+    return session_memo(codes.sparkSession,
+                        ("posting", plan_key, threshold, max_df, impl), build)
+
+
+def _build_code_order_postings(codes: DataFrame, id_col: str,
+                               threshold: float, max_df: int, impl: str,
+                               n_docs: int | None,
+                               plan_key: int | None) -> DataFrame:
+    """The uncached body of :func:`_code_order_postings`; ``plan_key``
+    (None: skip the memo) keys the blacklist memo."""
     # materialization barrier BEFORE the blacklist pass: the codes cache
     # is usually cold here (this is the pipeline's first action), and
     # letting a 165M-key hash aggregation fuse into the cache-build
@@ -568,18 +550,6 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     # With a caller-supplied n_docs hint BELOW the barrier threshold the
     # count is skipped — fusing the agg into a <=60k-row cache build is
     # harmless and the count job is pure fixture tax (VERDICT r10 #4).
-    codes = shared_persist(codes)
-    plan_key = _codes_plan_key(codes)
-    app_id = codes.sparkSession.sparkContext.applicationId
-    memo_key = ((app_id, plan_key, threshold, max_df, impl)
-                if plan_key is not None else None)
-    if memo_key is not None and memo_key in _POSTING_MEMO:
-        # steady-state search over an already-built inverted index: the
-        # memoized handle carries the persisted posting relation (see
-        # _POSTING_MEMO — the Arrow build's per-call broadcast defeats
-        # CacheManager plan equality, so without this every search
-        # re-ran the index build)
-        return _POSTING_MEMO[memo_key]
     if n_docs is None:
         n_docs = codes.count()
     elif n_docs >= BARRIER_MIN_ROWS:
@@ -603,14 +573,13 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     # blacklist memo (r12): the over-max_df code set is index-build
     # metadata over the SAME codes relation every steady-state search —
     # computing it was one explode+aggregate driver action per call
-    bl_key = (app_id, plan_key, max_df) if plan_key is not None else None
-    blacklist = _BLACKLIST_MEMO.get(bl_key) if bl_key is not None else None
-    if blacklist is None:
-        blacklist = _compute_blacklist(codes, ex, max_df, impl, n_docs)
-        if bl_key is not None:
-            from vectordb_testbricks_spark.catalog import _evict_dead_apps
-            _evict_dead_apps(_BLACKLIST_MEMO, app_id)
-            _BLACKLIST_MEMO[bl_key] = blacklist
+    def build_blacklist():
+        return _compute_blacklist(codes, ex, max_df, impl, n_docs)
+
+    blacklist = (build_blacklist() if plan_key is None else
+                 session_memo(codes.sparkSession,
+                              ("blacklist", plan_key, max_df),
+                              build_blacklist))
     if impl == "arrow":
         from vectordb_testbricks_spark.operators.arrow_kernels import (
             prefix_postings_arrow)
@@ -619,12 +588,7 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
         # more in worker round-trips than the kernel computes
         src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
                else codes)
-        posting = prefix_postings_arrow(src, id_col, threshold, blacklist)
-        if memo_key is not None:
-            from vectordb_testbricks_spark.catalog import _evict_dead_apps
-            _evict_dead_apps(_POSTING_MEMO, app_id)
-            _POSTING_MEMO[memo_key] = posting
-        return posting
+        return prefix_postings_arrow(src, id_col, threshold, blacklist)
     from pyspark.sql import Window
     from pyspark.sql import types as T
     spark = codes.sparkSession
@@ -637,15 +601,10 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
             T.StructType([T.StructField("code", T.LongType(), False)]))
         sh = sh.join(F.broadcast(bl), "code", "left_anti")
     w = Window.partitionBy(id_col).orderBy("code")
-    posting = (sh.withColumn("pos", F.row_number().over(w) - 1)
-               .filter(F.col("pos") <
-                       F.floor(F.lit(1.0 - threshold) * F.col("sz")) + 1)
-               .select(id_col, "sz", "pos", "code"))
-    if memo_key is not None:
-        from vectordb_testbricks_spark.catalog import _evict_dead_apps
-        _evict_dead_apps(_POSTING_MEMO, app_id)
-        _POSTING_MEMO[memo_key] = posting
-    return posting
+    return (sh.withColumn("pos", F.row_number().over(w) - 1)
+            .filter(F.col("pos") <
+                    F.floor(F.lit(1.0 - threshold) * F.col("sz")) + 1)
+            .select(id_col, "sz", "pos", "code"))
 
 
 def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
@@ -874,9 +833,9 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
         # verify phase only reads `codes` and the staged parquet).
         for cached in phase1_caches:
             cached.unpersist()
-            # the posting memo must not hand a later call this now-cold
-            # handle — evict so the next search rebuilds a persisted one
-            drop_posting_memo(cached)
+        # the posting memo must not hand a later call these now-cold
+        # handles — forget them so the next search rebuilds a persisted one
+        forget(lambda slot, v: any(v is c for c in phase1_caches))
         # prod the driver GC so the cleaner drops the now-unreferenced
         # phase-1 shuffle dependencies before phase 2 starts writing
         # (same double-GC settle pattern as bench's scale loop)

@@ -3,11 +3,18 @@
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same config block is
 what we would ship to a multi-executor cluster (AQE on, sane shuffle
 parallelism, Arrow enabled for the few pandas interchange points).
+
+Also home of the session memo (:func:`session_memo`): the one table that
+holds ingest-time state (loaded-table handles, BM25/IVF/n-gram index
+tables, prepared plans, manager warehouses) for the live application.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import time
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -80,3 +87,65 @@ def get_spark(app_name: str = "vectordb_testbricks_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: (applicationId, slot) -> value for the live application only; see
+#: session_memo. Guarded by _LOCK, as are _APP and _STATS.
+_TABLE: dict[tuple, object] = {}
+_APP: list = [None]
+_STATS: dict[str, dict] = {}
+_LOCK = threading.Lock()
+
+
+def session_memo(spark: SparkSession, slot: tuple, build: Callable[[], object]):
+    """``build()`` once per (applicationId, ``slot``), then the same value.
+
+    ``slot`` is a hashable tuple whose first element is a tag string
+    naming the kind of value, e.g. ``("bm25_tables", sf_dir, analyzer)``.
+    When a new applicationId shows up the whole table is dropped
+    (last-app-wins): a stopped SparkContext's DataFrame handles and
+    broadcasts are never served to, or pinned by, its successor. The key
+    is the applicationId, never ``id(spark)``, which CPython reuses after
+    garbage collection.
+    ``build`` runs outside the lock, so it may itself call session_memo;
+    when two threads race on one slot the first stored value wins and
+    both return it.
+
+    Immutable-input contract: a memoized value reflects its inputs as they
+    were at build time (a DataFrame's captured file listing, a persisted
+    intermediate). Callers memoize only over immutable fixtures or fresh
+    temp dirs; mutable collections go through the manager's versioned
+    storage instead. A caller that invalidates a value (unpersists it)
+    must :func:`forget` it."""
+    app = spark.sparkContext.applicationId
+    key = (app, slot)
+    with _LOCK:
+        if _APP[0] != app:
+            _TABLE.clear()
+            _APP[0] = app
+        st = _STATS.setdefault(slot[0],
+                               {"builds": 0, "hits": 0, "build_s": 0.0})
+        if key in _TABLE:
+            st["hits"] += 1
+            return _TABLE[key]
+    t0 = time.perf_counter()
+    value = build()
+    with _LOCK:
+        st["builds"] += 1
+        st["build_s"] += time.perf_counter() - t0
+        if _APP[0] == app:
+            value = _TABLE.setdefault(key, value)
+    return value
+
+
+def forget(match: Callable[[tuple, object], bool]) -> None:
+    """Drop the memo entries for which ``match(slot, value)`` holds."""
+    with _LOCK:
+        for key in [k for k, v in _TABLE.items() if match(k[1], v)]:
+            del _TABLE[key]
+
+
+def memo_stats() -> dict[str, dict]:
+    """Process-lifetime ``{tag: {"builds", "hits", "build_s"}}`` counters."""
+    with _LOCK:
+        return {tag: dict(st) for tag, st in _STATS.items()}
