@@ -6,17 +6,19 @@ object the driver's tail capture can always parse —
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, "tests_green": bool,
    "tests_summary": "..."}
-The verbose evidence blocks (per-query latency percentiles, 1M-row scale
-entries, concurrency/sustained QPS) are printed as an EARLIER JSON line
-and written durably to a side file: BENCH_RUN.json for single-draw runs
-(the per-round driver invocation); the median-of-N evidence mode
-(SPARK_GRAFT_BENCH_DRAWS>1) STAGES to BENCH_EVIDENCE.tmp.json and only
-writes the committed artifact BENCH_DETAIL.json when explicitly promoted
-with SPARK_GRAFT_BENCH_PROMOTE=1 (r10: an unpromoted later evidence run
-clobbered the curated artifact via the snapshot commit);
-$SPARK_GRAFT_BENCH_DETAIL overrides either —
 round 5's single ~5.5 KB line outgrew the driver's ~4 KB tail window and
 recorded as parsed:null, losing the round's headline number.
+
+The verbose evidence (per-query latency percentiles, a plan fingerprint
+per headline entry, 1M-row scale entries, concurrency/sustained QPS) is
+printed as an EARLIER JSON line and written to one record file,
+BENCH_RUN.json ($SPARK_GRAFT_BENCH_DETAIL overrides), in both the
+single-draw and the median-of-N (SPARK_GRAFT_BENCH_DRAWS>1) modes. Every
+record says what it measured: ``commit`` (git HEAD, None outside a
+checkout), ``dirty`` (tracked files modified) and, per headline entry,
+``plan`` — Exchange / BroadcastExchange / Python-eval / total node counts
+of the entry's executed plan plus the stages one repeat ran — so a stale
+record or a plan drift shows up as a field diff between two records.
 
 The metric set mirrors the reference's workload definitions (QPS/latency,
 search_permanently.py:36-96) reduced to per-query wall-clock; BASELINE.md
@@ -67,12 +69,6 @@ HEADLINE = [
 ]
 
 
-# paths whose commits define "the engine changed" for artifact freshness
-# (tests/test_bench_contract.py::test_bench_detail_fresh_vs_engine_commits)
-ENGINE_PATHS = ("vectordb_testbricks_spark", "__spark_entry__.py",
-                "bench.py")
-
-
 def _git_out(args: list[str]) -> str | None:
     """stdout of a git command in the repo root, None on any failure
     (no git, not a checkout) — stamping must never fail a bench run."""
@@ -104,14 +100,6 @@ def _require_green_suite() -> dict:
     # invocation was pointed at
     env = {k: v for k, v in os.environ.items()
            if not k.startswith("SPARK_GRAFT_")}
-    # the artifact-freshness test is deselected HERE only: a stale
-    # BENCH_DETAIL.json is exactly what a bench evidence run exists to
-    # replace, and gating that run on the artifact already being fresh
-    # would deadlock re-promotion (every other pytest invocation —
-    # pre-commit, the driver, the judge — still enforces it)
-    deselect = ["--deselect",
-                "tests/test_bench_contract.py::"
-                "test_bench_detail_fresh_vs_engine_commits"]
     # the gate runs SHARDED by default (r13, VERDICT r12 #7): the serial
     # suite's 11-30 min wall is why end-of-round promotions kept being
     # cut off mid-round. Same tests, same pass criteria — test files are
@@ -122,12 +110,11 @@ def _require_green_suite() -> dict:
     from run_suite_sharded import gate_shards, run_sharded
     n_shards = gate_shards()
     if n_shards > 1:
-        res = run_sharded(n_shards, deselect, env=env)
+        res = run_sharded(n_shards, env=env)
         summary, rc, failed = res["summary"], res["rc"], res["failed"]
     else:
         r = subprocess.run(
-            [sys.executable, "-m", "pytest", "tests/", "-q", "-rf",
-             *deselect],
+            [sys.executable, "-m", "pytest", "tests/", "-q", "-rf"],
             cwd=repo, capture_output=True, text=True, env=env)
         tail = (r.stdout or "").strip().splitlines()
         summary = tail[-1] if tail else ""
@@ -544,20 +531,59 @@ def _memo_builds() -> int:
     return sum(st["builds"] for st in memo_stats().values())
 
 
-def _write_detail(detail: dict, default_name: str = "BENCH_RUN.json") -> None:
+# physical nodes that run Python (row-at-a-time or Arrow-batched UDFs)
+_PY_EVAL_NODES = ("BatchEvalPythonExec", "ArrowEvalPythonExec",
+                  "MapInArrowExec", "MapInPandasExec",
+                  "FlatMapGroupsInPandasExec")
+
+
+def _plan_fingerprint(df) -> dict:
+    """Node-class counts of ``df``'s executed physical plan: shuffle
+    ``exchange``s, ``broadcast`` exchanges, ``python`` eval nodes and
+    total ``nodes``. The walk looks through AQE wrappers and into
+    subqueries; it plans ``df`` but runs nothing. Empty dict when the
+    plan cannot be read — instrumentation is never bench-fatal."""
+    counts = {"exchange": 0, "broadcast": 0, "python": 0, "nodes": 0}
+    try:
+        stack = [df._jdf.queryExecution().executedPlan()]
+        while stack:
+            node = stack.pop()
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                stack.append(node.executedPlan())
+                continue
+            if name.endswith("QueryStageExec"):
+                stack.append(node.plan())
+                continue
+            counts["nodes"] += 1
+            if name == "ShuffleExchangeExec":
+                counts["exchange"] += 1
+            elif name == "BroadcastExchangeExec":
+                counts["broadcast"] += 1
+            elif name in _PY_EVAL_NODES:
+                counts["python"] += 1
+            for seq in (node.children(), node.subqueries()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
+    except Exception:                             # noqa: BLE001
+        return {}
+    return counts
+
+
+def _write_detail(detail: dict) -> None:
     """Durable verbose-evidence side file + earlier stdout JSON line —
     ONE implementation of the tail-capture contract shared by main() and
     _run_draws (a diverging copy let a long suite summary overflow the
     <2 KB final line in one mode but not the other).
 
-    Single-draw runs (the per-round driver invocation) default to
-    ``BENCH_RUN.json``; only the median-of-N evidence mode writes
-    ``BENCH_DETAIL.json`` — the r08 driver run silently overwrote the
-    committed median-of-3 artifact with a single-draw detail file
-    (judge r08 #6). ``SPARK_GRAFT_BENCH_DETAIL`` still overrides."""
+    Every record is stamped with the ``commit`` it measured and whether
+    tracked files were ``dirty``, and goes to ``BENCH_RUN.json`` unless
+    ``SPARK_GRAFT_BENCH_DETAIL`` names another path."""
+    detail = dict(detail, commit=_git_out(["rev-parse", "HEAD"]),
+                  dirty=bool(_git_out(["status", "--porcelain",
+                                       "--untracked-files=no"])))
     repo = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL",
-                                 os.path.join(repo, default_name))
+                                 os.path.join(repo, "BENCH_RUN.json"))
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -576,7 +602,7 @@ def _emit_final(out: dict) -> None:
     line = json.dumps(out)
     if len(line) >= 2000:
         out.pop("queries", None)
-        out["queries_note"] = "trimmed to fit tail capture; see BENCH_DETAIL"
+        out["queries_note"] = "trimmed to fit tail capture; see BENCH_RUN.json"
         line = json.dumps(out)
     print(line, flush=True)
 
@@ -585,12 +611,11 @@ def _run_draws(n_draws: int) -> None:
     """Median-of-N evidence mode (r07 verdict task 2): run the whole
     bench N times, each in a FRESH subprocess JVM (honest independent
     draws, no shared JIT/GC state), pick the draw with the MEDIAN
-    headline total as the committed numbers, and embed every raw draw
-    total in the artifact — a committed number that happens to be the
-    round's best draw cannot gate regressions. Enabled with
-    SPARK_GRAFT_BENCH_DRAWS=N (the per-round driver run stays a single
-    draw; the policy governs the artifact committed at end of round).
-    The suite gate runs once, up front — not once per draw."""
+    headline total as the recorded numbers, and embed every raw draw
+    total in the record — a number that happens to be the round's best
+    draw cannot gate regressions. Enabled with SPARK_GRAFT_BENCH_DRAWS=N
+    (a plain run stays a single draw). The suite gate runs
+    once, up front — not once per draw."""
     import subprocess
     import sys
     import tempfile
@@ -686,33 +711,7 @@ def _run_draws(n_draws: int) -> None:
     med_detail["draw_stretch"] = {
         name: [d[1].get("stretch", {}).get(name) for d in draws]
         for name in stretch_names}
-    # staging-then-promote (judge r10 task 1): evidence runs write
-    # BENCH_EVIDENCE.tmp.json by default; the committed artifact
-    # BENCH_DETAIL.json is only written when the run is EXPLICITLY
-    # promoted (SPARK_GRAFT_BENCH_PROMOTE=1) — so a later, noisier
-    # evidence rerun (or an end-of-round snapshot committing whatever is
-    # on disk) can no longer clobber the curated median-of-3 that
-    # SURVEY.md quotes. tests/test_bench_contract.py additionally fails
-    # the suite when SURVEY's quoted draw totals diverge from the HEAD
-    # artifact.
-    promote = os.environ.get("SPARK_GRAFT_BENCH_PROMOTE", "0") == "1"
-    # promotion stamp (judge r10 "what's wrong" #1): the r10 artifact was
-    # promoted 5 engine commits before HEAD, so SURVEY's "at HEAD" claim
-    # went stale undetected. The stamp records WHEN (wall clock) and at
-    # WHICH commit the evidence was taken, plus whether engine files were
-    # dirty; tests/test_bench_contract.py fails whenever a later commit
-    # touches vectordb_testbricks_spark/, __spark_entry__.py or bench.py.
-    med_detail["promoted_unix_time"] = int(time.time())
-    med_detail["promoted_at_commit"] = _git_out(["rev-parse", "HEAD"])
-    med_detail["promoted_engine_dirty"] = bool(_git_out(
-        ["status", "--porcelain", "--", *ENGINE_PATHS]))
-    _write_detail(med_detail,
-                  default_name=("BENCH_DETAIL.json" if promote
-                                else "BENCH_EVIDENCE.tmp.json"))
-    if not promote:
-        print("# evidence staged to BENCH_EVIDENCE.tmp.json "
-              "(set SPARK_GRAFT_BENCH_PROMOTE=1 to write "
-              "BENCH_DETAIL.json)", flush=True)
+    _write_detail(med_detail)
     med_summary.update(suite)
     med_summary["draws"] = len(draws)
     _emit_final(med_summary)
@@ -797,6 +796,10 @@ def main() -> None:
     # session-memo builds during repeats 2..N per entry: a steady-state
     # timing that silently rebuilt an index shows up as nonzero here
     memo_rebuilds: dict[str, int] = {}
+    # per-entry plan fingerprint of the result the oracle checks, plus
+    # the stages the last repeat ran (stage-id watermark taken outside
+    # the timed window)
+    plans: dict[str, dict] = {}
     hp_head0 = _host_probe()
     for name in HEADLINE:
         fn = qmap[name]
@@ -806,10 +809,12 @@ def main() -> None:
         while len(runs) < want:
             if len(runs) == 1:
                 builds0 = _memo_builds()
+            sid0 = _max_stage_id(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             n = df.count()
             runs.append(time.perf_counter() - t0)
+            sid1 = _max_stage_id(spark)
             if (len(runs) == want and repeat > 1
                     and sorted(runs)[len(runs) // 2] < 0.4):
                 want = max(want, sub_second_repeat)
@@ -817,6 +822,9 @@ def main() -> None:
         timings[name] = round(runs[len(runs) // 2], 3)
         if len(runs) > 1:
             memo_rebuilds[name] = _memo_builds() - builds0
+        plans[name] = _plan_fingerprint(df)
+        if sid0 is not None and sid1 is not None:
+            plans[name]["stages"] = sid1 - sid0
         print(f"# {name}: {timings[name]:.3f}s rows={n} n_runs={len(runs)}",
               flush=True)
         if repeat > 1:
@@ -1049,9 +1057,8 @@ def main() -> None:
     # closed-loop concurrency 10 for 600 s at top_k=15000 with rotating
     # query vectors (go_bench/config.yaml:19-26). Off by default — this
     # is a one-shot committed-evidence run, not a per-round cost; enable
-    # with SPARK_GRAFT_BENCH_SUSTAINED600_SEC=600. Writes its own
-    # artifact (BENCH_SUSTAINED600.json) so the evidence survives
-    # independent of which detail file this run targets.
+    # with SPARK_GRAFT_BENCH_SUSTAINED600_SEC=600. The block lands in
+    # the detail record as ``sustained_600s``.
     sustained600: dict = {}
     s600_sec = float(os.environ.get(
         "SPARK_GRAFT_BENCH_SUSTAINED600_SEC", "0"))
@@ -1099,18 +1106,6 @@ def main() -> None:
               f"p50={rep.latency.get('p50')} p99={rep.latency.get('p99')} "
               f"failures={rep.failures} stragglers={rep.stragglers}",
               flush=True)
-        try:
-            repo = os.path.dirname(os.path.abspath(__file__))
-            # the committed artifact only accepts FULL 600s runs —
-            # a short smoke run must stage, never clobber (the same
-            # staging-vs-promote discipline as BENCH_DETAIL.json)
-            fname = ("BENCH_SUSTAINED600.json" if s600_sec >= 600
-                     else "BENCH_SUSTAINED600.tmp.json")
-            with open(os.path.join(repo, fname), "w") as f:
-                json.dump(sustained600, f, indent=1, sort_keys=True)
-                f.write("\n")
-        except OSError as e:
-            print(f"# sustained600 artifact not written: {e}", flush=True)
         base15k.unpersist()
 
     # (Concurrency + sustained measured BEFORE the scale/stretch block on
@@ -1289,7 +1284,7 @@ def main() -> None:
     # driver's tail capture only needs to survive long enough to keep the
     # compact final line intact.
     detail: dict = {"kind": "bench_detail", "sf": sf, "total_sec": total,
-                    "host_load_headline": head_host}
+                    "host_load_headline": head_host, "plan": plans}
     if latency:
         detail["latency"] = latency
     if memo_rebuilds:

@@ -19,6 +19,19 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def test_plan_fingerprint_counts_exchanges_and_python_nodes(spark):
+    """bench's per-entry plan fingerprint counts node classes of the
+    executed plan, looking through the AQE wrapper."""
+    from bench import _plan_fingerprint
+    agg = _plan_fingerprint(spark.range(0, 100, 1, 4).groupBy().count())
+    assert agg["exchange"] >= 1 and agg["python"] == 0
+    plus_one = F.udf(lambda x: x + 1, "long")
+    udf = _plan_fingerprint(spark.range(0, 100, 1, 4)
+                            .select(plus_one("id").alias("y")))
+    assert udf["python"] >= 1 and udf["exchange"] == 0
+    assert udf["nodes"] > udf["python"]
+
+
 def test_filter_and_projection_reach_scan(tables):
     from vectordb_testbricks_spark.operators.query import query
     ev = tables["events"].df

@@ -5,12 +5,13 @@ JVM a 3-5-run min/max band is tight, but across FRESH JVMs whole-draw-
 correlated shifts move every entry's median together by up to ~2x even
 on a quiet host (draw_host_load busy_cores ~6/32) — so the band that
 makes regression calls trustworthy is the CROSS-DRAW median band
-(min/max of each entry's per-draw medians, committed in the artifact's
-`draw_queries`), not the within-JVM repeat band.
+(min/max of each entry's per-draw medians, recorded in the draws-mode
+record's `draw_queries`), not the within-JVM repeat band.
 
 Usage:
   python tools/check_noise_band.py [detail.json]
-      — print each entry's cross-draw median band + relative spread.
+      — print each entry's cross-draw median band + relative spread
+        (default: BENCH_RUN.json, the record bench.py writes).
   python tools/check_noise_band.py OLD.json NEW.json
       — regression report: flag entries whose NEW committed median
         falls outside OLD's cross-draw band (and vice versa); entries
@@ -82,7 +83,7 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     args = sys.argv[1:]
     if len(args) <= 1:
-        path = args[0] if args else os.path.join(repo, "BENCH_DETAIL.json")
+        path = args[0] if args else os.path.join(repo, "BENCH_RUN.json")
         with open(path) as f:
             d = json.load(f)
         bands = dict(_bands(d), **_mixed_bands(d))
