@@ -540,7 +540,7 @@ _SQL_HAM = ("list_sum(list_transform(list_zip(CAST(e.embedding AS DOUBLE[]), q.q
             " x -> CASE WHEN (x[1] >= 0) <> (x[2] >= 0) THEN 1 ELSE 0 END))")
 
 
-def _knn(spark, sf_dir, metric, flt=None, with_label=False, impl=None):
+def _knn(spark, sf_dir, metric, flt=None, with_label=False, impl="jvm"):
     from vectordb_testbricks_spark.operators.search import knn_search
     emb, q = _emb_queries(spark, sf_dir)
     hits = knn_search(emb, q, "embedding", "vec_id", metric=metric, k=10,
@@ -680,16 +680,15 @@ def dd_minhash_1m(spark, sf_dir, n=1_000_000, uniq=900_000):
     0..(n−uniq), so the expected pair set is the n−uniq planted
     duplicates; every stage is kernel / bucket-join work, no driver
     collection. Since r09 the corpus AND the codes+signature stage are
-    Arrow/numpy (impl="arrow", _gen_docs_arrow) — the r08-localized
-    HotSpot slow mode lived in this entry's JVM HOF stage, and the
-    kernel path is immune by construction. Not a registry entry (no
-    1M-row DuckDB oracle in the per-round budget) — correctness of the
-    pipeline itself is oracled by dd_minhash (which runs the same
-    impl="arrow" default) and the Arrow==JVM identity tests."""
+    Arrow/numpy (minhash_lsh_dedup's only path, _gen_docs_arrow) — the
+    r08-localized HotSpot slow mode lived in this entry's JVM HOF stage,
+    and the kernel path is immune by construction. Not a registry entry
+    (no 1M-row DuckDB oracle in the per-round budget) — correctness of
+    the pipeline itself is oracled by dd_minhash (the same kernel path)
+    and the Arrow==JVM identity tests."""
     from vectordb_testbricks_spark.operators.dedup import minhash_lsh_dedup
     docs = _gen_docs_arrow(spark, n, uniq)
-    return minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7,
-                             impl="arrow")
+    return minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7)
 
 
 def dd_minhash_10m(spark, sf_dir):
@@ -3109,25 +3108,15 @@ def dd_ngram_jaccard(spark, sf_dir):
         scale path of the 1M/10M entries) — putting the kernel build
         behind the driver's DuckDB hash every round, with its own SQL
         lowering (ROW_NUMBER ordered by code alone)."""
-    from vectordb_testbricks_spark.materialize import (
-        parallelize_small, shared_persist)
-    from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs, resolve_impl)
+    from vectordb_testbricks_spark.materialize import shared_persist
     from vectordb_testbricks_spark.operators.dedup import (
         _token_codes, jaccard_pairs, ngram_candidate_pairs)
     base = _doubled_docs(spark, sf_dir)
     nd = _doubled_docs_count(spark, sf_dir)
-    # both modes share ONE codes cache (same resolution ngram_jaccard_pairs
-    # applies: env SPARK_GRAFT_NGRAM_IMPL, jvm default); the 'code' mode
-    # still routes its posting KERNEL + pigeonhole blacklist through Arrow
-    impl = resolve_impl(None, "SPARK_GRAFT_NGRAM_IMPL", "jvm", "ngram")
-    if impl == "arrow":
-        codes = shared_persist(minhash_codes_sigs(
-            parallelize_small(base.select("doc_id", "text")), "doc_id",
-            "text", shingle_n=3, with_sigs=False))
-    else:
-        codes = shared_persist(_token_codes(base, "doc_id", "text",
-                                            shingle_n=3))
+    # both modes share ONE JVM codes cache (ngram_jaccard_pairs' default
+    # at fixture scale); the 'code' mode's posting build is the Arrow kernel
+    codes = shared_persist(_token_codes(base, "doc_id", "text",
+                                        shingle_n=3))
     # r12 (guide §1.2 step 1): candidates per order, ONE mode-tagged
     # verify pass instead of two — per-pair exact Jaccard is independent
     # of which order proposed the pair, so the union'd candidates ride a
@@ -3135,14 +3124,13 @@ def dd_ngram_jaccard(spark, sf_dir):
     # former per-mode verifies by construction (same candidates per mode,
     # same per-pair verification, same threshold and rounding)
     cands = None
-    for mode, kw in (("rarity", {"impl": impl}),
-                     ("code", {"order": "code", "impl": "arrow"})):
+    for mode in ("rarity", "code"):
         c = ngram_candidate_pairs(codes, "doc_id", 0.7, max_df=50,
-                                  min_shared=2, prefix=True, n_docs=nd,
-                                  **kw)
+                                  min_shared=2, prefix=True, order=mode,
+                                  n_docs=nd)
         c = c.select(F.lit(mode).alias("mode"), "id_a", "id_b")
         cands = c if cands is None else cands.unionByName(c)
-    return (jaccard_pairs(codes, cands, "doc_id", impl=impl)
+    return (jaccard_pairs(codes, cands, "doc_id")
             .filter(F.col("jaccard") >= 0.7)
             .select("mode", "id_a", "id_b",
                     F.round("jaccard", 6).alias("jaccard")))

@@ -67,31 +67,29 @@ class TestMinhashKernel:
         assert jvm == ar
 
     def test_pipeline_pairs_identical(self, spark, tables):
-        """End-to-end minhash_lsh_dedup: impl='arrow' and impl='jvm'
-        return the same verified pair set with the same Jaccard."""
+        """End-to-end minhash_lsh_dedup (the kernel path) returns the
+        same verified pair set, with the same Jaccard, as the pipeline
+        rebuilt from the JVM expression stages."""
         from vectordb_testbricks_spark.operators.dedup import (
-            minhash_lsh_dedup)
+            _token_codes, jaccard_pairs, lsh_candidate_pairs,
+            minhash_lsh_dedup, signatures_from_codes)
         docs = tables["documents"].df.select("doc_id", "text")
         doubled = docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
 
-        def pairs(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in minhash_lsh_dedup(
-                    doubled, "doc_id", "text", threshold=0.7,
-                    impl=impl).collect())
+        def pairs(df):
+            return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9))
+                          for r in df.collect())
 
-        a, j = pairs("arrow"), pairs("jvm")
+        codes = _token_codes(doubled, "doc_id", "text", 3)
+        cands = lsh_candidate_pairs(
+            signatures_from_codes(codes, "doc_id"), "doc_id")
+        j = pairs(jaccard_pairs(codes, cands, "doc_id", impl="jvm")
+                  .filter(F.col("jaccard") >= 0.7))
+        a = pairs(minhash_lsh_dedup(doubled, "doc_id", "text",
+                                    threshold=0.7))
         assert a == j
         assert len(a) > 0
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        from vectordb_testbricks_spark.operators.dedup import (
-            minhash_lsh_dedup)
-        with pytest.raises(ValueError, match="unknown minhash impl"):
-            minhash_lsh_dedup(edge_docs, "doc_id", "text",
-                              impl="vectorized").collect()
 
 
 class TestNgramKernelPath:
@@ -132,7 +130,7 @@ class TestPrefixPostingsKernel:
                                             monkeypatch):
         from vectordb_testbricks_spark.operators import dedup
         from vectordb_testbricks_spark.operators.dedup import (
-            _code_order_postings, _token_codes)
+            _code_order_postings, _code_order_postings_jvm, _token_codes)
         # force the pigeonhole candidate branch (normally a >=100k-doc
         # scale escape) so the fixture-scale identity covers it;
         # max_df=3 makes the blacklist it produces NON-empty
@@ -146,14 +144,18 @@ class TestPrefixPostingsKernel:
             edge_docs.select((F.col("doc_id") + 2000000).alias("doc_id"),
                              "text"))
         codes = _token_codes(corpus, "doc_id", "text", 3)
-        jvm = sorted(map(tuple, _code_order_postings(
-            codes, "doc_id", 0.7, max_df, "jvm").collect()))
+        # the reference blacklists by exact aggregation, so equality also
+        # proves the pigeonhole blacklist exact
+        jvm = sorted(map(tuple, _code_order_postings_jvm(
+            codes, "doc_id", 0.7, max_df).collect()))
         ar = sorted(map(tuple, _code_order_postings(
-            codes, "doc_id", 0.7, max_df, "arrow").collect()))
+            codes, "doc_id", 0.7, max_df).collect()))
         assert jvm == ar
         assert len(jvm) > 0
 
-    def test_order_equivalence_final_pairs(self, spark, tables):
+    def test_order_equivalence_final_pairs(self, spark, tables,
+                                           monkeypatch):
+        from vectordb_testbricks_spark.operators import dedup
         from vectordb_testbricks_spark.operators.dedup import (
             ngram_jaccard_pairs)
         docs = tables["documents"].df.select("doc_id", "text")
@@ -169,6 +171,12 @@ class TestPrefixPostingsKernel:
 
         rarity = pairs(order="rarity", impl="jvm")
         code_a = pairs(order="code", impl="arrow")
+        # the same code-order pipeline over the JVM posting reference
+        monkeypatch.setattr(
+            dedup, "_code_order_postings",
+            lambda codes, id_col, threshold, max_df, n_docs=None:
+            dedup._code_order_postings_jvm(codes, id_col, threshold,
+                                           max_df))
         code_j = pairs(order="code", impl="jvm")
         assert rarity == code_a == code_j
         assert len(rarity) > 0
@@ -252,15 +260,6 @@ class TestPrefixPostingsKernel:
         with pytest.raises(ValueError, match="unknown order"):
             ngram_jaccard_pairs(edge_docs, "doc_id", "text",
                                 order="df").collect()
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        # ADVICE r10: a typo like 'Arrow' used to silently take the JVM
-        # path and silently disable the pigeonhole scale escape
-        from vectordb_testbricks_spark.operators.dedup import (
-            ngram_candidate_pairs, _token_codes)
-        codes = _token_codes(edge_docs, "doc_id", "text", 3)
-        with pytest.raises(ValueError, match="unknown impl"):
-            ngram_candidate_pairs(codes, "doc_id", 0.7, impl="Arrow")
 
 
 SPARSE_ROWS = [
@@ -454,18 +453,24 @@ class TestJaccardKernel:
         assert got[(1, 2)] == 1.0          # [NULL] vs [NULL]
         assert got[(1, 3)] == 0.5          # [NULL] vs [NULL, 7]
         assert got[(3, 4)] == 1 / 3.0      # [NULL,7] vs [7,9]
-        # end-to-end: two NULL-text docs must pair identically on the
-        # DEFAULT (arrow) path and the jvm path
+        # end-to-end: two NULL-text docs pair on the kernel pipeline
         docs = spark.createDataFrame(
             [(1, None), (2, None), (3, "real text here")],
             "doc_id bigint, text string")
-        for impl in ("arrow", "jvm"):
-            got_pairs = sorted(
-                (r["id_a"], r["id_b"])
-                for r in minhash_lsh_dedup(docs, "doc_id", "text",
-                                           threshold=0.7,
-                                           impl=impl).collect())
-            assert got_pairs == [(1, 2)], impl
+        got_pairs = sorted(
+            (r["id_a"], r["id_b"])
+            for r in minhash_lsh_dedup(docs, "doc_id", "text",
+                                       threshold=0.7).collect())
+        assert got_pairs == [(1, 2)]
+
+    def test_unknown_impl_raises(self, spark):
+        # a typo ('Arrow') must not silently take the JVM path
+        from vectordb_testbricks_spark.operators.dedup import jaccard_pairs
+        codes = spark.createDataFrame([(1, [10])],
+                                      "doc_id bigint, codes array<bigint>")
+        pairs = spark.createDataFrame([(1, 1)], "id_a bigint, id_b bigint")
+        with pytest.raises(ValueError, match="unknown jaccard impl"):
+            jaccard_pairs(codes, pairs, "doc_id", impl="Arrow")
 
 
 class TestKnnKernel:
@@ -549,32 +554,24 @@ class TestSimhashKernel:
         the JVM expression path — incl. bits=64 (bit 63 wraps into the
         long's sign bit on both paths), NULL and token-less texts -> 0."""
         from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
+            _simhash_signatures_jvm, simhash_signatures)
         jvm = _collect_map(
-            simhash_signatures(edge_docs, "doc_id", "text", bits,
-                               impl="jvm"), "doc_id", "simhash")
+            _simhash_signatures_jvm(edge_docs, "doc_id", "text", bits),
+            "doc_id", "simhash")
         ar = _collect_map(
-            simhash_signatures(edge_docs, "doc_id", "text", bits,
-                               impl="arrow"), "doc_id", "simhash")
+            simhash_signatures(edge_docs, "doc_id", "text", bits),
+            "doc_id", "simhash")
         assert jvm == ar
 
     def test_fixture_corpus_identical(self, spark, tables):
         from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
+            _simhash_signatures_jvm, simhash_signatures)
         docs = tables["documents"].df.select("doc_id", "text")
-        jvm = _collect_map(
-            simhash_signatures(docs, "doc_id", "text", impl="jvm"),
-            "doc_id", "simhash")
-        ar = _collect_map(
-            simhash_signatures(docs, "doc_id", "text", impl="arrow"),
-            "doc_id", "simhash")
+        jvm = _collect_map(_simhash_signatures_jvm(docs, "doc_id", "text"),
+                           "doc_id", "simhash")
+        ar = _collect_map(simhash_signatures(docs, "doc_id", "text"),
+                          "doc_id", "simhash")
         assert jvm == ar
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
-        with pytest.raises(ValueError, match="simhash"):
-            simhash_signatures(edge_docs, "doc_id", "text", impl="simd")
 
 
 class TestCodeOrderPostingMemo:
@@ -591,13 +588,13 @@ class TestCodeOrderPostingMemo:
             dedup._token_codes(edge_docs, "doc_id", "text", 3))
         try:
             p1 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             p2 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             assert p1 is p2
-            # rows still correct on the memoized handle (vs the JVM twin)
-            jvm = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                             "jvm", n_docs=9)
+            # rows still correct on the memoized handle (vs the JVM
+            # reference)
+            jvm = dedup._code_order_postings_jvm(codes, "doc_id", 0.7, 50)
             key = lambda rs: sorted(
                 (r["doc_id"], r["sz"], r["pos"], r["code"])
                 for r in rs.collect())
@@ -605,7 +602,7 @@ class TestCodeOrderPostingMemo:
             # explicit eviction protects the two-phase unpersist path
             forget(lambda slot, v: v is p1)
             p3 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             assert p3 is not p1
         finally:
             codes.unpersist()
@@ -613,7 +610,7 @@ class TestCodeOrderPostingMemo:
             # no-op — it is never a memo value — and leaked p3's handle
             # over the now-unpersisted codes cache into later tests);
             # locals() guards the early-assertion-failure path where p3
-            # or jvm were never bound
-            for h in (locals().get("p3"), locals().get("jvm")):
-                if h is not None:
-                    forget(lambda slot, v, h=h: v is h)
+            # was never bound
+            p3 = locals().get("p3")
+            if p3 is not None:
+                forget(lambda slot, v: v is p3)

@@ -15,10 +15,6 @@ import math
 KM_PER_DEGREE = 111.195
 
 
-def point_wkt(lon: float, lat: float) -> str:
-    return f"POINT ({lon} {lat})"
-
-
 def square_polygon_wkt(center: str | tuple[float, float],
                        area_sq_km: float) -> str:
     """WKT POLYGON of a square of ``area_sq_km`` centered on ``center``

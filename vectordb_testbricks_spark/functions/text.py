@@ -423,11 +423,6 @@ def hex_to_long(c: Column) -> Column:
     return F.conv(F.substring(c, 1, 15), 16, 10).cast("bigint")
 
 
-def md5_long_sql(expr: str) -> str:
-    """DuckDB twin of :func:`md5_long` for oracle SQL strings."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
 def shingles(tokens: Column, n: int) -> Column:
     """Word n-gram shingles from a token array: array of space-joined n-grams.
     Documents shorter than n tokens yield their full token join as the single

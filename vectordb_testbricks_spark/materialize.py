@@ -108,20 +108,19 @@ def _has_wide_node(plan) -> bool:
     return False
 
 
-#: Estimated input bytes each widened task should own (env
-#: SPARK_GRAFT_WIDEN_KB, default 32 KB of Catalyst-estimated plan size).
-#: The width is DERIVED FROM INPUT SIZE instead of jumping straight to
-#: defaultParallelism (r13, guide §2.2/§2.5 "fewer, larger tasks" +
-#: VERDICT r12 #6): a 255 KB fixture scan fanned into 32 python tasks
-#: pays ~32 worker round-trips + per-task page-backing stalls for ~10 ms
-#: of compute each — measured on the simhash kernel (5k docs): width 8
+#: Estimated input bytes each widened task should own (32 KB of
+#: Catalyst-estimated plan size). The width is DERIVED FROM INPUT SIZE
+#: instead of jumping straight to defaultParallelism (r13, guide
+#: §2.2/§2.5 "fewer, larger tasks" + VERDICT r12 #6): a 255 KB fixture
+#: scan fanned into 32 python tasks pays ~32 worker round-trips +
+#: per-task page-backing stalls for ~10 ms of compute each — measured
+#: on the simhash kernel (5k docs): width 8
 #: 0.485 s / 16 0.480 s / 32 0.543 s / unwidened 0.90 s. 32 KB/task puts
 #: that input at width 8-16; anything ≥ ~1 MB of estimated bytes still
 #: widens to every core, and at-scale multi-split scans skip the widen
 #: entirely (their partition count already exceeds the cap). Production
 #: note: on a real cluster defaultParallelism is the executor-slot
-#: count, the cap still applies, and the env knob tunes bytes-per-task
-#: for clusters whose python workers want bigger slices.
+#: count and the cap still applies.
 WIDEN_TARGET_BYTES_PER_TASK = 32 << 10
 WIDEN_MIN_TASKS = 4
 
@@ -133,14 +132,6 @@ def _widen_width(df: DataFrame, target: int) -> int:
     the stats probe fails or the estimate is degenerate (Catalyst
     reports Long.MaxValue-ish sizes for some nodes — those clamp at
     ``target`` naturally)."""
-    import os
-    per_task = WIDEN_TARGET_BYTES_PER_TASK
-    env = os.environ.get("SPARK_GRAFT_WIDEN_KB")
-    if env:
-        try:
-            per_task = max(1, int(env)) << 10
-        except ValueError:
-            pass
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
@@ -148,7 +139,8 @@ def _widen_width(df: DataFrame, target: int) -> int:
         return target
     if size <= 0:
         return target
-    return max(WIDEN_MIN_TASKS, min(target, -(-size // per_task)))
+    return max(WIDEN_MIN_TASKS,
+               min(target, -(-size // WIDEN_TARGET_BYTES_PER_TASK)))
 
 
 def parallelize_small(df: DataFrame) -> DataFrame:

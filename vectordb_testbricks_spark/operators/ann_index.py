@@ -286,15 +286,15 @@ SPARSE_BUCKET_COL = "_bucket"
 
 def build_sparse_inverted(base: DataFrame, map_col: str, id_col: str,
                           n_buckets: int = 64,
-                          impl: str | None = None) -> SparseInvModel:
+                          impl: str = "jvm") -> SparseInvModel:
     """Explode a SPARSE_FLOAT_VECTOR column into bucketed postings. The
     bucket is crc32(key) % n_buckets — computable driver-side
     (search.sparse_bucket_py), so a query prunes partition dirs from its
     literal keys before any IO.
 
-    ``impl`` picks the explode stage: ``"jvm"`` (default, env
-    ``SPARK_GRAFT_SPARSE_IMPL``) is the Column explode;
-    ``"arrow"`` is the Arrow-batched kernel
+    ``impl`` picks the explode stage, and the caller picks it:
+    ``"jvm"`` (default) is the Column explode; ``"arrow"`` is the
+    Arrow-batched kernel
     (arrow_kernels.sparse_postings_arrow) — identical postings (asserted
     in tests), immune to the per-JVM HotSpot slow mode that hit this
     stage's HOF eval chain at 1M+ rows (BASELINE.md r08). The scale
@@ -302,11 +302,10 @@ def build_sparse_inverted(base: DataFrame, map_col: str, id_col: str,
     "jvm" so its per-round timing/plan comparison stays stable. Bucket
     assignment stays a flat codegen crc32 expression in both modes."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        resolve_impl, sparse_postings_arrow)
+        check_impl, sparse_postings_arrow)
     from vectordb_testbricks_spark.operators.search import (
         sparse_bucket_expr, sparse_postings)
-    impl = resolve_impl(impl, "SPARK_GRAFT_SPARSE_IMPL", "jvm", "sparse")
-    if impl == "arrow":
+    if check_impl(impl, "sparse") == "arrow":
         posts = sparse_postings_arrow(base, map_col, id_col)
     else:
         posts = sparse_postings(base, map_col, id_col)

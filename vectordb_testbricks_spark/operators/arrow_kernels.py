@@ -17,7 +17,15 @@ expression path (tokenize regex, md5-derived 60-bit codes mod
 P = 2^31-1, the affine hash family of dedup.hash_params, NULL/empty-text
 edge semantics) — asserted by identity tests in
 tests/test_arrow_kernels.py and, for the MinHash pipeline, by the
-driver's DuckDB oracle row (dd_minhash runs the Arrow path by default).
+driver's DuckDB oracle row (dd_minhash).
+
+Who picks which path: the kernel is the only path of MinHash and
+SimHash dedup and of the code-order posting build (their JVM twins are
+dedup references the identity tests call). knn_search,
+build_sparse_inverted, ngram_jaccard_pairs and jaccard_pairs take a
+caller-set ``impl`` (default ``"jvm"``, the fixture entries' and
+serving path; the 1M scale entries pass ``"arrow"``). No env var
+overrides either.
 
 Reference parity: the signatures these kernels produce feed the same
 banded-LSH dedup surface SURVEY.md S2 maps from the reference's
@@ -34,13 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def resolve_impl(impl: str | None, env_var: str, default: str,
-                 label: str) -> str:
-    """Shared impl-switch resolution for the kernelized operators:
-    explicit arg wins, then the env var, then the operator's default;
-    anything but 'arrow'/'jvm' raises naming the operator."""
-    import os
-    impl = impl or os.environ.get(env_var, default)
+def check_impl(impl: str, label: str) -> str:
+    """Validate a caller-picked ``impl``: anything but 'arrow'/'jvm'
+    raises naming the operator, so a typo ('Arrow') never silently
+    takes the JVM path."""
     if impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown {label} impl {impl!r} "
                          f"(expected 'arrow' or 'jvm')")
@@ -775,8 +780,9 @@ def knn_search_arrow(base, queries, vec_col: str, id_col: str,
     scoring + map-side partial top-k; the pre-filter compiles exactly
     like the JVM path and the final exact window IS the JVM path's
     (search._ranked). The query side is collected driver-side (tiny by
-    the broadcast contract). Selected via knn_search(impl="arrow") or
-    env SPARK_GRAFT_KNN_IMPL."""
+    the broadcast contract). Runs when the caller passes
+    ``knn_search(impl="arrow")`` — the 1M kNN scale entries and
+    v_knn_metrics do; the serving paths keep the JVM default."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 

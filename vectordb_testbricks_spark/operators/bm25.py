@@ -92,13 +92,6 @@ def bm25_contrib() -> Column:
     return idf * tf_part
 
 
-def bm25_score_components(tf_df: DataFrame, stats: DataFrame,
-                          id_col: str) -> DataFrame:
-    """Join tf × stats and emit the per-(doc, term) BM25 contribution."""
-    return (tf_df.join(F.broadcast(stats), "term")
-            .select(id_col, "term", bm25_contrib().alias("contrib")))
-
-
 def bm25_search(docs: DataFrame, query_text: str, id_col: str, text_col: str,
                 k: int = 10, flt: str | Column | None = None,
                 tf_df: DataFrame | None = None,

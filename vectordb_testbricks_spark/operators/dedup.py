@@ -34,6 +34,7 @@ from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
     BARRIER_MIN_ROWS, barrier_if_large, materialize_barrier,
     parallelize_small, shared_persist)
+from vectordb_testbricks_spark.operators.arrow_kernels import check_impl
 from vectordb_testbricks_spark.session import forget, session_memo
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime), the classic minhash modulus
@@ -229,6 +230,7 @@ def jaccard_pairs(codes: DataFrame, pairs: DataFrame, id_col: str,
     collection-expression eval showed the same graded per-JVM CPU
     inflation the signature stage did (BASELINE.md r08/r09), and the
     join/shuffle machinery it keeps on the JVM is codegen-stable."""
+    check_impl(impl, "jaccard")
     ca = codes.select(F.col(id_col).alias("id_a"), F.col("codes").alias("ca"))
     cb = codes.select(F.col(id_col).alias("id_b"), F.col("codes").alias("cb"))
     joined = pairs.join(ca, "id_a").join(cb, "id_b")
@@ -251,79 +253,60 @@ def jaccard_pairs(codes: DataFrame, pairs: DataFrame, id_col: str,
 def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
                       threshold: float = 0.7,
                       shingle_n: int | None = 3,
-                      impl: str | None = None,
                       n_docs: int | None = None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidate pairs with verified
     Jaccard ≥ threshold. Returns (id_a, id_b, jaccard).
 
-    The (id, codes) table feeds both the signature and the verification
-    stage; it is computed once and cached for the pipeline's lifetime (at
-    cluster scale: persist to parquet instead).
-
-    ``impl`` picks the codes+signature materialization:
-      * ``"arrow"`` (default, env ``SPARK_GRAFT_MINHASH_IMPL``) — the
-        Arrow-batched numpy kernel (operators/arrow_kernels.py). One
-        mapInPandas pass computes codes AND sigs; chosen as the default
-        because the JVM expression path's interpreted-HOF eval chain is
-        subject to a sticky per-JVM HotSpot slow mode at ~16x CPU
-        (BASELINE.md r08) — the kernel is immune by construction.
-      * ``"jvm"`` — the original pure-Column expression path, kept as
-        the in-engine twin (bit-for-bit identity asserted in
-        tests/test_arrow_kernels.py; the DuckDB oracle reproduces the
-        same signatures either way).
-    Both paths share the LSH banding, candidate join and exact-Jaccard
-    verification unchanged — impl changes HOW one stage materializes,
-    never what any stage returns. ``n_docs`` is the optional cheap row
-    hint forwarded to :func:`lsh_candidate_pairs` (small hinted corpora
-    take the bucket-local candidate emit; no hint keeps the scale-safe
+    Codes and signatures come from one Arrow-batched kernel pass
+    (arrow_kernels.minhash_codes_sigs), cached for the pipeline's
+    lifetime; the kernel is immune to the per-JVM HotSpot slow mode of
+    the JVM expression path's HOF chain (~16x CPU, BASELINE.md r08).
+    Identity tests compare it against that JVM twin (:func:`_token_codes`
+    + :func:`signatures_from_codes` + ``jaccard_pairs(impl="jvm")``).
+    ``n_docs`` is the optional cheap row hint forwarded to
+    :func:`lsh_candidate_pairs` (small hinted corpora take the
+    bucket-local candidate emit; no hint keeps the scale-safe
     self-join)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "SPARK_GRAFT_MINHASH_IMPL", "arrow",
-                        "minhash")
-    if impl == "arrow":
-        # widen BEFORE the kernel: the Python work must spread across
-        # all cores even when the input is a few-partition parquet scan
-        cs = shared_persist(
-            minhash_codes_sigs(parallelize_small(
-                docs.select(id_col, text_col)), id_col,
-                text_col, NUM_HASHES, shingle_n))
-        codes = cs.select(id_col, "codes")
-        sigs = cs.select(id_col, "sig")
-    else:
-        codes = shared_persist(_token_codes(docs, id_col, text_col,
-                                            shingle_n))
-        sigs = signatures_from_codes(codes, id_col)
-    cands = lsh_candidate_pairs(sigs, id_col, n_docs=n_docs)
-    return (jaccard_pairs(codes, cands, id_col, impl=impl)
+        minhash_codes_sigs)
+    # widen BEFORE the kernel: the Python work must spread across all
+    # cores even when the input is a few-partition parquet scan
+    cs = shared_persist(
+        minhash_codes_sigs(parallelize_small(
+            docs.select(id_col, text_col)), id_col,
+            text_col, NUM_HASHES, shingle_n))
+    cands = lsh_candidate_pairs(cs.select(id_col, "sig"), id_col,
+                                n_docs=n_docs)
+    return (jaccard_pairs(cs.select(id_col, "codes"), cands, id_col,
+                          impl="arrow")
             .filter(F.col("jaccard") >= threshold))
 
 
 # ----------------------------------------------------------------- simhash
 
 def simhash_signatures(docs: DataFrame, id_col: str, text_col: str,
-                       bits: int = 16, impl: str | None = None) -> DataFrame:
+                       bits: int = 16) -> DataFrame:
     """(id, simhash) — tf-weighted hyperplane simhash, `bits` wide.
 
     bit_j = [ Σ_tokens tf · sign_j(token) > 0 ] where sign_j(token) ∈ {-1, 1}
     comes from the affine hash family's parity. Per-doc array aggregate.
 
-    ``impl`` picks the materialization (``"arrow"`` default, env
-    ``SPARK_GRAFT_SIMHASH_IMPL``): the Arrow-batched numpy kernel
-    (arrow_kernels.simhash_arrow — bit-identical signatures, asserted by
-    identity tests and the DuckDB oracle). The JVM Column path below is
-    the in-engine twin; its per-doc tf expression
+    Always the Arrow-batched numpy kernel (arrow_kernels.simhash_arrow);
+    identity tests compare it bit for bit against
+    :func:`_simhash_signatures_jvm`. That JVM per-doc tf expression
     (transform(array_distinct) × filter) is an interpreted-HOF chain
     quadratic in doc length — the same expression class as the r08
     per-JVM slow mode the MinHash kernel escaped (r12, guide §4.2)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        resolve_impl, simhash_arrow)
-    impl = resolve_impl(impl, "SPARK_GRAFT_SIMHASH_IMPL", "arrow",
-                        "simhash")
-    if impl == "arrow":
-        return simhash_arrow(
-            parallelize_small(docs.select(id_col, text_col)),
-            id_col, text_col, bits)
+        simhash_arrow)
+    return simhash_arrow(parallelize_small(docs.select(id_col, text_col)),
+                         id_col, text_col, bits)
+
+
+def _simhash_signatures_jvm(docs: DataFrame, id_col: str, text_col: str,
+                            bits: int = 16) -> DataFrame:
+    """JVM Column reference of :func:`simhash_signatures` (identity
+    tests only)."""
     params = hash_params(bits)
     # per-doc (code, tf) pairs as a row-local array expression — no explode /
     # double groupBy shuffle; tf scope is the document itself. Tokens come
@@ -441,11 +424,17 @@ def _codes_plan_key(codes: DataFrame) -> int | None:
         return None
 
 
+def _over_max_df(ex: DataFrame, max_df: int) -> DataFrame:
+    """Codes of ``ex`` with df > ``max_df`` (plain exact aggregation)."""
+    return (ex.groupBy("code").agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") > max_df).select("code"))
+
+
 def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
-                       impl: str, n_docs: int) -> list:
+                       n_docs: int) -> list:
     """The sorted over-``max_df`` code blacklist for the code-order
     posting build, by partition regime (see the regime comment in
-    :func:`_code_order_postings`).
+    :func:`_build_code_order_postings`).
 
     pigeonhole soundness REQUIRES nparts >= the partition count
     mapInArrow actually sees (min_local too high -> heavy codes
@@ -462,7 +451,7 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
     # below PIGEONHOLE_MIN_ROWS the plain aggregation is trivially cheap
     # and the pigeonhole pass would be pure python-roundtrip overhead —
     # the two-regime design is a SCALE escape, not a fixture tax
-    if (nparts is not None and nparts <= max_df and impl == "arrow"
+    if (nparts is not None and nparts <= max_df
             and n_docs >= PIGEONHOLE_MIN_ROWS):
         from vectordb_testbricks_spark.operators.arrow_kernels import (
             local_heavy_codes_arrow)
@@ -478,14 +467,10 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
         else:
             cdf = codes.sparkSession.createDataFrame(
                 cand_rows, "code bigint")
-            over = (ex.join(F.broadcast(cdf), "code")
-                    .groupBy("code").agg(F.count(F.lit(1)).alias("_df"))
-                    .filter(F.col("_df") > max_df).select("code"))
-            rows = over.take(NGRAM_BLACKLIST_MAX + 1)
+            rows = _over_max_df(ex.join(F.broadcast(cdf), "code"),
+                                max_df).take(NGRAM_BLACKLIST_MAX + 1)
     else:
-        over = (ex.groupBy("code").agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") > max_df).select("code"))
-        rows = over.take(NGRAM_BLACKLIST_MAX + 1)
+        rows = _over_max_df(ex, max_df).take(NGRAM_BLACKLIST_MAX + 1)
     if len(rows) > NGRAM_BLACKLIST_MAX:
         raise ValueError(
             f"order='code' blacklist exceeds {NGRAM_BLACKLIST_MAX} codes "
@@ -496,7 +481,7 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
 
 
 def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
-                         max_df: int, impl: str,
+                         max_df: int,
                          n_docs: int | None = None) -> DataFrame:
     """Prefix posting table ``(id, sz, pos, code)`` under the **code
     total order** — the shuffle-free build behind
@@ -513,17 +498,17 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     window sort — the two stages that spilled ~55 GB at 10M docs under
     the rarity order (BASELINE.md scaling model).
 
-    ``impl="arrow"`` builds postings in one Arrow pass
-    (arrow_kernels.prefix_postings_arrow); ``"jvm"`` is the in-engine
-    twin (broadcast anti-join + per-doc window), kept for identity
-    tests and pure-JVM deployments. NULL codes never post on either
-    path (the rarity build drops them at its df join)."""
+    Postings are built in one Arrow pass
+    (arrow_kernels.prefix_postings_arrow); :func:`_code_order_postings_jvm`
+    is its JVM reference (broadcast anti-join + per-doc window), called
+    only by the identity tests. NULL codes never post on either path
+    (the rarity build drops them at its df join)."""
     codes = shared_persist(codes)
     plan_key = _codes_plan_key(codes)
 
     def build():
         return _build_code_order_postings(codes, id_col, threshold, max_df,
-                                          impl, n_docs, plan_key)
+                                          n_docs, plan_key)
 
     if plan_key is None:
         return build()
@@ -532,11 +517,11 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     # it and every steady-state search would re-run the index build (r12).
     # No rows are memoized; immutable-input contract: session_memo.
     return session_memo(codes.sparkSession,
-                        ("posting", plan_key, threshold, max_df, impl), build)
+                        ("posting", plan_key, threshold, max_df), build)
 
 
 def _build_code_order_postings(codes: DataFrame, id_col: str,
-                               threshold: float, max_df: int, impl: str,
+                               threshold: float, max_df: int,
                                n_docs: int | None,
                                plan_key: int | None) -> DataFrame:
     """The uncached body of :func:`_code_order_postings`; ``plan_key``
@@ -574,24 +559,33 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
     # metadata over the SAME codes relation every steady-state search —
     # computing it was one explode+aggregate driver action per call
     def build_blacklist():
-        return _compute_blacklist(codes, ex, max_df, impl, n_docs)
+        return _compute_blacklist(codes, ex, max_df, n_docs)
 
     blacklist = (build_blacklist() if plan_key is None else
                  session_memo(codes.sparkSession,
                               ("blacklist", plan_key, max_df),
                               build_blacklist))
-    if impl == "arrow":
-        from vectordb_testbricks_spark.operators.arrow_kernels import (
-            prefix_postings_arrow)
-        # widen only CPU-heavy inputs: at fixture scale, fanning a few
-        # thousand rows across defaultParallelism python tasks costs
-        # more in worker round-trips than the kernel computes
-        src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
-               else codes)
-        return prefix_postings_arrow(src, id_col, threshold, blacklist)
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        prefix_postings_arrow)
+    # widen only CPU-heavy inputs: at fixture scale, fanning a few
+    # thousand rows across defaultParallelism python tasks costs
+    # more in worker round-trips than the kernel computes
+    src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
+           else codes)
+    return prefix_postings_arrow(src, id_col, threshold, blacklist)
+
+
+def _code_order_postings_jvm(codes: DataFrame, id_col: str,
+                             threshold: float, max_df: int) -> DataFrame:
+    """JVM reference of :func:`_code_order_postings` (identity tests
+    only): the exact-aggregation blacklist, a broadcast anti-join and a
+    per-doc window."""
     from pyspark.sql import Window
     from pyspark.sql import types as T
     spark = codes.sparkSession
+    blacklist = [r["code"] for r in _over_max_df(
+        codes.select(F.explode("codes").alias("code")), max_df).collect()
+        if r["code"] is not None]
     sh = (codes.select(F.col(id_col), F.size("codes").alias("sz"),
                        F.posexplode("codes").alias("_p0", "code"))
           .drop("_p0").filter(F.col("code").isNotNull()))
@@ -610,7 +604,6 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
 def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
                           max_df: int = 50, min_shared: int = 1,
                           prefix: bool = True, order: str = "rarity",
-                          impl: str = "jvm",
                           n_docs: int | None = None,
                           _cache_out: list | None = None) -> DataFrame:
     """Candidate (id_a, id_b) pairs from the inverted shingle-code index.
@@ -647,8 +640,8 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     ``order`` picks the prefix total order: ``"rarity"`` (default —
     df asc, code tie-break, the canonical fan-out heuristic) or
     ``"code"`` (code asc — the prefix lemma holds unchanged, and the
-    posting build loses its two full-stream shuffles; see
-    :func:`_code_order_postings`, whose ``impl`` arg this forwards).
+    posting build loses its two full-stream shuffles and runs as the
+    Arrow kernel; see :func:`_code_order_postings`).
     The FINAL pair set out of :func:`ngram_jaccard_pairs` is
     order-independent at ``min_shared=1`` — candidates are a superset
     either way and exact-Jaccard verification decides membership."""
@@ -656,11 +649,6 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     if order not in ("rarity", "code"):
         raise ValueError(f"unknown order {order!r} "
                          f"(expected 'rarity' or 'code')")
-    if impl not in ("arrow", "jvm"):
-        # a typo ('Arrow', 'simd') would silently take the JVM path and
-        # silently disable the pigeonhole scale escape (ADVICE r10)
-        raise ValueError(f"unknown impl {impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
     # barrier_if_large (not bare shared_persist): the candidate
     # self-join's two legs are independent shuffle stages that AQE
     # submits concurrently — against a cold posting cache each leg
@@ -677,7 +665,7 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     # for the session's lifetime (ADVICE r11).
     if order == "code" and prefix:
         posting = barrier_if_large(
-            _code_order_postings(codes, id_col, threshold, max_df, impl,
+            _code_order_postings(codes, id_col, threshold, max_df,
                                  n_docs=n_docs), n_docs)
     elif prefix:
         sh = codes.select(F.col(id_col), F.size("codes").alias("sz"),
@@ -737,8 +725,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
                         n: int = 3, threshold: float = 0.5,
                         max_df: int = 50, min_shared: int = 1,
                         prefix: bool = True, order: str = "rarity",
-                        impl: str | None = None,
-                        posting_impl: str | None = None,
+                        impl: str = "jvm",
                         n_docs: int | None = None,
                         stage_dir: str | None = None) -> DataFrame:
     """Inverted-index n-gram Jaccard: prefix-filtered candidate pairs
@@ -755,11 +742,13 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     The inverted index posts hashed shingle codes (bigint join keys — raw
     shingle strings cost ~3× in shuffle codes and key comparison).
 
-    ``impl`` picks the shingle-code materialization — ``"jvm"``
-    (default, env ``SPARK_GRAFT_NGRAM_IMPL``) is the Column HOF path;
-    ``"arrow"`` reuses the MinHash Arrow kernel's codes output
+    ``impl`` picks the shingle-code materialization and the verify —
+    ``"jvm"`` (default; the fixture-scale path, measured faster there:
+    1.72 s against 2.28 s in OPTIMIZATION_r13.md) is the Column HOF
+    path; ``"arrow"`` reuses the MinHash Arrow kernel's codes output
     (bit-identical; the kernel is the JIT-slow-mode escape the 1M/10M
-    scale entries take, BASELINE.md r08).
+    scale entries pass, BASELINE.md r08). The code-order posting build
+    is the Arrow kernel under either choice.
 
     ``order`` picks the prefix total order (forwarded to
     :func:`ngram_candidate_pairs`): ``"rarity"`` is the canonical
@@ -768,20 +757,10 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     spill — in exchange for hash-ordered prefixes (fan-out still bounded
     by ``max_df``). The returned pair set is identical at
     ``min_shared=1``: candidates are a superset under either order and
-    the exact-Jaccard verify decides membership.
-
-    ``posting_impl`` (default: same as ``impl``) picks the POSTING
-    build engine independently of the codes materialization — lets a
-    caller share one JVM codes cache across orders while still routing
-    the code-order posting build through the Arrow kernel (the
-    dd_ngram_jaccard oracle entry's shape)."""
+    the exact-Jaccard verify decides membership."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "SPARK_GRAFT_NGRAM_IMPL", "jvm", "ngram")
-    if posting_impl is not None and posting_impl not in ("arrow", "jvm"):
-        raise ValueError(f"unknown ngram posting impl {posting_impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
-    if impl == "arrow":
+        minhash_codes_sigs)
+    if check_impl(impl, "ngram") == "arrow":
         # with_sigs=False: column pruning can't reach inside the kernel,
         # and this pipeline never ranks signatures
         codes = shared_persist(
@@ -794,8 +773,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     phase1_caches: list = []
     cands = ngram_candidate_pairs(codes, id_col, threshold, max_df=max_df,
                                   min_shared=min_shared, prefix=prefix,
-                                  order=order, impl=posting_impl or impl,
-                                  n_docs=n_docs, _cache_out=phase1_caches)
+                                  order=order, n_docs=n_docs,
+                                  _cache_out=phase1_caches)
     if stage_dir is not None:
         # Two-phase pipeline break (r11): run candidate generation to
         # parquet NOW, then verify against the parquet read. In the

@@ -25,11 +25,3 @@ def shred_json_path(df: DataFrame, json_col: str, path: str, cast_type: str,
     to parquet to get pushdown on the shredded column."""
     return df.withColumn(
         out_col, F.get_json_object(F.col(json_col), path).cast(cast_type))
-
-
-def shred_table(df: DataFrame, specs: list[tuple[str, str, str, str]]) -> DataFrame:
-    """Apply a list of (json_col, path, cast_type, out_col) shred specs —
-    the schema-matrix form: one collection, several indexed paths."""
-    for json_col, path, cast_type, out_col in specs:
-        df = shred_json_path(df, json_col, path, cast_type, out_col)
-    return df

@@ -142,7 +142,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
                output_fields: list[str] | None = None,
                group_by: str | list[str] | None = None,
                group_size: int = 1,
-               impl: str | None = None) -> DataFrame:
+               impl: str = "jvm") -> DataFrame:
     """V1/V2/V5: ANN top-k per query vector, optional pre-filter + grouping.
 
     ``queries`` must have (query_id, qvec). Returns
@@ -155,20 +155,21 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     (feature-inventory doc §2); the plan shape is identical, the window
     partition key just widens.
 
-    ``impl`` picks the scoring + map-side partial top-k path: ``"jvm"``
-    (default, env ``SPARK_GRAFT_KNN_IMPL``) is the Column HOF expression
-    path below; ``"arrow"`` routes the non-grouping path through the
-    numpy kernel (arrow_kernels.knn_search_arrow — bit-identical rows,
-    scores, and ranks; the scoring HOF chain is the same interpreted
-    expression class as the r08 slow mode, and the kernel is immune by
+    ``impl`` picks the scoring + map-side partial top-k path, and the
+    caller picks it: ``"jvm"`` (default — search_mix, the manager and
+    the fixture entries) is the Column HOF expression path below;
+    ``"arrow"`` (the 1M kNN scale entries and v_knn_metrics) routes the
+    non-grouping path through the numpy kernel
+    (arrow_kernels.knn_search_arrow — bit-identical rows, scores, and
+    ranks; the scoring HOF chain is the same interpreted expression
+    class as the r08 slow mode, and the kernel is immune by
     construction). Grouping search keeps the JVM path.
     """
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        knn_search_arrow, resolve_impl)
+        check_impl, knn_search_arrow)
     gb = ([group_by] if isinstance(group_by, str)
           else list(group_by) if group_by else [])
-    impl = resolve_impl(impl, "SPARK_GRAFT_KNN_IMPL", "jvm", "knn")
-    if impl == "arrow" and not gb:
+    if check_impl(impl, "knn") == "arrow" and not gb:
         return knn_search_arrow(base, queries, vec_col, id_col,
                                 metric=metric, k=k, flt=flt,
                                 output_fields=output_fields)
