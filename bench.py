@@ -525,10 +525,10 @@ def _cold_proc_run(name: str, sf_dir: str, want_rows: bool = False,
     return None
 
 
-def _memo_builds() -> int:
-    """Total session-memo builds so far in this process (all slot tags)."""
+def _memo_builds() -> dict[str, int]:
+    """Session-memo builds so far in this process, per slot tag."""
     from vectordb_testbricks_spark.session import memo_stats
-    return sum(st["builds"] for st in memo_stats().values())
+    return {tag: st["builds"] for tag, st in memo_stats().items()}
 
 
 # physical nodes that run Python (row-at-a-time or Arrow-batched UDFs)
@@ -793,9 +793,10 @@ def main() -> None:
     sub_second_repeat = max(5, repeat)
     timings: dict[str, float] = {}
     latency: dict[str, dict] = {}
-    # session-memo builds during repeats 2..N per entry: a steady-state
-    # timing that silently rebuilt an index shows up as nonzero here
-    memo_rebuilds: dict[str, int] = {}
+    # session-memo builds during repeats 2..N per entry and slot tag: a
+    # steady-state timing that silently rebuilt an index shows up here,
+    # named by its slot
+    memo_rebuilds: dict[str, dict[str, int]] = {}
     # per-entry plan fingerprint of the result the oracle checks, plus
     # the stages the last repeat ran (stage-id watermark taken outside
     # the timed window)
@@ -821,7 +822,10 @@ def main() -> None:
         runs.sort()
         timings[name] = round(runs[len(runs) // 2], 3)
         if len(runs) > 1:
-            memo_rebuilds[name] = _memo_builds() - builds0
+            memo_rebuilds[name] = {
+                tag: n - builds0.get(tag, 0)
+                for tag, n in _memo_builds().items()
+                if n != builds0.get(tag, 0)}
         plans[name] = _plan_fingerprint(df)
         if sid0 is not None and sid1 is not None:
             plans[name]["stages"] = sid1 - sid0

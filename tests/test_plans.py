@@ -578,3 +578,94 @@ def test_loaded_collection_requests_build_without_jobs(spark, tmp_path):
     assert len(knn.collect()) == 3
     assert cnt.collect()[0]["cnt"] == 24
     assert sorted(r.pk for r in pks.collect()) == [3, 7]
+
+
+def _leaf_classes(df) -> set[str]:
+    """Class names of the executed plan's leaves, looking through AQE
+    wrappers (an InMemoryTableScan is a leaf: the cached plan it reads
+    is not its child)."""
+    leaves, stack = set(), [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif node.children().isEmpty():
+            leaves.add(name)
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return leaves
+
+
+@pytest.mark.parametrize("bounded", [True, False])
+def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
+                                                      monkeypatch, bounded):
+    """A warm hybrid request (knn_search + mgr.bm25_search + rrf_fuse) on
+    a loaded FTS collection ranks BM25 from the weights load() made
+    resident: at most 5 jobs (the production, bounded regime), only
+    cached/local leaves on the BM25 side,
+    no SinglePartition exchange (the folded n_docs/avgdl are literals),
+    and rows and scores equal to a fresh, unloaded manager's, in both
+    bm25_search_many regimes."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.operators import bm25
+    from vectordb_testbricks_spark.operators.fusion import rrf_fuse
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    from vectordb_testbricks_spark.schema import (
+        FieldSpec, FunctionSpec, SchemaSpec)
+    if not bounded:
+        monkeypatch.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
+    wh = str(tmp_path / "wh")
+    mgr = CollectionManager(spark, wh)
+    mgr.create_collection(SchemaSpec("hyb", [
+        FieldSpec("pk", "INT64", primary=True),
+        FieldSpec("emb", "FLOAT_VECTOR", dim=4),
+        FieldSpec("text", "VARCHAR", max_length=128, enable_analyzer=True),
+        FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
+    ], functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
+    words = ["alpha", "beta", "gamma", "delta", "omega", "zeta", "eta"]
+    mgr.insert("hyb", spark.createDataFrame(
+        [(i, [float(i * (j + 3) % 7) for j in range(4)],
+          " ".join(words[i * (j + 1) % 7] for j in range(1 + i % 4)), None)
+         for i in range(60)],
+        "pk long, emb array<float>, text string, "
+        "sparse_bm25 map<int,float>"))
+    mgr.load("hyb")
+    mgr.read("hyb").count()
+
+    def request(text):
+        dense = knn_search(mgr.read("hyb"),
+                           queries_df(spark, [[1.0, 2.0, 0.5, 3.0]]),
+                           "emb", "pk", metric="COSINE", k=5)
+        sparse = mgr.bm25_search("hyb", text, k=5)
+        return sparse, rrf_fuse([dense, sparse], "pk", k=5)
+
+    request("alpha beta")[1].collect()                  # warm
+    sc = spark.sparkContext
+    group = f"test-loaded-hybrid-{bounded}"
+    sc.setJobGroup(group, "one warm hybrid request")
+    try:
+        sparse, fused = request("gamma alpha alpha")
+        assert len(fused.collect()) == 5
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    # the classic regime's second exchange is one more AQE stage job
+    assert len(jobs) <= (5 if bounded else 6), jobs
+    assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
+                                     "LocalTableScanExec"}, _plan(sparse)
+    assert "SinglePartition" not in _plan(fused), _plan(fused)
+    regime = [l for l in _plan(sparse).splitlines()
+              if "Exchange hashpartitioning" in l]
+    assert any("REPARTITION_BY_COL" in l for l in regime) == bounded
+
+    fresh = CollectionManager(spark, wh)
+    for text in ["gamma alpha alpha", "omega", "beta zeta eta", "nothing"]:
+        got = sorted(map(tuple, mgr.bm25_search("hyb", text, k=5).collect()))
+        want = sorted(map(tuple,
+                          fresh.bm25_search("hyb", text, k=5).collect()))
+        assert got == want, text

@@ -1524,3 +1524,79 @@ def test_read_memo_skips_scoped_reads_and_ttl_clock(mgr, spark):
     later = datetime.datetime.now(datetime.timezone.utc) \
         + datetime.timedelta(hours=1)
     assert mgr.read("ttl_m", now=later).count() == 0
+
+
+# ------------------------------------------------- resident BM25 weights
+
+def _ranks(mgr, name="fts_coll"):
+    return [sorted(map(tuple, mgr.bm25_search(name, q, k=5).collect()))
+            for q in ("alpha", "alpha beta beta", "zeta gamma")]
+
+
+def _resident_current(mgr, name="fts_coll"):
+    """True when bm25_search ranks from the weights load() made resident
+    (built for the function-table key that is current now)."""
+    real = mgr.resolve(name)
+    resident = mgr._weights.get((real, "fts"))
+    return resident is not None and resident[0] == mgr._fn_key(real, "fts")
+
+
+def test_loaded_collection_serves_current_commit(mgr, spark):
+    """On a loaded collection, read(), function_tables() and BM25 ranking
+    equal a fresh manager's after every write: the resident weights
+    serve only the commit they were built for, a write falls back to the
+    derivation, and a re-load makes the new commit resident again."""
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(1, "alpha beta"), (2, "alpha"),
+                                         (3, "gamma zeta"), (4, "beta")]))
+    mgr.load("fts_coll")
+
+    def check(resident):
+        _assert_serves_current(mgr)
+        assert _ranks(mgr) == _ranks(
+            CollectionManager(mgr.spark, mgr.warehouse))
+        assert _resident_current(mgr) is resident
+        assert mgr.loaded("fts_coll")
+
+    check(True)
+    steps = [
+        lambda: mgr.insert("fts_coll", _docs(spark, [(5, "alpha zeta")])),
+        lambda: mgr.upsert("fts_coll", _docs(spark, [(1, "beta beta")])),
+        lambda: mgr.delete("fts_coll", "doc_id == 2"),
+        lambda: mgr.truncate_collection("fts_coll"),
+        lambda: mgr.insert("fts_coll", _docs(spark, [(9, "alpha gamma")])),
+    ]
+    for step in steps:
+        step()
+        check(False)
+        mgr.load("fts_coll")
+        check(True)
+    assert _ranks(mgr)[0][0][1] == 9
+
+
+def test_load_residency_is_bounded_and_released(mgr, spark):
+    """Re-loading after each write keeps the persisted-RDD count flat
+    (the data handle and one weights table), and release() and
+    drop_collection() return it to the baseline."""
+    jsc = spark.sparkContext._jsc
+    _mk_fts(mgr)
+    mgr.insert("fts_coll", _docs(spark, [(1, "alpha beta"), (2, "gamma")]))
+    baseline = jsc.getPersistentRDDs().size()
+    sizes = []
+    for i in range(3):
+        mgr.insert("fts_coll", _docs(spark, [(10 + i, "alpha omega")]))
+        mgr.load("fts_coll")
+        mgr.read("fts_coll").count()
+        assert _resident_current(mgr)
+        mgr.bm25_search("fts_coll", "alpha", k=3).collect()
+        sizes.append(jsc.getPersistentRDDs().size())
+    assert sizes[0] == sizes[1] == sizes[2] <= baseline + 2, sizes
+    mgr.release("fts_coll")
+    assert not mgr._weights
+    assert jsc.getPersistentRDDs().size() <= baseline
+    mgr.load("fts_coll")
+    mgr.read("fts_coll").count()
+    mgr.drop_collection("fts_coll")
+    assert not mgr._weights and not mgr.loaded("fts_coll")
+    assert jsc.getPersistentRDDs().size() <= baseline
+

@@ -91,14 +91,16 @@ def test_no_hand_rolled_session_caches():
 
 
 def test_bench_counts_memo_builds(spark):
-    """bench.py's memo_rebuilds evidence counts every slot's builds."""
+    """bench.py's memo_rebuilds evidence counts builds per slot tag."""
     import bench
     from vectordb_testbricks_spark.session import forget, session_memo
     probe = ("bench_probe", object())
     n0 = bench._memo_builds()
     session_memo(spark, probe, lambda: 1)
     session_memo(spark, probe, lambda: 2)
-    assert bench._memo_builds() == n0 + 1
+    after = bench._memo_builds()
+    assert after.pop("bench_probe") == n0.pop("bench_probe", 0) + 1
+    assert after == n0
     forget(lambda slot, v: slot == probe)
 
 

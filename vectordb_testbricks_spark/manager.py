@@ -20,7 +20,9 @@ pruning, which is the reference's partition-key speedup
 Serving reads are memoized per manager (see :class:`CollectionManager`):
 every locked write replaces ``<collection>/COMMIT`` with a fresh token, and
 ``read()`` / ``function_tables()`` reuse the DataFrames built for the
-current token instead of re-listing the parquet dirs per request.
+current token instead of re-listing the parquet dirs per request. A loaded
+collection also keeps its BM25 weights resident for the token it was
+loaded at.
 """
 
 from __future__ import annotations
@@ -90,7 +92,19 @@ class CollectionManager:
 
     One entry per (collection, kind), replaced when its key moves and
     evicted by :meth:`drop_collection`; a miss builds exactly the
-    DataFrame an unmemoized call would."""
+    DataFrame an unmemoized call would.
+
+    Residency. ``load()`` also makes each BM25 function's weights table
+    (pk, term, w) resident, built for the key ``function_tables()`` would
+    use, with n_docs and avgdl folded to literals: the reference's
+    server-computed ``sparse_bm25`` field. ``bm25_search`` ranks from it
+    while that key is current, so a warm hybrid request reads no parquet
+    and no stats log. It derives the weights in the request plan instead
+    when the collection is not loaded or has a TTL, when a commit
+    (this manager's or another's) landed after the load, or while a
+    stats PENDING marker stands. Like the cached data handle, the weights
+    stay pinned until ``release()``, re-``load()`` or
+    ``drop_collection()`` unpersists them."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
@@ -98,6 +112,8 @@ class CollectionManager:
         os.makedirs(warehouse, exist_ok=True)
         self._aliases_file = os.path.join(warehouse, "_aliases.json")
         self._loaded: dict[str, DataFrame] = {}
+        # (collection, BM25 function) -> (_fn_key, weights, n_docs)
+        self._weights: dict[tuple[str, str], tuple[tuple, DataFrame, int]] = {}
         self._memo: dict[tuple[str, str], tuple[tuple, object]] = {}
         self._memo_lock = threading.Lock()
 
@@ -196,9 +212,8 @@ class CollectionManager:
 
     def drop_collection(self, name: str) -> None:
         real = self.resolve(name)
-        stale = self._loaded.pop(real, None)
-        if stale is not None:  # don't leave cached blocks of deleted data
-            stale.unpersist()
+        # don't leave cached blocks of deleted data
+        self._unpersist_residency(real)
         with self._memo_lock:
             for key in [k for k in self._memo if k[0] == real]:
                 del self._memo[key]
@@ -774,28 +789,44 @@ class CollectionManager:
         spec = self.describe_collection(name)
         fn = self._resolve_function(spec, fn_name)
         real = self.resolve(name)
-        base = self._fn_data_dir(real, fn.name)
-        key = (base, self._commit_token(real),
-               os.path.exists(self._stats_pending_path(base)))
-        return self._memoized(real, f"fn:{fn.name}", key,
-                              lambda: self._function_tables(spec, base))
+        key = self._fn_key(real, fn.name)
 
-    def _function_tables(self, spec: SchemaSpec, base: str
-                         ) -> tuple[DataFrame, DataFrame]:
+        def build():
+            tf, df_t, glob_log = self._fn_parts(spec, key[0])
+            # try_divide: a truncated (or fully-deleted) collection
+            # compacts the log to n_docs = 0, and ANSI mode would
+            # otherwise throw on the division; with no docs there are no
+            # tf rows to score, so a NULL avgdl is never consumed
+            totals = glob_log.agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.try_divide(F.sum("sum_dl"),
+                             F.sum("n_docs")).alias("avgdl"))
+            return tf, df_t.crossJoin(F.broadcast(totals))
+
+        return self._memoized(real, f"fn:{fn.name}", key, build)
+
+    def _fn_key(self, real: str, fn_name: str) -> tuple[str, str | None, bool]:
+        """(sidecar dir, COMMIT token, stats PENDING marker present): the
+        state a function-table memo entry or a resident weights table was
+        built from. Read before building, like every memo key."""
+        base = self._fn_data_dir(real, fn_name)
+        return (base, self._commit_token(real),
+                os.path.exists(self._stats_pending_path(base)))
+
+    def _fn_parts(self, spec: SchemaSpec, base: str
+                  ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(tf, df_t, glob_log): the tf sidecar, (term, df_t) compacted
+        from the stats delta log, and the log's (n_docs, sum_dl)
+        partials. The logs are read with their fixed schemas, which
+        spares a schema-inference job per read."""
         pk = spec.pk.name
+        glob_schema = "n_docs long, sum_dl long"
         if not self._parquet_nonempty(os.path.join(base, "tf")):
-            from pyspark.sql import types as T
-            pk_t = spec.pk.spark_type()
-            tf = self.spark.createDataFrame([], T.StructType([
-                T.StructField(pk, pk_t), T.StructField("term", T.StringType()),
-                T.StructField("tf", T.IntegerType()),
-                T.StructField("dl", T.IntegerType())]))
-            stats = self.spark.createDataFrame([], T.StructType([
-                T.StructField("term", T.StringType()),
-                T.StructField("df_t", T.LongType()),
-                T.StructField("n_docs", T.LongType()),
-                T.StructField("avgdl", T.DoubleType())]))
-            return tf, stats
+            return (self.spark.createDataFrame(
+                        [], f"`{pk}` {spec.pk.spark_type().simpleString()}, "
+                            "term string, tf int, dl int"),
+                    self.spark.createDataFrame([], "term string, df_t long"),
+                    self.spark.createDataFrame([], glob_schema))
         tf = self.spark.read.parquet(os.path.join(base, "tf"))
         if (os.path.exists(self._stats_pending_path(base))
                 or not self._parquet_nonempty(
@@ -808,50 +839,82 @@ class CollectionManager:
             doclen = self._doclen_or_derived(base, tf)
             terms_log, glob_log = self._fn_stats_deltas(tf, doclen)
         else:
-            terms_log = self.spark.read.parquet(
-                os.path.join(base, "stats_terms"))
-            glob_log = self.spark.read.parquet(
+            terms_log = self.spark.read.schema("term string, df_t long") \
+                .parquet(os.path.join(base, "stats_terms"))
+            glob_log = self.spark.read.schema(glob_schema).parquet(
                 os.path.join(base, "stats_global"))
         df_t = terms_log.groupBy("term").agg(F.sum("df_t").alias("df_t"))
-        # try_divide: a truncated (or fully-deleted) collection compacts
-        # the log to n_docs = 0, and ANSI mode would otherwise throw on
-        # the division; with no docs there are no tf rows to score, so a
-        # NULL avgdl is never consumed
-        totals = glob_log.agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.try_divide(F.sum("sum_dl"), F.sum("n_docs")).alias("avgdl"))
-        return tf, df_t.crossJoin(F.broadcast(totals))
+        return tf, df_t, glob_log
+
+    def _resident_weights(self, spec: SchemaSpec, real: str,
+                          fn: FunctionSpec
+                          ) -> tuple[tuple, DataFrame, int] | None:
+        """``(key, weights, n_docs)`` for :meth:`load`: the stats delta
+        log folded once — n_docs and avgdl become Python scalars (the
+        same doubles function_tables' aggregate yields), df_t is
+        compacted — and the (pk, term, w) weights table persisted and
+        materialized, the resident ``sparse_bm25`` field of the commit
+        ``key`` names. None while the stats PENDING marker stands: the
+        delta log may lack a batch, so requests derive until a write
+        heals it."""
+        from vectordb_testbricks_spark.materialize import materialize_barrier
+        from vectordb_testbricks_spark.operators.bm25 import bm25_weights
+        key = self._fn_key(real, fn.name)
+        if key[2]:
+            return None
+        tf, df_t, glob_log = self._fn_parts(spec, key[0])
+        parts = glob_log.collect()          # one row per insert batch
+        n_docs = sum(r["n_docs"] for r in parts)
+        avgdl = (float(sum(r["sum_dl"] for r in parts)) / n_docs
+                 if n_docs else None)
+        weights = materialize_barrier(
+            bm25_weights(tf, df_t, spec.pk.name, (n_docs, avgdl)))
+        return key, weights, n_docs
 
     def bm25_search(self, name: str, query_texts: str | list[str],
                     k: int = 10, flt: str | None = None,
                     fn_name: str | None = None) -> DataFrame:
         """V7 production path: search the manager-maintained BM25 sidecar.
 
-        ``flt`` restricts the *candidate* documents (left-semi on the tf
-        table) while IDF/avgdl stay collection-level — the reference
+        A loaded collection ranks straight from the weights table
+        :meth:`load` made resident, while the commit it was built for is
+        current; otherwise (not loaded, TTL, a write since the load, a
+        stats PENDING marker) the weights are derived in the request plan
+        from :meth:`function_tables`.
+
+        ``flt`` restricts the *candidate* documents (left-semi on the
+        weights) while IDF/avgdl stay collection-level — the reference
         engine's server-side stats are global, filters prune hits only
         (validate_phase_dml_dql.py:332-369 filtered FTS)."""
         from vectordb_testbricks_spark.exprlang import compile_expr
-        from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
+        from vectordb_testbricks_spark.operators.bm25 import (
+            bm25_search_many, bm25_weights)
         spec = self.describe_collection(name)
         fn = self._resolve_function(spec, fn_name)
         pk = spec.pk.name
+        real = self.resolve(name)
         docs = self.read(name)
-        tf, stats = self.function_tables(name, fn.name)
+        key = self._fn_key(real, fn.name)
+        resident = self._weights.get((real, fn.name))
+        if resident is not None and resident[0] == key:
+            _, weights, n_docs = resident
+        else:
+            weights = bm25_weights(*self.function_tables(name, fn.name), pk)
+            n_docs = None
         if spec.ttl_seconds or spec.ttl_field:
             # the sidecar is append-only between rewrites, so rows expired
             # by the TTL read filter may still carry tf entries — prune
             # candidates to the currently-visible pk set (stats stay
             # sidecar-global, matching the engine's lazily-compacted state)
-            tf = tf.join(docs.select(pk), pk, "left_semi")
+            weights = weights.join(docs.select(pk), pk, "left_semi")
         if flt is not None:
             # candidate pruning only — no forced broadcast (the filtered id
             # set is data-sized; AQE picks the join strategy)
             ids = docs.filter(compile_expr(flt, docs)).select(pk)
-            tf = tf.join(ids, pk, "left_semi")
+            weights = weights.join(ids, pk, "left_semi")
         texts = [query_texts] if isinstance(query_texts, str) else query_texts
         return bm25_search_many(docs, texts, pk, fn.input_field, k=k,
-                                tf_df=tf, stats=stats,
+                                weights=weights, n_docs=n_docs,
                                 analyzer=self._fn_analyzer(spec, fn))
 
     # -------------------------------------------------------------- read
@@ -1304,20 +1367,37 @@ class CollectionManager:
         """Parquet writes are atomic-on-commit; flush is a no-op."""
 
     def load(self, name: str) -> None:
-        """Memory residency: cache the collection (reference load state).
-        The cached handle is kept so release() unpersists the SAME plan —
-        re-deriving it after a rewrite would target the new version and
+        """Memory residency (reference load state): cache the collection
+        and, unless it has a TTL, make each BM25 function's weights table
+        resident for the current commit (:meth:`_resident_weights`). The
+        cached handles are kept so release() unpersists the SAME plans —
+        re-deriving them after a rewrite would target the new version and
         leave the old cached blocks pinned. Re-loading releases the
-        previous handle first (same reason)."""
+        previous handles first (same reason)."""
         real = self.resolve(name)
-        prev = self._loaded.pop(real, None)
-        if prev is not None:
-            prev.unpersist()
+        self._unpersist_residency(real)
         self._loaded[real] = self.read(name).cache()
+        spec = self.describe_collection(real)
+        if not (spec.ttl_seconds or spec.ttl_field):
+            for fn in self._bm25_functions(spec):
+                resident = self._resident_weights(spec, real, fn)
+                if resident is not None:
+                    self._weights[(real, fn.name)] = resident
 
     def release(self, name: str) -> None:
-        df = self._loaded.pop(self.resolve(name), None)
-        (df if df is not None else self.read(name)).unpersist()
+        real = self.resolve(name)
+        if not self._unpersist_residency(real):
+            self.read(name).unpersist()
+
+    def _unpersist_residency(self, real: str) -> bool:
+        """Unpersist and forget ``real``'s loaded data handle and resident
+        weights; False when it was not loaded."""
+        for key in [k for k in self._weights if k[0] == real]:
+            self._weights.pop(key)[1].unpersist()
+        df = self._loaded.pop(real, None)
+        if df is not None:
+            df.unpersist()
+        return df is not None
 
     def loaded(self, name: str) -> bool:
         return self.resolve(name) in self._loaded

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from vectordb_testbricks_spark.materialize import shared_persist
 
-from vectordb_testbricks_spark.functions.vector import score_expr
-
 
 @dataclass
 class IvfModel:
@@ -878,7 +876,7 @@ def ivf_search(model: IvfModel, queries: DataFrame, k: int = 10,
                nprobe: int = 8, metric: str = "COSINE") -> DataFrame:
     """Probe: restrict each query to its nprobe nearest inverted lists, then
     exact-rank within the pruned subset (same plan shape as knn_search)."""
-    from vectordb_testbricks_spark.operators.search import _ranked
+    from vectordb_testbricks_spark.operators.search import _ranked, knn_score
 
     qrows = queries.collect()  # nq is small by contract (reference nq ≤ 100)
     probe = [(int(r["query_id"]), int(c))
@@ -888,7 +886,7 @@ def ivf_search(model: IvfModel, queries: DataFrame, k: int = 10,
     probe_df = spark.createDataFrame(probe, "query_id int, centroid_id int")
     pruned = model.assigned.join(F.broadcast(probe_df), "centroid_id")
     q = queries.select("query_id", "qvec")
-    score, asc = score_expr(metric, F.col(model.vec_col), F.col("qvec"))
+    score, asc = knn_score(spark, metric, model.vec_col)
     scored = (pruned.join(F.broadcast(q), "query_id")
               .select("query_id", model.id_col, score.alias("score")))
     return _ranked(scored, model.id_col, asc, k)

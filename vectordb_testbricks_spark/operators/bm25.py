@@ -6,17 +6,23 @@ schema_matrix_2_6.yaml:65-69); searching that field with metric BM25 and a
 raw-string query returns top-k scored documents
 (validate_phase_dml_dql.py:332-369; Turbopuffer analogue tpuffer/fts_query.go).
 
-Spark design — BM25 as two batch tables + one score expression:
+Spark design — BM25 as a weights table + one ranking path:
 
     tf(doc, term, dl)  per-row array expression + one explode  [NO shuffle]
     df(term), N, avgdl one groupBy over distinct doc-terms     [one shuffle]
-    score(q, d) = Σ_{t∈q} idf(t) · tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))
+    w(doc, term)       tf ⋈ stats, one broadcast join          [NO shuffle]
+                       = idf(t) · tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))
+    score(q, d) = Σ_{t∈q} w(d, t)
 
-The per-query plan filters the tf table to the query's terms FIRST (broadcast
-semi-join on a handful of terms), so idf/score math runs only on matching
-rows, then partial-aggregates the per-doc sum. The tf table is the
-materialized analogue of Milvus's server-computed function field — build it
-once at ingest (``term_frequencies``) and pass it in for the production path.
+``bm25_weights`` derives the (id, term, w) relation — the analogue of
+Milvus's server-computed ``sparse_bm25`` field — and ``bm25_search_many``
+ranks over it: filter the weights to the query's terms FIRST (an ``In``
+predicate that reaches the tf scan, then a broadcast join on a handful of
+terms), then partial-aggregate the per-doc sum. Fixture and unloaded
+callers pass tf/stats (or nothing) and the weights are derived lazily
+inside the request plan; a loaded manager collection passes the weights
+it made resident at ``load()`` for the current commit, with n_docs and
+avgdl folded to literals (manager.CollectionManager.load).
 idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene/Milvus BM25 variant).
 """
 
@@ -83,13 +89,31 @@ def corpus_stats(docs: DataFrame, id_col: str, text_col: str,
     return df_t.crossJoin(F.broadcast(totals))
 
 
-def bm25_contrib() -> Column:
-    """Per-(doc, term) BM25 contribution over (tf, dl, df_t, n_docs, avgdl)."""
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df_t") + 0.5)
+def bm25_contrib(n_docs: Column | None = None,
+                 avgdl: Column | None = None) -> Column:
+    """Per-(doc, term) BM25 contribution over (tf, dl, df_t) and the corpus
+    totals ``n_docs``/``avgdl`` (default: the columns of those names)."""
+    n_docs = F.col("n_docs") if n_docs is None else n_docs
+    avgdl = F.col("avgdl") if avgdl is None else avgdl
+    idf = F.log(1.0 + (n_docs - F.col("df_t") + 0.5)
                 / (F.col("df_t") + 0.5))
     tf_part = (F.col("tf") * (K1 + 1.0)) / (
-        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl")))
+        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl))
     return idf * tf_part
+
+
+def bm25_weights(tf_df: DataFrame, stats: DataFrame, id_col: str,
+                 totals: tuple[int, float | None] | None = None
+                 ) -> DataFrame:
+    """(id, term, w): each (doc, term)'s BM25 contribution — the
+    ``sparse_bm25`` function field. ``stats`` is (term, df_t, n_docs,
+    avgdl), or just (term, df_t) when ``totals`` = (n_docs, avgdl) carries
+    the folded corpus totals, which then enter the expression as
+    literals."""
+    cols = (None, None) if totals is None else (
+        F.lit(totals[0]).cast("long"), F.lit(totals[1]).cast("double"))
+    return (tf_df.join(F.broadcast(stats), "term")
+            .select(id_col, "term", bm25_contrib(*cols).alias("w")))
 
 
 def bm25_search(docs: DataFrame, query_text: str, id_col: str, text_col: str,
@@ -118,11 +142,17 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
                      tf_df: DataFrame | None = None,
                      stats: DataFrame | None = None,
                      analyzer: dict | None = None,
-                     n_docs: int | None = None) -> DataFrame:
+                     n_docs: int | None = None,
+                     weights: DataFrame | None = None) -> DataFrame:
     """V7 at the reference's operating shape — nq query strings per call
     (search_permanently.py:99-101 drives batches of query vectors; the FTS
     analogue is a batch of raw strings). ``query_id`` = position in
     ``query_texts``.
+
+    ``weights`` is a ready (id, term, w) relation (:func:`bm25_weights`,
+    e.g. a loaded collection's resident table); without it the weights
+    are derived in the request plan from ``tf_df``/``stats`` (or from
+    ``docs``). Either way one ranking path runs over them.
 
     query_id is carried as a *relation attribute*, never a literal: a
     foldable query_id would let Catalyst constant-fold the final top-k
@@ -147,20 +177,24 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, docs)
         docs = docs.filter(pred)
-        tf_df = stats = None  # stats must reflect the filtered corpus
-    if tf_df is None:
-        tf_df = term_frequencies(docs, id_col, text_col, analyzer)
-    if stats is None:
-        stats = corpus_stats(docs, id_col, text_col, analyzer)
+        # stats must reflect the filtered corpus
+        tf_df = stats = weights = None
+    if weights is None:
+        if tf_df is None:
+            tf_df = term_frequencies(docs, id_col, text_col, analyzer)
+        if stats is None:
+            stats = corpus_stats(docs, id_col, text_col, analyzer)
+        weights = bm25_weights(tf_df, stats, id_col)
     # tokenize each query DRIVER-side with the same analyzer (py_tokenize
     # is the Column path's exact twin); duplicate terms count once per
     # occurrence (standard BM25 treats query tf multiplicatively; Milvus
     # sums per occurrence — we keep each occurrence). Literal terms buy
     # two things over the previous in-plan tokenize: one fewer Spark job
     # per search, and an isin() prefilter whose In(term, ...) predicate
-    # REACHES THE tf SCAN — on a parquet tf sidecar at corpus scale this
-    # prunes row groups by min/max stats instead of probing every posting
-    # through the broadcast join (plan guard: tests/test_plans.py).
+    # REACHES THE tf SCAN (through the weights join) — on a parquet tf
+    # sidecar at corpus scale this prunes row groups by min/max stats
+    # instead of probing every posting through the broadcast join (plan
+    # guard: tests/test_plans.py).
     from vectordb_testbricks_spark.functions.text import (
         analyzer_kwargs, py_tokenize)
     from vectordb_testbricks_spark.operators import search
@@ -173,14 +207,13 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     # every query analyzed to zero terms: nothing can match (isin with an
     # empty list is invalid, so short-circuit explicitly)
     pre = (F.col("term").isin(all_terms) if all_terms else F.lit(False))
-    matched = tf_df.filter(pre).join(F.broadcast(qterms_df), "term")
-    contribs = (matched.join(F.broadcast(stats), "term")
-                .select("query_id", id_col, bm25_contrib().alias("contrib")))
+    contribs = (weights.filter(pre).join(F.broadcast(qterms_df), "term")
+                .select("query_id", id_col, "w"))
     bounded = (n_docs is not None
                and n_docs * max(len(qterm_rows), 1)
                <= BOUNDED_ONE_EXCHANGE_MAX)
     if bounded:
         contribs = contribs.repartition("query_id")
     scored = (contribs.groupBy("query_id", id_col)
-              .agg(F.sum("contrib").alias("score")))
+              .agg(F.sum("w").alias("score")))
     return search._ranked(scored, id_col, asc=False, k=k)

@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 from vectordb_testbricks_spark.exprlang import compile_expr
 from vectordb_testbricks_spark.functions.vector import (
     score_expr, sparse_dot_map, to_double_array)
+from vectordb_testbricks_spark.session import session_memo
 
 
 def local_relation(spark, rows: list[tuple],
@@ -136,6 +137,15 @@ def _ranked(scored: DataFrame, id_col: str, asc: bool, k: int,
             .filter((F.col("rank") <= k) & F.col("score").isNotNull()))
 
 
+def knn_score(spark, metric: str, vec_col: str) -> tuple[Column, bool]:
+    """``score_expr(metric, vec_col, "qvec")``, built once per session: a
+    COSINE score is a few hundred py4j calls to build, which a request
+    would otherwise pay every time."""
+    return session_memo(
+        spark, ("knn_score", metric.upper(), vec_col),
+        lambda: score_expr(metric, F.col(vec_col), F.col("qvec")))
+
+
 def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
                metric: str = "L2", k: int = 10,
                flt: str | Column | None = None,
@@ -176,7 +186,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
         base = base.filter(pred)  # pre-filter before ranking (V2)
-    score, asc = score_expr(metric, F.col(vec_col), F.col("qvec"))
+    score, asc = knn_score(base.sparkSession, metric, vec_col)
     keep = list(dict.fromkeys([id_col, *(output_fields or []), *gb]))
     # nullable vectors (3.0 roadmap §4) never rank. Both relation-side null
     # checks are cheap per-row predicates evaluated BEFORE the join: the

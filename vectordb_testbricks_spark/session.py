@@ -39,6 +39,12 @@ def get_spark(app_name: str = "vectordb_testbricks_spark",
         # partitions
         .config("spark.sql.optimizer.windowGroupLimitThreshold", "1000000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark captures the Python call site of every Column/DataFrame
+        # call for error query contexts. Spark documents the overhead: it
+        # adds py4j round trips to every call, a large share of a serving
+        # request's Python build, and nothing here reads the query
+        # context. Static conf, so it must be set on the builder.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # testdata parquet carries TIMESTAMP(NANOS); read as long, the
         # catalog loader converts back to TimestampType (micros)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
