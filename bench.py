@@ -10,15 +10,24 @@ round 5's single ~5.5 KB line outgrew the driver's ~4 KB tail window and
 recorded as parsed:null, losing the round's headline number.
 
 The verbose evidence (per-query latency percentiles, a plan fingerprint
-per headline entry, 1M-row scale entries, concurrency/sustained QPS) is
-printed as an EARLIER JSON line and written to one record file,
-BENCH_RUN.json ($SPARK_GRAFT_BENCH_DETAIL overrides), in both the
-single-draw and the median-of-N (SPARK_GRAFT_BENCH_DRAWS>1) modes. Every
-record says what it measured: ``commit`` (git HEAD, None outside a
-checkout), ``dirty`` (tracked files modified) and, per headline entry,
-``plan`` — Exchange / BroadcastExchange / Python-eval / total node counts
-of the entry's executed plan plus the stages one repeat ran — so a stale
-record or a plan drift shows up as a field diff between two records.
+and stage metrics per headline entry, 1M-row scale entries,
+concurrency/sustained QPS) is printed as an EARLIER JSON line and
+written to one record file, BENCH_RUN.json ($SPARK_GRAFT_BENCH_DETAIL
+overrides), in both the single-draw and the median-of-N
+(SPARK_GRAFT_BENCH_DRAWS>1) modes. Every record says what it measured:
+``commit`` (git HEAD, None outside a checkout), ``dirty`` (tracked files
+modified) and, per headline entry:
+  ``plan``   — Exchange / BroadcastExchange / Python-eval / total node
+               counts of the entry's executed plan, plus ``stages``: the
+               completed stages of the last repeat's job group;
+  ``stages`` — that job group's jobs, stages, tasks, the union of stage
+               spans, executor run/CPU/GC seconds, shuffle and spill MB
+               and the three hottest stages.
+Each timed repeat (and each scale attempt) runs under its own Spark job
+group ``bench:<entry>:<i>``; ``perfbench/tracing.py`` decides which stages
+belong to a group and reads the host CPU counters — this file keeps no
+copy of either. A stale record or a plan drift shows up as a field diff
+between two records.
 
 The metric set mirrors the reference's workload definitions (QPS/latency,
 search_permanently.py:36-96) reduced to per-query wall-clock; BASELINE.md
@@ -31,8 +40,14 @@ import json
 import os
 import re
 import shutil
+import subprocess
+import sys
 import tempfile
 import time
+import urllib.request
+from contextlib import contextmanager
+
+from perfbench.tracing import host_probe, spark_stages
 
 HEADLINE = [
     "q_filter_project_limit",
@@ -72,7 +87,6 @@ HEADLINE = [
 def _git_out(args: list[str]) -> str | None:
     """stdout of a git command in the repo root, None on any failure
     (no git, not a checkout) — stamping must never fail a bench run."""
-    import subprocess
     repo = os.path.dirname(os.path.abspath(__file__))
     try:
         r = subprocess.run(["git", *args], cwd=repo, capture_output=True,
@@ -82,6 +96,16 @@ def _git_out(args: list[str]) -> str | None:
     return r.stdout.strip() if r.returncode == 0 else None
 
 
+def _env_num(name: str, default, cast=int):
+    """``$name`` through ``cast`` (int or float), ``default`` when it is
+    unset or does not parse — a typo in a knob must not kill the run (the
+    rule of ``run_suite_sharded.gate_shards``)."""
+    try:
+        return cast(os.environ.get(name, default))
+    except ValueError:
+        return default
+
+
 def _require_green_suite() -> dict:
     """CI-style gate: refuse to produce bench numbers over a red test suite
     (round 3 shipped artifacts with 4 known-failing tests). Runs the full
@@ -89,9 +113,6 @@ def _require_green_suite() -> dict:
     exits nonzero so the recorded artifact says RED instead of numbers.
     Set SPARK_GRAFT_BENCH_REQUIRE_GREEN=0 to skip during local iteration.
     Returns a machine-readable summary merged into the bench JSON."""
-    import subprocess
-    import sys
-
     if os.environ.get("SPARK_GRAFT_BENCH_REQUIRE_GREEN", "1") == "0":
         return {"tests_green": None, "tests_summary": "skipped (env)"}
     repo = os.path.dirname(os.path.abspath(__file__))
@@ -174,34 +195,6 @@ def _jvm_health(spark) -> dict:
         return {}
 
 
-def _host_probe() -> dict:
-    """Point-in-time HOST counters (judge r09 task 2: measure host slow
-    windows instead of inferring them from co-variance): 1-minute
-    loadavg from /proc/loadavg and the busy/total CPU jiffies from
-    /proc/stat's aggregate cpu line. Never bench-fatal."""
-    out = {}
-    try:
-        with open("/proc/loadavg") as f:
-            out["load1"] = float(f.read().split()[0])
-        with open("/proc/stat") as f:
-            parts = f.readline().split()[1:]
-        vals = [int(v) for v in parts]
-        total = sum(vals)
-        # busy = everything but idle(3) and iowait(4)
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        out["busy_jiffies"] = total - idle
-        out["total_jiffies"] = total
-        # steal(7): jiffies the HYPERVISOR ran someone else while this
-        # VM had runnable work — the direct signature of an external
-        # slow window on a shared host (in-VM ps shows nothing, loadavg
-        # only decays; steal is the counter that actually moves)
-        if len(vals) > 7:
-            out["steal_jiffies"] = vals[7]
-    except (OSError, ValueError, IndexError):
-        pass
-    return out
-
-
 def _first_touch_probe(budget_sec: float = 0.3, chunk_mb: int = 2,
                        nthreads: int = 4) -> float | None:
     """Measured CONCURRENT first-touch write throughput in MB/s:
@@ -257,27 +250,26 @@ def _first_touch_probe(budget_sec: float = 0.3, chunk_mb: int = 2,
 
 
 def _host_load(p0: dict, p1: dict) -> dict:
-    """Measured host activity across an interval, from two _host_probe
-    snapshots: average busy CORES (whole machine, all processes) plus
-    the loadavg endpoints. busy_cores ≫ what this bench's own work
-    accounts for = a measured external slow window; the classification
-    strings cite these numbers instead of co-variance argument."""
-    out = {}
-    if "load1" in p0 and "load1" in p1:
-        out["load1_start"] = p0["load1"]
-        out["load1_end"] = p1["load1"]
-    if "total_jiffies" in p0 and "total_jiffies" in p1:
-        dt = p1["total_jiffies"] - p0["total_jiffies"]
-        db = p1["busy_jiffies"] - p0["busy_jiffies"]
+    """Measured host activity across an interval, from two
+    ``tracing.host_probe`` snapshots: average busy and steal CORES (whole
+    machine, all processes) plus the 1-minute loadavg endpoints.
+    busy_cores ≫ what this bench's own work accounts for = a measured
+    external slow window; the classification strings cite these numbers
+    instead of co-variance argument."""
+    out = {"load1_start": p0["loadavg"][0], "load1_end": p1["loadavg"][0]}
+    c0, c1 = p0["cpu_jiffies"], p1["cpu_jiffies"]
+    dt = sum(c1) - sum(c0)
+    if dt > 0:
+        # busy = everything but idle(3) and iowait(4); total jiffies
+        # advance ncpu * HZ per second, so busy/total * ncpu = average
+        # busy cores over the interval. steal(7): jiffies the hypervisor
+        # ran someone else while this VM had runnable work
+        idle = c1[3] - c0[3] + (c1[4] - c0[4] if len(c1) > 4 else 0)
         ncpu = os.cpu_count() or 1
-        if dt > 0:
-            # total jiffies advance ncpu * HZ per second, so busy/total
-            # * ncpu = average busy cores over the interval
-            out["busy_cores_avg"] = round(ncpu * db / dt, 1)
-            out["ncpu"] = ncpu
-            if "steal_jiffies" in p0 and "steal_jiffies" in p1:
-                ds = p1["steal_jiffies"] - p0["steal_jiffies"]
-                out["steal_cores_avg"] = round(ncpu * ds / dt, 2)
+        out["busy_cores_avg"] = round(ncpu * (dt - idle) / dt, 1)
+        out["ncpu"] = ncpu
+        out["steal_cores_avg"] = round(
+            ncpu * (p1["steal_jiffies"] - p0["steal_jiffies"]) / dt, 2)
     # point sample at interval end: the page-backing health that governed
     # (and will govern) fresh-allocation-heavy work around this interval
     ft = _first_touch_probe()
@@ -286,81 +278,76 @@ def _host_load(p0: dict, p1: dict) -> dict:
     return out
 
 
-def _max_stage_id(spark):
-    """Watermark for per-attempt stage aggregation. Returns ``None`` when
-    the REST read fails or the UI is off (callers skip stage metrics),
-    and ``-1`` for a legitimately empty stage list — a fresh session's
-    first attempt must still aggregate everything it runs (r08 ADVICE:
-    conflating the two silently dropped attempt-0 metrics)."""
+@contextmanager
+def _job_group(spark, group: str):
+    """Run the block's Spark jobs (this thread's) under job group
+    ``group``. The group is a thread-local property, cleared on exit so
+    later jobs are not attributed to it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        import urllib.request
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages", timeout=5) as r:
-            stages = json.load(r)
-        return max((s["stageId"] for s in stages), default=-1)
-    except Exception:                             # noqa: BLE001
-        return None
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
-def _stages_since(spark, watermark: int) -> dict:
-    """Aggregate executor/shuffle/spill metrics for every stage with
-    stageId > watermark, via the status REST API (the bench session runs
-    with the UI on). Empty dict when the UI is off or the API fails —
+def _group_stages(spark, group: str) -> dict:
+    """Stage metrics of job group ``group``. ``tracing.spark_stages``
+    decides which stages belong to it (the completed and failed stages of
+    the group's jobs; SKIPPED ones and other groups' stages never count);
+    the shuffle-read, spill and hottest-stage fields come from one more
+    ``/stages`` read restricted to those ids. Read outside the timed
+    window. ``{}`` when the UI is off or any REST read fails —
     instrumentation is never bench-fatal."""
     try:
-        import urllib.request
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return {}
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages", timeout=5) as r:
-            stages = json.load(r)
-        new = [s for s in stages if s["stageId"] > watermark]
-        mb = 1 << 20
-
-        def tot(key):
-            return sum(s.get(key, 0) or 0 for s in new)
-
-        return {
-            "n_stages": len(new),
-            # runTime is task WALL-clock (inflates when another process
-            # owns the cores and tasks get descheduled); cpuTime is
-            # actual CPU-ns. run ≫ cpu → external contention; cpu
-            # itself inflated → the work really grew (JIT fallback,
-            # codegen loss). The pair is what separates the dd_minhash
-            # slow mode's two candidate causes.
-            "executor_run_sec": round(tot("executorRunTime") / 1e3, 1),
-            "executor_cpu_sec": round(tot("executorCpuTime") / 1e9, 1),
-            "executor_gc_sec": round(tot("jvmGcTime") / 1e3, 1),
-            "shuffle_read_mb": tot("shuffleReadBytes") // mb,
-            "shuffle_write_mb": tot("shuffleWriteBytes") // mb,
-            "mem_spill_mb": tot("memoryBytesSpilled") // mb,
-            "disk_spill_mb": tot("diskBytesSpilled") // mb,
-            # the 3 hottest stages by task wall-clock, so a slow draw
-            # names WHICH stage inflated instead of only the aggregate
-            "top_stages": [
-                {"id": s["stageId"],
-                 "run_sec": round((s.get("executorRunTime") or 0) / 1e3, 1),
-                 "cpu_sec": round((s.get("executorCpuTime") or 0) / 1e9, 1),
-                 "name": (s.get("name") or "")[:80]}
-                for s in sorted(new, key=lambda s:
-                                -(s.get("executorRunTime") or 0))[:3]],
-        }
-    except Exception:                             # noqa: BLE001
+        sc = spark.sparkContext
+        agg = spark_stages(sc)[group]
+        url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages"
+        with urllib.request.urlopen(url, timeout=30) as r:
+            by_id = {s["stageId"]: s for s in json.load(r)}
+        stages = [by_id[i] for i in agg.stage_ids]
+    except Exception as e:                        # noqa: BLE001
+        print(f"# stages of {group}: not read ({e!r:.200})", file=sys.stderr,
+              flush=True)
         return {}
+    mb = 1 << 20
+
+    def tot(key):
+        return sum(s.get(key) or 0 for s in stages)
+
+    return {
+        "jobs": agg.jobs, "n_stages": agg.stages, "tasks": agg.tasks,
+        "span_sec": round(agg.span_s, 3),
+        # runTime is task WALL-clock (inflates when another process owns
+        # the cores and tasks get descheduled); cpuTime is actual CPU.
+        # run ≫ cpu → external contention or tasks waiting on Python
+        # workers; cpu itself inflated → the work really grew
+        "executor_run_sec": round(agg.executor_run_ms / 1e3, 3),
+        "executor_cpu_sec": round(agg.executor_cpu_ms / 1e3, 3),
+        "executor_gc_sec": round(agg.gc_ms / 1e3, 3),
+        "shuffle_read_mb": tot("shuffleReadBytes") // mb,
+        "shuffle_write_mb": agg.shuffle_write_bytes // mb,
+        "mem_spill_mb": tot("memoryBytesSpilled") // mb,
+        "disk_spill_mb": tot("diskBytesSpilled") // mb,
+        # the 3 hottest stages by task wall-clock, so a slow entry names
+        # WHICH stage holds the time instead of only the aggregate
+        "top_stages": [
+            {"id": s["stageId"], "tasks": s.get("numTasks"),
+             "run_sec": round((s.get("executorRunTime") or 0) / 1e3, 3),
+             "cpu_sec": round((s.get("executorCpuTime") or 0) / 1e9, 3),
+             "name": (s.get("name") or "")[:80]}
+            for s in sorted(stages, key=lambda s:
+                            -(s.get("executorRunTime") or 0))[:3]],
+    }
 
 
-# scale entries whose stages legitimately show run >> cpu: streaming
-# entries wait on trigger intervals; Arrow-kernel entries have JVM tasks
-# blocked on Python workers. For both, wall-dominated stage metrics are
-# the design, not contention — the classifier must say so per entry
-# (judge r08 #7: the r08 tail's streaming stages showed run 262.8s /
-# cpu 3.2s and would read as contention under the bare run>>cpu rule).
+# scale entries whose stage metrics must not be read by the bare
+# run>>cpu contention rule (judge r08 #7). Arrow-kernel entries have JVM
+# tasks blocked on Python workers, so wall-dominated stages are the
+# design. Streaming entries run their micro-batches under the query's
+# own job group (Spark sets it to the stream's runId), so the attempt's
+# group holds only the jobs outside the stream.
 _STREAMING_ENTRIES = ("st_stream_1m", "st_sessionize_1m")
 _ARROW_KERNEL_ENTRIES = ("dd_minhash_1m", "dd_ngram_1m", "v_sparse_1m",
                          "v_knn_1m")
@@ -379,11 +366,12 @@ def _classify_attempt(entry: str, m: dict) -> str:
                 f"cores busy, load1 {hl.get('load1_start')}→"
                 f"{hl.get('load1_end')}")
     if run is None or cpu is None:
-        return "no stage metrics (UI off or watermark read failed)" + host
+        return "no stage metrics (UI off or stage read failed)" + host
     ratio = run / max(cpu, 1e-9)
     if entry in _STREAMING_ENTRIES:
-        return (f"streaming: run/cpu={ratio:.1f} is trigger-interval "
-                f"waiting — exempt from the contention rule" + host)
+        return (f"streaming: run/cpu={ratio:.1f} covers only the jobs "
+                f"outside the stream's own job group — exempt from the "
+                f"contention rule" + host)
     if entry in _ARROW_KERNEL_ENTRIES and ratio > 3:
         return (f"arrow-kernel: run/cpu={ratio:.1f} is JVM tasks waiting "
                 f"on Python workers — expected shape, check top_stages "
@@ -460,8 +448,6 @@ def _cold_proc_run(name: str, sf_dir: str, want_rows: bool = False,
     is optional, never bench-fatal — but the failure REASON is printed
     (r09: a stretch subprocess that timed out during a host slow window
     left a silent hole in the committed artifact)."""
-    import subprocess
-    import sys
     repo = os.path.dirname(os.path.abspath(__file__))
     # the subprocess probes HOST load around its own timed region (judge
     # r09 task 2): loadavg + /proc/stat busy-core average for exactly the
@@ -474,13 +460,14 @@ def _cold_proc_run(name: str, sf_dir: str, want_rows: bool = False,
         "import json, os, resource, time\n"
         "import bench\n"
         "import __spark_entry__ as E\n"
+        "from perfbench.tracing import host_probe\n"
         "from vectordb_testbricks_spark.session import get_spark\n"
         "spark = get_spark('bench_cold')\n"
-        "p0 = bench._host_probe()\n"
+        "p0 = host_probe()\n"
         "t0 = time.perf_counter()\n"
         f"n = E.{name}(spark, {sf_dir!r}).count()\n"
         "wall = time.perf_counter() - t0\n"
-        "p1 = bench._host_probe()\n"
+        "p1 = host_probe()\n"
         "hl = bench._host_load(p0, p1)\n"
         "try:\n"
         "    osb = spark._jvm.java.lang.management.ManagementFactory"
@@ -523,6 +510,31 @@ def _cold_proc_run(name: str, sf_dir: str, want_rows: bool = False,
     print(f"# cold_proc {name}: FAILED rc={r.returncode} "
           f"stderr_tail={((r.stderr or '')[-300:])!r}", flush=True)
     return None
+
+
+#: closed-loop workers of every sustained search block — the reference's
+#: concurrency 10 (go_bench/config.yaml:1-26)
+SUSTAINED_WORKERS = 10
+
+
+def _sustained_record(rep, hp0: dict, **extra) -> dict:
+    """The record of one ``run_sustained_searches`` loop at nq=1:
+    ``SUSTAINED_WORKERS`` workers, the block's ``extra`` fields
+    (``pool_size``, ``top_k``), the report's counts and rates, and the
+    host load since the start probe ``hp0``."""
+    total_ops = rep.n_searches + rep.failures
+    return {
+        "workers": SUSTAINED_WORKERS, "nq": 1, **extra,
+        "duration_sec": round(rep.duration_sec, 1),
+        "searches": rep.n_searches, "failures": rep.failures,
+        "stragglers": rep.stragglers,
+        # the reference's success-rate metric (search_permanently.py:36-96)
+        "success_rate": (round(rep.n_searches / total_ops, 6)
+                         if total_ops else None),
+        "qps": round(rep.qps, 2),
+        "latency_sec": rep.latency,
+        "host_load": _host_load(hp0, host_probe()),
+    }
 
 
 def _memo_builds() -> dict[str, int]:
@@ -616,9 +628,6 @@ def _run_draws(n_draws: int) -> None:
     draw cannot gate regressions. Enabled with SPARK_GRAFT_BENCH_DRAWS=N
     (a plain run stays a single draw). The suite gate runs
     once, up front — not once per draw."""
-    import subprocess
-    import sys
-    import tempfile
     suite = _require_green_suite()
     repo = os.path.dirname(os.path.abspath(__file__))
     draws = []
@@ -688,21 +697,15 @@ def _run_draws(n_draws: int) -> None:
     med_detail["draw_scale_detail"] = {
         name: [d[1].get("scale", {}).get(name) for d in draws]
         for name in scale_names}
-    med_detail["draw_sustained"] = [d[1].get("sustained") for d in draws]
-    med_detail["draw_sustained_pooled"] = [d[1].get("sustained_pooled")
-                                           for d in draws]
-    med_detail["draw_sustained_mixed"] = [d[1].get("sustained_mixed")
-                                          for d in draws]
-    med_detail["draw_concurrency"] = [d[1].get("concurrency")
-                                      for d in draws]
-    med_detail["draw_host_load"] = [d[1].get("host_load_headline")
-                                    for d in draws]
     # per-draw headline medians + latency bands (judge r09 task 6): the
     # sub-second noise policy is checkable only if consecutive draws'
     # medians AND the min/max bands they must fall inside are both in
     # the committed artifact, not just the median draw's
     med_detail["draw_queries"] = [d[0].get("queries") for d in draws]
-    med_detail["draw_latency"] = [d[1].get("latency") for d in draws]
+    for key in ("sustained", "sustained_pooled", "sustained_mixed",
+                "concurrency", "host_load", "latency"):
+        field = "host_load_headline" if key == "host_load" else key
+        med_detail[f"draw_{key}"] = [d[1].get(field) for d in draws]
     # stretch across ALL draws too (r09): the median draw's stretch
     # alone left a hole when one subprocess timed out in a host slow
     # window — per-draw values expose both the miss and the spread
@@ -718,7 +721,7 @@ def _run_draws(n_draws: int) -> None:
 
 
 def main() -> None:
-    n_draws = int(os.environ.get("SPARK_GRAFT_BENCH_DRAWS", "1"))
+    n_draws = _env_num("SPARK_GRAFT_BENCH_DRAWS", 1)
     if n_draws > 1 and os.environ.get("SPARK_GRAFT_BENCH_INNER") != "1":
         _run_draws(n_draws)
         return
@@ -727,9 +730,9 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
     suite = _require_green_suite()
 
-    # THIS bench session runs with the UI on so the scale loop can read
-    # per-attempt stage metrics from the status REST API (bimodality
-    # instrumentation). The env var is scoped to the builder call and
+    # THIS bench session runs with the UI on so every headline entry and
+    # scale attempt can read its job group's stage metrics from the status
+    # REST API (_group_stages). The env var is scoped to the builder call and
     # restored right after: _cold_proc_run / stretch subprocesses inherit
     # os.environ, and a leaked UI=1 added Jetty/event-listener startup to
     # every "true process-cold" number while buying nothing (the
@@ -773,7 +776,7 @@ def main() -> None:
     # search_permanently.py:36-96) per query; the headline per-query value
     # stays a single steady-state wall-clock (the median across runs) so
     # totals remain comparable with the recorded BASELINE.
-    repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
+    repeat = max(1, _env_num("SPARK_GRAFT_BENCH_REPEAT", 3))
     # the historically noisiest sub-second queries (judge r06 noted them
     # whipsawing ±30-70% between same-code runs — host-load variance, not
     # plan changes) get extra repeats so their medians are trustworthy
@@ -797,11 +800,12 @@ def main() -> None:
     # steady-state timing that silently rebuilt an index shows up here,
     # named by its slot
     memo_rebuilds: dict[str, dict[str, int]] = {}
-    # per-entry plan fingerprint of the result the oracle checks, plus
-    # the stages the last repeat ran (stage-id watermark taken outside
-    # the timed window)
+    # per-entry plan fingerprint of the result the oracle checks, and the
+    # stage metrics of the last repeat's job group (read outside the timed
+    # window)
     plans: dict[str, dict] = {}
-    hp_head0 = _host_probe()
+    stages: dict[str, dict] = {}
+    hp_head0 = host_probe()
     for name in HEADLINE:
         fn = qmap[name]
         runs = []
@@ -810,12 +814,12 @@ def main() -> None:
         while len(runs) < want:
             if len(runs) == 1:
                 builds0 = _memo_builds()
-            sid0 = _max_stage_id(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            runs.append(time.perf_counter() - t0)
-            sid1 = _max_stage_id(spark)
+            group = f"bench:{name}:{len(runs)}"
+            with _job_group(spark, group):
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                n = df.count()
+                runs.append(time.perf_counter() - t0)
             if (len(runs) == want and repeat > 1
                     and sorted(runs)[len(runs) // 2] < 0.4):
                 want = max(want, sub_second_repeat)
@@ -826,16 +830,17 @@ def main() -> None:
                 tag: n - builds0.get(tag, 0)
                 for tag, n in _memo_builds().items()
                 if n != builds0.get(tag, 0)}
+        stages[name] = _group_stages(spark, group)
         plans[name] = _plan_fingerprint(df)
-        if sid0 is not None and sid1 is not None:
-            plans[name]["stages"] = sid1 - sid0
+        if stages[name]:
+            plans[name]["stages"] = stages[name]["n_stages"]
         print(f"# {name}: {timings[name]:.3f}s rows={n} n_runs={len(runs)}",
               flush=True)
         if repeat > 1:
             from vectordb_testbricks_spark.validators import percentile_stats
             latency[name] = {k: round(v, 4) for k, v in
                              percentile_stats(runs).items()}
-    head_host = _host_load(hp_head0, _host_probe())
+    head_host = _host_load(hp_head0, host_probe())
 
     # concurrent-QPS entry: the reference's headline serving metric is
     # QPS under a concurrent worker pool (search_permanently.py:36-96,
@@ -850,7 +855,9 @@ def main() -> None:
     # Recording both evidences the design claim that in Spark, batching
     # queries into one plan beats thread-pooling independent plans.
     # Disable with SPARK_GRAFT_BENCH_CONCURRENCY=0.
-    from vectordb_testbricks_spark.operators.search import knn_search
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, prepare_search_pool)
+    from vectordb_testbricks_spark.workload import run_sustained_searches
 
     def _knn_nq(ids):
         # shared search-plan builder for the concurrency AND sustained
@@ -864,7 +871,7 @@ def main() -> None:
         from vectordb_testbricks_spark.workload import run_async_searches
 
         _knn_nq((0,)).count()        # plan warm-up outside the timed region
-        hp_c0 = _host_probe()        # own probe (judge r10 task 2): this
+        hp_c0 = host_probe()         # own probe (judge r10 task 2): this
         # block's numbers whipsaw under host convoys and need in-window
         # self-classification, same as the headline probe
         rep = run_async_searches(
@@ -891,7 +898,7 @@ def main() -> None:
                         "runs": [round(b, 3) for b in bruns]},
             "concurrency_qps": round(rep.qps, 2),
             "batched_nq16_qps": round(16.0 / max(batched_sec, 1e-9), 2),
-            "host_load": _host_load(hp_c0, _host_probe()),
+            "host_load": _host_load(hp_c0, host_probe()),
         }
         print(f"# concurrency: pool {concurrency['concurrency_qps']} qps "
               f"({rep.successes}/{len(rep.outcomes)} ok, "
@@ -911,37 +918,22 @@ def main() -> None:
     # cannot observe. Runs before the scale block for the same JVM-debt
     # hygiene reason as the concurrency block.
     sustained: dict = {}
-    sustained_sec = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_SUSTAINED_SEC", "90"))
+    sustained_sec = _env_num("SPARK_GRAFT_BENCH_SUSTAINED_SEC", 90.0, float)
     if sustained_sec > 0:
-        from vectordb_testbricks_spark.workload import run_sustained_searches
-
         def _sustained_task(widx: int, seq: int):
             # rotate query vectors so the loop never re-measures one
             # cached result; the plan shape is the shared _knn_nq
             return _knn_nq(((widx * 97 + seq * 13) % 256,))
 
         _sustained_task(0, 0).count()   # plan-path warm-up, untimed
-        hp_s0 = _host_probe()           # own probe (judge r10 task 2):
+        hp_s0 = host_probe()            # own probe (judge r10 task 2):
         # the ad-hoc closed loop read 2.4-9.8 QPS on IDENTICAL code
         # across the r10 bisect — without an in-window probe the number
         # is unusable as a regression signal
-        rep = run_sustained_searches(spark, _sustained_task, workers=10,
+        rep = run_sustained_searches(spark, _sustained_task,
+                                     workers=SUSTAINED_WORKERS,
                                      duration_sec=sustained_sec)
-        total_ops = rep.n_searches + rep.failures
-        sustained = {
-            "workers": 10, "nq": 1,
-            "duration_sec": round(rep.duration_sec, 1),
-            "searches": rep.n_searches, "failures": rep.failures,
-            "stragglers": rep.stragglers,
-            # the reference's success-rate metric
-            # (search_permanently.py:36-96)
-            "success_rate": round(rep.n_searches / total_ops, 6)
-            if total_ops else None,
-            "qps": round(rep.qps, 2),
-            "latency_sec": rep.latency,
-            "host_load": _host_load(hp_s0, _host_probe()),
-        }
+        sustained = _sustained_record(rep, hp_s0)
         print(f"# sustained: {rep.n_searches} searches in "
               f"{rep.duration_sec:.1f}s = {rep.qps:.2f} qps, "
               f"p50={rep.latency.get('p50')} p99={rep.latency.get('p99')} "
@@ -960,9 +952,6 @@ def main() -> None:
     # this stable one. Same duration knob; disable with the same env.
     sustained_pooled: dict = {}
     if sustained_sec > 0:
-        from vectordb_testbricks_spark.operators.search import (
-            prepare_search_pool)
-        from vectordb_testbricks_spark.workload import run_sustained_searches
         emb_p, _ = entrymod._emb_queries(spark, sf_dir, ids=(0,))
         sides = [entrymod._emb_queries(spark, sf_dir, ids=(i,))[1]
                  for i in range(32)]
@@ -973,21 +962,11 @@ def main() -> None:
             return pool[(widx * 97 + seq * 13) % len(pool)]
 
         _pooled_task(0, 0).count()      # plan warm-up, untimed
-        hp_p0 = _host_probe()
-        rep = run_sustained_searches(spark, _pooled_task, workers=10,
+        hp_p0 = host_probe()
+        rep = run_sustained_searches(spark, _pooled_task,
+                                     workers=SUSTAINED_WORKERS,
                                      duration_sec=sustained_sec)
-        total_ops = rep.n_searches + rep.failures
-        sustained_pooled = {
-            "workers": 10, "nq": 1, "pool_size": len(pool),
-            "duration_sec": round(rep.duration_sec, 1),
-            "searches": rep.n_searches, "failures": rep.failures,
-            "stragglers": rep.stragglers,
-            "success_rate": round(rep.n_searches / total_ops, 6)
-            if total_ops else None,
-            "qps": round(rep.qps, 2),
-            "latency_sec": rep.latency,
-            "host_load": _host_load(hp_p0, _host_probe()),
-        }
+        sustained_pooled = _sustained_record(rep, hp_p0, pool_size=len(pool))
         print(f"# sustained_pooled: {rep.n_searches} searches in "
               f"{rep.duration_sec:.1f}s = {rep.qps:.2f} qps (32-plan "
               f"pool), p50={rep.latency.get('p50')} "
@@ -1003,12 +982,9 @@ def main() -> None:
     # per-process pressure pods have the same shape), exercising the DML
     # write path under concurrency with the straggler/cancel machinery.
     sustained_mixed: dict = {}
-    mixed_sec = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_SUSTAINED_MIXED_SEC", "90"))
+    mixed_sec = _env_num("SPARK_GRAFT_BENCH_SUSTAINED_MIXED_SEC", 90.0,
+                         float)
     if mixed_sec > 0:
-        import shutil
-        import tempfile
-
         from vectordb_testbricks_spark.manager import CollectionManager
         from vectordb_testbricks_spark.schema import FieldSpec, SchemaSpec
         from vectordb_testbricks_spark.workload import (
@@ -1029,7 +1005,7 @@ def main() -> None:
             return WorkloadRunner(mgr, name, "pk", vec_col="embedding",
                                   seed=42 + widx, dim=8)
 
-        hp_m0 = _host_probe()
+        hp_m0 = host_probe()
         rep = run_sustained_mixed(spark, _make_runner, workers=10,
                                   duration_sec=mixed_sec, nb=50)
         sustained_mixed = {
@@ -1043,7 +1019,7 @@ def main() -> None:
             "ops_per_sec": round(rep.ops_per_sec, 2),
             "ops": rep.ops,
             "post_validation": rep.post_validation,
-            "host_load": _host_load(hp_m0, _host_probe()),
+            "host_load": _host_load(hp_m0, host_probe()),
         }
         pv = rep.post_validation or {}
         print(f"# sustained_mixed: {rep.total_ops} ops in "
@@ -1064,11 +1040,8 @@ def main() -> None:
     # with SPARK_GRAFT_BENCH_SUSTAINED600_SEC=600. The block lands in
     # the detail record as ``sustained_600s``.
     sustained600: dict = {}
-    s600_sec = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_SUSTAINED600_SEC", "0"))
+    s600_sec = _env_num("SPARK_GRAFT_BENCH_SUSTAINED600_SEC", 0.0, float)
     if s600_sec > 0:
-        from vectordb_testbricks_spark.workload import run_sustained_searches
-
         # prepared-plan pool: one persisted corpus + 100 distinct query
         # vectors, each search reusing its prepared DataFrame (the
         # reference driver loads a fixed query-vector set once,
@@ -1076,8 +1049,6 @@ def main() -> None:
         # plan measured as 2.7x the serving cost — see
         # operators/search.py prepare_search_pool). Execution — jobs,
         # scoring, window, 15000-row collect — is per-request.
-        from vectordb_testbricks_spark.operators.search import (
-            prepare_search_pool)
         base15k = entrymod._topk15000_base(spark).persist()
         base15k.count()
         pool = prepare_search_pool(
@@ -1090,21 +1061,11 @@ def main() -> None:
             return pool[(widx * 7 + seq * 13) % len(pool)]
 
         _s600_task(0, 0).count()        # plan warm-up, untimed
-        hp0 = _host_probe()
-        rep = run_sustained_searches(spark, _s600_task, workers=10,
+        hp0 = host_probe()
+        rep = run_sustained_searches(spark, _s600_task,
+                                     workers=SUSTAINED_WORKERS,
                                      duration_sec=s600_sec)
-        total_ops = rep.n_searches + rep.failures
-        sustained600 = {
-            "workers": 10, "nq": 1, "top_k": 15000,
-            "duration_sec": round(rep.duration_sec, 1),
-            "searches": rep.n_searches, "failures": rep.failures,
-            "stragglers": rep.stragglers,
-            "success_rate": round(rep.n_searches / total_ops, 6)
-            if total_ops else None,
-            "qps": round(rep.qps, 2),
-            "latency_sec": rep.latency,
-            "host_load": _host_load(hp0, _host_probe()),
-        }
+        sustained600 = _sustained_record(rep, hp0, top_k=15000)
         print(f"# sustained600: {rep.n_searches} searches in "
               f"{rep.duration_sec:.1f}s = {rep.qps:.2f} qps @ k=15000, "
               f"p50={rep.latency.get('p50')} p99={rep.latency.get('p99')} "
@@ -1157,9 +1118,8 @@ def main() -> None:
                 continue
             fn = getattr(entrymod, name)
             runs, n, attempt_metrics = [], 0, []
-            attempts = max(2, int(os.environ.get(
-                "SPARK_GRAFT_BENCH_SCALE_ATTEMPTS", "2")))
-            for _ in range(attempts):
+            attempts = max(2, _env_num("SPARK_GRAFT_BENCH_SCALE_ATTEMPTS", 2))
+            for a in range(attempts):
                 # isolate each attempt: clear headline/scale caches, then
                 # double full-GC with a settle pause (one pass right
                 # after clearCache leaves old-gen debt that swung
@@ -1169,19 +1129,15 @@ def main() -> None:
                 time.sleep(1.0)
                 spark._jvm.System.gc()
                 h0 = _jvm_health(spark)
-                hp0 = _host_probe()
-                sid = _max_stage_id(spark)
-                t0 = time.perf_counter()
-                n = fn(spark, sf_dir).count()
-                runs.append(round(time.perf_counter() - t0, 3))
-                hp1 = _host_probe()
+                hp0 = host_probe()
+                group = f"bench:{name}:{a}"
+                with _job_group(spark, group):
+                    t0 = time.perf_counter()
+                    n = fn(spark, sf_dir).count()
+                    runs.append(round(time.perf_counter() - t0, 3))
+                hp1 = host_probe()
                 h1 = _jvm_health(spark)
-                # sid None = the watermark READ failed — skip rather than
-                # aggregate every stage since app start (which would
-                # record the whole headline+concurrency history as this
-                # attempt's metrics). sid -1 = genuinely no stages yet
-                # (fresh session): aggregate normally.
-                m = _stages_since(spark, sid) if sid is not None else {}
+                m = _group_stages(spark, group)
                 if h0 and h1:
                     m["gc_delta_ms"] = h1["gc_ms"] - h0["gc_ms"]
                     if h0.get("jit_ms", -1) >= 0:
@@ -1288,7 +1244,8 @@ def main() -> None:
     # driver's tail capture only needs to survive long enough to keep the
     # compact final line intact.
     detail: dict = {"kind": "bench_detail", "sf": sf, "total_sec": total,
-                    "host_load_headline": head_host, "plan": plans}
+                    "host_load_headline": head_host, "plan": plans,
+                    "stages": stages}
     if latency:
         detail["latency"] = latency
     if memo_rebuilds:

@@ -284,3 +284,172 @@ def test_sharded_gate_names_a_shard_that_dies_early():
     assert all("no_such_plugin_xyz" in s for s in res["shard_summaries"])
     assert any("no_such_plugin_xyz" in f for f in res["failed"])
     assert len(res["failed"][0]) < 400
+
+
+# ------------------------------------------------- stage attribution
+
+_T0 = "2026-01-01T00:00:0{}.000GMT"
+
+
+def _stage(sid, status="COMPLETE", run_ms=100, cpu_ns=50_000_000,
+           read=0, spill=0, start=0, end=1):
+    return {"stageId": sid, "attemptId": 0, "status": status,
+            "numTasks": 4, "executorRunTime": run_ms,
+            "executorCpuTime": cpu_ns, "jvmGcTime": 10,
+            "shuffleWriteBytes": 1 << 20, "shuffleReadBytes": read,
+            "memoryBytesSpilled": spill, "diskBytesSpilled": 0,
+            "submissionTime": _T0.format(start),
+            "completionTime": _T0.format(end), "name": f"count at s{sid}"}
+
+
+def _fake_rest(monkeypatch, jobs, stages):
+    """Serve canned status-REST ``/jobs`` and ``/stages`` payloads; return
+    a stand-in session whose UI runs at a fixed port."""
+    import io
+    import types
+    import urllib.request
+
+    def fake_urlopen(url, timeout=None):
+        assert "/api/v1/applications/app-1/" in url
+        body = jobs if url.endswith("/jobs") else stages
+        return io.BytesIO(json.dumps(body).encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    sc = types.SimpleNamespace(uiWebUrl="http://127.0.0.1:4040",
+                               applicationId="app-1")
+    return types.SimpleNamespace(sparkContext=sc)
+
+
+def test_group_stages_counts_only_its_group(monkeypatch):
+    """Stages of another group (a concurrent job) and of ungrouped jobs
+    that interleave with the group's in id order are not attributed; a
+    stage-id range taken around the repeat would hold all of 10-13."""
+    stages = [_stage(10, run_ms=300, start=0, end=2),
+              _stage(11, run_ms=9000, read=5 << 20, start=1, end=3),
+              _stage(12, run_ms=200, read=3 << 20, spill=2 << 20,
+                     start=4, end=5),
+              _stage(13, run_ms=7000)]
+    jobs = [{"jobId": 0, "jobGroup": "bench:q:1", "stageIds": [10]},
+            {"jobId": 1, "jobGroup": "other", "stageIds": [11]},
+            {"jobId": 2, "jobGroup": "bench:q:1", "stageIds": [12]},
+            {"jobId": 3, "stageIds": [13]}]
+    spark = _fake_rest(monkeypatch, jobs, stages)
+    m = bench._group_stages(spark, "bench:q:1")
+    assert m["jobs"] == 2 and m["n_stages"] == 2 and m["tasks"] == 8
+    assert m["executor_run_sec"] == 0.5 and m["executor_cpu_sec"] == 0.1
+    assert m["executor_gc_sec"] == 0.02 and m["span_sec"] == 3.0
+    assert m["shuffle_write_mb"] == 2 and m["shuffle_read_mb"] == 3
+    assert m["mem_spill_mb"] == 2 and m["disk_spill_mb"] == 0
+    assert [s["id"] for s in m["top_stages"]] == [10, 12]
+    assert m["top_stages"][0] == {"id": 10, "tasks": 4, "run_sec": 0.3,
+                                  "cpu_sec": 0.05, "name": "count at s10"}
+
+
+def test_group_stages_excludes_skipped(monkeypatch):
+    stages = [_stage(20), _stage(21, status="SKIPPED"), _stage(22)]
+    jobs = [{"jobId": 0, "jobGroup": "g", "stageIds": [20, 21]},
+            {"jobId": 1, "jobGroup": "g", "stageIds": [21, 22]}]
+    m = bench._group_stages(_fake_rest(monkeypatch, jobs, stages), "g")
+    assert m["n_stages"] == 2 and m["tasks"] == 8
+    assert sorted(s["id"] for s in m["top_stages"]) == [20, 22]
+
+
+def test_group_stages_failed_read_is_empty(monkeypatch):
+    import types
+    import urllib.error
+    import urllib.request
+
+    def refused(url, timeout=None):
+        raise urllib.error.URLError("connection refused")
+
+    spark = _fake_rest(monkeypatch, [], [])
+    monkeypatch.setattr(urllib.request, "urlopen", refused)
+    assert bench._group_stages(spark, "g") == {}
+    # UI off: no web URL at all
+    off = types.SimpleNamespace(sparkContext=types.SimpleNamespace(
+        uiWebUrl=None, applicationId="app-1"))
+    assert bench._group_stages(off, "g") == {}
+    # the group ran no job the status store knows of
+    spark = _fake_rest(monkeypatch, [{"jobId": 0, "jobGroup": "h",
+                                      "stageIds": [1]}], [_stage(1)])
+    assert bench._group_stages(spark, "g") == {}
+
+
+# ------------------------------------------------------- host counters
+
+def test_host_load_from_tracing_probes(monkeypatch):
+    monkeypatch.setattr(bench, "_first_touch_probe", lambda: None)
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
+    # user nice system idle iowait irq softirq steal
+    p0 = {"loadavg": [1.0, 0.5, 0.2], "cpu_jiffies": [100, 0, 0, 800, 100,
+                                                      0, 0, 0],
+          "steal_jiffies": 0}
+    p1 = {"loadavg": [2.5, 0.7, 0.3], "cpu_jiffies": [300, 0, 0, 1000, 100,
+                                                      0, 0, 100],
+          "steal_jiffies": 100}
+    assert bench._host_load(p0, p1) == {
+        "load1_start": 1.0, "load1_end": 2.5, "busy_cores_avg": 2.4,
+        "ncpu": 4, "steal_cores_avg": 0.8}
+    # the live probe's dicts feed it as they are
+    from perfbench.tracing import host_probe
+    assert {"load1_start", "load1_end"} <= set(
+        bench._host_load(host_probe(), host_probe()))
+
+
+# --------------------------------------------------- sustained records
+
+def test_sustained_record_keys(monkeypatch):
+    import types
+    monkeypatch.setattr(bench, "_host_load", lambda p0, p1: {"hl": 1})
+    rep = types.SimpleNamespace(n_searches=98, failures=2, stragglers=1,
+                                duration_sec=10.04, qps=9.7654,
+                                latency={"p50": 0.1})
+    base = ["workers", "nq", "duration_sec", "searches", "failures",
+            "stragglers", "success_rate", "qps", "latency_sec",
+            "host_load"]
+    rec = bench._sustained_record(rep, {})
+    assert list(rec) == base
+    assert rec == {"workers": 10, "nq": 1, "duration_sec": 10.0,
+                   "searches": 98, "failures": 2, "stragglers": 1,
+                   "success_rate": 0.98, "qps": 9.77,
+                   "latency_sec": {"p50": 0.1}, "host_load": {"hl": 1}}
+    pooled = bench._sustained_record(rep, {}, pool_size=32)
+    assert list(pooled) == base[:2] + ["pool_size"] + base[2:]
+    assert list(bench._sustained_record(rep, {}, top_k=15000)) == (
+        base[:2] + ["top_k"] + base[2:])
+    idle = types.SimpleNamespace(n_searches=0, failures=0, stragglers=0,
+                                 duration_sec=1.0, qps=0.0, latency={})
+    assert bench._sustained_record(idle, {})["success_rate"] is None
+
+
+# ------------------------------------------------------ numeric knobs
+
+def test_numeric_knobs_fall_back_on_garbage(monkeypatch):
+    for raw in ("three", "", "2.5x"):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_REPEAT", raw)
+        assert bench._env_num("SPARK_GRAFT_BENCH_REPEAT", 3) == 3
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_SUSTAINED_SEC", raw)
+        assert bench._env_num("SPARK_GRAFT_BENCH_SUSTAINED_SEC", 90.0,
+                              float) == 90.0
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPEAT", "2.5")
+    assert bench._env_num("SPARK_GRAFT_BENCH_REPEAT", 3) == 3
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPEAT", "7")
+    assert bench._env_num("SPARK_GRAFT_BENCH_REPEAT", 3) == 7
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SUSTAINED_SEC", "2.5")
+    assert bench._env_num("SPARK_GRAFT_BENCH_SUSTAINED_SEC", 90.0,
+                          float) == 2.5
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_DRAWS", raising=False)
+    assert bench._env_num("SPARK_GRAFT_BENCH_DRAWS", 1) == 1
+
+
+def test_numeric_knobs_read_through_env_num():
+    """No ``int(...)``/``float(...)`` wraps an environment read in
+    bench.py: every numeric knob goes through ``_env_num``."""
+    import ast
+    import inspect
+    tree = ast.parse(inspect.getsource(bench))
+    bare = [ast.unparse(n) for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "id", None) in ("int", "float")
+            and "environ" in ast.unparse(n)]
+    assert bare == []

@@ -1,8 +1,10 @@
 """One-shot measurement harness for the BASELINE.md scaling model
 (judge r09 task 5): run each dedup/ANN scale entry at 1M and 10M in a
 fresh subprocess JVM with the Spark UI on, and record wall clock, rows,
-shuffle read/write volume, executor cpu/run seconds, and host load —
-the measured per-doc coefficients the 100 TB projection is built from.
+the entry's job-group stage metrics (bench._group_stages: shuffle
+read/write volume, executor cpu/run seconds, spill, hottest stages) and
+host load — the measured per-doc coefficients the 100 TB projection is
+built from.
 
 Usage: python tools/measure_scaling.py [entry ...]
 Writes SCALING_MODEL.json at the repo root (one section per entry/size).
@@ -31,20 +33,20 @@ ENTRIES = {
 IMPLICIT = {"dd_minhash", "dd_ngram", "v_sparse"}
 
 _CODE = """
-import json, time
+import json, os, time
+os.environ["SPARK_GRAFT_UI"] = "1"
 import bench
 import __spark_entry__ as E
+from perfbench.tracing import host_probe
 from vectordb_testbricks_spark.session import get_spark
-import os
-os.environ["SPARK_GRAFT_UI"] = "1"
 spark = get_spark("scaling_probe")
-p0 = bench._host_probe()
-sid = bench._max_stage_id(spark)
-t0 = time.perf_counter()
-n = E.{name}(spark, "/root/testdata/sf0.1").count()
-wall = round(time.perf_counter() - t0, 3)
-m = bench._stages_since(spark, sid) if sid is not None else {{}}
-m["host_load"] = bench._host_load(p0, bench._host_probe())
+p0 = host_probe()
+with bench._job_group(spark, "scaling:{name}"):
+    t0 = time.perf_counter()
+    n = E.{name}(spark, "/root/testdata/sf0.1").count()
+    wall = round(time.perf_counter() - t0, 3)
+m = bench._group_stages(spark, "scaling:{name}")
+m["host_load"] = bench._host_load(p0, host_probe())
 m["wall_sec"] = wall
 m["rows"] = n
 print("SCALING", json.dumps(m), flush=True)

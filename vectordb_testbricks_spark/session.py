@@ -49,10 +49,11 @@ def get_spark(app_name: str = "vectordb_testbricks_spark",
         # catalog loader converts back to TimestampType (micros)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # UI off for tests (port + thread overhead ×100s of sessions);
-        # bench.py sets SPARK_GRAFT_UI=1 so its scale-entry loop can read
-        # per-attempt stage metrics (executor run time, GC, shuffle,
-        # spill) from the status REST API — the r07→r08 bimodality
-        # instrumentation
+        # SPARK_GRAFT_UI=1 is set by the stage-metric readers — bench.py
+        # (every headline entry and scale attempt), tools/
+        # measure_scaling.py and perfbench's traced mode — which read
+        # their job groups' stages (executor run time, GC, shuffle,
+        # spill) from the status REST API
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1"
                 else "false")
