@@ -777,7 +777,7 @@ def dd_ngram_1m(spark, sf_dir, n=1_000_000, uniq=900_000):
     # The dd_ngram_jaccard oracle pins BOTH orders at sf0.01.
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7,
                                max_df=50, min_shared=1, impl="arrow",
-                               order="code", n_docs=n, stage_dir=stage_dir)
+                               order="code", stage_dir=stage_dir)
 
 
 def dd_ngram_10m(spark, sf_dir):
@@ -1828,17 +1828,6 @@ def _bm25_tables(spark, sf_dir, analyzer=None):
         build)
 
 
-def _docs_count(spark, sf_dir):
-    """Corpus-size HINT for bm25_search_many's bounded one-exchange gate
-    (r13, VERDICT r12 #8): a raw parquet count of the documents fixture,
-    memoized per (session, sf_dir) — corpus cardinality is ingest-time
-    metadata (it is literally the n_docs column of the cached BM25 stats
-    table), not a query result, so one count job per session serves
-    every steady-state search's boundedness decision."""
-    return session_memo(spark, ("docs_count", sf_dir),
-                        lambda: _t(spark, sf_dir, "documents").count())
-
-
 def v_bm25(spark, sf_dir):
     """V7: BM25 full-text search (raw-string query, k1=1.2, b=0.75,
     idf = ln(1 + (N - df + 0.5)/(df + 0.5))) over the ingest-time tf/stats
@@ -1847,8 +1836,7 @@ def v_bm25(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     tf, stats = _bm25_tables(spark, sf_dir)
     hits = bm25_search(docs, BM25_QUERY, "doc_id", "text", k=10,
-                       tf_df=tf, stats=stats,
-                       n_docs=_docs_count(spark, sf_dir))
+                       tf_df=tf, stats=stats)
     return hits.select("query_id", "doc_id",
                        F.round("score", 4).alias("score"),
                        F.col("rank").cast("bigint").alias("rank"))
@@ -1910,8 +1898,7 @@ def v_bm25_modes(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     tf, stats = _bm25_tables(spark, sf_dir, BM25_STOP_ANALYZER)
     stop = (bm25_search(docs, BM25_QUERY, "doc_id", "text", k=10,
-                        tf_df=tf, stats=stats, analyzer=BM25_STOP_ANALYZER,
-                        n_docs=_docs_count(spark, sf_dir))
+                        tf_df=tf, stats=stats, analyzer=BM25_STOP_ANALYZER)
             .select(F.lit("stop").alias("analyzer"), "query_id", "doc_id",
                     F.round("score", 4).alias("score"),
                     F.col("rank").cast("bigint").alias("rank")))
@@ -1924,8 +1911,7 @@ def v_bm25_modes(spark, sf_dir):
     tf_d, stats_d = _bm25_tables(spark, sf_dir, BM25_DICT_ANALYZER)
     dct = (bm25_search(docs, BM25_DICT_QUERY, "doc_id", "text", k=10,
                        tf_df=tf_d, stats=stats_d,
-                       analyzer=BM25_DICT_ANALYZER,
-                       n_docs=_docs_count(spark, sf_dir))
+                       analyzer=BM25_DICT_ANALYZER)
            .select(F.lit("dict").alias("analyzer"), "query_id", "doc_id",
                    F.round("score", 4).alias("score"),
                    F.col("rank").cast("bigint").alias("rank")))
@@ -1979,8 +1965,7 @@ def _bm25_branch(spark, sf_dir, limit=20, texts=None):
     docs = _t(spark, sf_dir, "documents")
     tf, stats = _bm25_tables(spark, sf_dir)
     return (bm25_search_many(docs, texts or [BM25_QUERY], "doc_id", "text",
-                             k=limit, tf_df=tf, stats=stats,
-                             n_docs=_docs_count(spark, sf_dir))
+                             k=limit, tf_df=tf, stats=stats)
             .select("query_id", "doc_id", "score", "rank"))
 
 
@@ -2879,14 +2864,6 @@ def _doubled_docs(spark, sf_dir):
         d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
 
 
-def _doubled_docs_count(spark, sf_dir):
-    """Row-count HINT for the dedup pipelines' barrier gate
-    (materialize.barrier_if_large): twice the per-session documents
-    count — no tokenization, no python — so it is cheap where the
-    barrier's own eager count (full codes/signature build) is not."""
-    return 2 * _docs_count(spark, sf_dir)
-
-
 def dd_exact(spark, sf_dir):
     """Exact dedup: canonical-text hash groups (hash-groupBy, one shuffle)."""
     from vectordb_testbricks_spark.operators.dedup import exact_duplicates
@@ -2928,8 +2905,7 @@ def dd_minhash(spark, sf_dir):
     Jaccard ≥ 0.7 on candidates."""
     from vectordb_testbricks_spark.operators.dedup import minhash_lsh_dedup
     pairs = minhash_lsh_dedup(_doubled_docs(spark, sf_dir), "doc_id", "text",
-                              threshold=0.7, shingle_n=3,
-                              n_docs=_doubled_docs_count(spark, sf_dir))
+                              threshold=0.7, shingle_n=3)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -3012,8 +2988,7 @@ def dd_simhash_pairs(spark, sf_dir):
         connected_components, simhash_near_dups)
     pairs = shared_persist(
         simhash_near_dups(_doubled_docs(spark, sf_dir), "doc_id", "text",
-                          max_hamming=3, bits=64,
-                          n_docs=_doubled_docs_count(spark, sf_dir))
+                          max_hamming=3, bits=64)
         .select("id_a", "id_b",
                 F.col("hamming").cast("bigint").alias("hamming")))
     comp = connected_components(pairs)
@@ -3112,7 +3087,6 @@ def dd_ngram_jaccard(spark, sf_dir):
     from vectordb_testbricks_spark.operators.dedup import (
         _token_codes, jaccard_pairs, ngram_candidate_pairs)
     base = _doubled_docs(spark, sf_dir)
-    nd = _doubled_docs_count(spark, sf_dir)
     # both modes share ONE JVM codes cache (ngram_jaccard_pairs' default
     # at fixture scale); the 'code' mode's posting build is the Arrow kernel
     codes = shared_persist(_token_codes(base, "doc_id", "text",
@@ -3126,8 +3100,7 @@ def dd_ngram_jaccard(spark, sf_dir):
     cands = None
     for mode in ("rarity", "code"):
         c = ngram_candidate_pairs(codes, "doc_id", 0.7, max_df=50,
-                                  min_shared=2, prefix=True, order=mode,
-                                  n_docs=nd)
+                                  min_shared=2, prefix=True, order=mode)
         c = c.select(F.lit(mode).alias("mode"), "id_a", "id_b")
         cands = c if cands is None else cands.unionByName(c)
     return (jaccard_pairs(codes, cands, "doc_id")

@@ -128,13 +128,13 @@ class TestPrefixPostingsKernel:
     def test_postings_identical_to_jvm_twin(self, spark, tables,
                                             edge_docs, max_df,
                                             monkeypatch):
-        from vectordb_testbricks_spark.operators import dedup
+        from vectordb_testbricks_spark import materialize
         from vectordb_testbricks_spark.operators.dedup import (
             _code_order_postings, _code_order_postings_jvm, _token_codes)
         # force the pigeonhole candidate branch (normally a >=100k-doc
         # scale escape) so the fixture-scale identity covers it;
         # max_df=3 makes the blacklist it produces NON-empty
-        monkeypatch.setattr(dedup, "PIGEONHOLE_MIN_ROWS", 0)
+        monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 0)
         docs = tables["documents"].df.select("doc_id", "text")
         doubled = docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
@@ -174,7 +174,7 @@ class TestPrefixPostingsKernel:
         # the same code-order pipeline over the JVM posting reference
         monkeypatch.setattr(
             dedup, "_code_order_postings",
-            lambda codes, id_col, threshold, max_df, n_docs=None:
+            lambda codes, id_col, threshold, max_df:
             dedup._code_order_postings_jvm(codes, id_col, threshold,
                                            max_df))
         code_j = pairs(order="code", impl="jvm")
@@ -575,22 +575,26 @@ class TestSimhashKernel:
 
 
 class TestCodeOrderPostingMemo:
-    def test_second_call_returns_memoized_relation(self, spark, edge_docs):
+    def test_second_call_returns_memoized_relation(self, spark, edge_docs,
+                                                   monkeypatch):
         """r12: the Arrow posting build closes over a fresh broadcast per
         call, so CacheManager plan equality can never dedup it — the
         session memo must hand back the SAME posting DataFrame (and the
         same blacklist) for a repeated build over the same codes plan,
         or every steady-state search re-runs the index build."""
+        from vectordb_testbricks_spark import materialize
         from vectordb_testbricks_spark.materialize import shared_persist
         from vectordb_testbricks_spark.operators import dedup
         from vectordb_testbricks_spark.session import forget
+        # small-corpus regime (no eager count, exact blacklist): the
+        # parallelized edge docs carry no size statistics, so raise the
+        # threshold past their Long.MaxValue-byte default estimate
+        monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 2 ** 63)
         codes = shared_persist(
             dedup._token_codes(edge_docs, "doc_id", "text", 3))
         try:
-            p1 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            n_docs=9)
-            p2 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            n_docs=9)
+            p1 = dedup._code_order_postings(codes, "doc_id", 0.7, 50)
+            p2 = dedup._code_order_postings(codes, "doc_id", 0.7, 50)
             assert p1 is p2
             # rows still correct on the memoized handle (vs the JVM
             # reference)
@@ -601,8 +605,7 @@ class TestCodeOrderPostingMemo:
             assert key(p2) == key(jvm)
             # explicit eviction protects the two-phase unpersist path
             forget(lambda slot, v: v is p1)
-            p3 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            n_docs=9)
+            p3 = dedup._code_order_postings(codes, "doc_id", 0.7, 50)
             assert p3 is not p1
         finally:
             codes.unpersist()

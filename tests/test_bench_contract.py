@@ -375,6 +375,39 @@ def test_group_stages_failed_read_is_empty(monkeypatch):
     assert bench._group_stages(spark, "g") == {}
 
 
+def test_streaming_attempt_reads_its_run_id_groups(monkeypatch):
+    """A streaming scale attempt's micro-batches run under the query's
+    runId group, not the attempt's: the attempt reads the runId groups
+    that appeared during it and sums them into its stage metrics; an
+    older stream's group (there before the attempt) stays out."""
+    old, new = ("0a0b0c0d-1111-2222-3333-444455556666",
+                "9f8e7d6c-aaaa-bbbb-cccc-ddddeeeeffff")
+    stages = [_stage(1, run_ms=100, start=0, end=1),
+              _stage(2, run_ms=800, read=4 << 20, start=2, end=4),
+              _stage(3, run_ms=300, start=5, end=6),
+              _stage(4, run_ms=5000)]
+    before = [{"jobId": 0, "jobGroup": old, "stageIds": [4]}]
+    after = before + [
+        {"jobId": 1, "jobGroup": "bench:st_stream_1m:0", "stageIds": [1]},
+        {"jobId": 2, "jobGroup": new, "stageIds": [2]},
+        {"jobId": 3, "jobGroup": new, "stageIds": [3]}]
+    spark = _fake_rest(monkeypatch, before, stages)
+    known = bench._stream_groups(spark)
+    assert known == {old}
+    spark = _fake_rest(monkeypatch, after, stages)
+    run_ids = sorted(bench._stream_groups(spark) - known)
+    assert run_ids == [new]
+    m = bench._group_stages(spark, "bench:st_stream_1m:0", *run_ids)
+    assert m["jobs"] == 3 and m["n_stages"] == 3 and m["tasks"] == 12
+    assert m["executor_run_sec"] == 1.2 and m["span_sec"] == 4.0
+    assert m["shuffle_read_mb"] == 4
+    assert [s["id"] for s in m["top_stages"]] == [2, 3, 1]
+    alone = bench._group_stages(spark, "bench:st_stream_1m:0")
+    assert alone["jobs"] == 1 and alone["n_stages"] == 1
+    assert "includes the stream's micro-batch jobs" in \
+        bench._classify_attempt("st_stream_1m", m)
+
+
 # ------------------------------------------------------- host counters
 
 def test_host_load_from_tracing_probes(monkeypatch):

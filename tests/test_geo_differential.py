@@ -140,3 +140,25 @@ def test_grid_actually_exercises_boundary_cases(point_grid):
     on_b = [(px, py) for px, py in pts if _on_boundary(px, py, verts)]
     assert len(on_b) > 20
     assert any((px, py) in verts for px, py in on_b)   # vertex hits too
+
+
+def test_st_contains_parses_the_point_once(spark):
+    """One regexp_extract per row: the edge terms and the bounding-box
+    test read the parsed pair, never re-run the regex."""
+    df = spark.createDataFrame([(1, "POINT (3 3)")], "id long, location string")
+    pred = compile_expr(geo.st_contains_expr("location", _POLYGONS[2]), df)
+    plan = df.filter(pred)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract(") == 1, plan
+
+
+def test_st_contains_unparseable_point_is_false(spark):
+    """A NULL or malformed point is not contained — False, not NULL, so
+    a negated predicate keeps those rows; extra whitespace inside a
+    well-formed point is accepted."""
+    df = spark.createDataFrame(
+        [(1, None), (2, "garbage"), (3, "POINT (5 5)"), (4, "POINT (50 5)"),
+         (5, "POINT(3  4.5)"), (6, "POINT ( 7 \t2.5 )")],
+        "id long, location string")
+    pred = compile_expr(geo.st_contains_expr("location", _POLYGONS[0]), df)
+    got = {r.id: r.c for r in df.select("id", pred.alias("c")).collect()}
+    assert got == {1: False, 2: False, 3: True, 4: False, 5: True, 6: True}

@@ -977,13 +977,17 @@ def test_ngram_prefix_candidates_superset_of_results(spark):
         assert p1 == p0, f"positional filter lost pairs at t={t}"
 
 
-def test_ngram_stage_dir_two_phase_identical(spark, tmp_path):
+def test_ngram_stage_dir_two_phase_identical(spark, tmp_path, monkeypatch):
     """stage_dir (the two-phase scratch-disk pipeline break) must be a
     pure physical change: identical (id_a, id_b, jaccard) set to the
     single-plan run on a heavy-overlap corpus with boundary Jaccard
-    values, under both prefix orders."""
+    values, under both prefix orders (small-corpus regime: the
+    parallelized list has no size statistics, so the threshold is
+    raised past its Long.MaxValue-byte default estimate)."""
+    from vectordb_testbricks_spark import materialize
     from vectordb_testbricks_spark.operators.dedup import (
         ngram_jaccard_pairs)
+    monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 2 ** 63)
     import random
     rnd = random.Random(31)
     words = [f"w{i}" for i in range(30)]
@@ -992,7 +996,7 @@ def test_ngram_stage_dir_two_phase_identical(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for order in ("rarity", "code"):
         kw = dict(n=3, threshold=0.6, max_df=100, min_shared=1,
-                  order=order, n_docs=30)
+                  order=order)
         plain = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in
                  ngram_jaccard_pairs(docs, "doc_id", "text", **kw)
                  .collect()}
@@ -1013,8 +1017,11 @@ def test_ngram_stage_dir_unpersists_posting_cache(spark, tmp_path,
     the driver GC happened to collect."""
     from pyspark.storagelevel import StorageLevel
 
+    from vectordb_testbricks_spark import materialize
     from vectordb_testbricks_spark.operators import dedup
 
+    # small-corpus regime, as for test_ngram_stage_dir_two_phase_identical
+    monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 2 ** 63)
     rows = [(i, " ".join(f"w{(i + j) % 9}" for j in range(12)))
             for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1027,7 +1034,7 @@ def test_ngram_stage_dir_unpersists_posting_cache(spark, tmp_path,
 
     monkeypatch.setattr(dedup, "ngram_candidate_pairs", spy)
     out = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, n_docs=20,
+        docs, "doc_id", "text", n=3, threshold=0.5,
         stage_dir=str(tmp_path / "cands"))
     assert captured["caches"], "posting-cache seam not wired"
     for cached in captured["caches"]:
@@ -1659,10 +1666,13 @@ def test_bm25_and_sparse_local_query_sides_match_rdd_sides(spark,
     assert all(new), new
 
 
-def test_lsh_candidate_regimes_identical_on_duplicate_ids(spark):
+def test_lsh_candidate_regimes_identical_on_duplicate_ids(spark,
+                                                         monkeypatch):
     """Both candidate-pair regimes of lsh_candidate_pairs emit the same
     pairs on an input that repeats an id: the small-corpus bucket-local
-    emit drops id_a == id_b exactly as the self-join's id_a < id_b does."""
+    emit drops id_a == id_b exactly as the self-join's id_a < id_b does.
+    The regimes are forced through the size threshold."""
+    from vectordb_testbricks_spark import materialize
     from vectordb_testbricks_spark.operators.dedup import (
         lsh_candidate_pairs, minhash_signatures)
     docs = spark.createDataFrame(
@@ -1671,8 +1681,10 @@ def test_lsh_candidate_regimes_identical_on_duplicate_ids(spark):
          (3, "one two three four five six"), (4, "unrelated words here")],
         "doc_id long, text string")
     sigs = minhash_signatures(docs, "doc_id", "text")
+    monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 2 ** 63)
     small = sorted(tuple(r) for r in lsh_candidate_pairs(
-        sigs, "doc_id", n_docs=6).collect())
+        sigs, "doc_id").collect())
+    monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 0)
     joined = sorted(tuple(r) for r in lsh_candidate_pairs(
         sigs, "doc_id").collect())
     assert small == joined

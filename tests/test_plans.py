@@ -100,26 +100,31 @@ def test_bm25_broadcasts_stats_and_query_terms(tables):
     assert p.count("BroadcastExchange") >= 2  # stats + qterms
 
 
-def test_bm25_bounded_gate_picks_exchange_regime(tables):
-    """r13 (VERDICT r12 #8, guide §2.4): with an n_docs hint that PROVES
-    the matched stream small, the contrib aggregate re-keys by query_id
-    so the aggregate and the top-k window share ONE hash exchange; with
-    no hint (or an at-scale corpus) the classic two-exchange plan with
-    map-side partial aggregation must remain — shipping the raw
-    posting-match stream at scale would be the real regression."""
-    from vectordb_testbricks_spark.operators.bm25 import (
-        BOUNDED_ONE_EXCHANGE_MAX, bm25_search)
+def test_bm25_bounded_gate_picks_exchange_regime(tables, monkeypatch):
+    """r13 (VERDICT r12 #8, guide §2.4): when the corpus' estimated rows
+    PROVE the matched stream small, the contrib aggregate re-keys by
+    query_id so the aggregate and the top-k window share ONE hash
+    exchange; with no estimate (or an at-scale corpus) the classic
+    two-exchange plan with map-side partial aggregation must remain —
+    shipping the raw posting-match stream at scale would be the real
+    regression."""
+    from vectordb_testbricks_spark.operators import bm25
+    from vectordb_testbricks_spark.operators.bm25 import bm25_search
     docs = tables["documents"].df
 
-    def hash_exchanges(n_docs):
+    def hash_exchanges():
         p = _plan(bm25_search(docs, "spark query join", "doc_id", "text",
-                              k=5, n_docs=n_docs))
+                              k=5))
         return [ln for ln in p.splitlines()
                 if "Exchange hashpartitioning" in ln]
 
-    classic = hash_exchanges(None)           # no hint: scale-safe default
-    bounded = hash_exchanges(100)            # provably tiny stream
-    too_big = hash_exchanges(BOUNDED_ONE_EXCHANGE_MAX)  # hint, but at scale
+    bounded = hash_exchanges()               # fixture: provably tiny stream
+    with monkeypatch.context() as m:         # no estimate: scale-safe default
+        m.setattr(bm25, "estimated_rows", lambda df: None)
+        classic = hash_exchanges()
+    with monkeypatch.context() as m:         # estimated, but at scale
+        m.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
+        too_big = hash_exchanges()
     assert len(bounded) == len(classic) - 1
     # the shared exchange is keyed by query_id ALONE (satisfies both the
     # aggregate's clustering and the window's distribution)
@@ -127,10 +132,11 @@ def test_bm25_bounded_gate_picks_exchange_regime(tables):
     assert len(too_big) == len(classic)
 
     # identical rows either way (the regimes differ only in plan shape)
+    b = sorted(map(tuple, bm25_search(docs, "spark query join", "doc_id",
+                                      "text", k=5).collect()))
+    monkeypatch.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
     a = sorted(map(tuple, bm25_search(docs, "spark query join", "doc_id",
                                       "text", k=5).collect()))
-    b = sorted(map(tuple, bm25_search(docs, "spark query join", "doc_id",
-                                      "text", k=5, n_docs=100).collect()))
     assert a == b and len(a) == 5
 
 
@@ -336,18 +342,22 @@ def test_batched_nq16_scores_once(spark):
     assert "aggregate" not in join and "isnotnull" not in join, join[:200]
 
 
-def test_lsh_candidate_stage_picks_regime_from_hint(spark):
+def test_lsh_candidate_stage_picks_regime_from_hint(spark, monkeypatch):
     """r13 (VERDICT r12 #5), both regimes measured both ways:
 
-    * hinted small corpus → bucket-local pair emit (groupBy(key) +
-      chained generators, NO self-join): removes the join's per-call
-      broadcast hash-relation build and the second pass over the bucket
-      relation (sf0.1 pipeline medians 1.28 s vs 1.63 s, rows identical);
-    * no hint / at-scale hint → the original self-join, which WINS at
+    * small corpus → bucket-local pair emit (groupBy(key) + chained
+      generators, NO self-join): removes the join's per-call broadcast
+      hash-relation build and the second pass over the bucket relation
+      (sf0.1 pipeline medians 1.28 s vs 1.63 s, rows identical);
+    * unknown or at-scale size → the original self-join, which WINS at
       1M docs (3.3 s vs 20.4 s warm, same session): collect_list there
       is an ObjectHashAggregate over ~bands×n_docs nearly-unique keys,
-      hash aggregation's worst case. The hint gate keeps each shape in
-      the regime where it measured faster."""
+      hash aggregation's worst case. The size gate keeps each shape in
+      the regime where it measured faster. A parallelized list carries
+      no size statistics (Catalyst's default is Long.MaxValue bytes), so
+      these signatures read as large until the threshold is raised; an
+      explicit ``n_docs`` overrides the estimate."""
+    from vectordb_testbricks_spark import materialize
     from vectordb_testbricks_spark.operators.dedup import (
         lsh_candidate_pairs, minhash_signatures)
     docs = spark.createDataFrame(
@@ -355,30 +365,45 @@ def test_lsh_candidate_stage_picks_regime_from_hint(spark):
         "doc_id long, text string")
     sigs = minhash_signatures(docs, "doc_id", "text")
 
-    # hinted small corpus: bucket-local emit, single bucket-table pass
-    p = _plan(lsh_candidate_pairs(sigs, "doc_id", n_docs=20))
-    assert "xxhash64" in p, p
-    assert not [l for l in p.splitlines() if "Join [key#" in l], p
-    # pair emission is generator-chained (posexplode + explode), never a
-    # quadratic per-bucket array in one projection
-    assert p.count("Generate") >= 2, p
-    # exactly two hash exchanges: groupBy(key) and the distinct — the
-    # join's extra leg/broadcast is gone
-    assert sum("Exchange hashpartitioning" in l
-               for l in p.splitlines()) == 2, p
-    # a self-join would scan the persisted bucket relation twice (plus
-    # the token barrier in its lineage) — single-pass stays <= 2
-    assert 1 <= p.count("InMemoryTableScan") <= 2, p
+    # small corpus: bucket-local emit, single bucket-table pass
+    for small in (lsh_candidate_pairs(sigs, "doc_id", n_docs=20),
+                  _with_threshold(monkeypatch, 2 ** 63,
+                                  lambda: lsh_candidate_pairs(sigs,
+                                                              "doc_id"))):
+        p = _plan(small)
+        assert "xxhash64" in p, p
+        assert not [l for l in p.splitlines() if "Join [key#" in l], p
+        # pair emission is generator-chained (posexplode + explode),
+        # never a quadratic per-bucket array in one projection
+        assert p.count("Generate") >= 2, p
+        # exactly two hash exchanges: groupBy(key) and the distinct —
+        # the join's extra leg/broadcast is gone
+        assert sum("Exchange hashpartitioning" in l
+                   for l in p.splitlines()) == 2, p
+        # a self-join would scan the persisted bucket relation twice
+        # (plus the token barrier in its lineage) — single-pass <= 2
+        assert 1 <= p.count("InMemoryTableScan") <= 2, p
 
-    # no hint (scale-conservative default): the self-join, consuming the
+    # large (scale-conservative default): the self-join, consuming the
     # PERSISTED bucket relation on both sides — never re-evaluating the
     # signature subtree per side (the pipeline's costliest expression)
     pj = _plan(lsh_candidate_pairs(sigs, "doc_id"))
     assert pj.count("InMemoryTableScan") >= 2, pj
     assert [l for l in pj.splitlines() if "Join [key#" in l], pj
-    # at-scale hint behaves like no hint
-    ps = _plan(lsh_candidate_pairs(sigs, "doc_id", n_docs=10_000_000))
-    assert [l for l in ps.splitlines() if "Join [key#" in l], ps
+    # forced large through the threshold, and an at-scale n_docs, match
+    monkeypatch.setattr(materialize, "BARRIER_MIN_ROWS", 0)
+    for large in (lsh_candidate_pairs(sigs, "doc_id"),
+                  lsh_candidate_pairs(sigs, "doc_id", n_docs=10_000_000)):
+        ps = _plan(large)
+        assert [l for l in ps.splitlines() if "Join [key#" in l], ps
+
+
+def _with_threshold(monkeypatch, rows, build):
+    """``build()`` under ``materialize.BARRIER_MIN_ROWS = rows``."""
+    from vectordb_testbricks_spark import materialize
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "BARRIER_MIN_ROWS", rows)
+        return build()
 
 
 def test_ngram_candidate_join_reads_persisted_posting_twice(spark):

@@ -532,20 +532,30 @@ class _Compiler:
         """Point-in-polygon via ray casting, unrolled into Column expressions
         (reference: run_go_bench_horizon.py:98-101; polygon construction
         cal_polygon_by_point.py:3-55). The polygon is a literal WKT string;
-        the field holds WKT ``POINT (x y)`` strings."""
-        poly = _lit_value(poly_node)
-        verts = _parse_wkt_polygon(str(poly))
-        op = self.operand(field_node)
-        x = F.regexp_extract(op.col, r"POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)", 1) \
-            .try_cast("double")
-        y = F.regexp_extract(op.col, r"POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)", 2) \
-            .try_cast("double")
-        return _ray_cast(x, y, verts)
+        the field holds WKT ``POINT (x y)`` strings (x and y separated by
+        at least one space); a NULL or malformed point is not contained."""
+        # the POINT is parsed ONCE per row: one regexp_extract yields
+        # "x y", split into a double pair that a lambda binds, so the edge
+        # terms and the bounding box read lambda variables instead of
+        # re-running the regex per reference. A literal " " split skips
+        # Java's per-call regex compile; the cast trims other whitespace
+        xy = F.split(F.regexp_extract(
+            self.operand(field_node).col,
+            r"POINT\s*\(\s*(-?[\d.]+\s+-?[\d.]+)\s*\)", 1),
+            " ").try_cast("array<double>")
+        verts = _parse_wkt_polygon(str(_lit_value(poly_node)))
+        return F.exists(F.array(xy), lambda p: _ray_cast(
+            F.element_at(p, 1), F.element_at(p, -1), verts))
 
 
 def _ray_cast(x: Column, y: Column, verts: list[tuple[float, float]]) -> Column:
-    """Crossing-parity point-in-polygon as a pure Column expression."""
-    crossings = F.lit(0)
+    """Crossing-parity point-in-polygon as a pure Column expression,
+    behind an inclusive bounding-box test; False (never NULL) for a
+    NULL coordinate."""
+    # coarse-then-exact (Raptor, VLDB 2019): a point outside the box has
+    # an even crossing count, so the box never changes the answer. Inside
+    # it x and y are non-NULL, so each crossing just flips the parity
+    inside = F.lit(False)
     n = len(verts)
     for i in range(n):
         xi, yi = verts[i]
@@ -556,8 +566,10 @@ def _ray_cast(x: Column, y: Column, verts: list[tuple[float, float]]) -> Column:
             ((F.lit(yi) > y) != (F.lit(yj) > y))
             & (x < (F.lit(xj - xi) * (y - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi)))
         )
-        crossings = crossings + F.when(cond, 1).otherwise(0)
-    return crossings % 2 == 1
+        inside = inside != cond
+    xs, ys = [v[0] for v in verts], [v[1] for v in verts]
+    in_box = x.between(min(xs), max(xs)) & y.between(min(ys), max(ys))
+    return F.when(in_box, inside).otherwise(False)
 
 
 def _parse_wkt_polygon(wkt: str) -> list[tuple[float, float]]:

@@ -54,23 +54,70 @@ def materialize_barrier(df: DataFrame) -> DataFrame:
     return df
 
 
-# row threshold above which the AQE cold-cache double-build the barrier
-# prevents outweighs the barrier's own eager count job. Measured both
-# ways in the n-gram pipeline: at 10M docs the double-build costs twin
-# ~1,100-CPU-s stages; at fixture scale (<=60k docs) the double-build is
-# harmless while the count job adds ~0.3-1 s per entry (VERDICT r10 #4).
+# row threshold above which an operator's input counts as LARGE: the
+# AQE cold-cache double-build the barrier prevents then outweighs the
+# barrier's own eager count job. Measured both ways in the n-gram
+# pipeline: at 10M docs the double-build costs twin ~1,100-CPU-s stages;
+# at fixture scale (<=60k docs) the double-build is harmless while the
+# count job adds ~0.3-1 s per entry (VERDICT r10 #4). Every dedup size
+# gate (the barrier, the LSH candidate emit, the pigeonhole blacklist)
+# splits its two plan shapes here.
 BARRIER_MIN_ROWS = 100_000
 
 
-def barrier_if_large(df: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """:func:`materialize_barrier` gated on a caller-supplied row-count
-    HINT: barrier when ``n_rows`` is unknown (None — the conservative,
-    scale-safe default) or >= :data:`BARRIER_MIN_ROWS`, plain
-    :func:`shared_persist` below it.
+def _plan_stats(df: DataFrame):
+    """(optimized plan, its Catalyst Statistics): planning only."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan, plan.stats()
 
-    The hint must be cheap for the caller (a known corpus size, a raw
-    parquet count) — counting ``df`` itself here would BE the barrier."""
-    if n_rows is None or n_rows >= BARRIER_MIN_ROWS:
+
+def estimated_rows(df: DataFrame) -> int | None:
+    """Catalyst's row estimate for ``df``, without running a job:
+    ``rowCount`` when the plan (or the relation under its projections)
+    has one, else ``sizeInBytes`` over the plan's estimated row width,
+    else ``None`` when the probe raises."""
+    # rowCount exists on a Range and on a cache that was built before
+    # this DataFrame's plan was first optimized (then it is exact; the
+    # stats stay cached with the plan, so a handle probed before the
+    # build keeps its pre-build estimate). Parquet scans, mapInPandas
+    # outputs and unbuilt caches take the byte path, which lands within
+    # a small factor of the real count (sf0.1 documents: 7,078 for
+    # 5,000 rows). A projection keeps its child's rows but drops
+    # rowCount, and over a built cache the byte path would divide real
+    # array bytes by Catalyst's 8-byte default width: look through it.
+    try:
+        plan, stats = _plan_stats(df)
+        node = plan
+        while (node.getClass().getSimpleName() == "Project"
+               and not node.stats().rowCount().isDefined()):
+            node = node.child()
+        rows = node.stats().rowCount()
+        if rows.isDefined():
+            return int(str(rows.get()))
+        eu = (df.sparkSession._jvm.org.apache.spark.sql.catalyst.plans
+              .logical.statsEstimation.EstimationUtils)
+        per_row = eu.getSizePerRow(plan.output(),
+                                   getattr(eu, "getSizePerRow$default$2")())
+        return int(str(stats.sizeInBytes())) // max(int(str(per_row)), 1)
+    except Exception:                               # noqa: BLE001
+        return None
+
+
+def is_large(df: DataFrame) -> bool:
+    """The size regime of an operator's input relation: large unless
+    :func:`estimated_rows` is below :data:`BARRIER_MIN_ROWS`."""
+    # an unknown estimate reads as large, the scale-safe shape. Gates
+    # decide on the input (docs, codes, signatures), never on a derived
+    # plan: a join multiplies Catalyst's size estimates until they
+    # saturate
+    rows = estimated_rows(df)
+    return rows is None or rows >= BARRIER_MIN_ROWS
+
+
+def barrier_if_large(df: DataFrame, source: DataFrame) -> DataFrame:
+    """:func:`materialize_barrier` when the operator input ``source`` is
+    large (:func:`is_large`), else plain :func:`shared_persist`."""
+    if is_large(source):
         return materialize_barrier(df)
     return shared_persist(df)
 
@@ -133,8 +180,7 @@ def _widen_width(df: DataFrame, target: int) -> int:
     reports Long.MaxValue-ish sizes for some nodes — those clamp at
     ``target`` naturally)."""
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
+        size = int(str(_plan_stats(df)[1].sizeInBytes()))
     except Exception:                               # noqa: BLE001
         return target
     if size <= 0:

@@ -32,16 +32,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_testbricks_spark.exprlang import compile_expr
+from vectordb_testbricks_spark.materialize import estimated_rows
 
 K1 = 1.2
 B = 0.75
 
 #: Matched-stream row bound below which the contrib aggregate may share
-#: one exchange with the top-k window (bm25_search_many ``n_docs`` hint):
-#: the one-exchange path drops map-side partial aggregation, which is
-#: only safe when the un-aggregated (query, doc, term) match stream is
-#: provably small. Each (doc, query-term-occurrence) pair matches at most
-#: once, so n_docs × Σ|query terms| is a hard upper bound on the stream.
+#: one exchange with the top-k window (see bm25_search_many): the
+#: one-exchange path drops map-side partial aggregation, which is only
+#: safe when the un-aggregated (query, doc, term) match stream is small.
+#: Each (doc, query-term-occurrence) pair matches at most once, so
+#: corpus rows × Σ|query terms| bounds the stream.
 BOUNDED_ONE_EXCHANGE_MAX = 2_000_000
 
 
@@ -89,13 +90,13 @@ def corpus_stats(docs: DataFrame, id_col: str, text_col: str,
     return df_t.crossJoin(F.broadcast(totals))
 
 
-def bm25_contrib(n_docs: Column | None = None,
+def bm25_contrib(n: Column | None = None,
                  avgdl: Column | None = None) -> Column:
     """Per-(doc, term) BM25 contribution over (tf, dl, df_t) and the corpus
-    totals ``n_docs``/``avgdl`` (default: the columns of those names)."""
-    n_docs = F.col("n_docs") if n_docs is None else n_docs
+    totals ``n``/``avgdl`` (default: the columns ``n_docs``/``avgdl``)."""
+    n = F.col("n_docs") if n is None else n
     avgdl = F.col("avgdl") if avgdl is None else avgdl
-    idf = F.log(1.0 + (n_docs - F.col("df_t") + 0.5)
+    idf = F.log(1.0 + (n - F.col("df_t") + 0.5)
                 / (F.col("df_t") + 0.5))
     tf_part = (F.col("tf") * (K1 + 1.0)) / (
         F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl))
@@ -120,20 +121,18 @@ def bm25_search(docs: DataFrame, query_text: str, id_col: str, text_col: str,
                 k: int = 10, flt: str | Column | None = None,
                 tf_df: DataFrame | None = None,
                 stats: DataFrame | None = None,
-                analyzer: dict | None = None,
-                n_docs: int | None = None) -> DataFrame:
+                analyzer: dict | None = None) -> DataFrame:
     """V7: top-k documents for a raw-string query (query_id = 0).
 
     Pass pre-built ``tf_df``/``stats`` to reuse the ingest-time tables (the
     production path); otherwise they are derived on the fly. ``analyzer``
     (reference analyzer_params shape) applies to both corpus and query —
     pre-built tables must have been built with the same analyzer.
-    ``n_docs`` is the optional corpus-size hint (see bm25_search_many).
     Returns (query_id, <id_col>, score, rank), ties broken by id.
     """
     return bm25_search_many(docs, [query_text], id_col, text_col, k=k,
                             flt=flt, tf_df=tf_df, stats=stats,
-                            analyzer=analyzer, n_docs=n_docs)
+                            analyzer=analyzer)
 
 
 def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
@@ -159,21 +158,22 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     window's partition spec away (WindowExec "No Partition Defined"), and
     the per-query ranking must stay partitioned by query at any nq.
 
-    ``n_docs`` is a cheap caller-supplied corpus-size hint (same
-    convention as ``dedup.ngram_candidate_pairs(n_docs=)`` /
-    ``materialize.barrier_if_large``): when it PROVES the matched
-    (query, doc, term) stream small — n_docs × Σ|query term occurrences|
-    ≤ :data:`BOUNDED_ONE_EXCHANGE_MAX` is a hard upper bound, since each
-    (doc, term occurrence) matches at most once — the contrib aggregate
-    is re-keyed by ``repartition("query_id")`` so the aggregate's
-    clustered distribution on (query_id, id) AND the top-k window's
-    distribution on (query_id) ride ONE exchange instead of two (guide
-    §2.4; the same shape fusion._fuse_sum pins). Dropping map-side
-    partial aggregation is what the bound pays for; with no hint, or an
-    at-scale corpus, the classic partial-agg two-exchange plan is kept —
-    there the matched stream is the posting-match stream and shipping it
-    raw would be a scale regression (r12 "not yet optimized" #3).
+    Size regime: the corpus is ``docs``' row count as Catalyst
+    estimates it (materialize.estimated_rows), or ``n_docs`` when the
+    caller knows it exactly (a loaded collection's folded count). When
+    rows × Σ|query term occurrences| ≤ :data:`BOUNDED_ONE_EXCHANGE_MAX`
+    — each (doc, term occurrence) matches at most once, so this bounds
+    the matched (query, doc, term) stream — the contrib aggregate is
+    re-keyed by ``repartition("query_id")`` so the aggregate's clustered
+    distribution on (query_id, id) AND the top-k window's distribution
+    on (query_id) ride ONE exchange instead of two (guide §2.4; the same
+    shape fusion._fuse_sum pins). Dropping map-side partial aggregation
+    is what the bound pays for; on an unknown or at-scale corpus the
+    classic partial-agg two-exchange plan is kept — there the matched
+    stream is the posting-match stream and shipping it raw would be a
+    scale regression (r12 "not yet optimized" #3).
     """
+    rows = estimated_rows(docs) if n_docs is None else n_docs
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, docs)
         docs = docs.filter(pred)
@@ -209,10 +209,8 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     pre = (F.col("term").isin(all_terms) if all_terms else F.lit(False))
     contribs = (weights.filter(pre).join(F.broadcast(qterms_df), "term")
                 .select("query_id", id_col, "w"))
-    bounded = (n_docs is not None
-               and n_docs * max(len(qterm_rows), 1)
-               <= BOUNDED_ONE_EXCHANGE_MAX)
-    if bounded:
+    if (rows is not None
+            and rows * max(len(qterm_rows), 1) <= BOUNDED_ONE_EXCHANGE_MAX):
         contribs = contribs.repartition("query_id")
     scored = (contribs.groupBy("query_id", id_col)
               .agg(F.sum("w").alias("score")))

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from vectordb_testbricks_spark.functions.text import md5_long, shingles, tokenize
 from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
-    BARRIER_MIN_ROWS, barrier_if_large, materialize_barrier,
+    BARRIER_MIN_ROWS, barrier_if_large, is_large, materialize_barrier,
     parallelize_small, shared_persist)
 from vectordb_testbricks_spark.operators.arrow_kernels import check_impl
 from vectordb_testbricks_spark.session import forget, session_memo
@@ -154,12 +154,12 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
     shuffles 8-byte keys instead of 32-char strings and compares longs.
     At 1M docs this halved the candidate stage.
 
-    ``n_docs`` is the cheap caller-supplied row hint (the
-    barrier_if_large convention). Two measured regimes (r13, VERDICT r12
-    #5 — both directions A/B'd interleaved in one session, identical
-    rows in all variants):
+    The regime is :func:`materialize.is_large` on ``sigs``; ``n_docs``,
+    when given, is a known corpus size that overrides the estimate. Two
+    measured regimes (r13, VERDICT r12 #5 — both directions A/B'd
+    interleaved in one session, identical rows in all variants):
 
-    * **hinted small corpus** (n_docs < BARRIER_MIN_ROWS): pairs are
+    * **small corpus** (< BARRIER_MIN_ROWS rows): pairs are
       emitted BUCKET-LOCALLY — one groupBy(key) collects each bucket's
       sorted member ids, two chained generators stream the in-bucket
       pairs (posexplode picks id_a, explode over the ids tail picks
@@ -168,7 +168,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
       value). This removes the self-join's per-call broadcast
       hash-relation build and its second pass over
       the bucket relation: sf0.1 pipeline medians 1.28 s vs 1.63 s.
-    * **no hint / at-scale** (the conservative default): the original
+    * **large or unknown size** (the conservative default): the original
       bucket self-join. At 1M docs (warm, same session) the join runs
       3.3 s vs 4.3 s for a mapInArrow bucket-local kernel and 20.4 s
       for the groupBy shape — collect_list is an ObjectHashAggregate
@@ -197,7 +197,8 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
                 F.element_at("sig", bi * rows + r + 1)
                 for r in range(rows)])
             for bi in range(bands)])).alias("key")))
-    if n_docs is not None and n_docs < BARRIER_MIN_ROWS:
+    large = is_large(sigs) if n_docs is None else n_docs >= BARRIER_MIN_ROWS
+    if not large:
         agged = (buckets.groupBy("key")
                  .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
                  .filter(F.size("ids") >= 2))
@@ -263,10 +264,8 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
     the JVM expression path's HOF chain (~16x CPU, BASELINE.md r08).
     Identity tests compare it against that JVM twin (:func:`_token_codes`
     + :func:`signatures_from_codes` + ``jaccard_pairs(impl="jvm")``).
-    ``n_docs`` is the optional cheap row hint forwarded to
-    :func:`lsh_candidate_pairs` (small hinted corpora take the
-    bucket-local candidate emit; no hint keeps the scale-safe
-    self-join)."""
+    ``n_docs`` optionally overrides the size estimate behind
+    :func:`lsh_candidate_pairs`' candidate-emit regime."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
         minhash_codes_sigs)
     # widen BEFORE the kernel: the Python work must spread across all
@@ -343,8 +342,7 @@ def _simhash_signatures_jvm(docs: DataFrame, id_col: str, text_col: str,
 
 def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
                       max_hamming: int = 3, bits: int = 16,
-                      n_bands: int | None = None,
-                      n_docs: int | None = None) -> DataFrame:
+                      n_bands: int | None = None) -> DataFrame:
     """Near-dup pairs by simhash hamming distance ≤ max_hamming.
 
     Candidate generation is banded multi-blocking: the `bits`-wide
@@ -377,15 +375,15 @@ def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
         for i, w in enumerate(widths)])
     # barrier_if_large: blocked is both sides of the bucket self-join;
     # unpersisted, each join leg would recompute the tf-weighted simhash
-    # aggregate (the pipeline's costliest expression) once more. Below
-    # BARRIER_MIN_ROWS (n_docs hint) the eager count is skipped — the
-    # cold-cache double-build is harmless at fixture scale (VERDICT r10 #4)
+    # aggregate (the pipeline's costliest expression) once more. On a
+    # small input corpus the eager count is skipped — the cold-cache
+    # double-build is harmless at fixture scale (VERDICT r10 #4)
     blocked = barrier_if_large(
         sigs.select(F.col(id_col), "simhash",
                     F.explode(band_arr).alias("bk"))
         .select(id_col, "simhash",
                 F.col("bk.band").alias("band"),
-                F.col("bk.key").alias("key")), n_docs)
+                F.col("bk.key").alias("key")), docs)
     a, b = blocked.alias("a"), blocked.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (a.join(b, ["band", "key"])
@@ -406,13 +404,6 @@ def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
 #: point at the rarity order, whose df handling stays distributed.
 NGRAM_BLACKLIST_MAX = 2_000_000
 
-#: Below this many docs, the code-order build skips the pigeonhole
-#: candidate pass (the plain df aggregation is trivially cheap at small
-#: N — the pigeonhole exists to avoid a 100M+-row hash agg, not to tax
-#: fixtures with python worker round-trips) and feeds the posting
-#: kernel unwidened.
-PIGEONHOLE_MIN_ROWS = 100_000
-
 
 def _codes_plan_key(codes: DataFrame) -> int | None:
     """Stable identity of the codes relation across repeated operator
@@ -431,10 +422,13 @@ def _over_max_df(ex: DataFrame, max_df: int) -> DataFrame:
 
 
 def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
-                       n_docs: int) -> list:
+                       pigeonhole: bool) -> list:
     """The sorted over-``max_df`` code blacklist for the code-order
     posting build, by partition regime (see the regime comment in
-    :func:`_build_code_order_postings`).
+    :func:`_build_code_order_postings`). ``pigeonhole`` is the size
+    regime: on a small corpus the plain aggregation is trivially cheap
+    and the pigeonhole pass would be pure python-roundtrip overhead —
+    the two-regime design is a SCALE escape, not a fixture tax.
 
     pigeonhole soundness REQUIRES nparts >= the partition count
     mapInArrow actually sees (min_local too high -> heavy codes
@@ -448,11 +442,7 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
     except Exception:                                   # noqa: BLE001
         nparts = None
     cand = None
-    # below PIGEONHOLE_MIN_ROWS the plain aggregation is trivially cheap
-    # and the pigeonhole pass would be pure python-roundtrip overhead —
-    # the two-regime design is a SCALE escape, not a fixture tax
-    if (nparts is not None and nparts <= max_df
-            and n_docs >= PIGEONHOLE_MIN_ROWS):
+    if pigeonhole and nparts is not None and nparts <= max_df:
         from vectordb_testbricks_spark.operators.arrow_kernels import (
             local_heavy_codes_arrow)
         min_local = max(2, math.ceil((max_df + 1) / nparts))
@@ -481,8 +471,7 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
 
 
 def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
-                         max_df: int,
-                         n_docs: int | None = None) -> DataFrame:
+                         max_df: int) -> DataFrame:
     """Prefix posting table ``(id, sz, pos, code)`` under the **code
     total order** — the shuffle-free build behind
     ``ngram_candidate_pairs(order="code")``.
@@ -508,7 +497,7 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
 
     def build():
         return _build_code_order_postings(codes, id_col, threshold, max_df,
-                                          n_docs, plan_key)
+                                          plan_key)
 
     if plan_key is None:
         return build()
@@ -522,7 +511,6 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
 
 def _build_code_order_postings(codes: DataFrame, id_col: str,
                                threshold: float, max_df: int,
-                               n_docs: int | None,
                                plan_key: int | None) -> DataFrame:
     """The uncached body of :func:`_code_order_postings`; ``plan_key``
     (None: skip the memo) keys the blacklist memo."""
@@ -532,12 +520,12 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
     # stage makes the partial agg fight the cache writer for execution
     # memory — measured 15 GB of spill and 4,900 CPU-s in that one fused
     # stage at 10M docs vs ~30 s for the same agg over a warm cache.
-    # With a caller-supplied n_docs hint BELOW the barrier threshold the
-    # count is skipped — fusing the agg into a <=60k-row cache build is
-    # harmless and the count job is pure fixture tax (VERDICT r10 #4).
-    if n_docs is None:
-        n_docs = codes.count()
-    elif n_docs >= BARRIER_MIN_ROWS:
+    # On a small codes relation (materialize.is_large, read once for the
+    # barrier, the blacklist and the widen) the count is skipped — fusing
+    # the agg into a <=60k-row cache build is harmless and the count job
+    # is pure fixture tax (VERDICT r10 #4).
+    large = is_large(codes)
+    if large:
         codes.count()
     ex = codes.select(F.explode("codes").alias("code"))
     # Blacklist = codes with df > max_df, by partition regime:
@@ -559,7 +547,7 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
     # metadata over the SAME codes relation every steady-state search —
     # computing it was one explode+aggregate driver action per call
     def build_blacklist():
-        return _compute_blacklist(codes, ex, max_df, n_docs)
+        return _compute_blacklist(codes, ex, max_df, large)
 
     blacklist = (build_blacklist() if plan_key is None else
                  session_memo(codes.sparkSession,
@@ -570,8 +558,7 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
     # widen only CPU-heavy inputs: at fixture scale, fanning a few
     # thousand rows across defaultParallelism python tasks costs
     # more in worker round-trips than the kernel computes
-    src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
-           else codes)
+    src = parallelize_small(codes) if large else codes
     return prefix_postings_arrow(src, id_col, threshold, blacklist)
 
 
@@ -604,7 +591,6 @@ def _code_order_postings_jvm(codes: DataFrame, id_col: str,
 def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
                           max_df: int = 50, min_shared: int = 1,
                           prefix: bool = True, order: str = "rarity",
-                          n_docs: int | None = None,
                           _cache_out: list | None = None) -> DataFrame:
     """Candidate (id_a, id_b) pairs from the inverted shingle-code index.
 
@@ -654,9 +640,9 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     # submits concurrently — against a cold posting cache each leg
     # computes the full posting build itself (measured at 10M docs:
     # twin stages writing the identical 60M exchange rows, ~1,100
-    # executor-CPU-s each under the rarity order). Gated on the n_docs
-    # hint: at fixture scale the double-build is harmless and the eager
-    # count job is pure tax (VERDICT r10 #4).
+    # executor-CPU-s each under the rarity order). Gated on the size of
+    # ``codes``: at fixture scale the double-build is harmless and the
+    # eager count job is pure tax (VERDICT r10 #4).
     # ``_cache_out``: internal seam — when the caller passes a list, the
     # persisted posting-cache handle is appended so a two-phase caller
     # (ngram_jaccard_pairs' stage_dir mode) can explicitly unpersist it
@@ -665,8 +651,7 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     # for the session's lifetime (ADVICE r11).
     if order == "code" and prefix:
         posting = barrier_if_large(
-            _code_order_postings(codes, id_col, threshold, max_df,
-                                 n_docs=n_docs), n_docs)
+            _code_order_postings(codes, id_col, threshold, max_df), codes)
     elif prefix:
         sh = codes.select(F.col(id_col), F.size("codes").alias("sz"),
                           F.posexplode("codes").alias("_p0", "code")) \
@@ -683,7 +668,7 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
                    .filter(F.col("pos") <
                            F.floor(F.lit(1.0 - threshold) * F.col("sz")) + 1)
                    .select(id_col, "sz", "pos", "code"))
-        posting = barrier_if_large(posting, n_docs)
+        posting = barrier_if_large(posting, codes)
     else:
         sh = codes.select(F.col(id_col), F.size("codes").alias("sz"),
                           F.posexplode("codes").alias("_p0", "code")) \
@@ -726,7 +711,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
                         max_df: int = 50, min_shared: int = 1,
                         prefix: bool = True, order: str = "rarity",
                         impl: str = "jvm",
-                        n_docs: int | None = None,
                         stage_dir: str | None = None) -> DataFrame:
     """Inverted-index n-gram Jaccard: prefix-filtered candidate pairs
     (:func:`ngram_candidate_pairs`), then exact Jaccard ≥ ``threshold`` on
@@ -773,8 +757,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     phase1_caches: list = []
     cands = ngram_candidate_pairs(codes, id_col, threshold, max_df=max_df,
                                   min_shared=min_shared, prefix=prefix,
-                                  order=order, n_docs=n_docs,
-                                  _cache_out=phase1_caches)
+                                  order=order, _cache_out=phase1_caches)
     if stage_dir is not None:
         # Two-phase pipeline break (r11): run candidate generation to
         # parquet NOW, then verify against the parquet read. In the
