@@ -596,7 +596,7 @@ def test_loaded_collection_requests_build_without_jobs(spark, tmp_path):
         assert not sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc._jsc.clearJobGroup()
-    assert base is mgr._loaded["srv"]
+    assert base.is_cached and base is mgr.read("srv")
     p = _plan(knn)
     assert "LocalTableScan [query_id" in p, p
     assert "ExistingRDD" not in p, p
@@ -625,26 +625,25 @@ def _leaf_classes(df) -> set[str]:
     return leaves
 
 
-@pytest.mark.parametrize("bounded", [True, False])
-def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
-                                                      monkeypatch, bounded):
-    """A warm hybrid request (knn_search + mgr.bm25_search + rrf_fuse) on
-    a loaded FTS collection ranks BM25 from the weights load() made
-    resident: at most 5 jobs (the production, bounded regime), only
-    cached/local leaves on the BM25 side,
-    no SinglePartition exchange (the folded n_docs/avgdl are literals),
-    and rows and scores equal to a fresh, unloaded manager's, in both
-    bm25_search_many regimes."""
+_WORDS = ["alpha", "beta", "gamma", "delta", "omega", "zeta", "eta"]
+
+
+def _hyb_docs(spark, pks, salt=0):
+    return spark.createDataFrame(
+        [(i, [float(i * (j + 3) % 7) for j in range(4)],
+          " ".join(_WORDS[(i + salt) * (j + 1) % 7]
+                   for j in range(1 + i % 4)), None)
+         for i in pks],
+        "pk long, emb array<float>, text string, "
+        "sparse_bm25 map<int,float>")
+
+
+def _loaded_hyb(spark, wh):
+    """A manager serving ``hyb``, a loaded 60-doc collection with a
+    4-dim embedding and a BM25 function, its scan cache built."""
     from vectordb_testbricks_spark.manager import CollectionManager
-    from vectordb_testbricks_spark.operators import bm25
-    from vectordb_testbricks_spark.operators.fusion import rrf_fuse
-    from vectordb_testbricks_spark.operators.search import (
-        knn_search, queries_df)
     from vectordb_testbricks_spark.schema import (
         FieldSpec, FunctionSpec, SchemaSpec)
-    if not bounded:
-        monkeypatch.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
-    wh = str(tmp_path / "wh")
     mgr = CollectionManager(spark, wh)
     mgr.create_collection(SchemaSpec("hyb", [
         FieldSpec("pk", "INT64", primary=True),
@@ -652,33 +651,64 @@ def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
         FieldSpec("text", "VARCHAR", max_length=128, enable_analyzer=True),
         FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
     ], functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
-    words = ["alpha", "beta", "gamma", "delta", "omega", "zeta", "eta"]
-    mgr.insert("hyb", spark.createDataFrame(
-        [(i, [float(i * (j + 3) % 7) for j in range(4)],
-          " ".join(words[i * (j + 1) % 7] for j in range(1 + i % 4)), None)
-         for i in range(60)],
-        "pk long, emb array<float>, text string, "
-        "sparse_bm25 map<int,float>"))
+    mgr.insert("hyb", _hyb_docs(spark, range(60)))
     mgr.load("hyb")
     mgr.read("hyb").count()
+    return mgr
 
-    def request(text):
-        dense = knn_search(mgr.read("hyb"),
-                           queries_df(spark, [[1.0, 2.0, 0.5, 3.0]]),
-                           "emb", "pk", metric="COSINE", k=5)
-        sparse = mgr.bm25_search("hyb", text, k=5)
-        return sparse, rrf_fuse([dense, sparse], "pk", k=5)
 
-    request("alpha beta")[1].collect()                  # warm
+def _hybrid_request(mgr, text):
+    """knn_search + mgr.bm25_search + rrf_fuse: (BM25 side, fused)."""
+    from vectordb_testbricks_spark.operators.fusion import rrf_fuse
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    dense = knn_search(mgr.read("hyb"),
+                       queries_df(mgr.spark, [[1.0, 2.0, 0.5, 3.0]]),
+                       "emb", "pk", metric="COSINE", k=5)
+    sparse = mgr.bm25_search("hyb", text, k=5)
+    return sparse, rrf_fuse([dense, sparse], "pk", k=5)
+
+
+def _with_jobs(spark, group, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``, under job group
+    ``group``."""
     sc = spark.sparkContext
-    group = f"test-loaded-hybrid-{bounded}"
-    sc.setJobGroup(group, "one warm hybrid request")
+    sc.setJobGroup(group, group)
     try:
-        sparse, fused = request("gamma alpha alpha")
-        assert len(fused.collect()) == 5
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        return fn(), sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc._jsc.clearJobGroup()
+
+
+def _bm25_rows(mgr, text):
+    return sorted(map(tuple, mgr.bm25_search("hyb", text, k=5).collect()))
+
+
+@pytest.mark.parametrize("bounded", [True, False])
+def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
+                                                      monkeypatch, bounded):
+    """A warm hybrid request (knn_search + mgr.bm25_search + rrf_fuse) on
+    a loaded FTS collection ranks BM25 from the resident weights: at most
+    5 jobs (the production, bounded regime), only cached/local leaves on
+    the BM25 side,
+    no SinglePartition exchange (the folded n_docs/avgdl are literals),
+    and rows and scores equal to a fresh, unloaded manager's, in both
+    bm25_search_many regimes."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.operators import bm25
+    if not bounded:
+        monkeypatch.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
+    wh = str(tmp_path / "wh")
+    mgr = _loaded_hyb(spark, wh)
+    _hybrid_request(mgr, "alpha beta")[1].collect()      # warm
+
+    def request():
+        sparse, fused = _hybrid_request(mgr, "gamma alpha alpha")
+        assert len(fused.collect()) == 5
+        return sparse, fused
+
+    (sparse, fused), jobs = _with_jobs(
+        spark, f"test-loaded-hybrid-{bounded}", request)
     # the classic regime's second exchange is one more AQE stage job
     assert len(jobs) <= (5 if bounded else 6), jobs
     assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
@@ -690,7 +720,138 @@ def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
 
     fresh = CollectionManager(spark, wh)
     for text in ["gamma alpha alpha", "omega", "beta zeta eta", "nothing"]:
-        got = sorted(map(tuple, mgr.bm25_search("hyb", text, k=5).collect()))
-        want = sorted(map(tuple,
-                          fresh.bm25_search("hyb", text, k=5).collect()))
-        assert got == want, text
+        assert _bm25_rows(mgr, text) == _bm25_rows(fresh, text), text
+
+
+def test_loaded_collection_stays_resident_across_writes(spark, tmp_path):
+    """20 writes on a loaded collection and no re-load: inserts, upserts,
+    deletes and one insert by a second manager. After each, a warm
+    hybrid request runs at most 5 jobs with only cached/local leaves on
+    its BM25 side; its BM25 rows and scores and the visible rows equal a
+    fresh manager's; the persisted-RDD count stays at or below the
+    loaded baseline, and release() returns it to the pre-load one."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    jsc = spark.sparkContext._jsc
+    wh = str(tmp_path / "wh")
+    before = jsc.getPersistentRDDs().size()
+    mgr = _loaded_hyb(spark, wh)
+    _hybrid_request(mgr, "alpha beta")[1].collect()
+    loaded = jsc.getPersistentRDDs().size()
+
+    def write(i):
+        if i == 10:
+            CollectionManager(spark, wh).insert(
+                "hyb", _hyb_docs(spark, [200]))
+        elif i % 3 == 0:
+            mgr.insert("hyb", _hyb_docs(spark, [100 + i]))
+        elif i % 3 == 1:
+            mgr.upsert("hyb", _hyb_docs(spark, [i], salt=i + 1))
+        else:
+            mgr.delete("hyb", f"pk == {i + 30}")
+
+    def visible(m):
+        return sorted(map(tuple, m.read("hyb").select("pk", "text")
+                          .collect()))
+
+    def request():
+        sparse, fused = _hybrid_request(mgr, "gamma alpha alpha")
+        return sparse, fused.collect()
+
+    for i in range(20):
+        write(i)
+        _hybrid_request(mgr, "omega")[1].collect()   # builds the new commit
+        (sparse, rows), jobs = _with_jobs(
+            spark, f"test-resident-write-{i}", request)
+        assert len(rows) == 5 and len(jobs) <= 5, (i, jobs)
+        assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
+                                         "LocalTableScanExec"}, _plan(sparse)
+        fresh = CollectionManager(spark, wh)
+        assert _bm25_rows(mgr, "beta zeta eta") == \
+            _bm25_rows(fresh, "beta zeta eta"), i
+        assert visible(mgr) == visible(fresh), i
+        assert jsc.getPersistentRDDs().size() <= loaded, i
+    assert len(visible(mgr)) == 60 + 7 + 1 - 6
+    mgr.release("hyb")
+    assert jsc.getPersistentRDDs().size() <= before
+
+
+def test_requests_racing_after_a_commit_leave_one_resident_copy(
+        spark, tmp_path):
+    """Requests sent together right after a commit on a loaded collection
+    (more clients than cores) agree, and leave exactly one cached scan
+    and one weights table: no duplicate cache entry, none dropped by
+    another's rebuild."""
+    import threading
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    mgr = _loaded_hyb(spark, str(tmp_path / "wh"))
+    _hybrid_request(mgr, "alpha beta")[1].collect()
+    assert jsc.getPersistentRDDs().size() == before + 2
+    mgr.insert("hyb", _hyb_docs(spark, [100, 101]))
+    clients = 6
+    go, results, errors = threading.Barrier(clients), [], []
+
+    def client():
+        try:
+            go.wait(timeout=60)
+            results.append(sorted(map(
+                tuple, _hybrid_request(mgr, "alpha omega")[1].collect())))
+        except Exception as e:       # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client) for _ in range(clients)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == clients and all(r == results[0] for r in results)
+    spec = mgr.describe_collection("hyb")
+    weights, n_docs = mgr._bm25_weights(spec, "hyb", spec.functions[0])
+    assert mgr.read("hyb").is_cached and weights.is_cached
+    assert n_docs == 62
+    assert jsc.getPersistentRDDs().size() == before + 2
+
+
+def test_second_load_builds_nothing(spark, tmp_path):
+    """load() on a loaded collection whose entries are current runs no
+    Spark job and keeps the served scan and weights."""
+    mgr = _loaded_hyb(spark, str(tmp_path / "wh"))
+    spec = mgr.describe_collection("hyb")
+    served = (mgr.read("hyb"),
+              mgr._bm25_weights(spec, "hyb", spec.functions[0]))
+    _, jobs = _with_jobs(spark, "test-second-load",
+                         lambda: mgr.load("hyb"))
+    assert not jobs
+    assert mgr.read("hyb") is served[0]
+    assert mgr._bm25_weights(spec, "hyb", spec.functions[0]) is served[1]
+
+
+def test_loaded_ttl_collection_serves_the_cached_scan(spark, tmp_path):
+    """A loaded TTL collection caches its scan, every stored row, and
+    serves each read() from it with the TTL filter on top, evaluated at
+    that read's own action: an expired row is in the cache but not in
+    the read, and a read at an earlier clock still sees it."""
+    import datetime
+    import time
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.schema import FieldSpec, SchemaSpec
+    mgr = CollectionManager(spark, str(tmp_path / "wh"))
+    mgr.create_collection(SchemaSpec("ttl_l", [
+        FieldSpec("id", "INT64", primary=True),
+        FieldSpec("ttl_s", "INT64", nullable=True),
+    ], ttl_seconds=3600, ttl_field="ttl_s"))
+    earlier = datetime.datetime.now(datetime.timezone.utc)
+    mgr.insert("ttl_l", spark.createDataFrame(
+        [(1, None), (2, 1)], "id long, ttl_s long"))
+    mgr.load("ttl_l")
+    time.sleep(1.5)                        # row 2's 1 s TTL has run out
+    scan = mgr._memo[("ttl_l", "read")][1]
+    assert scan.is_cached and scan.count() == 2
+    a, b = mgr.read("ttl_l"), mgr.read("ttl_l")
+    assert a is not b
+    assert [r.id for r in a.collect()] == [1]
+    assert _leaf_classes(a) == {"InMemoryTableScanExec"}, _plan(a)
+    assert sorted(r.id for r in mgr.read("ttl_l", now=earlier).collect()) \
+        == [1, 2]

@@ -1487,11 +1487,10 @@ def test_read_memo_sees_another_managers_writes(mgr, spark):
     _mk_fts(mgr)
     mgr.insert("fts_coll", _docs(spark, [(1, "alpha")]))
     mgr.load("fts_coll")
-    assert mgr.read("fts_coll") is mgr._loaded["fts_coll"]
+    assert mgr.read("fts_coll").is_cached
     before = _assert_serves_current(mgr)
     writer = CollectionManager(spark, mgr.warehouse)
     writer.insert("fts_coll", _docs(spark, [(2, "alpha beta")]))
-    mgr.release("fts_coll")     # a loaded plan is cached until reloaded
     after = _assert_serves_current(mgr)
     assert after[1] == [(1, "alpha"), (2, "alpha beta")]
     assert ("alpha", 2, 2) in after[2] and after != before
@@ -1534,18 +1533,20 @@ def _ranks(mgr, name="fts_coll"):
 
 
 def _resident_current(mgr, name="fts_coll"):
-    """True when bm25_search ranks from the weights load() made resident
-    (built for the function-table key that is current now)."""
-    real = mgr.resolve(name)
-    resident = mgr._weights.get((real, "fts"))
-    return resident is not None and resident[0] == mgr._fn_key(real, "fts")
+    """True when bm25_search ranks from resident weights: the memoized
+    weights for the function-table key that is current now are cached and
+    carry the folded n_docs."""
+    spec = mgr.describe_collection(name)
+    weights, n_docs = mgr._bm25_weights(spec, mgr.resolve(name),
+                                        spec.functions[0])
+    return weights.is_cached and n_docs is not None
 
 
 def test_loaded_collection_serves_current_commit(mgr, spark):
     """On a loaded collection, read(), function_tables() and BM25 ranking
-    equal a fresh manager's after every write: the resident weights
-    serve only the commit they were built for, a write falls back to the
-    derivation, and a re-load makes the new commit resident again."""
+    equal a fresh manager's after every write, and the collection stays
+    resident without a re-load: the weights are rebuilt for each new
+    commit."""
     _mk_fts(mgr)
     mgr.insert("fts_coll", _docs(spark, [(1, "alpha beta"), (2, "alpha"),
                                          (3, "gamma zeta"), (4, "beta")]))
@@ -1568,8 +1569,6 @@ def test_loaded_collection_serves_current_commit(mgr, spark):
     ]
     for step in steps:
         step()
-        check(False)
-        mgr.load("fts_coll")
         check(True)
     assert _ranks(mgr)[0][0][1] == 9
 
@@ -1592,11 +1591,11 @@ def test_load_residency_is_bounded_and_released(mgr, spark):
         sizes.append(jsc.getPersistentRDDs().size())
     assert sizes[0] == sizes[1] == sizes[2] <= baseline + 2, sizes
     mgr.release("fts_coll")
-    assert not mgr._weights
+    assert not mgr._memo and not mgr.loaded("fts_coll")
     assert jsc.getPersistentRDDs().size() <= baseline
     mgr.load("fts_coll")
     mgr.read("fts_coll").count()
     mgr.drop_collection("fts_coll")
-    assert not mgr._weights and not mgr.loaded("fts_coll")
+    assert not mgr._memo and not mgr.loaded("fts_coll")
     assert jsc.getPersistentRDDs().size() <= baseline
 

@@ -17,18 +17,19 @@ validation). At cluster scale the same layout maps onto object storage;
 pruning, which is the reference's partition-key speedup
 (parkey_query_n_search.py:149-202).
 
-Serving reads are memoized per manager (see :class:`CollectionManager`):
-every locked write replaces ``<collection>/COMMIT`` with a fresh token, and
-``read()`` / ``function_tables()`` reuse the DataFrames built for the
-current token instead of re-listing the parquet dirs per request. A loaded
-collection also keeps its BM25 weights resident for the token it was
-loaded at.
+Serving state is memoized per manager and per commit (see
+:class:`CollectionManager`): every locked write replaces
+``<collection>/COMMIT`` with a fresh token, and ``read()``,
+``function_tables()`` and the BM25 weights reuse what was built for the
+current token. While a collection is loaded, that memo builds the scan
+cached and the weights resident, so it stays resident across writes.
 """
 
 from __future__ import annotations
 
 import contextlib
 import dataclasses
+import functools
 import json
 import os
 import shutil
@@ -68,12 +69,11 @@ def _spec_from_json(s: str) -> SchemaSpec:
 class CollectionManager:
     """Warehouse-backed collection catalog.
 
-    Read memo contract. ``read()`` (the plain current-version read) and
-    ``function_tables()`` return the DataFrame they built the last time
-    for the same commit, so a loaded collection is served without
-    re-listing its parquet dirs or re-inferring their schemas per request;
-    on a loaded collection without TTL, ``read()`` returns the very handle
-    ``load()`` cached. This holds because:
+    Serving memo contract. ``read()`` (the plain current-version read),
+    ``function_tables()`` and the BM25 weights :meth:`bm25_search` ranks
+    from return what they built the last time for the same commit, so a
+    collection is served without re-listing its parquet dirs or
+    re-inferring their schemas per request. This holds because:
 
     * collection files change only through the manager's writer lock
       (:meth:`_write_lock`), which on exit atomically replaces
@@ -82,40 +82,37 @@ class CollectionManager:
       observe: a second manager on the same warehouse sees another
       manager's commit at its next call and rebuilds;
     * the memo key also carries the resolved data (or sidecar) dir and,
-      for ``function_tables()``, whether the stats PENDING marker
-      exists, so a flip of CURRENT inside a write and a crash marker
-      are seen without a new token;
-    * external collections and ``partition_names`` / ``now`` /
-      ``snapshot_id`` reads are not memoized; TTL collections memoize the
-      scan only and apply the TTL filter per call, so the clock is read
-      at each caller's action.
+      for the function tables and weights, whether the stats PENDING
+      marker exists, so a flip of CURRENT inside a write and a crash
+      marker are seen without a new token;
+    * an external collection's key is its pinned listing instead;
+    * ``partition_names`` / ``now`` / ``snapshot_id`` reads are not
+      memoized; TTL collections memoize the scan only and apply the TTL
+      filter per call, so the clock is read at each caller's action.
 
-    One entry per (collection, kind), replaced when its key moves and
-    evicted by :meth:`drop_collection`; a miss builds exactly the
-    DataFrame an unmemoized call would.
+    One entry per (collection, kind); a miss builds the DataFrame an
+    unmemoized call would.
 
-    Residency. ``load()`` also makes each BM25 function's weights table
-    (pk, term, w) resident, built for the key ``function_tables()`` would
-    use, with n_docs and avgdl folded to literals: the reference's
-    server-computed ``sparse_bm25`` field. ``bm25_search`` ranks from it
-    while that key is current, so a warm hybrid request reads no parquet
-    and no stats log. It derives the weights in the request plan instead
-    when the collection is not loaded or has a TTL, when a commit
-    (this manager's or another's) landed after the load, or while a
-    stats PENDING marker stands. Like the cached data handle, the weights
-    stay pinned until ``release()``, re-``load()`` or
-    ``drop_collection()`` unpersists them."""
+    Loaded collections. While a collection is loaded, the memo builds
+    its scan cached and its BM25 weights resident (:meth:`_bm25_weights`).
+    A write (this manager's or another's) changes the keys, and the next
+    request unpersists the old entries and builds new ones, so the
+    collection stays resident across writes. Spark's CacheManager matches
+    entries by plan, and an insert leaves the scan's plan unchanged, so
+    an entry is unpersisted BEFORE its successor is built, and misses
+    build one at a time (two concurrent builds would share one cache
+    entry that either's unpersist drops). ``load()``, ``release()`` and
+    ``drop_collection()`` evict through :meth:`_evict`."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
         self._aliases_file = os.path.join(warehouse, "_aliases.json")
-        self._loaded: dict[str, DataFrame] = {}
-        # (collection, BM25 function) -> (_fn_key, weights, n_docs)
-        self._weights: dict[tuple[str, str], tuple[tuple, DataFrame, int]] = {}
+        self._loaded: set[str] = set()
         self._memo: dict[tuple[str, str], tuple[tuple, object]] = {}
         self._memo_lock = threading.Lock()
+        self._build_lock = threading.RLock()   # reentrant: weights -> fn
 
     # ------------------------------------------------------------- paths
     def _dir(self, name: str) -> str:
@@ -159,15 +156,42 @@ class CollectionManager:
         """``build()``'s value for ``key``, reused while the collection's
         ``kind`` entry still carries ``key``. Callers read ``key`` from
         disk BEFORE building, so a commit that lands mid-build leaves the
-        entry under the older key and the next call rebuilds."""
+        entry under the older key and the next call rebuilds. A miss
+        unpersists the entry it replaces before building (see the class
+        docstring), under the build lock."""
         with self._memo_lock:
             hit = self._memo.get((real, kind))
         if hit is not None and hit[0] == key:
             return hit[1]
-        value = build()
-        with self._memo_lock:
-            self._memo[(real, kind)] = (key, value)
+        with self._build_lock:
+            with self._memo_lock:
+                hit = self._memo.get((real, kind))
+            if hit is not None and hit[0] == key:   # built while we waited
+                return hit[1]
+            if hit is not None:
+                self._unpersist(hit[1])
+            value = build()
+            with self._memo_lock:
+                self._memo[(real, kind)] = (key, value)
         return value
+
+    def _evict(self, real: str) -> None:
+        """Forget every memo entry of ``real`` and unpersist what the
+        loaded ones cached."""
+        with self._build_lock:
+            with self._memo_lock:
+                stale = [self._memo.pop(slot) for slot in list(self._memo)
+                         if slot[0] == real]
+            for _, value in stale:
+                self._unpersist(value)
+
+    @staticmethod
+    def _unpersist(value) -> None:
+        """Unpersist the DataFrames of a memo value that persisted their
+        plan (``shared_persist`` leaves a shared entry to its owner)."""
+        for df in value if isinstance(value, tuple) else (value,):
+            if isinstance(df, DataFrame) and df.is_cached:
+                df.unpersist()
 
     # ----------------------------------------------------------- aliases
     def _read_aliases(self) -> dict[str, str]:
@@ -213,10 +237,8 @@ class CollectionManager:
     def drop_collection(self, name: str) -> None:
         real = self.resolve(name)
         # don't leave cached blocks of deleted data
-        self._unpersist_residency(real)
-        with self._memo_lock:
-            for key in [k for k in self._memo if k[0] == real]:
-                del self._memo[key]
+        self._loaded.discard(real)
+        self._evict(real)
         shutil.rmtree(self._dir(real), ignore_errors=True)
         aliases = {a: c for a, c in self._read_aliases().items() if c != real}
         with open(self._aliases_file, "w") as fh:
@@ -336,9 +358,13 @@ class CollectionManager:
         # the CURRENT version dir in place, so when a snapshot pins that
         # dir the state must first move to a fresh version — otherwise
         # the pinned read would silently include post-snapshot inserts
-        if os.path.basename(self._data_dir(real)) in set(
+        data = self._data_dir(real)
+        if os.path.basename(data) in set(
                 self._read_snapshots(real).values()):
-            self._overwrite(real, self.read(real))
+            # unmemoized (like the sidecar rebuild): the next request
+            # replaces any entry built inside a write
+            self._overwrite(real, self._ttl_filter(
+                spec, self._scan(spec, data)))
         # pre_routed: the batch already carries the routing column and
         # computed function fields (commit_import's staged data) — don't
         # featurize or route twice
@@ -746,8 +772,10 @@ class CollectionManager:
         with the same write-new-version-then-flip-CURRENT shape as
         :meth:`_overwrite` (readers never see a partial sidecar). The stats
         delta log is compacted here: the fresh version holds exactly one
-        (term, df_t) row per term and one global row."""
-        state = self.read(real)
+        (term, df_t) row per term and one global row. It reads unmemoized:
+        before the COMMIT publish, a memo entry (on a loaded collection, a
+        cached scan) would be keyed by the old token and thrown away."""
+        state = self._ttl_filter(spec, self._scan(spec, self._data_dir(real)))
         for fn in self._bm25_functions(spec):
             root = self._fn_root(real, fn.name)
             os.makedirs(root, exist_ok=True)
@@ -807,8 +835,8 @@ class CollectionManager:
 
     def _fn_key(self, real: str, fn_name: str) -> tuple[str, str | None, bool]:
         """(sidecar dir, COMMIT token, stats PENDING marker present): the
-        state a function-table memo entry or a resident weights table was
-        built from. Read before building, like every memo key."""
+        state a function-table or weights memo entry was built from. Read
+        before building, like every memo key."""
         base = self._fn_data_dir(real, fn_name)
         return (base, self._commit_token(real),
                 os.path.exists(self._stats_pending_path(base)))
@@ -846,61 +874,56 @@ class CollectionManager:
         df_t = terms_log.groupBy("term").agg(F.sum("df_t").alias("df_t"))
         return tf, df_t, glob_log
 
-    def _resident_weights(self, spec: SchemaSpec, real: str,
-                          fn: FunctionSpec
-                          ) -> tuple[tuple, DataFrame, int] | None:
-        """``(key, weights, n_docs)`` for :meth:`load`: the stats delta
-        log folded once — n_docs and avgdl become Python scalars (the
-        same doubles function_tables' aggregate yields), df_t is
-        compacted — and the (pk, term, w) weights table persisted and
-        materialized, the resident ``sparse_bm25`` field of the commit
-        ``key`` names. None while the stats PENDING marker stands: the
-        delta log may lack a batch, so requests derive until a write
-        heals it."""
+    def _bm25_weights(self, spec: SchemaSpec, real: str, fn: FunctionSpec
+                      ) -> tuple[DataFrame, int | None]:
+        """``(weights, n_docs)``: the (pk, term, w) table bm25_search ranks
+        from, memoized per function-table key. On a loaded collection
+        without TTL and without a stats PENDING marker it is resident: the
+        stats delta log folded once (n_docs and avgdl become Python
+        scalars, the same doubles function_tables' aggregate yields; df_t
+        is compacted) and the weights persisted and materialized, the
+        resident ``sparse_bm25`` field of the commit. Otherwise the
+        weights are derived in the request plan from
+        :meth:`function_tables`, and ``n_docs`` is None."""
         from vectordb_testbricks_spark.materialize import materialize_barrier
         from vectordb_testbricks_spark.operators.bm25 import bm25_weights
         key = self._fn_key(real, fn.name)
-        if key[2]:
-            return None
-        tf, df_t, glob_log = self._fn_parts(spec, key[0])
-        parts = glob_log.collect()          # one row per insert batch
-        n_docs = sum(r["n_docs"] for r in parts)
-        avgdl = (float(sum(r["sum_dl"] for r in parts)) / n_docs
-                 if n_docs else None)
-        weights = materialize_barrier(
-            bm25_weights(tf, df_t, spec.pk.name, (n_docs, avgdl)))
-        return key, weights, n_docs
+
+        def build():
+            if (real not in self._loaded or key[2]
+                    or spec.ttl_seconds or spec.ttl_field):
+                return bm25_weights(*self.function_tables(real, fn.name),
+                                    spec.pk.name), None
+            tf, df_t, glob_log = self._fn_parts(spec, key[0])
+            parts = glob_log.collect()          # one row per insert batch
+            n_docs = sum(r["n_docs"] for r in parts)
+            avgdl = (float(sum(r["sum_dl"] for r in parts)) / n_docs
+                     if n_docs else None)
+            return materialize_barrier(bm25_weights(
+                tf, df_t, spec.pk.name, (n_docs, avgdl))), n_docs
+
+        return self._memoized(real, f"bm25:{fn.name}", key, build)
 
     def bm25_search(self, name: str, query_texts: str | list[str],
                     k: int = 10, flt: str | None = None,
                     fn_name: str | None = None) -> DataFrame:
         """V7 production path: search the manager-maintained BM25 sidecar.
 
-        A loaded collection ranks straight from the weights table
-        :meth:`load` made resident, while the commit it was built for is
-        current; otherwise (not loaded, TTL, a write since the load, a
-        stats PENDING marker) the weights are derived in the request plan
-        from :meth:`function_tables`.
+        Ranks from :meth:`_bm25_weights`: resident on a loaded collection
+        (no TTL, no stats PENDING marker), derived in the request plan
+        from :meth:`function_tables` otherwise.
 
         ``flt`` restricts the *candidate* documents (left-semi on the
         weights) while IDF/avgdl stay collection-level — the reference
         engine's server-side stats are global, filters prune hits only
         (validate_phase_dml_dql.py:332-369 filtered FTS)."""
         from vectordb_testbricks_spark.exprlang import compile_expr
-        from vectordb_testbricks_spark.operators.bm25 import (
-            bm25_search_many, bm25_weights)
+        from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
         spec = self.describe_collection(name)
         fn = self._resolve_function(spec, fn_name)
         pk = spec.pk.name
-        real = self.resolve(name)
         docs = self.read(name)
-        key = self._fn_key(real, fn.name)
-        resident = self._weights.get((real, fn.name))
-        if resident is not None and resident[0] == key:
-            _, weights, n_docs = resident
-        else:
-            weights = bm25_weights(*self.function_tables(name, fn.name), pk)
-            n_docs = None
+        weights, n_docs = self._bm25_weights(spec, self.resolve(name), fn)
         if spec.ttl_seconds or spec.ttl_field:
             # the sidecar is append-only between rewrites, so rows expired
             # by the TTL read filter may still carry tf entries — prune
@@ -931,11 +954,14 @@ class CollectionManager:
         against a small ``ttl_seconds``. ``snapshot_id`` reads the pinned
         version a :meth:`create_snapshot` recorded instead of CURRENT.
 
-        The plain current-version read is memoized per commit (see the
-        class docstring); the other forms build a fresh scan."""
+        The plain current-version read is memoized per commit, an
+        external collection's per pinned listing (see the class
+        docstring); the other forms build a fresh scan."""
+        from vectordb_testbricks_spark.materialize import shared_persist
         real = self.resolve(name)
         spec = self.describe_collection(real)
-        if self.is_external(real):
+        external = self.is_external(real)
+        if external:
             # pinned-listing scan; externals carry no ingest stamps, so
             # TTL does not apply, and they have no local versions to
             # snapshot
@@ -943,33 +969,41 @@ class CollectionManager:
                 raise SchemaError(
                     f"{real!r} is external: snapshots live with the "
                     f"SOURCE collection")
-            return self._read_external(real, spec, partition_names)
-        if snapshot_id is None and not partition_names and now is None:
-            data = self._data_dir(real)
-            df = self._memoized(real, "read",
-                                (data, self._commit_token(real)),
-                                lambda: self._scan(spec, data))
+            with open(self._external_file(real)) as fh:
+                pinned = fh.read()
+            key = (pinned,)
+            scan = functools.partial(self._read_external, spec, pinned)
         else:
-            df = self._scan(spec, self._snapshot_data_dir(real, snapshot_id)
-                            if snapshot_id is not None
-                            else self._data_dir(real))
+            data = (self._snapshot_data_dir(real, snapshot_id)
+                    if snapshot_id is not None else self._data_dir(real))
+            key = (data, self._commit_token(real))
+            scan = functools.partial(self._scan, spec, data)
+        if snapshot_id is None and not partition_names and now is None:
+            df = self._memoized(real, "read", key, lambda: (
+                shared_persist(scan()) if real in self._loaded else scan()))
+        else:
+            df = scan()
         if partition_names:
             df = df.filter(F.col(PARTITION_COL).isin(partition_names))
-        if spec.ttl_seconds or spec.ttl_field:
-            # TTL read filter (reference collection property ttl.seconds,
-            # plus the 3.0-roadmap entity-level override §4): a row's
-            # effective TTL is its ttl_field value when set, else the
-            # collection default; NULL effective TTL never expires
-            ref = (F.lit(now).cast("timestamp") if now is not None
-                   else F.current_timestamp())
-            default = (F.lit(float(spec.ttl_seconds)) if spec.ttl_seconds
-                       else F.lit(None).cast("double"))
-            ttl = (F.coalesce(F.col(spec.ttl_field).cast("double"), default)
-                   if spec.ttl_field else default)
-            alive = F.col(INGEST_TS_COL) >= ref - F.make_interval(secs=ttl)
-            df = df.filter(
-                F.when(ttl.isNull(), F.lit(True)).otherwise(alive))
-        return df
+        return df if external else self._ttl_filter(spec, df, now)
+
+    @staticmethod
+    def _ttl_filter(spec: SchemaSpec, df: DataFrame,
+                    now: "datetime.datetime | None" = None) -> DataFrame:
+        """TTL read filter (reference collection property ttl.seconds,
+        plus the 3.0-roadmap entity-level override §4): a row's effective
+        TTL is its ttl_field value when set, else the collection default;
+        NULL effective TTL never expires. Identity without a TTL."""
+        if not (spec.ttl_seconds or spec.ttl_field):
+            return df
+        ref = (F.lit(now).cast("timestamp") if now is not None
+               else F.current_timestamp())
+        default = (F.lit(float(spec.ttl_seconds)) if spec.ttl_seconds
+                   else F.lit(None).cast("double"))
+        ttl = (F.coalesce(F.col(spec.ttl_field).cast("double"), default)
+               if spec.ttl_field else default)
+        alive = F.col(INGEST_TS_COL) >= ref - F.make_interval(secs=ttl)
+        return df.filter(F.when(ttl.isNull(), F.lit(True)).otherwise(alive))
 
     def _scan(self, spec: SchemaSpec, data: str) -> DataFrame:
         """The parquet scan of one data version dir, unfiltered."""
@@ -1056,11 +1090,10 @@ class CollectionManager:
         os.replace(tmp, self._external_file(real))
         return len(meta["files"])
 
-    def _read_external(self, real: str, spec: SchemaSpec,
-                       partition_names: list[str] | None) -> DataFrame:
-        import json as _json
-        with open(self._external_file(real)) as fh:
-            meta = _json.load(fh)
+    def _read_external(self, spec: SchemaSpec, pinned: str) -> DataFrame:
+        """The scan of an external collection's pinned listing (the
+        EXTERNAL.json text)."""
+        meta = json.loads(pinned)
         if not meta["files"]:
             return self.spark.createDataFrame(
                 [], spec.to_struct_type().add(PARTITION_COL, "string"))
@@ -1068,8 +1101,6 @@ class CollectionManager:
               .parquet(*meta["files"]))
         if PARTITION_COL not in df.columns:
             df = df.withColumn(PARTITION_COL, F.lit("_default"))
-        if partition_names:
-            df = df.filter(F.col(PARTITION_COL).isin(partition_names))
         return df
 
     def add_field(self, name: str, field: FieldSpec) -> None:
@@ -1367,37 +1398,24 @@ class CollectionManager:
         """Parquet writes are atomic-on-commit; flush is a no-op."""
 
     def load(self, name: str) -> None:
-        """Memory residency (reference load state): cache the collection
-        and, unless it has a TTL, make each BM25 function's weights table
-        resident for the current commit (:meth:`_resident_weights`). The
-        cached handles are kept so release() unpersists the SAME plans —
-        re-deriving them after a rewrite would target the new version and
-        leave the old cached blocks pinned. Re-loading releases the
-        previous handles first (same reason)."""
+        """Memory residency (reference load state): mark the collection
+        loaded, so the serving memo builds its scan cached and its BM25
+        weights resident (see the class docstring), and build both now.
+        It stays loaded across writes until :meth:`release`; loading a
+        loaded collection whose entries are current builds nothing."""
         real = self.resolve(name)
-        self._unpersist_residency(real)
-        self._loaded[real] = self.read(name).cache()
+        if real not in self._loaded:
+            self._loaded.add(real)
+            self._evict(real)        # entries built unloaded
         spec = self.describe_collection(real)
-        if not (spec.ttl_seconds or spec.ttl_field):
-            for fn in self._bm25_functions(spec):
-                resident = self._resident_weights(spec, real, fn)
-                if resident is not None:
-                    self._weights[(real, fn.name)] = resident
+        self.read(real)
+        for fn in self._bm25_functions(spec):
+            self._bm25_weights(spec, real, fn)
 
     def release(self, name: str) -> None:
         real = self.resolve(name)
-        if not self._unpersist_residency(real):
-            self.read(name).unpersist()
-
-    def _unpersist_residency(self, real: str) -> bool:
-        """Unpersist and forget ``real``'s loaded data handle and resident
-        weights; False when it was not loaded."""
-        for key in [k for k in self._weights if k[0] == real]:
-            self._weights.pop(key)[1].unpersist()
-        df = self._loaded.pop(real, None)
-        if df is not None:
-            df.unpersist()
-        return df is not None
+        self._loaded.discard(real)
+        self._evict(real)
 
     def loaded(self, name: str) -> bool:
         return self.resolve(name) in self._loaded

@@ -1,5 +1,5 @@
-"""DML operators (SURVEY.md §2.1 S1-S6): insert / upsert / partial update /
-delete-by-filter, plus the parquet persistence lifecycle.
+"""DML operators (SURVEY.md §2.1 S1-S4): insert / upsert / partial update /
+delete-by-filter.
 
 Reference semantics:
   * insert — append a batch of rows (seed_data.py:50-57; 2.6/common.py:804-834)
@@ -9,8 +9,6 @@ Reference semantics:
     upsert3.py:184-206)
   * delete by filter — expr forms `pk in [..]`, `pk >= a && pk <= b`, any
     boolean expr (workload.py:250-270; validate_phase_dml_dql.py:229-242)
-  * flush/load/release — durability + residency lifecycle; in Spark terms a
-    parquet commit / cache() / unpersist() (2.6/common.py:1132-1137)
 
 All merges are set-oriented DataFrame transformations (anti-join + union,
 join + coalesce) — no row loops, shuffle only on the PK, broadcastable when
@@ -123,31 +121,3 @@ def delete_by_filter(base: DataFrame, flt: str | Column) -> DataFrame:
     are kept (a NULL match does not delete)."""
     pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
     return base.filter(~F.coalesce(pred, F.lit(False)))
-
-
-def delete_by_pks(base: DataFrame, pk_col: str, values: list) -> DataFrame:
-    """S4/V11: the `pk in [...]` delete form (search-based deletes resolve
-    hit ids first, then call this — 2.6/common.py:217-231)."""
-    return base.filter(~F.col(pk_col).isin(values))
-
-
-# ------------------------------------------------------- persistence (S5/S6)
-
-def flush(df: DataFrame, path: str, mode: str = "overwrite",
-          partition_by: list[str] | None = None) -> None:
-    """S5/S6: durability — commit the current state to parquet. Partitioned
-    writes give Catalyst partition pruning on the read path (T1/T2)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def load(df: DataFrame) -> DataFrame:
-    """S5: memory residency (Milvus load ≈ cache)."""
-    return df.cache()
-
-
-def release(df: DataFrame) -> DataFrame:
-    """S5: release residency."""
-    return df.unpersist()
