@@ -540,12 +540,11 @@ _SQL_HAM = ("list_sum(list_transform(list_zip(CAST(e.embedding AS DOUBLE[]), q.q
             " x -> CASE WHEN (x[1] >= 0) <> (x[2] >= 0) THEN 1 ELSE 0 END))")
 
 
-def _knn(spark, sf_dir, metric, flt=None, with_label=False, impl="jvm"):
+def _knn(spark, sf_dir, metric, flt=None, with_label=False):
     from vectordb_testbricks_spark.operators.search import knn_search
     emb, q = _emb_queries(spark, sf_dir)
     hits = knn_search(emb, q, "embedding", "vec_id", metric=metric, k=10,
-                      flt=flt, impl=impl,
-                      output_fields=["label"] if with_label else None)
+                      flt=flt, output_fields=["label"] if with_label else None)
     lbl = ["label"] if with_label else []
     return hits.select("query_id", "vec_id", *lbl,
                        F.round("score", 4).alias("score"),
@@ -776,7 +775,7 @@ def dd_ngram_1m(spark, sf_dir, n=1_000_000, uniq=900_000):
     # the candidate-volume difference is negligible.
     # The dd_ngram_jaccard oracle pins BOTH orders at sf0.01.
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7,
-                               max_df=50, min_shared=1, impl="arrow",
+                               max_df=50, min_shared=1,
                                order="code", stage_dir=stage_dir)
 
 
@@ -807,7 +806,7 @@ def dd_ngram_100m(spark, sf_dir):
     return dd_ngram_1m(spark, sf_dir, n=100_000_000, uniq=90_000_000)
 
 
-def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
+def v_knn_1m(spark, sf_dir, n=1_000_000):
     """Bench-only scale evidence for the dense brute-force kNN kernel
     (r10, operators/arrow_kernels.knn_search_arrow): exact COSINE
     top-100 for nq=4 corpus queries over 1M seeded 16-dim vectors —
@@ -824,7 +823,8 @@ def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
     tests/test_arrow_kernels.py::TestKnnKernel."""
     from vectordb_testbricks_spark.datagen import gen_vector_fast
     from vectordb_testbricks_spark.materialize import shared_persist
-    from vectordb_testbricks_spark.operators.search import knn_search
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        knn_search_arrow)
     base = shared_persist(spark.range(n).select(
         F.col("id").alias("pk"),
         gen_vector_fast(11, F.col("id"), 16).alias("embedding")))
@@ -835,8 +835,8 @@ def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
             to_double_array(gen_vector_fast(11, F.col("id"), 16))
             .alias("qvec"))
         qs = one if qs is None else qs.unionByName(one)
-    return knn_search(base, qs, "embedding", "pk", metric="COSINE",
-                      k=100, impl=impl)
+    return knn_search_arrow(base, qs, "embedding", "pk", metric="COSINE",
+                            k=100)
 
 
 def v_ivf_1m(spark, sf_dir):
@@ -1025,7 +1025,7 @@ def v_sparse_1m(spark, sf_dir, n=1_000_000, vocab=30_000, nnz=16):
     reclaimed after the 40-row result materializes.
 
     Since r09 the corpus maps are generated by a numpy kernel and the
-    postings build runs impl="arrow" (arrow_kernels.sparse_postings_arrow)
+    postings build is the Arrow kernel (arrow_kernels.sparse_postings_arrow)
     — this entry's postings-build stage was the second r08-localized
     victim of the sticky per-JVM HotSpot slow mode on interpreted-HOF
     chains (transform/map_from_arrays/explode at 16× CPU in ~50% of
@@ -1071,8 +1071,7 @@ def v_sparse_1m(spark, sf_dir, n=1_000_000, vocab=30_000, nnz=16):
             corpus = tmp + "/corpus"
             base.write.mode("overwrite").parquet(corpus)
             base = spark.read.parquet(corpus)
-        model = build_sparse_inverted(base, "svec", "pk", n_buckets=64,
-                                      impl="arrow")
+        model = build_sparse_inverted(base, "svec", "pk", n_buckets=64)
         path = tmp + "/idx"
         write_sparse_inverted(model, path)
         reloaded = read_sparse_inverted(spark, path)
@@ -1128,13 +1127,16 @@ def v_knn_metrics(spark, sf_dir):
     integer HAMMING popcount unions cleanly with the float metrics.
 
     ``A_<metric>`` branches (r10): the same four searches routed through
-    the dense Arrow kernel (knn_search(impl="arrow") —
-    operators/arrow_kernels.knn_scores_arrow), oracled against the SAME
+    the dense Arrow kernel (operators/arrow_kernels.knn_search_arrow,
+    called directly), oracled against the SAME
     per-metric SQL. The kernel claims bit-for-bit twin-ness with the JVM
     expression path; putting it behind the driver's DuckDB hash every
     round is the dd_minhash discipline (an identity suite proves the
     twin once; the oracle row keeps proving it against an independent
     engine per round)."""
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        knn_search_arrow)
+    emb, q = _emb_queries(spark, sf_dir)
     out = None
     hits = None
     for m in ("L2", "IP", "COSINE", "HAMMING"):
@@ -1153,11 +1155,12 @@ def v_knn_metrics(spark, sf_dir):
                         "label",
                         F.col("score").cast("double").alias("score"), "rank"))
         out = part if out is None else out.unionByName(part)
-        apart = (_knn(spark, sf_dir, m, with_label=True, impl="arrow")
+        apart = (knn_search_arrow(emb, q, "embedding", "vec_id",
+                                  metric=m, k=10, output_fields=["label"])
                  .select(F.lit("A_" + m).alias("metric"), "query_id",
                          "vec_id", "label",
-                         F.col("score").cast("double").alias("score"),
-                         "rank"))
+                         F.round("score", 4).cast("double").alias("score"),
+                         F.col("rank").cast("bigint").alias("rank")))
         out = out.unionByName(apart)
     # V12 fold ('SHAPE' branch): the reference's result-shape checks
     # (workload.py:155-162 — nq hit lists, each exactly k rows, ids unique
@@ -3087,8 +3090,10 @@ def dd_ngram_jaccard(spark, sf_dir):
     from vectordb_testbricks_spark.operators.dedup import (
         _token_codes, jaccard_pairs, ngram_candidate_pairs)
     base = _doubled_docs(spark, sf_dir)
-    # both modes share ONE JVM codes cache (ngram_jaccard_pairs' default
-    # at fixture scale); the 'code' mode's posting build is the Arrow kernel
+    # both modes share ONE JVM codes cache, and the verify is the JVM
+    # jaccard_pairs (both measured faster than the kernels at fixture
+    # scale, OPTIMIZATION_r13.md); the 'code' mode's posting build is the
+    # Arrow kernel
     codes = shared_persist(_token_codes(base, "doc_id", "text",
                                         shingle_n=3))
     # r12 (guide §1.2 step 1): candidates per order, ONE mode-tagged

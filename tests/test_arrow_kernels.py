@@ -84,7 +84,7 @@ class TestMinhashKernel:
         codes = _token_codes(doubled, "doc_id", "text", 3)
         cands = lsh_candidate_pairs(
             signatures_from_codes(codes, "doc_id"), "doc_id")
-        j = pairs(jaccard_pairs(codes, cands, "doc_id", impl="jvm")
+        j = pairs(jaccard_pairs(codes, cands, "doc_id")
                   .filter(F.col("jaccard") >= 0.7))
         a = pairs(minhash_lsh_dedup(doubled, "doc_id", "text",
                                     threshold=0.7))
@@ -93,30 +93,34 @@ class TestMinhashKernel:
 
 
 class TestNgramKernelPath:
-    def test_ngram_pairs_identical(self, spark, tables):
+    def test_ngram_pairs_identical(self, spark, tables, edge_docs):
+        """ngram_jaccard_pairs (kernel codes + kernel verify) returns the
+        pair set, with the same Jaccard, of its JVM twin: _token_codes +
+        ngram_candidate_pairs + jaccard_pairs. The edge docs add a NULL
+        text ([NULL] codes), empty and sub-shingle rows."""
         from vectordb_testbricks_spark.operators.dedup import (
+            _token_codes, jaccard_pairs, ngram_candidate_pairs,
             ngram_jaccard_pairs)
         docs = tables["documents"].df.select("doc_id", "text")
-        doubled = docs.unionByName(docs.select(
-            (F.col("doc_id") + 500000).alias("doc_id"), "text"))
+        corpus = docs.unionByName(docs.select(
+            (F.col("doc_id") + 500000).alias("doc_id"), "text")) \
+            .unionByName(edge_docs.select(
+                (F.col("doc_id") + 2000000).alias("doc_id"), "text"))
 
-        def pairs(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in ngram_jaccard_pairs(
-                    doubled, "doc_id", "text", n=3, threshold=0.7,
-                    max_df=50, min_shared=2, impl=impl).collect())
+        def pairs(df):
+            return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 9))
+                          for r in df.collect())
 
-        a, j = pairs("arrow"), pairs("jvm")
+        codes = _token_codes(corpus, "doc_id", "text", shingle_n=3)
+        cands = ngram_candidate_pairs(codes, "doc_id", 0.7, max_df=50,
+                                      min_shared=2)
+        j = pairs(jaccard_pairs(codes, cands, "doc_id")
+                  .filter(F.col("jaccard") >= 0.7))
+        a = pairs(ngram_jaccard_pairs(corpus, "doc_id", "text", n=3,
+                                      threshold=0.7, max_df=50,
+                                      min_shared=2))
         assert a == j
         assert len(a) > 0
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        from vectordb_testbricks_spark.operators.dedup import (
-            ngram_jaccard_pairs)
-        with pytest.raises(ValueError, match="unknown ngram impl"):
-            ngram_jaccard_pairs(edge_docs, "doc_id", "text",
-                                impl="simd").collect()
 
 
 class TestPrefixPostingsKernel:
@@ -169,15 +173,15 @@ class TestPrefixPostingsKernel:
                     doubled, "doc_id", "text", n=3, threshold=0.7,
                     max_df=50, **kw).collect())
 
-        rarity = pairs(order="rarity", impl="jvm")
-        code_a = pairs(order="code", impl="arrow")
+        rarity = pairs(order="rarity")
+        code_a = pairs(order="code")
         # the same code-order pipeline over the JVM posting reference
         monkeypatch.setattr(
             dedup, "_code_order_postings",
             lambda codes, id_col, threshold, max_df:
             dedup._code_order_postings_jvm(codes, id_col, threshold,
                                            max_df))
-        code_j = pairs(order="code", impl="jvm")
+        code_j = pairs(order="code")
         assert rarity == code_a == code_j
         assert len(rarity) > 0
 
@@ -325,16 +329,18 @@ class TestSparsePostingsKernel:
             sparse_postings_arrow(base, "svec", "pk")
 
     def test_build_search_identity(self, spark):
-        """build_sparse_inverted impl='arrow' serves identical results to
-        impl='jvm' AND to the brute-force map scan (the declared
-        semantics)."""
+        """build_sparse_inverted (the kernel postings) builds the
+        postings of the JVM explode (search.sparse_postings) and serves
+        identical results to an index over those AND to the brute-force
+        map scan (the declared semantics)."""
         from vectordb_testbricks_spark.operators.ann_index import (
-            build_sparse_inverted, sparse_inverted_search)
+            SPARSE_BUCKET_COL, SparseInvModel, build_sparse_inverted,
+            sparse_inverted_search)
         from vectordb_testbricks_spark.operators.search import (
-            sparse_search_many)
+            sparse_bucket_expr, sparse_postings, sparse_search_many)
         base = spark.createDataFrame(
             [(i, {int(k): float((i + k) % 7 + 1)
-                  for k in range((i * 3) % 5 + 1)})
+                  for k in range((i * 3) % 5 + 1)} if i % 50 else None)
              for i in range(200)],
             "pk bigint, svec map<int,double>")
         qmaps = [{0: 1.0, 2: 0.5}, {1: 2.0, 3: 1.0, 4: 0.25}]
@@ -343,19 +349,16 @@ class TestSparsePostingsKernel:
             return sorted((r["query_id"], r["pk"], round(r["score"], 6),
                            r["rank"]) for r in df.collect())
 
+        model = build_sparse_inverted(base, "svec", "pk", n_buckets=8)
+        jvm = SparseInvModel(
+            postings=sparse_postings(base, "svec", "pk").withColumn(
+                SPARSE_BUCKET_COL, sparse_bucket_expr("key", 8)),
+            key_col="key", id_col="pk", weight_col="weight", n_buckets=8)
+        assert sorted(map(tuple, model.postings.collect())) == \
+            sorted(map(tuple, jvm.postings.collect()))
         brute = hits(sparse_search_many(base, qmaps, "svec", "pk", k=10))
-        for impl in ("arrow", "jvm"):
-            model = build_sparse_inverted(base, "svec", "pk",
-                                          n_buckets=8, impl=impl)
-            assert hits(sparse_inverted_search(model, qmaps, k=10)) == brute
-
-    def test_unknown_impl_raises(self, spark):
-        from vectordb_testbricks_spark.operators.ann_index import (
-            build_sparse_inverted)
-        base = spark.createDataFrame([(1, {0: 1.0})],
-                                     "pk bigint, svec map<int,double>")
-        with pytest.raises(ValueError, match="unknown sparse impl"):
-            build_sparse_inverted(base, "svec", "pk", impl="gpu")
+        assert hits(sparse_inverted_search(model, qmaps, k=10)) == brute
+        assert hits(sparse_inverted_search(jvm, qmaps, k=10)) == brute
 
 
 class TestScaleCorpusGen:
@@ -379,10 +382,18 @@ class TestScaleCorpusGen:
         assert len(set(rows.values())) == 1800
 
 
+def _kernel_jaccard(codes, pairs):
+    """The verify minhash_lsh_dedup and ngram_jaccard_pairs run."""
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        jaccard_arrow)
+    from vectordb_testbricks_spark.operators.dedup import _with_codes
+    return jaccard_arrow(_with_codes(codes, pairs, "doc_id"))
+
+
 class TestJaccardKernel:
     def test_jaccard_identical_to_jvm(self, spark, tables):
-        """jaccard_pairs impl='arrow' == impl='jvm' on real candidate
-        pairs over the doubled fixture corpus (exact doubles at J=1 plus
+        """The kernel verify == jaccard_pairs on real candidate pairs
+        over the doubled fixture corpus (exact doubles at J=1 plus
         partial overlaps from LSH collisions)."""
         from vectordb_testbricks_spark.operators.dedup import (
             _token_codes, jaccard_pairs, lsh_candidate_pairs,
@@ -394,35 +405,35 @@ class TestJaccardKernel:
         cands = lsh_candidate_pairs(
             signatures_from_codes(codes, "doc_id"), "doc_id")
 
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-                for r in jaccard_pairs(codes, cands, "doc_id",
-                                       impl=impl).collect())
+        def rows(df):
+            return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 12))
+                          for r in df.collect())
 
-        a, j = rows("arrow"), rows("jvm")
+        a = rows(_kernel_jaccard(codes, cands))
+        j = rows(jaccard_pairs(codes, cands, "doc_id"))
         assert a == j and len(a) > 0
 
     def test_jaccard_null_and_partial(self, spark):
-        """NULL code arrays yield NULL jaccard in both impls; partial
-        overlaps agree to the exact double."""
+        """NULL code arrays yield NULL jaccard on both paths; partial
+        overlaps agree to the exact double; an extra pair column rides
+        through both unchanged."""
         from vectordb_testbricks_spark.operators.dedup import jaccard_pairs
         codes = spark.createDataFrame(
             [(1, [10, 20, 30]), (2, [20, 30, 40, 50]), (3, None),
              (4, [10, 20, 30])],
             "doc_id bigint, codes array<bigint>")
         pairs = spark.createDataFrame(
-            [(1, 2), (1, 3), (1, 4)], "id_a bigint, id_b bigint")
+            [(1, 2, "x"), (1, 3, "y"), (1, 4, "x")],
+            "id_a bigint, id_b bigint, mode string")
 
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in jaccard_pairs(codes, pairs, "doc_id",
-                                       impl=impl).collect())
+        def rows(df):
+            assert df.columns == ["id_a", "id_b", "mode", "jaccard"]
+            return sorted(map(tuple, df.collect()))
 
-        a, j = rows("arrow"), rows("jvm")
+        a = rows(_kernel_jaccard(codes, pairs))
+        j = rows(jaccard_pairs(codes, pairs, "doc_id"))
         assert a == j
-        got = {(x, y): v for x, y, v in a}
+        got = {(x, y): v for x, y, _, v in a}
         assert got[(1, 2)] == 2 / 5.0
         assert got[(1, 3)] is None
         assert got[(1, 4)] == 1.0
@@ -432,7 +443,7 @@ class TestJaccardKernel:
         pandas as float64 NaN arrays — the kernel must normalize them
         so a NULL element null-safe-matches a NULL element, exactly
         like Spark's array_intersect (two NULL-text docs pair at
-        jaccard 1.0 on both impls)."""
+        jaccard 1.0 on both paths)."""
         from vectordb_testbricks_spark.operators.dedup import (
             jaccard_pairs, minhash_lsh_dedup)
         codes = spark.createDataFrame(
@@ -441,13 +452,11 @@ class TestJaccardKernel:
         pairs = spark.createDataFrame(
             [(1, 2), (1, 3), (3, 4)], "id_a bigint, id_b bigint")
 
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in jaccard_pairs(codes, pairs, "doc_id",
-                                       impl=impl).collect())
+        def rows(df):
+            return sorted(map(tuple, df.collect()))
 
-        a, j = rows("arrow"), rows("jvm")
+        a = rows(_kernel_jaccard(codes, pairs))
+        j = rows(jaccard_pairs(codes, pairs, "doc_id"))
         assert a == j
         got = {(x, y): v for x, y, v in a}
         assert got[(1, 2)] == 1.0          # [NULL] vs [NULL]
@@ -463,33 +472,26 @@ class TestJaccardKernel:
                                        threshold=0.7).collect())
         assert got_pairs == [(1, 2)]
 
-    def test_unknown_impl_raises(self, spark):
-        # a typo ('Arrow') must not silently take the JVM path
-        from vectordb_testbricks_spark.operators.dedup import jaccard_pairs
-        codes = spark.createDataFrame([(1, [10])],
-                                      "doc_id bigint, codes array<bigint>")
-        pairs = spark.createDataFrame([(1, 1)], "id_a bigint, id_b bigint")
-        with pytest.raises(ValueError, match="unknown jaccard impl"):
-            jaccard_pairs(codes, pairs, "doc_id", impl="Arrow")
-
 
 class TestKnnKernel:
-    """Identity suite for the dense-scoring kernel (r10): rows, scores,
-    and ranks bit-identical to the JVM HOF expression path."""
+    """Identity suite for the dense-scoring kernel (r10):
+    knn_search_arrow's rows, scores, and ranks bit-identical to
+    knn_search, the JVM HOF expression path."""
 
     @pytest.mark.parametrize("metric", ["COSINE", "L2", "IP", "HAMMING"])
     def test_fixture_identical_all_metrics(self, spark, tables, metric):
         from vectordb_testbricks_spark.functions.vector import (
             to_double_array)
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
         from vectordb_testbricks_spark.operators.search import knn_search
         emb = tables["embeddings"].df
         q = (emb.filter(F.col("vec_id").isin([0, 5, 9]))
              .select(F.col("vec_id").alias("query_id"),
                      to_double_array(F.col("embedding")).alias("qvec")))
-        jvm = knn_search(emb, q, "embedding", "vec_id", metric=metric,
-                         k=7, impl="jvm")
-        ar = knn_search(emb, q, "embedding", "vec_id", metric=metric,
-                        k=7, impl="arrow")
+        jvm = knn_search(emb, q, "embedding", "vec_id", metric=metric, k=7)
+        ar = knn_search_arrow(emb, q, "embedding", "vec_id", metric=metric,
+                              k=7)
         assert sorted(map(tuple, jvm.collect())) == \
             sorted(map(tuple, ar.collect()))
 
@@ -497,6 +499,9 @@ class TestKnnKernel:
         """NULL vector, NULL element, zero-norm (COSINE try_divide ->
         NULL), NaN element (ranks, NaN greatest), +inf, exact ties
         (id tie-break), and a filtered search."""
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
+        from vectordb_testbricks_spark.operators.search import knn_search
         rows = [
             (1, [1.0, 0.0, 0.0], "a"),
             (2, [1.0, 0.0, 0.0], "a"),       # exact tie with pk 1
@@ -511,40 +516,31 @@ class TestKnnKernel:
             rows, "pk bigint, v array<double>, tag string")
         q = spark.createDataFrame([(0, [1.0, 0.0, 0.0])],
                                   "query_id int, qvec array<double>")
-        from vectordb_testbricks_spark.operators.search import knn_search
+
+        def key(rs):
+            return sorted((r["query_id"], r["pk"], r["tag"], r["rank"],
+                           repr(r["score"])) for r in rs)
+
         for metric in ("COSINE", "L2", "IP", "HAMMING"):
             for flt in (None, 'tag == "a"'):
-                jvm = knn_search(base, q, "v", "pk", metric=metric, k=8,
-                                 flt=flt, output_fields=["tag"],
-                                 impl="jvm").collect()
-                ar = knn_search(base, q, "v", "pk", metric=metric, k=8,
-                                flt=flt, output_fields=["tag"],
-                                impl="arrow").collect()
-                def key(rs):
-                    return [(r["query_id"], r["pk"], r["tag"], r["rank"],
-                             repr(r["score"])) for r in rs]
-                assert sorted(key(jvm)) == sorted(key(ar)), (metric, flt)
+                kw = dict(metric=metric, k=8, flt=flt, output_fields=["tag"])
+                jvm = knn_search(base, q, "v", "pk", **kw).collect()
+                ar = knn_search_arrow(base, q, "v", "pk", **kw).collect()
+                assert key(jvm) == key(ar), (metric, flt)
 
     def test_null_query_vector_and_null_query_element(self, spark, tables):
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
         from vectordb_testbricks_spark.operators.search import knn_search
         emb = tables["embeddings"].df
         dim = len(emb.select("embedding").first()[0])
         q = spark.createDataFrame(
             [(0, None), (1, [1.0] * (dim - 1) + [None])],
-            f"query_id int, qvec array<double>")
-        for impl in ("jvm", "arrow"):
-            got = knn_search(emb, q, "embedding", "vec_id",
-                             metric="COSINE", k=3, impl=impl).collect()
-            assert got == [], impl
-
-    def test_unknown_impl_raises(self, spark, tables):
-        from vectordb_testbricks_spark.operators.search import knn_search
-        emb = tables["embeddings"].df
-        with pytest.raises(ValueError, match="knn"):
-            knn_search(emb, emb.limit(1).select(
-                F.lit(0).alias("query_id"),
-                F.col("embedding").alias("qvec")),
-                "embedding", "vec_id", impl="bogus")
+            "query_id int, qvec array<double>")
+        for search in (knn_search, knn_search_arrow):
+            got = search(emb, q, "embedding", "vec_id",
+                         metric="COSINE", k=3).collect()
+            assert got == [], search.__name__
 
 
 class TestSimhashKernel:

@@ -1,14 +1,15 @@
-"""The package reads only the session-level env knobs: operator paths
-(``impl``, widen sizing) are picked by caller arguments and module
-constants, never by the environment."""
+"""The package reads only the session-level env knobs, and no operator
+takes a path option: each operator has one production path (a kernel
+or a JVM expression), sized by module constants and plan statistics,
+never by the environment or a caller-set ``impl``."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 
-PKG = (pathlib.Path(__file__).resolve().parent.parent
-       / "vectordb_testbricks_spark")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "vectordb_testbricks_spark"
 
 SESSION_KNOBS = {
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_UI", "SPARK_GRAFT_DRIVER_MEM",
@@ -38,3 +39,21 @@ def test_package_reads_only_session_knobs():
     assert keys == SESSION_KNOBS, (
         f"unexpected: {sorted(keys - SESSION_KNOBS)}, "
         f"missing: {sorted(SESSION_KNOBS - keys)}")
+
+
+def test_no_function_takes_an_impl_option():
+    files = [*PKG.rglob("*.py"), ROOT / "__spark_entry__.py",
+             *(ROOT / "tools").rglob("*.py")]
+    takers, defined = [], []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name == "check_impl":
+                defined.append(f"{f.name}:{node.lineno}")
+            a = node.args
+            if "impl" in {x.arg for x in
+                          a.posonlyargs + a.args + a.kwonlyargs}:
+                takers.append(f"{f.name}:{node.name}")
+    assert not takers, takers
+    assert not defined, defined

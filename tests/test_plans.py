@@ -828,6 +828,48 @@ def test_second_load_builds_nothing(spark, tmp_path):
     assert mgr._bm25_weights(spec, "hyb", spec.functions[0]) is served[1]
 
 
+def test_second_manager_serves_cached_after_owner_releases(spark,
+                                                           tmp_path):
+    """Two managers in one session load the same collection and share
+    its CacheManager entries, which the first persisted. After the first
+    releases it, the second still serves from a cached scan and resident
+    weights (it rebuilds them), with the same rows, and the
+    persisted-RDD count stays at the loaded level."""
+    from pyspark import StorageLevel
+    from vectordb_testbricks_spark.manager import CollectionManager
+    jsc = spark.sparkContext._jsc
+    wh = str(tmp_path / "wh")
+    before = jsc.getPersistentRDDs().size()
+    m1 = _loaded_hyb(spark, wh)
+    m2 = CollectionManager(spark, wh)
+    m2.load("hyb")
+    loaded = jsc.getPersistentRDDs().size()
+    assert loaded == before + 2
+    spec = m2.describe_collection("hyb")
+
+    def served(m):
+        weights, _ = m._bm25_weights(spec, "hyb", spec.functions[0])
+        return [df.storageLevel != StorageLevel.NONE
+                for df in (m.read("hyb"), weights)]
+
+    assert served(m2) == [True, True]
+    m1.release("hyb")
+    assert m2.loaded("hyb")
+    assert served(m2) == [True, True]
+    sparse, fused = _hybrid_request(m2, "gamma alpha alpha")
+    assert len(fused.collect()) == 5
+    assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
+                                     "LocalTableScanExec"}, _plan(sparse)
+    fresh = CollectionManager(spark, wh)
+    assert sorted(map(tuple, m2.read("hyb").collect())) == \
+        sorted(map(tuple, fresh.read("hyb").collect()))
+    assert _bm25_rows(m2, "beta zeta eta") == \
+        _bm25_rows(fresh, "beta zeta eta")
+    assert jsc.getPersistentRDDs().size() <= loaded
+    m2.release("hyb")
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_loaded_ttl_collection_serves_the_cached_scan(spark, tmp_path):
     """A loaded TTL collection caches its scan, every stored row, and
     serves each read() from it with the TTL filter on top, evaluated at

@@ -36,6 +36,7 @@ import shutil
 import threading
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,6 +65,12 @@ def _spec_from_json(s: str) -> SchemaSpec:
     d["indexes"] = [IndexSpec(**i) for i in d["indexes"]]
     d["functions"] = [FunctionSpec(**f) for f in d["functions"]]
     return SchemaSpec(**d)
+
+
+def _frames(value) -> list[DataFrame]:
+    """The DataFrames of a memo value (one, or a tuple's)."""
+    return [df for df in (value if isinstance(value, tuple) else (value,))
+            if isinstance(df, DataFrame)]
 
 
 class CollectionManager:
@@ -110,7 +117,10 @@ class CollectionManager:
         os.makedirs(warehouse, exist_ok=True)
         self._aliases_file = os.path.join(warehouse, "_aliases.json")
         self._loaded: set[str] = set()
-        self._memo: dict[tuple[str, str], tuple[tuple, object]] = {}
+        # (collection, kind) -> (key, value, the value's DataFrames that
+        # read cached when it was built on a loaded collection)
+        self._memo: dict[tuple[str, str],
+                         tuple[tuple, object, tuple[DataFrame, ...]]] = {}
         self._memo_lock = threading.Lock()
         self._build_lock = threading.RLock()   # reentrant: weights -> fn
 
@@ -156,24 +166,37 @@ class CollectionManager:
         """``build()``'s value for ``key``, reused while the collection's
         ``kind`` entry still carries ``key``. Callers read ``key`` from
         disk BEFORE building, so a commit that lands mid-build leaves the
-        entry under the older key and the next call rebuilds. A miss
-        unpersists the entry it replaces before building (see the class
-        docstring), under the build lock."""
+        entry under the older key and the next call rebuilds. A hit whose
+        DataFrames were cached when it was built but read uncached now is
+        a miss too: managers in one session share a CacheManager entry
+        for equal plans, and the one that persisted it may have dropped
+        it. A miss unpersists the entry it replaces before building (see
+        the class docstring), under the build lock."""
         with self._memo_lock:
             hit = self._memo.get((real, kind))
-        if hit is not None and hit[0] == key:
+        if self._current(hit, key):
             return hit[1]
         with self._build_lock:
             with self._memo_lock:
                 hit = self._memo.get((real, kind))
-            if hit is not None and hit[0] == key:   # built while we waited
+            if self._current(hit, key):             # built while we waited
                 return hit[1]
             if hit is not None:
                 self._unpersist(hit[1])
             value = build()
+            cached = (tuple(df for df in _frames(value)
+                            if df.storageLevel != StorageLevel.NONE)
+                      if real in self._loaded else ())
             with self._memo_lock:
-                self._memo[(real, kind)] = (key, value)
+                self._memo[(real, kind)] = (key, value, cached)
         return value
+
+    @staticmethod
+    def _current(hit, key: tuple) -> bool:
+        """``hit`` carries ``key``, and what it cached is still cached."""
+        return (hit is not None and hit[0] == key
+                and all(df.storageLevel != StorageLevel.NONE
+                        for df in hit[2]))
 
     def _evict(self, real: str) -> None:
         """Forget every memo entry of ``real`` and unpersist what the
@@ -182,15 +205,15 @@ class CollectionManager:
             with self._memo_lock:
                 stale = [self._memo.pop(slot) for slot in list(self._memo)
                          if slot[0] == real]
-            for _, value in stale:
+            for _, value, _ in stale:
                 self._unpersist(value)
 
     @staticmethod
     def _unpersist(value) -> None:
         """Unpersist the DataFrames of a memo value that persisted their
         plan (``shared_persist`` leaves a shared entry to its owner)."""
-        for df in value if isinstance(value, tuple) else (value,):
-            if isinstance(df, DataFrame) and df.is_cached:
+        for df in _frames(value):
+            if df.is_cached:
                 df.unpersist()
 
     # ----------------------------------------------------------- aliases

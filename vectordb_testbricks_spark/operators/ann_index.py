@@ -283,31 +283,22 @@ SPARSE_BUCKET_COL = "_bucket"
 
 
 def build_sparse_inverted(base: DataFrame, map_col: str, id_col: str,
-                          n_buckets: int = 64,
-                          impl: str = "jvm") -> SparseInvModel:
+                          n_buckets: int = 64) -> SparseInvModel:
     """Explode a SPARSE_FLOAT_VECTOR column into bucketed postings. The
     bucket is crc32(key) % n_buckets — computable driver-side
     (search.sparse_bucket_py), so a query prunes partition dirs from its
     literal keys before any IO.
 
-    ``impl`` picks the explode stage, and the caller picks it:
-    ``"jvm"`` (default) is the Column explode; ``"arrow"`` is the
-    Arrow-batched kernel
-    (arrow_kernels.sparse_postings_arrow) — identical postings (asserted
-    in tests), immune to the per-JVM HotSpot slow mode that hit this
-    stage's HOF eval chain at 1M+ rows (BASELINE.md r08). The scale
-    entries build with "arrow"; the fixture-scale registry entry keeps
-    "jvm" so its per-round timing/plan comparison stays stable. Bucket
-    assignment stays a flat codegen crc32 expression in both modes."""
+    The explode stage is the Arrow-batched kernel
+    (arrow_kernels.sparse_postings_arrow): postings identical to the
+    Column explode ``search.sparse_postings`` (the reference the identity
+    tests compare against), immune to the per-JVM HotSpot slow mode that
+    hit that stage's HOF eval chain at 1M+ rows (BASELINE.md r08).
+    Bucket assignment is a flat codegen crc32 expression."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        check_impl, sparse_postings_arrow)
-    from vectordb_testbricks_spark.operators.search import (
-        sparse_bucket_expr, sparse_postings)
-    if check_impl(impl, "sparse") == "arrow":
-        posts = sparse_postings_arrow(base, map_col, id_col)
-    else:
-        posts = sparse_postings(base, map_col, id_col)
-    posts = posts.withColumn(
+        sparse_postings_arrow)
+    from vectordb_testbricks_spark.operators.search import sparse_bucket_expr
+    posts = sparse_postings_arrow(base, map_col, id_col).withColumn(
         SPARSE_BUCKET_COL, sparse_bucket_expr("key", n_buckets))
     return SparseInvModel(postings=posts, key_col="key", id_col=id_col,
                           weight_col="weight", n_buckets=n_buckets)

@@ -19,13 +19,20 @@ edge semantics) — asserted by identity tests in
 tests/test_arrow_kernels.py and, for the MinHash pipeline, by the
 driver's DuckDB oracle row (dd_minhash).
 
-Who picks which path: the kernel is the only path of MinHash and
-SimHash dedup and of the code-order posting build (their JVM twins are
-dedup references the identity tests call). knn_search,
-build_sparse_inverted, ngram_jaccard_pairs and jaccard_pairs take a
-caller-set ``impl`` (default ``"jvm"``, the fixture entries' and
-serving path; the 1M scale entries pass ``"arrow"``). No env var
-overrides either.
+Who picks which path: no operator takes a path option. The kernel is
+the only production path of MinHash and SimHash dedup, the n-gram
+Jaccard pipeline (codes and verify), the MinHash verify and the sparse
+postings build. Their JVM twins (``dedup._token_codes``,
+``dedup.jaccard_pairs``, ``search.sparse_postings``, ...) stay as the
+references the identity tests compare against; ``jaccard_pairs`` also
+verifies the fixture-scale dd_ngram_jaccard entry, where it measured
+faster than the kernel (OPTIMIZATION_r13.md). Dense kNN has no size
+gate, because its crossover depends on nq, k and corpus size together
+(BASELINE.md "Dense kNN Arrow kernel"): ``search.knn_search`` is the
+JVM expression path, and the two callers that want the kernel call
+:func:`knn_search_arrow` directly — the 1M kNN scale entry, where it
+measured faster, and v_knn_metrics' ``A_<metric>`` branches, which keep
+it behind the driver's oracle.
 
 Reference parity: the signatures these kernels produce feed the same
 banded-LSH dedup surface SURVEY.md S2 maps from the reference's
@@ -40,16 +47,6 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-
-def check_impl(impl: str, label: str) -> str:
-    """Validate a caller-picked ``impl``: anything but 'arrow'/'jvm'
-    raises naming the operator, so a typo ('Arrow') never silently
-    takes the JVM path."""
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"unknown {label} impl {impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
-    return impl
 
 
 def _minhash_rows(texts, shingle_n, a_vec, b_vec, p):
@@ -780,9 +777,10 @@ def knn_search_arrow(base, queries, vec_col: str, id_col: str,
     scoring + map-side partial top-k; the pre-filter compiles exactly
     like the JVM path and the final exact window IS the JVM path's
     (search._ranked). The query side is collected driver-side (tiny by
-    the broadcast contract). Runs when the caller passes
-    ``knn_search(impl="arrow")`` — the 1M kNN scale entries and
-    v_knn_metrics do; the serving paths keep the JVM default."""
+    the broadcast contract). Grouping search has no kernel twin.
+    Called directly by the 1M kNN scale entry (measured faster there)
+    and v_knn_metrics' oracled ``A_<metric>`` branches; the serving
+    paths and the fixture entries call ``knn_search``."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 

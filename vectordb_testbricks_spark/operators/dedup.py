@@ -34,7 +34,8 @@ from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
     BARRIER_MIN_ROWS, barrier_if_large, is_large, materialize_barrier,
     parallelize_small, shared_persist)
-from vectordb_testbricks_spark.operators.arrow_kernels import check_impl
+from vectordb_testbricks_spark.operators.arrow_kernels import (
+    jaccard_arrow, minhash_codes_sigs)
 from vectordb_testbricks_spark.session import forget, session_memo
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime), the classic minhash modulus
@@ -221,33 +222,38 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
             .distinct())
 
 
-def jaccard_pairs(codes: DataFrame, pairs: DataFrame, id_col: str,
-                  impl: str = "jvm") -> DataFrame:
-    """Exact Jaccard over code sets for given (id_a, id_b) pairs.
-
-    ``impl="arrow"`` computes the set intersection/union in the Arrow
-    kernel (arrow_kernels.jaccard_arrow) after the JVM joins attach both
-    code arrays — at 10M docs the verify stage's interpreted
-    collection-expression eval showed the same graded per-JVM CPU
-    inflation the signature stage did (BASELINE.md r08/r09), and the
-    join/shuffle machinery it keeps on the JVM is codegen-stable."""
-    check_impl(impl, "jaccard")
+def _with_codes(codes: DataFrame, pairs: DataFrame, id_col: str
+                ) -> DataFrame:
+    """``pairs`` with both docs' code arrays attached: (id_a, id_b,
+    *extra, ca, cb). Extra pair columns (e.g. a mode tag on a
+    multi-order candidate union) ride through the verify unchanged — one
+    verify pass can then serve several candidate generators (r12, guide
+    §1.2 step 1)."""
     ca = codes.select(F.col(id_col).alias("id_a"), F.col("codes").alias("ca"))
     cb = codes.select(F.col(id_col).alias("id_b"), F.col("codes").alias("cb"))
-    joined = pairs.join(ca, "id_a").join(cb, "id_b")
-    # any extra pair columns (e.g. a mode tag on a multi-order candidate
-    # union) ride through the verify unchanged — one verify pass can then
-    # serve several candidate generators (r12, guide §1.2 step 1)
     extra = [f.name for f in pairs.schema.fields
              if f.name not in ("id_a", "id_b")]
-    if impl == "arrow":
-        from vectordb_testbricks_spark.operators.arrow_kernels import (
-            jaccard_arrow)
-        return jaccard_arrow(
-            joined.select("id_a", "id_b", *extra, "ca", "cb"))
+    return (pairs.join(ca, "id_a").join(cb, "id_b")
+            .select("id_a", "id_b", *extra, "ca", "cb"))
+
+
+def jaccard_pairs(codes: DataFrame, pairs: DataFrame, id_col: str
+                  ) -> DataFrame:
+    """Exact Jaccard over code sets for given (id_a, id_b) pairs, as a JVM
+    expression (``size(array_intersect) / size(array_union)``).
+
+    The reference of the Arrow verify (arrow_kernels.jaccard_arrow over
+    :func:`_with_codes`) that :func:`minhash_lsh_dedup` and
+    :func:`ngram_jaccard_pairs` run — at 10M docs this expression's
+    interpreted collection eval showed the same graded per-JVM CPU
+    inflation the signature stage did (BASELINE.md r08/r09). It is also
+    the fixture-scale verify of the dd_ngram_jaccard entry, where it
+    measured faster than the kernel (1.72 s against 2.28 s,
+    OPTIMIZATION_r13.md)."""
+    joined = _with_codes(codes, pairs, id_col)
     inter = F.size(F.array_intersect("ca", "cb")).cast("double")
     union = F.size(F.array_union("ca", "cb")).cast("double")
-    return joined.select("id_a", "id_b", *extra,
+    return joined.select(*joined.columns[:-2],
                          (inter / union).alias("jaccard"))
 
 
@@ -262,12 +268,12 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
     (arrow_kernels.minhash_codes_sigs), cached for the pipeline's
     lifetime; the kernel is immune to the per-JVM HotSpot slow mode of
     the JVM expression path's HOF chain (~16x CPU, BASELINE.md r08).
-    Identity tests compare it against that JVM twin (:func:`_token_codes`
-    + :func:`signatures_from_codes` + ``jaccard_pairs(impl="jvm")``).
+    The verify is the Arrow kernel (arrow_kernels.jaccard_arrow).
+    Identity tests compare the pipeline against its JVM twin
+    (:func:`_token_codes` + :func:`signatures_from_codes` +
+    :func:`jaccard_pairs`).
     ``n_docs`` optionally overrides the size estimate behind
     :func:`lsh_candidate_pairs`' candidate-emit regime."""
-    from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs)
     # widen BEFORE the kernel: the Python work must spread across all
     # cores even when the input is a few-partition parquet scan
     cs = shared_persist(
@@ -276,8 +282,7 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
             text_col, NUM_HASHES, shingle_n))
     cands = lsh_candidate_pairs(cs.select(id_col, "sig"), id_col,
                                 n_docs=n_docs)
-    return (jaccard_pairs(cs.select(id_col, "codes"), cands, id_col,
-                          impl="arrow")
+    return (jaccard_arrow(_with_codes(cs, cands, id_col))
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -710,7 +715,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
                         n: int = 3, threshold: float = 0.5,
                         max_df: int = 50, min_shared: int = 1,
                         prefix: bool = True, order: str = "rarity",
-                        impl: str = "jvm",
                         stage_dir: str | None = None) -> DataFrame:
     """Inverted-index n-gram Jaccard: prefix-filtered candidate pairs
     (:func:`ngram_candidate_pairs`), then exact Jaccard ≥ ``threshold`` on
@@ -726,13 +730,12 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     The inverted index posts hashed shingle codes (bigint join keys — raw
     shingle strings cost ~3× in shuffle codes and key comparison).
 
-    ``impl`` picks the shingle-code materialization and the verify —
-    ``"jvm"`` (default; the fixture-scale path, measured faster there:
-    1.72 s against 2.28 s in OPTIMIZATION_r13.md) is the Column HOF
-    path; ``"arrow"`` reuses the MinHash Arrow kernel's codes output
-    (bit-identical; the kernel is the JIT-slow-mode escape the 1M/10M
-    scale entries pass, BASELINE.md r08). The code-order posting build
-    is the Arrow kernel under either choice.
+    The shingle codes come from the MinHash Arrow kernel's codes output
+    and the verify is the Arrow Jaccard kernel — the JIT-slow-mode
+    escape of the 1M/10M scale entries (BASELINE.md r08). Identity tests
+    compare the pair set against the JVM twin (:func:`_token_codes` +
+    :func:`ngram_candidate_pairs` + :func:`jaccard_pairs`), the path the
+    fixture-scale dd_ngram_jaccard entry runs.
 
     ``order`` picks the prefix total order (forwarded to
     :func:`ngram_candidate_pairs`): ``"rarity"`` is the canonical
@@ -742,18 +745,12 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     by ``max_df``). The returned pair set is identical at
     ``min_shared=1``: candidates are a superset under either order and
     the exact-Jaccard verify decides membership."""
-    from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs)
-    if check_impl(impl, "ngram") == "arrow":
-        # with_sigs=False: column pruning can't reach inside the kernel,
-        # and this pipeline never ranks signatures
-        codes = shared_persist(
-            minhash_codes_sigs(parallelize_small(
-                docs.select(id_col, text_col)), id_col, text_col,
-                shingle_n=n, with_sigs=False))
-    else:
-        codes = shared_persist(_token_codes(docs, id_col, text_col,
-                                            shingle_n=n))
+    # with_sigs=False: column pruning can't reach inside the kernel,
+    # and this pipeline never ranks signatures
+    codes = shared_persist(
+        minhash_codes_sigs(parallelize_small(
+            docs.select(id_col, text_col)), id_col, text_col,
+            shingle_n=n, with_sigs=False))
     phase1_caches: list = []
     cands = ngram_candidate_pairs(codes, id_col, threshold, max_df=max_df,
                                   min_shared=min_shared, prefix=prefix,
@@ -803,7 +800,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
         # (same double-GC settle pattern as bench's scale loop)
         for _ in range(2):
             spark._jvm.System.gc()
-    return (jaccard_pairs(codes, cands, id_col, impl=impl)
+    return (jaccard_arrow(_with_codes(codes, cands, id_col))
             .filter(F.col("jaccard") >= threshold))
 
 

@@ -151,8 +151,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
                flt: str | Column | None = None,
                output_fields: list[str] | None = None,
                group_by: str | list[str] | None = None,
-               group_size: int = 1,
-               impl: str = "jvm") -> DataFrame:
+               group_size: int = 1) -> DataFrame:
     """V1/V2/V5: ANN top-k per query vector, optional pre-filter + grouping.
 
     ``queries`` must have (query_id, qvec). Returns
@@ -165,24 +164,16 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     (feature-inventory doc §2); the plan shape is identical, the window
     partition key just widens.
 
-    ``impl`` picks the scoring + map-side partial top-k path, and the
-    caller picks it: ``"jvm"`` (default — search_mix, the manager and
-    the fixture entries) is the Column HOF expression path below;
-    ``"arrow"`` (the 1M kNN scale entries and v_knn_metrics) routes the
-    non-grouping path through the numpy kernel
-    (arrow_kernels.knn_search_arrow — bit-identical rows, scores, and
-    ranks; the scoring HOF chain is the same interpreted expression
-    class as the r08 slow mode, and the kernel is immune by
-    construction). Grouping search keeps the JVM path.
+    Scoring is the Column HOF expression path: search_mix, the manager
+    and the fixture entries serve through it. Its Arrow-kernel twin,
+    arrow_kernels.knn_search_arrow (bit-identical rows, scores and ranks,
+    no grouping), is called directly by the 1M kNN scale entry and
+    v_knn_metrics' oracled ``A_<metric>`` branches. There is no size
+    gate: the crossover depends on nq, k and corpus size together
+    (BASELINE.md "Dense kNN Arrow kernel").
     """
-    from vectordb_testbricks_spark.operators.arrow_kernels import (
-        check_impl, knn_search_arrow)
     gb = ([group_by] if isinstance(group_by, str)
           else list(group_by) if group_by else [])
-    if check_impl(impl, "knn") == "arrow" and not gb:
-        return knn_search_arrow(base, queries, vec_col, id_col,
-                                metric=metric, k=k, flt=flt,
-                                output_fields=output_fields)
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
         base = base.filter(pred)  # pre-filter before ranking (V2)
