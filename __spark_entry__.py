@@ -4203,7 +4203,7 @@ def v_ivf_persisted(spark, sf_dir):
         # read lazily by the reloaded model, reclaimed at interpreter exit
         path = _reclaimed_tmpdir("ivf_persisted_")
         write_ivf(model, path)
-        return read_ivf(spark, path, "embedding", "vec_id", model.centroids)
+        return read_ivf(spark, path, "embedding", "vec_id")
 
     reloaded = session_memo(spark, ("ivf_persisted", sf_dir), build)
     hits = ivf_search(reloaded, q, k=10, nprobe=4)
@@ -4220,16 +4220,16 @@ def v_bin_ivf(spark, sf_dir):
     (binary_rerank_search's documented full-scan limitation). Approximate →
     rows-only; recall + full-probe==exact identity in tests/test_operators."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        bin_ivf_search, build_bin_ivf)
+        build_bin_ivf, ivf_search)
     emb, q = _emb_queries(spark, sf_dir)
 
     def build():
         model = build_bin_ivf(emb, "embedding", "vec_id", n_lists=16, seed=7)
-        model.packed = model.packed.cache()
+        model.assigned = model.assigned.cache()
         return model
 
-    hits = bin_ivf_search(session_memo(spark, ("bin_ivf", sf_dir), build),
-                          q, k=10, nprobe=4)
+    hits = ivf_search(session_memo(spark, ("bin_ivf", sf_dir), build),
+                      q, k=10, nprobe=4)
     return hits.select("query_id", "vec_id",
                        F.round("score", 4).alias("score"),
                        F.col("rank").cast("bigint").alias("rank"))
@@ -4242,16 +4242,16 @@ def v_ivf_sq8(spark, sf_dir):
     candidates. Approximate → rows-only check; recall and the
     full-probe==exact identity are asserted in tests/test_operators.py."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        build_ivf_sq8, ivf_sq8_search)
+        build_ivf_sq8, ivf_search)
     emb, q = _emb_queries(spark, sf_dir)
 
     def build():
         model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=16, seed=7)
-        model.quantized = model.quantized.cache()
+        model.assigned = model.assigned.cache()
         return model
 
-    hits = ivf_sq8_search(session_memo(spark, ("ivf_sq8", sf_dir), build),
-                          q, k=10, nprobe=4)
+    hits = ivf_search(session_memo(spark, ("ivf_sq8", sf_dir), build),
+                      q, k=10, nprobe=4)
     return hits.select("query_id", "vec_id",
                        F.round("score", 4).alias("score"),
                        F.col("rank").cast("bigint").alias("rank"))

@@ -1,7 +1,8 @@
 """The package reads only the session-level env knobs, and no operator
 takes a path option: each operator has one production path (a kernel
 or a JVM expression), sized by module constants and plan statistics,
-never by the environment or a caller-set ``impl``."""
+never by the environment or a caller-set ``impl``. The IVF family keeps
+one coarse quantizer and one persisted layout."""
 
 from __future__ import annotations
 
@@ -57,3 +58,20 @@ def test_no_function_takes_an_impl_option():
                 takers.append(f"{f.name}:{node.name}")
     assert not takers, takers
     assert not defined, defined
+
+
+def test_ivf_family_has_one_persisted_layout():
+    """Every IVF encoding reopens from its own sidecar, so no function in
+    ann_index.py takes the in-session model (``model_meta``), and the only
+    persisted layouts are the IVF one and the sparse-inverted one."""
+    tree = ast.parse((PKG / "operators" / "ann_index.py").read_text())
+    funcs = [n for n in ast.walk(tree)
+             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    takers = [f.name for f in funcs
+              if "model_meta" in {x.arg for x in f.args.posonlyargs
+                                  + f.args.args + f.args.kwonlyargs}]
+    assert not takers, takers
+    io = {f.name for f in funcs if f.name.startswith(("write_", "read_"))}
+    allowed = {"write_ivf", "read_ivf", "read_centroids",
+               "write_sparse_inverted", "read_sparse_inverted"}
+    assert io <= allowed, sorted(io - allowed)

@@ -60,13 +60,13 @@ def test_ivf_sq8_recall_vs_brute_force(emb, queries3):
     quantization error only matters for candidates near the rerank_k
     boundary because the final ordering is exact-rescored."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        build_ivf_sq8, ivf_sq8_search)
+        build_ivf_sq8, ivf_search)
     from vectordb_testbricks_spark.operators.search import knn_search
 
     exact = knn_search(emb, queries3, "embedding", "vec_id",
                        metric="COSINE", k=10)
     model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=16, seed=7)
-    approx = ivf_sq8_search(model, queries3, k=10, nprobe=8)
+    approx = ivf_search(model, queries3, k=10, nprobe=8)
 
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
@@ -78,7 +78,7 @@ def test_ivf_sq8_full_probe_full_rerank_equals_exact(emb, queries3):
     """nprobe = n_lists and rerank_k ≥ corpus ⇒ every row is exact-rescored
     ⇒ identical to brute force (quantization drops out entirely)."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        build_ivf_sq8, ivf_sq8_search)
+        build_ivf_sq8, ivf_search)
     from vectordb_testbricks_spark.operators.search import knn_search
 
     n = emb.count()
@@ -87,9 +87,12 @@ def test_ivf_sq8_full_probe_full_rerank_equals_exact(emb, queries3):
                         metric="COSINE", k=5).collect()]
     model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=8, seed=7)
     approx = [(r["query_id"], r["vec_id"]) for r in
-              ivf_sq8_search(model, queries3, k=5, nprobe=8,
-                             rerank_k=n).collect()]
+              ivf_search(model, queries3, k=5, nprobe=8,
+                         rerank_k=n).collect()]
     assert sorted(exact) == sorted(approx)
+    # quantized lists are normalized: an L2 ranking is refused, not faked
+    with pytest.raises(ValueError, match="serve COSINE"):
+        ivf_search(model, queries3, k=5, metric="L2")
 
 
 def test_ivf_sq8_stores_one_byte_elements(emb):
@@ -100,47 +103,47 @@ def test_ivf_sq8_stores_one_byte_elements(emb):
     from vectordb_testbricks_spark.operators.ann_index import build_ivf_sq8
 
     model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=4, seed=7)
-    field = dict(model.quantized.dtypes)["_q8"]
+    field = dict(model.assigned.dtypes)["_q8"]
     assert field == "array<tinyint>", field
-    row = model.quantized.select("_q8").first()
-    assert isinstance(model.quantized.schema["_q8"].dataType.elementType,
+    row = model.assigned.select("_q8").first()
+    assert isinstance(model.assigned.schema["_q8"].dataType.elementType,
                       T.ByteType)
     assert all(-128 <= v <= 127 for v in row["_q8"])
 
 
 def test_ivf_assignment_jvm_and_pandas_paths_agree(emb, spark):
-    """The JVM-codegen and Arrow-batched assignment expressions must assign
-    every row to the same centroid — the Pandas path only kicks in beyond
-    the codegen cell budget, so this is its correctness coverage."""
+    """The fixture's dim-64 vectors are deeper than the unrolled JVM shape
+    takes, so with_centroid_id assigns them through the Arrow/BLAS UDF:
+    every row must land on its nearest centroid by a direct numpy
+    ‖x − c‖² argmin."""
     import numpy as np
 
     from vectordb_testbricks_spark.operators.ann_index import (
-        _assign_expr_jvm, _assign_expr_pandas, _train_centroids)
+        _JVM_UNROLL_MAX_DIM, _train_centroids, with_centroid_id)
     from vectordb_testbricks_spark.functions.vector import to_double_array
 
     rows = emb.select("embedding").limit(200).collect()
     sample = np.asarray([list(r["embedding"]) for r in rows], dtype=np.float64)
     cent = _train_centroids(sample, 8, seed=7, max_iter=5)
+    assert cent.shape[1] > _JVM_UNROLL_MAX_DIM
     base = emb.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
-    both = base.select(
-        "vec_id",
-        _assign_expr_jvm("v", cent).alias("jvm"),
-        _assign_expr_pandas("v", cent, spark).alias("arrow"))
-    diff = both.filter(F.col("jvm") != F.col("arrow")).count()
-    assert diff == 0
+    got = with_centroid_id(base, "v", cent).collect()
+    x = np.asarray([r["v"] for r in got], dtype=np.float64)
+    want = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(2).argmin(1)
+    assert [r["centroid_id"] for r in got] == want.tolist()
 
 
 def test_ivf_assignment_unrolled_path_agrees(emb, spark):
-    """The dim≤32 unrolled straight-line branch (both the Column form and
-    with_centroid_id's two-step scalar projection) must route every row to
-    the same centroid as the Arrow/BLAS path. The embeddings fixture is
-    dim 64 — which dispatches to the compact HOF branch — so this trims
-    to 16 dims to pin the unrolled branch the 1M bench entries rely on."""
+    """The dim≤32 unrolled straight-line shape (with_centroid_id's
+    two-step scalar projection) must route every row to the same centroid
+    as the Arrow/BLAS shape. The embeddings fixture is dim 64 — which
+    dispatches to the Arrow/BLAS UDF — so this trims to 16 dims to pin the
+    unrolled shape the 1M bench entries rely on."""
     import numpy as np
 
     from vectordb_testbricks_spark.operators.ann_index import (
-        _JVM_UNROLL_MAX_DIM, _assign_expr_jvm, _assign_expr_pandas,
-        _train_centroids, with_centroid_id)
+        _JVM_UNROLL_MAX_DIM, _assign_expr_pandas, _train_centroids,
+        with_centroid_id)
     from vectordb_testbricks_spark.functions.vector import to_double_array
 
     dim = 16
@@ -152,10 +155,7 @@ def test_ivf_assignment_unrolled_path_agrees(emb, spark):
     sample = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
     cent = _train_centroids(sample, 8, seed=7, max_iter=5)
     both = base.select(
-        "vec_id",
-        _assign_expr_jvm("v", cent).alias("jvm"),
-        _assign_expr_pandas("v", cent, spark).alias("arrow"))
-    assert both.filter(F.col("jvm") != F.col("arrow")).count() == 0
+        "vec_id", _assign_expr_pandas("v", cent, spark).alias("arrow"))
     two_step = with_centroid_id(base, "v", cent)
     assert "_cd_x0" not in two_step.columns  # temp projections dropped
     joined = two_step.join(
@@ -221,7 +221,7 @@ def test_bin_ivf_recall_and_full_probe_identity(emb, queries3):
     Full probe + full rerank must equal brute force; pruned probe keeps
     decent recall."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        bin_ivf_search, build_bin_ivf)
+        build_bin_ivf, ivf_search)
     from vectordb_testbricks_spark.operators.search import knn_search
 
     exact = knn_search(emb, queries3, "embedding", "vec_id",
@@ -229,29 +229,31 @@ def test_bin_ivf_recall_and_full_probe_identity(emb, queries3):
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
 
     model = build_bin_ivf(emb, "embedding", "vec_id", n_lists=8, seed=7)
-    approx = bin_ivf_search(model, queries3, k=10, nprobe=4)
+    approx = ivf_search(model, queries3, k=10, nprobe=4)
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.6, f"recall {recall}"
 
     n = emb.count()
-    full = bin_ivf_search(model, queries3, k=10, nprobe=8, rerank_k=n)
+    full = ivf_search(model, queries3, k=10, nprobe=8, rerank_k=n)
     f = {(r["query_id"], r["vec_id"]) for r in full.collect()}
     assert f == e
 
 
 def test_persisted_bin_ivf_probe_prunes_partitions(spark, tables, tmp_path,
                                                    queries3):
-    """write_bin_ivf partitions by centroid_id; the probe must prune at
-    file-listing time, like the IVF/SQ8 persisted paths."""
+    """write_ivf partitions bin lists by centroid_id; the probe on the
+    layout reopened from its path must prune at file-listing time, like
+    the flat/SQ8 persisted paths."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        bin_ivf_search, build_bin_ivf, read_bin_ivf, write_bin_ivf)
+        build_bin_ivf, ivf_search, read_ivf, write_ivf)
     emb = tables["embeddings"].df
     model = build_bin_ivf(emb, "embedding", "vec_id", n_lists=4, seed=7)
     path = str(tmp_path / "binivf")
-    write_bin_ivf(model, path)
-    reloaded = read_bin_ivf(spark, path, model)
-    hits = bin_ivf_search(reloaded, queries3, k=5, nprobe=2)
+    write_ivf(model, path)
+    reloaded = read_ivf(spark, path, "embedding", "vec_id", base=emb)
+    assert reloaded.encoding == "bin"
+    hits = ivf_search(reloaded, queries3, k=5, nprobe=2)
     assert hits.filter("rank = 1").count() == 3
     plan = hits._jdf.queryExecution().executedPlan().toString()
     # the packed-list scan is the one whose PartitionFilters hit centroid_id
@@ -671,7 +673,7 @@ def test_persisted_ivf_probe_prunes_partitions(spark, tables, tmp_path):
     model = build_ivf(emb, "embedding", "vec_id", n_lists=4, seed=7)
     path = str(tmp_path / "ivf")
     write_ivf(model, path)
-    reloaded = read_ivf(spark, path, "embedding", "vec_id", model.centroids)
+    reloaded = read_ivf(spark, path, "embedding", "vec_id")
     q = (emb.filter(F.col("vec_id") == 0)
          .select(F.col("vec_id").alias("query_id"),
                  to_double_array(F.col("embedding")).alias("qvec")))
@@ -681,6 +683,57 @@ def test_persisted_ivf_probe_prunes_partitions(spark, tables, tmp_path):
     scan = next(l for l in plan.splitlines()
                 if "FileScan" in l and "ivf" in l)
     assert "centroid_id" in scan.split("PartitionFilters")[1][:200]
+
+
+@pytest.mark.parametrize("build", ["build_ivf", "build_ivf_sq8",
+                                   "build_bin_ivf"])
+def test_reopened_ivf_layout_matches_in_session_model(spark, emb, queries3,
+                                                      tmp_path, build):
+    """Every encoding reopens from its path alone: read_ivf takes the
+    centroids, encoding and SQ8 bounds from the sidecar (only the float
+    base for the rescore is passed in), probes return the in-session
+    model's rows, and the probe still prunes centroid_id partitions."""
+    from vectordb_testbricks_spark.operators import ann_index as A
+    model = getattr(A, build)(emb, "embedding", "vec_id", n_lists=8, seed=7)
+    path = str(tmp_path / build)
+    A.write_ivf(model, path)
+    reopened = A.read_ivf(spark, path, "embedding", "vec_id", base=emb)
+    assert reopened.encoding == model.encoding
+    assert (reopened.vmin, reopened.inv_scale) == (model.vmin,
+                                                   model.inv_scale)
+
+    def rows(m):
+        return sorted((r.query_id, r.vec_id, round(r.score, 9), r.rank)
+                      for r in A.ivf_search(m, queries3, k=10,
+                                            nprobe=4).collect())
+
+    assert rows(reopened) == rows(model)
+    if model.encoding != "flat":  # the exact rescore needs the float base
+        bare = A.read_ivf(spark, path, "embedding", "vec_id")
+        with pytest.raises(ValueError, match="pass base="):
+            A.ivf_search(bare, queries3, k=10, nprobe=4)
+    plan = A.ivf_search(reopened, queries3, k=10, nprobe=4) \
+        ._jdf.queryExecution().executedPlan().toString()
+    scans = [l for l in plan.splitlines()
+             if "FileScan" in l and "PartitionFilters" in l]
+    assert any("centroid_id" in l.split("PartitionFilters")[1][:200]
+               for l in scans), plan
+
+
+@pytest.mark.parametrize("build", ["build_ivf_sq8", "build_bin_ivf"])
+def test_append_ivf_rejects_quantized_layouts(spark, emb, tmp_path, build):
+    """append_ivf writes float rows, so it must refuse an SQ8 or BIN layout
+    (read from the sidecar) instead of mixing float rows into encoded
+    lists; the layout is left as written."""
+    from vectordb_testbricks_spark.operators import ann_index as A
+    old = emb.filter(F.col("vec_id") % 2 == 0)
+    path = str(tmp_path / build)
+    A.write_ivf(getattr(A, build)(old, "embedding", "vec_id", n_lists=4,
+                                  seed=7), path)
+    with pytest.raises(ValueError, match="encoded lists"):
+        A.append_ivf(emb.filter(F.col("vec_id") % 2 == 1), path,
+                     "embedding", "vec_id")
+    assert spark.read.parquet(path).count() == old.count()
 
 
 def test_lsh_search_recall_and_self_hit(emb, queries3):

@@ -157,31 +157,33 @@ def test_sq8_search_broadcasts_probe_and_candidates(tables):
     side: the probe list onto the quantized scan, and the candidate set
     onto the float rescore scan — neither may shuffle the base."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        build_ivf_sq8, ivf_sq8_search)
+        build_ivf_sq8, ivf_search)
     emb = tables["embeddings"].df
     q = (emb.filter(F.col("vec_id") == 0)
          .select(F.col("vec_id").alias("query_id"),
                  to_double_array(F.col("embedding")).alias("qvec")))
     model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=4, seed=7)
-    p = _plan(ivf_sq8_search(model, q, k=5, nprobe=2))
+    p = _plan(ivf_search(model, q, k=5, nprobe=2))
     assert p.count("BroadcastExchange") >= 2
     assert "SortMergeJoin" not in p
 
 
 def test_persisted_sq8_probe_prunes_partitions(spark, tables, tmp_path):
-    """write_sq8 partitions by centroid_id; a probe on the reloaded table
-    must prune to the probed lists at the file level."""
+    """write_ivf partitions SQ8 lists by centroid_id; a probe on the layout
+    reopened from its path must prune to the probed lists at the file
+    level."""
     from vectordb_testbricks_spark.operators.ann_index import (
-        build_ivf_sq8, ivf_sq8_search, read_sq8, write_sq8)
+        build_ivf_sq8, ivf_search, read_ivf, write_ivf)
     emb = tables["embeddings"].df
     model = build_ivf_sq8(emb, "embedding", "vec_id", n_lists=4, seed=7)
     path = str(tmp_path / "sq8")
-    write_sq8(model, path)
-    reloaded = read_sq8(spark, path, model)
+    write_ivf(model, path)
+    reloaded = read_ivf(spark, path, "embedding", "vec_id", base=emb)
+    assert reloaded.encoding == "sq8"
     q = (emb.filter(F.col("vec_id") == 0)
          .select(F.col("vec_id").alias("query_id"),
                  to_double_array(F.col("embedding")).alias("qvec")))
-    hits = ivf_sq8_search(reloaded, q, k=5, nprobe=2)
+    hits = ivf_search(reloaded, q, k=5, nprobe=2)
     assert hits.count() == 5
     p = _plan(hits)
     scan = next(line for line in p.splitlines()

@@ -17,5 +17,7 @@
 - ``json_shred``   JSON-path shredding into typed columns
 - ``multimodal``   image/audio/video column pipeline (Arrow-batched stages)
 - ``struct_array`` StructArray / embedding-list element-level operators
-- ``ann_index``    IVF (KMeans-centroid) approximate index: build + probe
+- ``ann_index``    one IVF coarse quantizer over flat, SQ8 and packed-bit
+                   lists (build, one persisted layout, probe + exact
+                   rescore); LSH, binary rerank, sparse inverted
 """

@@ -1,21 +1,33 @@
-"""IVF approximate-nearest-neighbor index (SURVEY.md §4: the performance
-path mirroring the reference's IVF_FLAT/nprobe vocabulary,
-2.6/common.py:882-898, workload.py:140-152).
+"""IVF approximate-nearest-neighbor indexes (SURVEY.md §4: the performance
+path mirroring the reference's IVF_FLAT / IVF_SQ8 / BIN_IVF_FLAT / nprobe
+vocabulary, 2.6/common.py:882-898, workload.py:140-152).
+
+One coarse quantizer, three list encodings — the shape of Faiss's
+``IndexIVF``. Every IVF tier is an :class:`IvfModel` whose rows carry a
+``centroid_id``; only what an inverted list stores differs:
+
+  * ``flat`` (IVF_FLAT): the base rows themselves, scored exactly in-list;
+  * ``sq8`` (IVF_SQ8): 8-bit scalar-quantized normalized vectors;
+  * ``bin`` (BIN_IVF_FLAT, IVF_RABITQ): sign bits packed into 64-bit words.
 
 Design (Spark-first, batch-built like any derived table):
   * train: Lloyd's iterations in numpy over a driver-side *sample* of the
     vectors (the standard IVF recipe — Faiss trains on ~max(10k, 50·nlist)
     samples regardless of corpus size, so the 100-TB build collects the same
-    few MB). Deterministic under a fixed seed.
-  * assign: every row gets ``centroid_id`` from a vectorized Pandas UDF —
-    one Arrow batch × one BLAS matmul per partition chunk; no MLlib/RDD
-    round-trips in the hot path.
-  * at scale the assigned table is *persisted partitioned by centroid_id*
-    (``write_ivf``), so probing prunes file groups instead of filtering rows.
+    few MB). Deterministic under a fixed seed. ``flat`` trains on the raw
+    vectors, ``sq8``/``bin`` on a persisted normalized projection.
+  * assign: :func:`with_centroid_id` in one of two shapes — unrolled
+    straight-line JVM arithmetic for shallow vectors within a cell budget,
+    an Arrow-batched BLAS pandas UDF for everything else.
+  * persist: :func:`write_ivf` partitions the lists by centroid_id and
+    writes a sidecar with the centroids, the encoding and the SQ8 bounds,
+    so :func:`read_ivf` reopens any encoding from its path alone and a
+    probe prunes file groups instead of filtering rows.
   * probe: score the nq query vectors against the tiny centroid table
-    driver-side, pick ``nprobe`` nearest lists per query, then run the exact
-    brute-force ranking only on rows whose centroid_id is probed — the same
-    two-phase top-k as search.py on a pruned scan.
+    driver-side, pick ``nprobe`` nearest lists per query, then rank only the
+    rows whose centroid_id is probed — exactly for ``flat``; for ``sq8`` and
+    ``bin`` approximately on the encoded column, followed by one exact
+    cosine rescore of the top candidates on the float table.
 
 Brute force remains the declared (oracle-checked) semantics; IVF trades
 recall for scan fraction exactly like the reference's nprobe knob.
@@ -36,10 +48,19 @@ from vectordb_testbricks_spark.materialize import shared_persist
 
 @dataclass
 class IvfModel:
-    assigned: DataFrame          # base columns + centroid_id
-    centroids: list[list[float]]  # list index = centroid_id
+    """A coarse quantizer over inverted lists of one ``encoding``.
+    ``assigned`` holds centroid_id plus the list payload: every base column
+    (flat), or id_col with ``_q8`` array<tinyint> (sq8) or ``_bits``
+    array<bigint> (bin). Quantized lists keep ``base``, the float table
+    their exact rescore reads; sq8 also keeps its per-dim bounds."""
+    assigned: DataFrame
+    centroids: list[list[float]]     # list index = centroid_id
     vec_col: str
     id_col: str
+    encoding: str = "flat"           # flat | sq8 | bin
+    base: DataFrame | None = None
+    vmin: list[float] | None = None       # sq8: per-dim lower bound
+    inv_scale: list[float] | None = None  # sq8: per-dim (vmax - vmin) / 255
 
 
 def _train_centroids(sample: np.ndarray, n_lists: int, seed: int,
@@ -71,18 +92,20 @@ def _train_centroids(sample: np.ndarray, n_lists: int, seed: int,
     return cent
 
 
-# n_lists × dim budget for the JVM expression paths. Measured on 1M 16-dim
+# n_lists × dim budget for the unrolled JVM shape. Measured on 1M 16-dim
 # rows (local[32]): 64×16=1024 cells runs 1.8-4s unrolled vs ~9s Arrow/BLAS,
 # but 256×16=4096 cells already loses (17s vs 9s — the expression outgrows
 # janino method limits and falls back to interpreted projection), so the
 # crossover sits near 2k cells.
 _JVM_ASSIGN_MAX_CELLS = 2048
 
-# Add-chain depth budget for the unrolled form: janino compile cost grows
+# Add-chain depth budget for the unrolled shape: janino compile cost grows
 # sharply with expression nesting depth (= dim), not cell count — 4×64
 # (256 cells) costs ~10s of compile and can OOM plan canonicalization,
-# while 64×16 (1024 cells) compiles instantly. Deeper vectors use the
-# compact HOF form instead: interpreted per element, zero compile risk.
+# while 64×16 (1024 cells) compiles instantly. Deeper vectors go to the
+# Arrow/BLAS UDF: on a 4-core host it beat the per-centroid l2_sq HOF
+# form it replaced at 500×64×16 (0.49 vs 1.49 s), 200k×64×16 (2.3 vs
+# 11.9 s) and 200k×128×16 (2.1 vs 18.8 s), with identical assignments.
 _JVM_UNROLL_MAX_DIM = 32
 
 
@@ -92,7 +115,7 @@ def _dist_exprs(xs: list, cent: np.ndarray) -> list:
     columns. No HOF lambdas: aggregate/zip_with are CodegenFallback —
     interpreted per element — which made the old per-centroid l2_sq
     assignment ~8× slower at 1M×64×16. Same expanded form as the BLAS
-    path, so the two paths agree numerically to rounding."""
+    path, so the two shapes agree numerically to rounding."""
     out = []
     for c in cent:
         e = F.lit(float((c * c).sum()))
@@ -102,41 +125,22 @@ def _dist_exprs(xs: list, cent: np.ndarray) -> list:
     return out
 
 
-def _assign_expr_jvm(vec_col: str, cent: np.ndarray):
-    """centroid_id as a pure JVM expression (no Python workers), argmin via
-    array_position(min). Two forms by shape: unrolled expanded-form
-    straight-line arithmetic for shallow vectors (fastest per row), compact
-    per-centroid l2_sq HOFs for deeper ones (see _JVM_UNROLL_MAX_DIM).
-    Prefer :func:`with_centroid_id` where a DataFrame is in hand — it
-    extracts each vector element once instead of once per centroid."""
-    if cent.shape[1] <= _JVM_UNROLL_MAX_DIM:
-        xs = [F.col(vec_col)[i].cast("double") for i in range(cent.shape[1])]
-        dists = F.array(*_dist_exprs(xs, cent))
-    else:
-        from vectordb_testbricks_spark.functions.vector import l2_sq
-        dists = F.array(*[
-            l2_sq(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
-            for c in cent])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def with_centroid_id(df: DataFrame, vec_col: str, cent: np.ndarray,
                      out_col: str = "centroid_id") -> DataFrame:
-    """Append the centroid assignment as ``out_col`` — the DataFrame-level
-    fast path all build/append sites route through. On the JVM path the
-    assignment is two-step: project each vector element to a scalar
-    attribute once, then evaluate the n_lists distances over the
-    attributes. CollapseProject keeps the split (an outer Project that
-    references a non-cheap alias n_lists times is not collapsed), so each
-    element is extracted once instead of once per centroid — measured
-    ~2.3× over the single-expression form at 1M×64×16."""
-    spark = df.sparkSession
-    if cent.shape[0] * cent.shape[1] > _JVM_ASSIGN_MAX_CELLS:
-        return df.withColumn(out_col,
-                             _assign_expr_pandas(vec_col, cent, spark))
-    if cent.shape[1] > _JVM_UNROLL_MAX_DIM:
-        return df.withColumn(out_col, _assign_expr_jvm(vec_col, cent))
+    """Append the centroid assignment as ``out_col`` — the one assignment
+    every build/append site routes through, in two shapes. Vectors deeper
+    than ``_JVM_UNROLL_MAX_DIM`` or past ``_JVM_ASSIGN_MAX_CELLS`` go to
+    the Arrow/BLAS pandas UDF. The rest run unrolled JVM arithmetic in
+    two steps: project each vector element to a scalar attribute once,
+    then evaluate the n_lists distances over the attributes.
+    CollapseProject keeps the split (an outer Project that references a
+    non-cheap alias n_lists times is not collapsed), so each element is
+    extracted once instead of once per centroid — measured ~2.3× over
+    the single-expression form at 1M×64×16."""
     dim = cent.shape[1]
+    if dim > _JVM_UNROLL_MAX_DIM or cent.shape[0] * dim > _JVM_ASSIGN_MAX_CELLS:
+        return df.withColumn(
+            out_col, _assign_expr_pandas(vec_col, cent, df.sparkSession))
     # temp names must not collide with the caller's columns: select('*',
     # alias) would create a duplicate, and the trailing drop would take
     # the caller's column with it. Suffix until the namespace is clear.
@@ -154,8 +158,8 @@ def with_centroid_id(df: DataFrame, vec_col: str, cent: np.ndarray,
 
 
 def _assign_expr_pandas(vec_col: str, cent: np.ndarray, spark):
-    """Arrow-batched BLAS assignment — the path for large n_lists, where a
-    literal-centroid expression would blow up codegen."""
+    """Arrow-batched BLAS assignment — the shape for deep vectors and large
+    n_lists, where a literal-centroid expression would blow up codegen."""
     bc = spark.sparkContext.broadcast(cent)
 
     @F.pandas_udf("int")
@@ -171,33 +175,98 @@ def _assign_expr_pandas(vec_col: str, cent: np.ndarray, spark):
     return assign(F.col(vec_col))
 
 
+def _build(base: DataFrame, vec_col: str, id_col: str, encoding: str,
+           n_lists: int, seed: int, max_iter: int,
+           train_sample: int) -> IvfModel:
+    """Sampled centroid training, then per-row assignment and the list
+    encoding. ``flat`` trains on the raw vectors and its lists are the
+    base rows. ``sq8``/``bin`` train and assign on the L2-normalized
+    projection, persisted first — HOF lambdas are not CSE'd, and feeding
+    an un-materialized normalize into zip_with re-evaluates it per
+    element."""
+    from vectordb_testbricks_spark.functions.vector import (
+        l2_normalize, pack_sign_bits, to_double_array)
+
+    src, col = base, vec_col
+    if encoding != "flat":
+        nv = l2_normalize(to_double_array(F.col(vec_col)))
+        src, col = shared_persist(
+            base.select(id_col, F.col(vec_col), nv.alias("_nv"))), "_nv"
+    rows = src.select(col).sample(0.5, seed=seed).limit(train_sample).collect()
+    if len(rows) < train_sample:  # small table: train on everything
+        rows = src.select(col).limit(train_sample).collect()
+    sample = np.asarray([list(r[col]) for r in rows], dtype=np.float64)
+    cent = _train_centroids(sample, min(n_lists, len(sample)), seed, max_iter)
+    model = IvfModel(with_centroid_id(src, col, cent), cent.tolist(),
+                     vec_col, id_col)
+    if encoding == "flat":
+        return model
+    if encoding == "bin":  # sign bits are scale-invariant: pack the raw column
+        payload = pack_sign_bits(F.col(vec_col)).alias("_bits")
+    else:
+        vmin = sample.min(axis=0)
+        inv = np.maximum((sample.max(axis=0) - vmin) / 255.0, 1e-12)
+        model.vmin, model.inv_scale = vmin.tolist(), inv.tolist()
+        vmin_arr = F.array(*[F.lit(float(v)) for v in vmin])
+        inv_arr = F.array(*[F.lit(float(v)) for v in inv])
+        # q = clamp(round((x - vmin)/inv), 0, 255) - 128, stored as tinyint
+        payload = F.zip_with(
+            F.zip_with(F.col("_nv"), vmin_arr, lambda a, b: a - b),
+            inv_arr,
+            lambda d, s: (F.greatest(F.lit(0.0),
+                                     F.least(F.lit(255.0), F.round(d / s)))
+                          .cast("int") - 128).cast("tinyint")).alias("_q8")
+    model.assigned = model.assigned.select(id_col, "centroid_id", payload)
+    model.encoding, model.base = encoding, base
+    return model
+
+
 def build_ivf(base: DataFrame, vec_col: str, id_col: str,
               n_lists: int = 64, seed: int = 7, max_iter: int = 10,
               train_sample: int = 20_000) -> IvfModel:
-    """Batch-build the IVF index: sampled centroid training, then per-row
-    assignment — JVM codegen for moderate n_lists×dim, Pandas UDF beyond."""
-    rows = (base.select(vec_col).sample(0.5, seed=seed)
-            .limit(train_sample).collect())
-    if len(rows) < train_sample:  # small table: train on everything
-        rows = base.select(vec_col).limit(train_sample).collect()
-    sample = np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
-    cent = _train_centroids(sample, min(n_lists, len(sample)), seed, max_iter)
-
-    assigned = with_centroid_id(base, vec_col, cent)
-    return IvfModel(assigned=assigned, centroids=cent.tolist(),
-                    vec_col=vec_col, id_col=id_col)
+    """IVF_FLAT: inverted lists over the base rows themselves."""
+    return _build(base, vec_col, id_col, "flat", n_lists, seed, max_iter,
+                  train_sample)
 
 
-def _centroids_path(path: str) -> str:
+def build_ivf_sq8(base: DataFrame, vec_col: str, id_col: str,
+                  n_lists: int = 16, seed: int = 7, max_iter: int = 10,
+                  train_sample: int = 20_000) -> IvfModel:
+    """IVF_SQ8: inverted lists over 8-bit scalar-quantized vectors.
+
+    The 100-TB point of SQ8 is scan size: the stored vector column shrinks
+    4× vs float32 (8× vs double), so the probe phase reads a quarter of the
+    bytes — per-dim min/max bounds are trained on the same driver-side
+    sample as the centroids (the Faiss recipe: bounds from ~10-20k samples
+    hold regardless of corpus size). Vectors are L2-normalized *before*
+    quantization, so inner product == cosine."""
+    return _build(base, vec_col, id_col, "sq8", n_lists, seed, max_iter,
+                  train_sample)
+
+
+def build_bin_ivf(base: DataFrame, vec_col: str, id_col: str,
+                  n_lists: int = 16, seed: int = 7, max_iter: int = 10,
+                  train_sample: int = 20_000) -> IvfModel:
+    """BIN_IVF_FLAT: inverted lists over 1-bit sign-packed vectors.
+
+    binary_rerank_search's coarse phase is a *full* packed scan (32× fewer
+    bytes, but every row); the coarse quantizer cuts the hamming phase to
+    nprobe/n_lists of the packed bytes — at 100 TB the difference between
+    ~3 TB and ~3·nprobe/n_lists TB per probe."""
+    return _build(base, vec_col, id_col, "bin", n_lists, seed, max_iter,
+                  train_sample)
+
+
+def _sidecar_path(path: str) -> str:
     return path.rstrip("/") + "_centroids"
 
 
 def write_ivf(model: IvfModel, path: str) -> None:
-    """Persist the assignment partitioned by centroid_id → probing becomes
-    partition pruning on the read path. The trained centroids land beside
-    the data (``<path>_centroids``, a k×dim parquet — tiny) so the
-    persisted index is self-contained: append/read need no in-session
-    model object.
+    """Persist the lists partitioned by centroid_id → probing becomes
+    partition pruning on the read path, and a quantized encoding keeps its
+    1-byte or 1-bit layout on disk. A one-row sidecar beside the data
+    (``<path>_centroids``: encoding, k×dim centroids, SQ8 bounds — tiny)
+    makes the layout self-contained: append/read need no in-session model.
 
     The write repartitions on centroid_id first: without it every input
     task emits one file per list it touches (tasks × n_lists small files
@@ -207,28 +276,27 @@ def write_ivf(model: IvfModel, path: str) -> None:
     model.assigned.repartition(F.col("centroid_id")) \
         .write.mode("overwrite") \
         .partitionBy("centroid_id").parquet(path)
-    sess = model.assigned.sparkSession
-    meta = sess.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.centroids)],
-        "centroid_id int, centroid array<double>")
-    meta.coalesce(1).write.mode("overwrite").parquet(_centroids_path(path))
+    model.assigned.sparkSession.createDataFrame(
+        [(model.encoding, model.centroids, model.vmin, model.inv_scale)],
+        "encoding string, centroids array<array<double>>, "
+        "vmin array<double>, inv_scale array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(_sidecar_path(path))
 
 
-def read_centroids(spark, path: str) -> list[list[float]]:
-    """The persisted centroid table of an IVF layout at ``path``."""
-    rows = (spark.read.parquet(_centroids_path(path))
-            .orderBy("centroid_id").collect())
-    return [list(r["centroid"]) for r in rows]
+def _read_sidecar(spark, path: str):
+    return spark.read.parquet(_sidecar_path(path)).first()
 
 
 def read_ivf(spark, path: str, vec_col: str, id_col: str,
-             centroids: list[list[float]] | None = None) -> IvfModel:
-    """Reload a persisted IVF table; centroids come from the sidecar table
-    written by :func:`write_ivf` unless passed explicitly."""
-    if centroids is None:
-        centroids = read_centroids(spark, path)
-    return IvfModel(assigned=spark.read.parquet(path), centroids=centroids,
-                    vec_col=vec_col, id_col=id_col)
+             base: DataFrame | None = None) -> IvfModel:
+    """Reopen a layout written by :func:`write_ivf` from its path: the
+    sidecar supplies the centroids, the encoding and the SQ8 bounds.
+    ``base`` is the float table a quantized layout's exact rescore reads
+    (flat lists carry their own vectors)."""
+    meta = _read_sidecar(spark, path)
+    return IvfModel(spark.read.parquet(path), meta["centroids"], vec_col,
+                    id_col, meta["encoding"], base, meta["vmin"],
+                    meta["inv_scale"])
 
 
 def append_ivf(new_rows: DataFrame, path: str, vec_col: str,
@@ -239,9 +307,14 @@ def append_ivf(new_rows: DataFrame, path: str, vec_col: str,
     the batch, not the index, which is what keeps a 100-TB IVF fresh while
     a stream ingests (Faiss `add` after `train`, as a parquet append).
     Centroid drift is the trade-off: monitor with :func:`ivf_balance` and
-    retrain (build_ivf + write_ivf) when imbalance crosses a threshold."""
-    cent = np.asarray(read_centroids(new_rows.sparkSession, path),
-                      dtype=np.float64)
+    retrain (build_ivf + write_ivf) when imbalance crosses a threshold.
+    Flat layouts only: a quantized layout's rows are encoded, not float."""
+    meta = _read_sidecar(new_rows.sparkSession, path)
+    if meta["encoding"] != "flat":
+        raise ValueError(
+            f"append_ivf writes float rows; {path} holds "
+            f"{meta['encoding']}-encoded lists. Rebuild and rewrite it.")
+    cent = np.asarray(meta["centroids"], dtype=np.float64)
     (with_centroid_id(new_rows, vec_col, cent)
      .repartition(F.col("centroid_id"))   # small-files guard, as write_ivf
      .write.mode("append").partitionBy("centroid_id").parquet(path))
@@ -261,6 +334,165 @@ def ivf_balance(spark, path: str) -> DataFrame:
         (F.col("n_rows") / F.col("_total")).alias("frac"),
         (F.col("n_rows") / F.col("_mean")).alias("imbalance"))
         .orderBy(F.col("n_rows").desc()))
+
+
+def _nearest_lists(qvec: np.ndarray, centroids: list[list[float]],
+                   nprobe: int) -> list[int]:
+    """Driver-side: nprobe nearest centroids by L2 (tiny)."""
+    c = np.asarray(centroids, dtype=float)
+    d = ((c - qvec) ** 2).sum(axis=1)
+    return [int(i) for i in d.argsort()[:nprobe]]
+
+
+def _query_vectors(queries: DataFrame) -> list[tuple[int, np.ndarray]]:
+    """(query_id, float vector) per query, driver-side — nq is small by
+    contract (reference nq ≤ 100)."""
+    return [(int(r["query_id"]), np.asarray(r["qvec"], dtype=np.float64))
+            for r in queries.collect()]
+
+
+def _pack_query_bits(qv: list[float]) -> list[int]:
+    """Driver-side twin of functions.vector.pack_sign_bits (tested equal):
+    sign bits packed into 32-bit words, bit j of word w = [qv[32w+j] >= 0]."""
+    dim = len(qv)
+    words = []
+    for w in range((dim + 31) // 32):
+        acc = 0
+        for x in reversed(qv[w * 32: w * 32 + 32]):
+            acc = acc * 2 + (1 if x >= 0 else 0)
+        words.append(acc)
+    return words
+
+
+def _query_bits(spark, qv: list[tuple[int, np.ndarray]]) -> DataFrame:
+    return spark.createDataFrame(
+        [(qid, _pack_query_bits(v.tolist())) for qid, v in qv],
+        "query_id int, qbits array<bigint>")
+
+
+def _rerank(approx: DataFrame, asc: bool, rerank_k: int, k: int,
+            base: DataFrame, qv: list[tuple[int, np.ndarray]], vec_col: str,
+            id_col: str) -> DataFrame:
+    """The exact rescore every quantized tier shares: the top ``rerank_k``
+    approximate candidates per query join the float ``base`` by broadcast
+    hash join — no shuffle of the base; at scale, a base laid out bucketed
+    by id turns that scan into pruned file reads — and rank by exact
+    cosine against the float query."""
+    from vectordb_testbricks_spark.functions.vector import cosine_sim
+    from vectordb_testbricks_spark.operators.search import _ranked
+
+    cand = (_ranked(approx, id_col, asc=asc, k=rerank_k)
+            .select("query_id", id_col))
+    qdf = approx.sparkSession.createDataFrame(
+        [(qid, v.tolist()) for qid, v in qv],
+        "query_id int, qvec array<double>")
+    rescored = (base.join(F.broadcast(cand), id_col)
+                .join(F.broadcast(qdf), "query_id")
+                .select("query_id", id_col,
+                        cosine_sim(F.col(vec_col), F.col("qvec"))
+                        .alias("score")))
+    return _ranked(rescored, id_col, asc=False, k=k)
+
+
+def ivf_search(model: IvfModel, queries: DataFrame, k: int = 10,
+               nprobe: int = 8, metric: str = "COSINE",
+               rerank_k: int | None = None) -> DataFrame:
+    """Restrict each query to its nprobe nearest inverted lists (a broadcast
+    join on centroid_id — partition pruning on a persisted layout), then
+    rank within them by the list encoding:
+
+      * ``flat``: exact ``metric`` score, same plan shape as knn_search;
+      * ``sq8``: approximate IP on the quantized column. Dequantization
+        folds into the *query* side: with stored
+        q_i = round((x_i - vmin_i)/inv_i) - 128,
+        IP(x̂, q⃗) = Σ q_i·(inv_i·q⃗_i) + Σ (vmin_i + 128·inv_i)·q⃗_i — a
+        plain dot against a per-query reweighted vector plus a per-query
+        constant, both driver-side, so the stored side is the same codegen
+        dot product as the float path over 1-byte elements;
+      * ``bin``: packed hamming (popcount(xor)), ascending. With
+        metric="HAMMING" (the canonical BIN_IVF_FLAT pairing for binary
+        vectors) that is the declared distance and the result.
+
+    sq8/bin (COSINE) then exact-rescore the top ``rerank_k`` candidates
+    (:func:`_rerank`). Quantized lists trained on normalized vectors, so
+    their queries are normalized before the centroid distance."""
+    from vectordb_testbricks_spark.functions.vector import dot, hamming_packed
+    from vectordb_testbricks_spark.operators.search import _ranked, knn_score
+
+    spark, enc, id_col = queries.sparkSession, model.encoding, model.id_col
+    qv = _query_vectors(queries)
+    qn = qv if enc == "flat" else [
+        (qid, v / max(float(np.linalg.norm(v)), 1e-30)) for qid, v in qv]
+    probe_df = spark.createDataFrame(
+        [(qid, c) for qid, v in qn
+         for c in _nearest_lists(v, model.centroids, nprobe)],
+        "query_id int, centroid_id int")
+    pruned = model.assigned.join(F.broadcast(probe_df), "centroid_id")
+    if enc == "flat":
+        score, asc = knn_score(spark, metric, model.vec_col)
+        scored = (pruned.join(F.broadcast(queries.select("query_id", "qvec")),
+                              "query_id")
+                  .select("query_id", id_col, score.alias("score")))
+        return _ranked(scored, id_col, asc, k)
+    metric = metric.upper()
+    served = ("COSINE", "HAMMING") if enc == "bin" else ("COSINE",)
+    if metric not in served:
+        raise ValueError(f"{enc} IVF lists serve {' or '.join(served)}; "
+                         f"got metric={metric!r}")
+    if enc == "sq8":
+        vmin, inv = np.asarray(model.vmin), np.asarray(model.inv_scale)
+        qdf = spark.createDataFrame(
+            [(qid, (inv * v).tolist(), float(((vmin + 128.0 * inv) * v).sum()))
+             for qid, v in qn], "query_id int, w array<double>, c double")
+        approx_score, asc = dot(F.col("_q8"), F.col("w")) + F.col("c"), False
+        rerank_k = rerank_k or max(4 * k, 32)
+    else:
+        qdf = _query_bits(spark, qv)
+        approx_score = hamming_packed(F.col("_bits"), F.col("qbits"))
+        asc, rerank_k = True, rerank_k or max(8 * k, 64)
+    approx = (pruned.join(F.broadcast(qdf), "query_id")
+              .select("query_id", id_col, approx_score.alias("score")))
+    if metric == "HAMMING":
+        return _ranked(approx, id_col, asc=True, k=k)
+    if model.base is None:
+        raise ValueError("a quantized IVF layout rescores on its float base "
+                         "table: pass base= to read_ivf")
+    return _rerank(approx, asc, rerank_k, k, model.base, qv, model.vec_col,
+                   id_col)
+
+
+def binary_rerank_search(base: DataFrame, queries: DataFrame, vec_col: str,
+                         id_col: str, k: int = 10,
+                         rerank_k: int | None = None,
+                         metric: str = "COSINE") -> DataFrame:
+    """1-bit quantized search with exact rescore — the IVF_RABITQ /
+    BIN_IVF_FLAT analogue without a coarse quantizer (reference index
+    vocabulary 2.6/common.py:882-898; RaBitQ brick mc_create_rabitq_mmap.py).
+
+    Candidate generation scans sign-bit-packed vectors (32× smaller than
+    float32 — at 100 TB the candidate scan reads ~3 TB) ranked by packed
+    hamming distance (popcount(xor), 64 dims per integer op), then the top
+    ``rerank_k`` candidates get the IVF tiers' exact rescore. Monotone
+    cosine ↔ hamming correlation on normalized data makes sign-bit hamming
+    a sound coarse ranker; the rescore restores exact ordering within the
+    candidate set.
+    """
+    from vectordb_testbricks_spark.functions.vector import (
+        hamming_packed, pack_sign_bits)
+    from vectordb_testbricks_spark.operators.search import _ranked
+
+    qv = _query_vectors(queries)
+    packed = base.select(id_col, pack_sign_bits(F.col(vec_col)).alias("_bits"))
+    approx = (packed.crossJoin(F.broadcast(_query_bits(queries.sparkSession,
+                                                       qv)))
+              .select("query_id", id_col,
+                      hamming_packed(F.col("_bits"), F.col("qbits"))
+                      .alias("score")))
+    if metric.upper() == "HAMMING":
+        # binary-vector semantics: hamming IS the declared distance
+        return _ranked(approx, id_col, asc=True, k=k)
+    return _rerank(approx, True, rerank_k or max(8 * k, 64), k, base, qv,
+                   vec_col, id_col)
 
 
 @dataclass
@@ -403,313 +635,11 @@ def lsh_search(indexed: DataFrame, queries: DataFrame, id_col: str,
 
 
 @dataclass
-class Sq8Model:
-    quantized: DataFrame           # id_col, centroid_id, _q8 array<tinyint>
-    vmin: list[float]              # per-dim lower quantization bound
-    inv_scale: list[float]         # per-dim (vmax - vmin) / 255
-    centroids: list[list[float]]   # trained on *normalized* vectors
-    base: DataFrame                # original float table (exact rescore side)
-    vec_col: str
-    id_col: str
-
-
-def build_ivf_sq8(base: DataFrame, vec_col: str, id_col: str,
-                  n_lists: int = 16, seed: int = 7, max_iter: int = 10,
-                  train_sample: int = 20_000) -> Sq8Model:
-    """IVF_SQ8 (reference index vocabulary, 2.6/common.py:882-898): IVF
-    centroid lists over 8-bit scalar-quantized vectors.
-
-    The 100-TB point of SQ8 is scan size: the stored vector column shrinks
-    4× vs float32 (8× vs double), so the probe phase reads a quarter of the
-    bytes — per-dim min/max bounds are trained on the same driver-side
-    sample as the centroids (the Faiss recipe: bounds from ~10-20k samples
-    hold regardless of corpus size).
-
-    Vectors are L2-normalized *before* quantization, so inner product ==
-    cosine and one quantization serves both metrics. The normalized
-    projection is persisted first — HOF lambdas are not CSE'd, and feeding
-    an un-materialized normalize into zip_with re-evaluates it per element.
-    """
-    from vectordb_testbricks_spark.functions.vector import (
-        l2_normalize, to_double_array)
-
-    nv = l2_normalize(to_double_array(F.col(vec_col)))
-    x = shared_persist(base.select(id_col, nv.alias("_nv")))
-
-    rows = (x.select("_nv").sample(0.5, seed=seed)
-            .limit(train_sample).collect())
-    if len(rows) < train_sample:
-        rows = x.select("_nv").limit(train_sample).collect()
-    sample = np.asarray([list(r["_nv"]) for r in rows], dtype=np.float64)
-    cent = _train_centroids(sample, min(n_lists, len(sample)), seed, max_iter)
-    vmin = sample.min(axis=0)
-    inv = np.maximum((sample.max(axis=0) - vmin) / 255.0, 1e-12)
-
-    vmin_arr = F.array(*[F.lit(float(v)) for v in vmin])
-    inv_arr = F.array(*[F.lit(float(v)) for v in inv])
-    # q = clamp(round((x - vmin)/inv), 0, 255) - 128, stored as tinyint
-    q8 = F.zip_with(
-        F.zip_with(F.col("_nv"), vmin_arr, lambda a, b: a - b),
-        inv_arr,
-        lambda d, s: (F.greatest(F.lit(0.0),
-                                 F.least(F.lit(255.0), F.round(d / s)))
-                      .cast("int") - 128).cast("tinyint"))
-    quantized = (with_centroid_id(x, "_nv", cent)
-                 .select(id_col, "centroid_id", q8.alias("_q8")))
-    return Sq8Model(quantized=quantized, vmin=[float(v) for v in vmin],
-                    inv_scale=[float(v) for v in inv],
-                    centroids=cent.tolist(), base=base,
-                    vec_col=vec_col, id_col=id_col)
-
-
-def write_sq8(model: Sq8Model, path: str) -> None:
-    """Persist the quantized table partitioned by centroid_id — probing
-    prunes file groups on the read path, and the stored bytes are the
-    1-byte-per-dim layout (the scan-size win survives the round-trip).
-    Clustered on centroid_id before the write, same small-files rationale
-    as :func:`write_ivf`."""
-    model.quantized.repartition(F.col("centroid_id")) \
-        .write.mode("overwrite") \
-        .partitionBy("centroid_id").parquet(path)
-
-
-def read_sq8(spark, path: str, model_meta: Sq8Model) -> Sq8Model:
-    """Reload a persisted SQ8 table; bounds/centroids travel separately
-    (tiny driver-side metadata, like read_ivf)."""
-    return Sq8Model(quantized=spark.read.parquet(path),
-                    vmin=model_meta.vmin, inv_scale=model_meta.inv_scale,
-                    centroids=model_meta.centroids, base=model_meta.base,
-                    vec_col=model_meta.vec_col, id_col=model_meta.id_col)
-
-
-def ivf_sq8_search(model: Sq8Model, queries: DataFrame, k: int = 10,
-                   nprobe: int = 8, rerank_k: int | None = None) -> DataFrame:
-    """Probe nprobe lists, rank candidates on the quantized column, then
-    exact-rescore the top ``rerank_k`` on the original float vectors.
-
-    The quantized approximate score folds dequantization into the *query*
-    side: with stored q_i = round((x_i - vmin_i)/inv_i) - 128,
-    IP(x̂, q⃗) = Σ q_i·(inv_i·q⃗_i) + Σ (vmin_i + 128·inv_i)·q⃗_i — a plain
-    dot against a per-query reweighted vector plus a per-query constant,
-    both computed driver-side. The stored-side expression is therefore the
-    same codegen dot product as the float path, but over 1-byte elements.
-
-    Rescore joins the nq×rerank_k candidate set back to the float table by
-    broadcast hash join — no shuffle of the base; at scale, a base laid out
-    bucketed by id turns that scan into pruned file reads.
-    """
-    from vectordb_testbricks_spark.functions.vector import cosine_sim, dot
-    from vectordb_testbricks_spark.operators.search import _ranked
-
-    rerank_k = rerank_k or max(4 * k, 32)
-    vmin = np.asarray(model.vmin)
-    inv = np.asarray(model.inv_scale)
-    qrows = queries.collect()  # nq small by contract (reference nq ≤ 100)
-    probes, qweights, qfloat = [], [], []
-    for r in qrows:
-        qid = int(r["query_id"])
-        qv = np.asarray(list(r["qvec"]), dtype=np.float64)
-        qn = qv / max(float(np.linalg.norm(qv)), 1e-30)
-        probes += [(qid, int(c))
-                   for c in _nearest_lists(qn.tolist(), model.centroids,
-                                           nprobe)]
-        qweights.append((qid, [float(v) for v in inv * qn],
-                         float(((vmin + 128.0 * inv) * qn).sum())))
-        qfloat.append((qid, [float(v) for v in qv]))
-    spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id int, centroid_id int")
-    qw = spark.createDataFrame(
-        qweights, "query_id int, w array<double>, c double")
-
-    pruned = model.quantized.join(F.broadcast(probe_df), "centroid_id")
-    approx = (pruned.join(F.broadcast(qw), "query_id")
-              .select("query_id", model.id_col,
-                      (dot(F.col("_q8"), F.col("w")) + F.col("c"))
-                      .alias("score")))
-    cand = (_ranked(approx, model.id_col, asc=False, k=rerank_k)
-            .select("query_id", model.id_col))
-
-    qn_df = spark.createDataFrame(qfloat, "query_id int, qvec array<double>")
-    rescored = (model.base.join(F.broadcast(cand), model.id_col)
-                .join(F.broadcast(qn_df), "query_id")
-                .select("query_id", model.id_col,
-                        cosine_sim(F.col(model.vec_col), F.col("qvec"))
-                        .alias("score")))
-    return _ranked(rescored, model.id_col, asc=False, k=k)
-
-
-def _pack_query_bits(qv: list[float]) -> list[int]:
-    """Driver-side twin of functions.vector.pack_sign_bits (tested equal):
-    sign bits packed into 32-bit words, bit j of word w = [qv[32w+j] >= 0]."""
-    dim = len(qv)
-    words = []
-    for w in range((dim + 31) // 32):
-        acc = 0
-        for x in reversed(qv[w * 32: w * 32 + 32]):
-            acc = acc * 2 + (1 if x >= 0 else 0)
-        words.append(acc)
-    return words
-
-
-@dataclass
-class BinIvfModel:
-    packed: DataFrame              # id_col, centroid_id, _bits array<bigint>
-    centroids: list[list[float]]   # trained on normalized vectors
-    base: DataFrame                # original float table (exact rescore side)
-    vec_col: str
-    id_col: str
-
-
-def build_bin_ivf(base: DataFrame, vec_col: str, id_col: str,
-                  n_lists: int = 16, seed: int = 7, max_iter: int = 10,
-                  train_sample: int = 20_000) -> BinIvfModel:
-    """BIN_IVF_FLAT (reference index vocabulary, 2.6/common.py:882-898):
-    IVF inverted lists over 1-bit sign-packed vectors.
-
-    binary_rerank_search's coarse phase is a *full* packed scan (32× fewer
-    bytes, but every row); this composes it with the IVF coarse quantizer
-    so the hamming phase reads only nprobe/n_lists of the packed bytes —
-    at 100 TB that is the difference between ~3 TB and ~3·nprobe/n_lists TB
-    per probe. Centroids are trained on normalized vectors (sign bits are
-    scale-invariant, so packing reads the raw float column)."""
-    from vectordb_testbricks_spark.functions.vector import (
-        l2_normalize, pack_sign_bits, to_double_array)
-
-    nv = l2_normalize(to_double_array(F.col(vec_col)))
-    x = shared_persist(base.select(id_col, F.col(vec_col), nv.alias("_nv")))
-    rows = (x.select("_nv").sample(0.5, seed=seed)
-            .limit(train_sample).collect())
-    if len(rows) < train_sample:
-        rows = x.select("_nv").limit(train_sample).collect()
-    sample = np.asarray([list(r["_nv"]) for r in rows], dtype=np.float64)
-    cent = _train_centroids(sample, min(n_lists, len(sample)), seed, max_iter)
-
-    packed = (with_centroid_id(x, "_nv", cent)
-              .select(id_col, "centroid_id",
-                      pack_sign_bits(F.col(vec_col)).alias("_bits")))
-    return BinIvfModel(packed=packed, centroids=cent.tolist(), base=base,
-                       vec_col=vec_col, id_col=id_col)
-
-
-def write_bin_ivf(model: BinIvfModel, path: str) -> None:
-    """Persist packed lists partitioned by centroid_id — probes prune file
-    groups AND read the 1-bit layout (both scan savings survive)."""
-    model.packed.repartition(F.col("centroid_id")) \
-        .write.mode("overwrite") \
-        .partitionBy("centroid_id").parquet(path)
-
-
-def read_bin_ivf(spark, path: str, model_meta: BinIvfModel) -> BinIvfModel:
-    return BinIvfModel(packed=spark.read.parquet(path),
-                       centroids=model_meta.centroids, base=model_meta.base,
-                       vec_col=model_meta.vec_col, id_col=model_meta.id_col)
-
-
-def bin_ivf_search(model: BinIvfModel, queries: DataFrame, k: int = 10,
-                   nprobe: int = 8, rerank_k: int | None = None,
-                   metric: str = "COSINE") -> DataFrame:
-    """Probe nprobe lists, hamming-rank the packed bits within them, exact
-    cosine rescore of the top rerank_k on the float column (broadcast join,
-    no base shuffle) — same two-phase shape as the SQ8 path.
-
-    metric="HAMMING" (the canonical BIN_IVF_FLAT pairing for binary
-    vectors) skips the cosine rescore: packed hamming IS the declared
-    distance, ranked ascending, score = hamming."""
-    from vectordb_testbricks_spark.functions.vector import (
-        cosine_sim, hamming_packed)
-    from vectordb_testbricks_spark.operators.search import _ranked
-
-    rerank_k = rerank_k or max(8 * k, 64)
-    qrows = queries.collect()  # nq small by contract (reference nq ≤ 100)
-    probes, qmeta = [], []
-    for r in qrows:
-        qid = int(r["query_id"])
-        qv = np.asarray(list(r["qvec"]), dtype=np.float64)
-        qn = qv / max(float(np.linalg.norm(qv)), 1e-30)
-        probes += [(qid, int(c))
-                   for c in _nearest_lists(qn.tolist(), model.centroids,
-                                           nprobe)]
-        qmeta.append((qid, _pack_query_bits([float(x) for x in qv]),
-                      [float(x) for x in qv]))
-    spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id int, centroid_id int")
-    qdf = spark.createDataFrame(
-        qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
-
-    pruned = model.packed.join(F.broadcast(probe_df), "centroid_id")
-    approx = (pruned.join(F.broadcast(qdf.select("query_id", "qbits")),
-                          "query_id")
-              .select("query_id", model.id_col,
-                      hamming_packed(F.col("_bits"), F.col("qbits"))
-                      .alias("score")))
-    if metric.upper() == "HAMMING":
-        return _ranked(approx, model.id_col, asc=True, k=k)
-    cand = (_ranked(approx, model.id_col, asc=True, k=rerank_k)
-            .select("query_id", model.id_col))
-    rescored = (model.base.join(F.broadcast(cand), model.id_col)
-                .join(F.broadcast(qdf.select("query_id", "qvec")),
-                      "query_id")
-                .select("query_id", model.id_col,
-                        cosine_sim(F.col(model.vec_col), F.col("qvec"))
-                        .alias("score")))
-    return _ranked(rescored, model.id_col, asc=False, k=k)
-
-
-def binary_rerank_search(base: DataFrame, queries: DataFrame, vec_col: str,
-                         id_col: str, k: int = 10,
-                         rerank_k: int | None = None,
-                         metric: str = "COSINE") -> DataFrame:
-    """1-bit quantized search with exact rescore — the IVF_RABITQ /
-    BIN_IVF_FLAT analogue (reference index vocabulary 2.6/common.py:882-898;
-    RaBitQ brick mc_create_rabitq_mmap.py).
-
-    Candidate generation scans sign-bit-packed vectors (32× smaller than
-    float32 — at 100 TB the candidate scan reads ~3 TB) ranked by packed
-    hamming distance (popcount(xor), 64 dims per integer op), then the top
-    ``rerank_k`` candidates are exact-rescored on the float column via
-    broadcast join, exactly like the SQ8 path. Monotone cosine ↔ hamming
-    correlation on normalized data makes sign-bit hamming a sound coarse
-    ranker; the rescore restores exact ordering within the candidate set.
-    """
-    from vectordb_testbricks_spark.functions.vector import (
-        cosine_sim, hamming_packed, pack_sign_bits)
-    from vectordb_testbricks_spark.operators.search import _ranked
-
-    rerank_k = rerank_k or max(8 * k, 64)
-    packed = base.select(id_col, pack_sign_bits(F.col(vec_col)).alias("_bits"))
-
-    qrows = queries.collect()
-    qmeta = []
-    for r in qrows:
-        qv = [float(x) for x in r["qvec"]]
-        qmeta.append((int(r["query_id"]), _pack_query_bits(qv), qv))
-    spark = queries.sparkSession
-    qdf = spark.createDataFrame(
-        qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
-
-    approx = (packed.crossJoin(F.broadcast(qdf.select("query_id", "qbits")))
-              .select("query_id", id_col,
-                      hamming_packed(F.col("_bits"), F.col("qbits"))
-                      .alias("score")))
-    if metric.upper() == "HAMMING":
-        # binary-vector semantics: hamming IS the declared distance
-        return _ranked(approx, id_col, asc=True, k=k)
-    cand = (_ranked(approx, id_col, asc=True, k=rerank_k)
-            .select("query_id", id_col))
-    rescored = (base.join(F.broadcast(cand), id_col)
-                .join(F.broadcast(qdf.select("query_id", "qvec")), "query_id")
-                .select("query_id", id_col,
-                        cosine_sim(F.col(vec_col), F.col("qvec"))
-                        .alias("score")))
-    return _ranked(rescored, id_col, asc=False, k=k)
-
-
-@dataclass
 class AnnIndex:
     """A declared IndexSpec realized as a physical ANN structure + default
     search params — the engine-side twin of the reference's
     (index_type, params) vocabulary (2.6/common.py:882-898)."""
-    kind: str                       # flat | ivf | sq8 | bin_ivf | bin_rerank
+    kind: str                       # flat | ivf | bin_rerank | sparse_inv
     model: object | None
     base: DataFrame
     vec_col: str
@@ -727,17 +657,8 @@ class AnnIndex:
             return knn_search(self.base, queries, self.vec_col, self.id_col,
                               metric=self.metric, k=k)
         if self.kind == "ivf":
-            return ivf_search(self.model, queries, k=k,
-                              nprobe=p["nprobe"], metric=self.metric)
-        if self.kind == "sq8":
-            return ivf_sq8_search(self.model, queries, k=k,
-                                  nprobe=p["nprobe"],
-                                  rerank_k=p.get("rerank_k"))
-        if self.kind == "bin_ivf":
-            return bin_ivf_search(self.model, queries, k=k,
-                                  nprobe=p["nprobe"],
-                                  rerank_k=p.get("rerank_k"),
-                                  metric=self.metric)
+            return ivf_search(self.model, queries, k=k, nprobe=p["nprobe"],
+                              metric=self.metric, rerank_k=p.get("rerank_k"))
         if self.kind == "bin_rerank":
             return binary_rerank_search(self.base, queries, self.vec_col,
                                         self.id_col, k=k,
@@ -762,6 +683,17 @@ class AnnIndex:
                                  F.col("query_id") + 1))
             return hits
         raise ValueError(f"unknown index kind {self.kind!r}")
+
+
+# declared IVF-family index type → the build of its list encoding.
+# IVF_RABITQ's 1-bit quantization serves through the nprobe-pruned bin
+# lists — the scale-safe binary default: the coarse phase reads
+# nprobe/n_lists of the (already 32× compressed) packed bits instead of
+# all of them. binary_rerank_search's full coarse scan stays available
+# as the explicit full-corpus rescore primitive only.
+_IVF_BUILDS = {"IVF_FLAT": build_ivf, "AUTOINDEX": build_ivf,
+               "IVF_SQ8": build_ivf_sq8, "BIN_IVF_FLAT": build_bin_ivf,
+               "IVF_RABITQ": build_bin_ivf}
 
 
 def build_from_index_spec(base: DataFrame, id_col: str, index,
@@ -800,33 +732,11 @@ def build_from_index_spec(base: DataFrame, id_col: str, index,
 
     if t == "FLAT":
         return AnnIndex("flat", None, base, vec_col, id_col, metric, {})
-    if t in ("IVF_FLAT", "AUTOINDEX"):
+    if t in _IVF_BUILDS:
         n_lists = int(params.get("nlist", 64))
-        model = build_ivf(base, vec_col, id_col, n_lists=n_lists, seed=seed)
+        model = _IVF_BUILDS[t](base, vec_col, id_col, n_lists=n_lists,
+                               seed=seed)
         return AnnIndex("ivf", model, base, vec_col, id_col, metric,
-                        {"nprobe": max(1, n_lists // 8)})
-    if t == "IVF_SQ8":
-        n_lists = int(params.get("nlist", 64))
-        model = build_ivf_sq8(base, vec_col, id_col, n_lists=n_lists,
-                              seed=seed)
-        return AnnIndex("sq8", model, base, vec_col, id_col, metric,
-                        {"nprobe": max(1, n_lists // 8)})
-    if t == "BIN_IVF_FLAT":
-        n_lists = int(params.get("nlist", 64))
-        model = build_bin_ivf(base, vec_col, id_col, n_lists=n_lists,
-                              seed=seed)
-        return AnnIndex("bin_ivf", model, base, vec_col, id_col, metric,
-                        {"nprobe": max(1, n_lists // 8)})
-    if t == "IVF_RABITQ":
-        # 1-bit quantization serves through the nprobe-pruned BIN_IVF
-        # structure — the scale-safe binary default: the coarse phase reads
-        # nprobe/n_lists of the (already 32× compressed) packed bits instead
-        # of all of them. binary_rerank_search's full coarse scan stays
-        # available as the explicit full-corpus rescore primitive only.
-        n_lists = int(params.get("nlist", 64))
-        model = build_bin_ivf(base, vec_col, id_col, n_lists=n_lists,
-                              seed=seed)
-        return AnnIndex("bin_ivf", model, base, vec_col, id_col, metric,
                         {"nprobe": max(1, n_lists // 8),
                          "rerank_k": int(params.get("refine_k", 0)) or None})
     if t == "SPARSE_INVERTED_INDEX":
@@ -852,32 +762,3 @@ def build_from_index_spec(base: DataFrame, id_col: str, index,
         return AnnIndex("ivf", model, base, vec_col, id_col, metric,
                         {"nprobe": nprobe})
     raise ValueError(f"unsupported vector index type {t!r}")
-
-
-def _nearest_lists(qvec: list[float], centroids: list[list[float]],
-                   nprobe: int) -> list[int]:
-    """Driver-side: nprobe nearest centroids by L2 (tiny)."""
-    c = np.asarray(centroids, dtype=float)
-    q = np.asarray(qvec, dtype=float)
-    d = ((c - q) ** 2).sum(axis=1)
-    return [int(i) for i in d.argsort()[:nprobe]]
-
-
-def ivf_search(model: IvfModel, queries: DataFrame, k: int = 10,
-               nprobe: int = 8, metric: str = "COSINE") -> DataFrame:
-    """Probe: restrict each query to its nprobe nearest inverted lists, then
-    exact-rank within the pruned subset (same plan shape as knn_search)."""
-    from vectordb_testbricks_spark.operators.search import _ranked, knn_score
-
-    qrows = queries.collect()  # nq is small by contract (reference nq ≤ 100)
-    probe = [(int(r["query_id"]), int(c))
-             for r in qrows
-             for c in _nearest_lists(list(r["qvec"]), model.centroids, nprobe)]
-    spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probe, "query_id int, centroid_id int")
-    pruned = model.assigned.join(F.broadcast(probe_df), "centroid_id")
-    q = queries.select("query_id", "qvec")
-    score, asc = knn_score(spark, metric, model.vec_col)
-    scored = (pruned.join(F.broadcast(q), "query_id")
-              .select("query_id", model.id_col, score.alias("score")))
-    return _ranked(scored, model.id_col, asc, k)
