@@ -1638,6 +1638,10 @@ def test_prepare_search_pool_prepared_plans_match_adhoc(spark, tables):
 #: query values whose exact transfer matters: a negative zero, a
 #: subnormal-range magnitude and one near the double range's top
 _EDGE_VALUES = [-0.0, 1e-300, 1e300]
+#: values a query literal must carry that SQL text of their repr cannot:
+#: NaN, both infinities, the smallest subnormal and the largest double
+_NON_FINITE = [float("nan"), float("inf"), float("-inf"), 5e-324,
+               1.7976931348623157e308]
 
 
 def _rdd_relation(spark, rows, schema):
@@ -1652,21 +1656,40 @@ def _bits(values):
 
 def test_local_query_relation_is_bit_exact(spark):
     """queries_df carries every double bit-for-bit, -0.0 included, and
-    matches the parallelized-list relation row for row."""
+    matches the parallelized-list relation row for row; a one-row
+    query side's literal carries the same bits."""
     from vectordb_testbricks_spark.operators import search
-    vecs = [_EDGE_VALUES + [0.1], [2.5, -1.0, 1e-300, -0.0]]
+    vecs = [_EDGE_VALUES + [0.1], [2.5, -1.0, 1e-300, -0.0],
+            _NON_FINITE + [-0.0]]
     got = search.queries_df(spark, vecs).collect()
-    assert [r.query_id for r in got] == [0, 1]
+    assert [r.query_id for r in got] == [0, 1, 2]
     assert [_bits(r.qvec) for r in got] == [_bits(v) for v in vecs]
     old = _rdd_relation(spark, [(i, v) for i, v in enumerate(vecs)],
                         search.queries_df(spark, vecs).schema).collect()
     assert [_bits(r.qvec) for r in got] == [_bits(r.qvec) for r in old]
+    assert search._single_query(search.queries_df(spark, vecs)) is None
+    for i, v in enumerate(vecs):
+        q = search._single_query(search.local_relation(
+            spark, [(i, v)], "query_id int, qvec array<double>"))
+        lit = spark.range(1).select(q["query_id"].alias("query_id"),
+                                    q["qvec"].alias("qvec")).first()
+        assert lit.query_id == i and _bits(lit.qvec) == _bits(v)
+
+
+def _rows(df):
+    """A result's rows, sorted, with floats by repr (so NaN and -0.0
+    compare equal to themselves)."""
+    return sorted(tuple(repr(v) if isinstance(v, float) else v for v in r)
+                  for r in df.collect())
 
 
 @pytest.mark.parametrize("nq", [1, 4])
 def test_knn_local_query_side_matches_rdd_side(spark, nq):
     """kNN over the local query relation returns the rows, scores and
-    ranks the parallelized-list relation returned, for edge values."""
+    ranks the parallelized-list relation returned, for edge values. At
+    nq=1 the local side is scored as a literal and ranked by a
+    take-ordered limit while the list side is broadcast and windowed, so
+    each non-finite or extreme value must reach both alike."""
     import random
     from vectordb_testbricks_spark.operators.search import (
         knn_search, queries_df)
@@ -1674,16 +1697,19 @@ def test_knn_local_query_side_matches_rdd_side(spark, nq):
     base = spark.createDataFrame(
         [(i, [rnd.uniform(-2, 2) for _ in range(4)]) for i in range(60)],
         "id long, vec array<double>")
-    vecs = [[_EDGE_VALUES[(q + j) % 3] if j < 2 else rnd.uniform(-1, 1)
-             for j in range(4)] for q in range(nq)]
-    local = queries_df(spark, vecs)
-    old = _rdd_relation(spark, [(i, v) for i, v in enumerate(vecs)],
-                        local.schema)
-    for metric in ("IP", "L2"):
-        hits = [sorted(tuple(r) for r in knn_search(
-                    base, q, "vec", "id", metric=metric, k=5).collect())
-                for q in (local, old)]
-        assert hits[0] == hits[1] and len(hits[0]) == 5 * nq, metric
+    batches = [[[_EDGE_VALUES[(q + j) % 3] if j < 2 else rnd.uniform(-1, 1)
+                 for j in range(4)] for q in range(nq)]]
+    if nq == 1:
+        batches += [[[v, 0.5, -0.25, 1.0]] for v in _NON_FINITE]
+    for vecs in batches:
+        local = queries_df(spark, vecs)
+        old = _rdd_relation(spark, [(i, v) for i, v in enumerate(vecs)],
+                            local.schema)
+        for metric in ("IP", "L2", "COSINE", "HAMMING"):
+            hits = [_rows(knn_search(base, q, "vec", "id", metric=metric,
+                                     k=5)) for q in (local, old)]
+            assert hits[0] == hits[1] and len(hits[0]) == 5 * nq, \
+                (metric, vecs)
 
 
 def test_bm25_and_sparse_local_query_sides_match_rdd_sides(spark,
@@ -1717,6 +1743,120 @@ def test_bm25_and_sparse_local_query_sides_match_rdd_sides(spark,
     monkeypatch.setattr(search, "local_relation", _rdd_relation)
     assert run() == new
     assert all(new), new
+
+
+# ------------------------------ one query alone vs inside a batch
+
+
+def _hybrid_corpus(spark):
+    """50 rows of (pk, cat, vec, text) with few distinct vector values,
+    so scores tie often, plus a stored NULL vector (pk 50), a zero-norm
+    vector (pk 51, NULL under COSINE) and two copies of pk 7's vector."""
+    import random
+    rnd = random.Random(5)
+    vecs = [[rnd.choice([-1.0, -0.5, 0.0, 0.5, 1.0]) for _ in range(4)]
+            for _ in range(50)]
+    rows = [(i, i % 3, v, f"w{i % 7} w{i % 3} spark w{i % 11}")
+            for i, v in enumerate(vecs)]
+    rows += [(50, 0, None, "w1 w2"), (51, 1, [0.0] * 4, "spark"),
+             (52, 2, vecs[7], "w5 w5"), (53, 0, vecs[7], "w0")]
+    return spark.createDataFrame(
+        rows, "pk long, cat int, vec array<double>, text string")
+
+
+def _alone_and_in_batch(search, first, second):
+    """(rows of ``search([first])``, rows of query 0 in
+    ``search([first, second])``)."""
+    return (_rows(search([first])),
+            _rows(search([first, second]).filter(F.col("query_id") == 0)))
+
+
+@pytest.mark.parametrize("metric", ["L2", "IP", "COSINE", "HAMMING"])
+def test_knn_one_query_matches_its_rows_in_a_batch(spark, metric):
+    """One query (a literal, top-k by a take-ordered limit) gets exactly
+    the rows it gets as query 0 of a two-query batch (a broadcast query
+    side, top-k by a window): with a filter, a stored NULL vector, a
+    zero-norm vector, k above the filtered row count, ties broken by pk,
+    and group_by, which ranks through its windows at any nq."""
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    base = _hybrid_corpus(spark)
+    for kw in ({"k": 5}, {"k": 30, "flt": "cat == 1"},
+               {"k": 3, "group_by": "cat", "group_size": 2}):
+        def search(qs):
+            return knn_search(base, queries_df(spark, qs), "vec", "pk",
+                              metric=metric, **kw)
+        alone, in_batch = _alone_and_in_batch(
+            search, [0.5, -1.0, 0.25, 1.0], [1.0, 1.0, -1.0, 0.0])
+        assert alone and alone == in_batch, (kw, alone, in_batch)
+        plan = search([[1.0] * 4])._jdf.queryExecution().executedPlan()
+        assert ("TakeOrderedAndProject" in plan.toString()) \
+            == ("group_by" not in kw)
+    # k is above the 18 filtered rows; COSINE drops the zero-norm row
+    filtered = _rows(knn_search(base, queries_df(spark, [[1.0] * 4]), "vec",
+                                "pk", metric=metric, k=30, flt="cat == 1"))
+    assert len(filtered) == (17 if metric == "COSINE" else 18)
+
+
+def test_bm25_one_text_matches_its_rows_in_a_batch(spark, tmp_path):
+    """One BM25 text (literal terms, take-ordered top-k) gets exactly the
+    rows it gets as text 0 of a two-text batch: a repeated query term, a
+    text that analyzes to zero terms, and a filter through
+    mgr.bm25_search."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
+    from vectordb_testbricks_spark.schema import (
+        FieldSpec, FunctionSpec, SchemaSpec)
+    corpus = _hybrid_corpus(spark)
+    texts = ["spark w1", "w2 w5 w2 w2", "!!!"]
+    for text in texts:
+        alone, in_batch = _alone_and_in_batch(
+            lambda ts: bm25_search_many(corpus, ts, "pk", "text", k=4),
+            text, "w3 spark")
+        assert alone == in_batch and bool(alone) == (text != "!!!"), text
+    mgr = CollectionManager(spark, str(tmp_path / "wh"))
+    mgr.create_collection(SchemaSpec("c", [
+        FieldSpec("pk", "INT64", primary=True),
+        FieldSpec("cat", "INT64"),
+        FieldSpec("text", "VARCHAR", max_length=64, enable_analyzer=True),
+        FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
+    ], functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
+    mgr.insert("c", corpus.select(
+        "pk", F.col("cat").cast("long").alias("cat"), "text",
+        F.lit(None).cast("map<int,float>").alias("sparse_bm25")))
+    for text in texts:
+        alone, in_batch = _alone_and_in_batch(
+            lambda ts: mgr.bm25_search("c", ts, k=4, flt="cat != 2"),
+            text, "w3 spark")
+        assert alone == in_batch and bool(alone) == (text != "!!!"), text
+
+
+def test_fusion_of_one_query_matches_its_rows_in_a_batch(spark):
+    """rrf_fuse and weighted_fuse (with offset) over one query's branches
+    return exactly the rows they return for that query inside a
+    two-query batch."""
+    from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
+    from vectordb_testbricks_spark.operators.fusion import (
+        rrf_fuse, weighted_fuse)
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    corpus = _hybrid_corpus(spark)
+    queries = [([0.5, -1.0, 0.25, 1.0], "spark w1 w1"),
+               ([1.0, 1.0, -1.0, 0.0], "w3")]
+
+    def branches(n):
+        qs = queries[:n]
+        return [knn_search(corpus, queries_df(spark, [v for v, _ in qs]),
+                           "vec", "pk", metric="COSINE", k=8),
+                bm25_search_many(corpus, [t for _, t in qs], "pk", "text",
+                                 k=8)]
+
+    for fuse in (lambda bs: rrf_fuse(bs, "pk", k=5, offset=2),
+                 lambda bs: weighted_fuse(bs, [0.6, 0.4], "pk", k=5,
+                                          offset=1)):
+        alone = _rows(fuse(branches(1)))
+        in_batch = _rows(fuse(branches(2)).filter(F.col("query_id") == 0))
+        assert len(alone) == 5 and alone == in_batch, (alone, in_batch)
 
 
 def test_lsh_candidate_regimes_identical_on_duplicate_ids(spark,

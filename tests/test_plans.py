@@ -94,10 +94,20 @@ def test_tf_table_is_shuffle_free(tables):
 
 
 def test_bm25_broadcasts_stats_and_query_terms(tables):
-    from vectordb_testbricks_spark.operators.bm25 import bm25_search
+    """A batch of texts broadcasts its query-term relation next to the
+    stats; one text has no query relation at all (its terms are
+    literals)."""
+    from vectordb_testbricks_spark.operators.bm25 import (
+        bm25_search, bm25_search_many)
     docs = tables["documents"].df
-    p = _plan(bm25_search(docs, "spark query join", "doc_id", "text", k=5))
-    assert p.count("BroadcastExchange") >= 2  # stats + qterms
+    p = _plan(bm25_search_many(docs, ["spark query join", "data engine"],
+                               "doc_id", "text", k=5))
+    assert p.count("BroadcastExchange") >= 3  # totals + stats + qterms
+    assert "LocalTableScan [query_id" in p, p
+    one = _plan(bm25_search(docs, "spark query join", "doc_id", "text",
+                            k=5))
+    assert one.count("BroadcastExchange") == p.count("BroadcastExchange") - 1
+    assert "LocalTableScan" not in one, one
 
 
 def test_bm25_bounded_gate_picks_exchange_regime(tables, monkeypatch):
@@ -109,12 +119,12 @@ def test_bm25_bounded_gate_picks_exchange_regime(tables, monkeypatch):
     shipping the raw posting-match stream at scale would be the real
     regression."""
     from vectordb_testbricks_spark.operators import bm25
-    from vectordb_testbricks_spark.operators.bm25 import bm25_search
+    from vectordb_testbricks_spark.operators.bm25 import bm25_search_many
     docs = tables["documents"].df
+    texts = ["spark query join", "data engine"]   # the gate decides batches
 
     def hash_exchanges():
-        p = _plan(bm25_search(docs, "spark query join", "doc_id", "text",
-                              k=5))
+        p = _plan(bm25_search_many(docs, texts, "doc_id", "text", k=5))
         return [ln for ln in p.splitlines()
                 if "Exchange hashpartitioning" in ln]
 
@@ -132,12 +142,12 @@ def test_bm25_bounded_gate_picks_exchange_regime(tables, monkeypatch):
     assert len(too_big) == len(classic)
 
     # identical rows either way (the regimes differ only in plan shape)
-    b = sorted(map(tuple, bm25_search(docs, "spark query join", "doc_id",
-                                      "text", k=5).collect()))
+    b = sorted(map(tuple, bm25_search_many(docs, texts, "doc_id", "text",
+                                           k=5).collect()))
     monkeypatch.setattr(bm25, "BOUNDED_ONE_EXCHANGE_MAX", 0)
-    a = sorted(map(tuple, bm25_search(docs, "spark query join", "doc_id",
-                                      "text", k=5).collect()))
-    assert a == b and len(a) == 5
+    a = sorted(map(tuple, bm25_search_many(docs, texts, "doc_id", "text",
+                                           k=5).collect()))
+    assert a == b and len(a) == 10
 
 
 def test_ivf_probe_join_broadcasts_probe_list(tables):
@@ -273,26 +283,56 @@ def test_partial_upsert_broadcasts_update_side(tables):
 
 
 def test_single_query_windows_keep_partition_spec(tables):
-    """nq=1 search/fusion reranks must keep query_id in every window's
-    partition spec: a literal query_id gets constant-folded to an empty
-    spec (WindowExec "No Partition Defined" — the whole scored set would
-    funnel through one partition). query_id must always derive from a
-    relation attribute, even when its value is a constant 0."""
+    """Every window over a query batch keeps query_id in its partition
+    spec: a literal query_id gets constant-folded to an empty spec
+    (WindowExec "No Partition Defined" — the whole scored set would
+    funnel through one partition), so in a batch query_id always derives
+    from a relation attribute.
+
+    One query (a one-row local query side, one BM25 text) ranks with no
+    window at all: its top-k is the take-ordered limit of k over the
+    scored stream, with no exchange keyed by query_id and no broadcast
+    query side."""
     import re
-    from vectordb_testbricks_spark.operators.bm25 import bm25_search
+    from vectordb_testbricks_spark.operators.bm25 import (
+        bm25_search, bm25_search_many)
     from vectordb_testbricks_spark.operators.fusion import rrf_fuse
-    from vectordb_testbricks_spark.operators.search import sparse_search
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df, sparse_search, sparse_search_many)
     docs = tables["documents"].df
-    b = bm25_search(docs, "spark query join", "doc_id", "text", k=5)
+    texts = ["spark query join", "data engine"]
+    b = bm25_search_many(docs, texts, "doc_id", "text", k=5)
     sparse = docs.select(
         "doc_id", F.create_map(F.lit("a"), F.lit(1.0)).alias("svec"))
-    s = sparse_search(sparse, {"a": 2.0}, "svec", "doc_id", k=5)
-    fused = rrf_fuse([b, s], "doc_id", k=5)
-    for df in (b, s, fused):
+    s = sparse_search_many(sparse, [{"a": 2.0}, {"a": 1.0}], "svec",
+                           "doc_id", k=5)
+    s1 = sparse_search(sparse, {"a": 2.0}, "svec", "doc_id", k=5)
+    b1 = bm25_search(docs, texts[0], "doc_id", "text", k=5)
+    for df in (b, s, s1, rrf_fuse([b, s], "doc_id", k=5),
+               rrf_fuse([b1, s1], "doc_id", k=5)):
         specs = re.findall(r"windowspecdefinition\([^)]*\)", _plan(df))
         assert specs, "expected at least one window"
         for spec in specs:
             assert "query_id" in spec, f"folded partition spec: {spec}"
+
+    spark = docs.sparkSession
+    emb = tables["embeddings"].df
+    knn1 = knn_search(emb, queries_df(spark, [[0.5] * 64]), "embedding",
+                      "vec_id", metric="COSINE", k=5)
+    knn2 = knn_search(emb, queries_df(spark, [[0.5] * 64, [1.0] * 64]),
+                      "embedding", "vec_id", metric="COSINE", k=5)
+    assert "windowspecdefinition(query_id" in _plan(knn2)
+    assert "LocalTableScan [query_id" in _plan(knn2)
+    for df in (knn1, b1):
+        p = _plan(df)
+        top = [ln for ln in p.splitlines() if "TakeOrderedAndProject" in ln]
+        assert len(top) == 1 and "limit=5," in top[0], p
+        above = p.split("TakeOrderedAndProject")[0]
+        assert "Window" not in p and "Exchange" not in above, p
+        assert "LocalTableScan" not in p, p
+        assert not [ln for ln in p.splitlines()
+                    if "Exchange" in ln and "query_id" in ln], p
+    assert "Exchange" not in _plan(knn1), _plan(knn1)
 
 
 def test_topk15000_plan_is_two_phase(spark):
@@ -538,13 +578,12 @@ def test_topk15000_sustained_plan_shape(spark):
     assert rows == 15000
 
 
-def test_fusion_agg_and_rerank_share_one_exchange(spark):
-    """r12 (guide §2.4): the fused SUM(part) aggregate and the re-rank
-    window are keyed compatibly — hash(query_id) co-locates equal
-    (query_id, id) pairs AND satisfies the window's distribution — so a
-    fusion plan over exchange-free branch inputs must contain exactly ONE
-    Exchange, partitioned by query_id alone. The branch inputs here are
-    local relations, so any extra Exchange would be the fusion's own."""
+def test_fusion_agg_and_rerank_need_no_exchange(spark):
+    """The fused SUM(part) aggregate and the re-rank window read their
+    input in one partition (coalesce(1)): that input is the union of
+    ranked branch results, at most nq × Σ limits rows at any corpus
+    scale, so neither needs an exchange at any nq. The branch inputs here
+    are local relations, so any Exchange would be the fusion's own."""
     from vectordb_testbricks_spark.operators.fusion import rrf_fuse
     b1 = spark.createDataFrame(
         [(0, 10, 0.9, 1), (0, 11, 0.8, 2), (1, 10, 0.7, 1)],
@@ -554,19 +593,20 @@ def test_fusion_agg_and_rerank_share_one_exchange(spark):
         "query_id int, doc_id bigint, score double, rank int")
     fused = rrf_fuse([b1, b2], "doc_id", k=10)
     p = _plan(fused)
-    ex_lines = [l for l in p.splitlines() if "Exchange" in l]
-    assert len(ex_lines) == 1, p
-    assert "query_id" in ex_lines[0], p
-    assert "doc_id" not in ex_lines[0], p
+    assert "Exchange" not in p, p
+    assert "Coalesce 1" in p, p
+    assert sorted((r.query_id, r.doc_id, r.rank) for r in fused.collect()) \
+        == [(0, 10, 2), (0, 11, 1), (1, 10, 1), (1, 12, 2)]
 
 
 def test_loaded_collection_requests_build_without_jobs(spark, tmp_path):
     """Serving a loaded collection launches no Spark job before the
     action: read() returns the handle load() cached (memoized per commit,
     no parquet listing or schema inference per request), and the kNN
-    query side is a driver-local relation (LocalTableScan) instead of a
-    parallelized RDD (Scan ExistingRDD) whose broadcast fans out over
-    every default partition."""
+    query side of one vector is a literal read from its driver-local
+    relation: no broadcast, and no parallelized RDD (Scan ExistingRDD)
+    fanning out over every default partition. The request then runs one
+    Spark job."""
     from vectordb_testbricks_spark.manager import CollectionManager
     from vectordb_testbricks_spark.operators.query import (
         count_star, query_by_pk)
@@ -600,9 +640,11 @@ def test_loaded_collection_requests_build_without_jobs(spark, tmp_path):
         sc._jsc.clearJobGroup()
     assert base.is_cached and base is mgr.read("srv")
     p = _plan(knn)
-    assert "LocalTableScan [query_id" in p, p
-    assert "ExistingRDD" not in p, p
-    assert len(knn.collect()) == 3
+    assert "TakeOrderedAndProject" in p, p
+    assert "LocalTableScan" not in p and "ExistingRDD" not in p, p
+    assert "BroadcastExchange" not in p, p
+    rows, jobs = _with_jobs(spark, "test-loaded-knn-request", knn.collect)
+    assert len(rows) == 3 and len(jobs) == 1, jobs
     assert cnt.collect()[0]["cnt"] == 24
     assert sorted(r.pk for r in pks.collect()) == [3, 7]
 
@@ -690,12 +732,13 @@ def _bm25_rows(mgr, text):
 def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
                                                       monkeypatch, bounded):
     """A warm hybrid request (knn_search + mgr.bm25_search + rrf_fuse) on
-    a loaded FTS collection ranks BM25 from the resident weights: at most
-    5 jobs (the production, bounded regime), only cached/local leaves on
-    the BM25 side,
+    a loaded FTS collection ranks BM25 from the resident weights: 2 jobs
+    (the BM25 aggregate's exchange and the fused result; one text has no
+    regime gate), only cached/local leaves on the BM25 side,
     no SinglePartition exchange (the folded n_docs/avgdl are literals),
     and rows and scores equal to a fresh, unloaded manager's, in both
-    bm25_search_many regimes."""
+    bm25_search_many regimes. A two-text request still takes the regime
+    the gate picks."""
     from vectordb_testbricks_spark.manager import CollectionManager
     from vectordb_testbricks_spark.operators import bm25
     if not bounded:
@@ -711,12 +754,12 @@ def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
 
     (sparse, fused), jobs = _with_jobs(
         spark, f"test-loaded-hybrid-{bounded}", request)
-    # the classic regime's second exchange is one more AQE stage job
-    assert len(jobs) <= (5 if bounded else 6), jobs
+    assert len(jobs) == 2, jobs
     assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
                                      "LocalTableScanExec"}, _plan(sparse)
     assert "SinglePartition" not in _plan(fused), _plan(fused)
-    regime = [l for l in _plan(sparse).splitlines()
+    batch = mgr.bm25_search("hyb", ["gamma alpha alpha", "omega"], k=5)
+    regime = [l for l in _plan(batch).splitlines()
               if "Exchange hashpartitioning" in l]
     assert any("REPARTITION_BY_COL" in l for l in regime) == bounded
 
@@ -728,7 +771,7 @@ def test_loaded_hybrid_request_ranks_resident_weights(spark, tmp_path,
 def test_loaded_collection_stays_resident_across_writes(spark, tmp_path):
     """20 writes on a loaded collection and no re-load: inserts, upserts,
     deletes and one insert by a second manager. After each, a warm
-    hybrid request runs at most 5 jobs with only cached/local leaves on
+    hybrid request runs 2 jobs with only cached/local leaves on
     its BM25 side; its BM25 rows and scores and the visible rows equal a
     fresh manager's; the persisted-RDD count stays at or below the
     loaded baseline, and release() returns it to the pre-load one."""
@@ -764,7 +807,7 @@ def test_loaded_collection_stays_resident_across_writes(spark, tmp_path):
         _hybrid_request(mgr, "omega")[1].collect()   # builds the new commit
         (sparse, rows), jobs = _with_jobs(
             spark, f"test-resident-write-{i}", request)
-        assert len(rows) == 5 and len(jobs) <= 5, (i, jobs)
+        assert len(rows) == 5 and len(jobs) == 2, (i, jobs)
         assert _leaf_classes(sparse) <= {"InMemoryTableScanExec",
                                          "LocalTableScanExec"}, _plan(sparse)
         fresh = CollectionManager(spark, wh)

@@ -639,7 +639,7 @@ class AnnIndex:
     """A declared IndexSpec realized as a physical ANN structure + default
     search params — the engine-side twin of the reference's
     (index_type, params) vocabulary (2.6/common.py:882-898)."""
-    kind: str                       # flat | ivf | bin_rerank | sparse_inv
+    kind: str                       # flat | ivf | sparse_inv
     model: object | None
     base: DataFrame
     vec_col: str
@@ -659,11 +659,6 @@ class AnnIndex:
         if self.kind == "ivf":
             return ivf_search(self.model, queries, k=k, nprobe=p["nprobe"],
                               metric=self.metric, rerank_k=p.get("rerank_k"))
-        if self.kind == "bin_rerank":
-            return binary_rerank_search(self.base, queries, self.vec_col,
-                                        self.id_col, k=k,
-                                        rerank_k=p.get("rerank_k"),
-                                        metric=self.metric)
         if self.kind == "sparse_inv":
             # sparse queries are (query_id, qmap) rows, not dense qvecs;
             # nq is small by contract (reference nq <= 100). The postings

@@ -28,6 +28,8 @@ idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene/Milvus BM25 variant).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -153,12 +155,17 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     are derived in the request plan from ``tf_df``/``stats`` (or from
     ``docs``). Either way one ranking path runs over them.
 
-    query_id is carried as a *relation attribute*, never a literal: a
-    foldable query_id would let Catalyst constant-fold the final top-k
-    window's partition spec away (WindowExec "No Partition Defined"), and
-    the per-query ranking must stay partitioned by query at any nq.
+    One text is one query: its analyzed terms filter the weights as
+    literals, a repeated term contributes one row per occurrence, the
+    per-doc sum is a partial aggregate over one exchange on the id, and
+    the top k is a take-ordered limit (search._ranked) — no query
+    relation, no broadcast, no exchange on query_id. A batch carries
+    query_id as a *relation attribute*, never a literal: a foldable
+    query_id would let Catalyst constant-fold the top-k window's partition
+    spec away (WindowExec "No Partition Defined"), and a batch's ranking
+    must stay partitioned by query.
 
-    Size regime: the corpus is ``docs``' row count as Catalyst
+    Size regime of a batch: the corpus is ``docs``' row count as Catalyst
     estimates it (materialize.estimated_rows), or ``n_docs`` when the
     caller knows it exactly (a loaded collection's folded count). When
     rows × Σ|query term occurrences| ≤ :data:`BOUNDED_ONE_EXCHANGE_MAX`
@@ -166,14 +173,14 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     the matched (query, doc, term) stream — the contrib aggregate is
     re-keyed by ``repartition("query_id")`` so the aggregate's clustered
     distribution on (query_id, id) AND the top-k window's distribution
-    on (query_id) ride ONE exchange instead of two (guide §2.4; the same
-    shape fusion._fuse_sum pins). Dropping map-side partial aggregation
+    on (query_id) ride ONE exchange instead of two (guide §2.4).
+    Dropping map-side partial aggregation
     is what the bound pays for; on an unknown or at-scale corpus the
     classic partial-agg two-exchange plan is kept — there the matched
     stream is the posting-match stream and shipping it raw would be a
     scale regression (r12 "not yet optimized" #3).
     """
-    rows = estimated_rows(docs) if n_docs is None else n_docs
+    corpus = docs
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, docs)
         docs = docs.filter(pred)
@@ -199,16 +206,35 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
         analyzer_kwargs, py_tokenize)
     from vectordb_testbricks_spark.operators import search
     kw = analyzer_kwargs(analyzer)
-    qterm_rows = [(qid, t) for qid, text in enumerate(query_texts)
-                  for t in py_tokenize(text, **kw)]
-    qterms_df = search.local_relation(docs.sparkSession, qterm_rows,
-                                      "query_id int, term string")
-    all_terms = sorted({t for _, t in qterm_rows})
+    qterms = [py_tokenize(text, **kw) for text in query_texts]
+    all_terms = sorted({t for terms in qterms for t in terms})
     # every query analyzed to zero terms: nothing can match (isin with an
     # empty list is invalid, so short-circuit explicitly)
-    pre = (F.col("term").isin(all_terms) if all_terms else F.lit(False))
-    contribs = (weights.filter(pre).join(F.broadcast(qterms_df), "term")
+    weights = weights.filter(
+        F.col("term").isin(all_terms) if all_terms else F.lit(False))
+    if len(qterms) == 1:
+        # one query: its terms are the literals above. A term the query
+        # repeats contributes one row per occurrence, as the join below
+        # emits them, so each doc's sum adds the same values in the same
+        # order
+        contribs = weights.select(id_col, "w")
+        repeats = {t: c for t, c in Counter(qterms[0]).items() if c > 1}
+        if repeats:
+            n = F.lit(1)
+            for t, c in repeats.items():
+                n = F.when(F.col("term") == t, c).otherwise(n)
+            contribs = weights.select(
+                id_col, F.explode(F.array_repeat("w", n)).alias("w"))
+        scored = (contribs.groupBy(id_col).agg(F.sum("w").alias("score"))
+                  .select(F.lit(0).alias("query_id"), id_col, "score"))
+        return search._ranked(scored, id_col, asc=False, k=k, single=True)
+    qterm_rows = [(qid, t) for qid, terms in enumerate(qterms)
+                  for t in terms]
+    qterms_df = search.local_relation(docs.sparkSession, qterm_rows,
+                                      "query_id int, term string")
+    contribs = (weights.join(F.broadcast(qterms_df), "term")
                 .select("query_id", id_col, "w"))
+    rows = estimated_rows(corpus) if n_docs is None else n_docs
     if (rows is not None
             and rows * max(len(qterm_rows), 1) <= BOUNDED_ONE_EXCHANGE_MAX):
         contribs = contribs.repartition("query_id")

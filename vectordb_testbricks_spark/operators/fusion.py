@@ -14,7 +14,8 @@ own filter/limit) fused by a ranker —
 Spark plan: each branch is an independent top-limit ranked DataFrame
 (query_id, id, score, rank); fusion is a unionByName + groupBy(query_id, id)
 aggregate + re-rank window — a pure reduce over nq×Σlimit_b rows, tiny at any
-scale.
+scale, so it runs in one partition with no exchange, for one query or a
+batch.
 """
 
 from __future__ import annotations
@@ -29,16 +30,16 @@ RRF_K = 60
 
 def _fuse_sum(u: DataFrame, id_col: str) -> DataFrame:
     """``SUM(part)`` per (query_id, id) over the union'd branch parts,
-    shuffled ONCE by ``query_id`` so the aggregate's clustered
-    distribution on (query_id, id) AND the re-rank window's distribution
-    on (query_id) are both satisfied by the same exchange — one Exchange
-    instead of two in every fusion plan (guide §2.4: operations keyed
-    compatibly can share one exchange; hash(query_id) co-locates equal
-    (query_id, id) pairs). Losing the map-side partial aggregate is free
-    here BY CONSTRUCTION: the input is the union of ranked branch
-    results, bounded at nq × Σ per-branch limits rows at any corpus
-    scale — it is never a wide stream."""
-    return (u.repartition("query_id")
+    read in ONE partition (``coalesce(1)``): a single partition satisfies
+    both the aggregate's clustered distribution on (query_id, id) and the
+    re-rank window's on (query_id), so neither needs an exchange — at any
+    nq, and a one-query request's branches already end in one partition.
+    Losing parallelism is free here BY CONSTRUCTION: the input is the
+    union of ranked branch results, bounded at nq × Σ per-branch limits
+    rows at any corpus scale — it is never a wide stream. The coalesce
+    is narrow, so the branches' own stages before their exchanges or
+    take-ordered merges keep their parallelism."""
+    return (u.coalesce(1)
             .groupBy("query_id", id_col).agg(F.sum("part").alias("score")))
 
 

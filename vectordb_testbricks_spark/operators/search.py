@@ -4,7 +4,7 @@ Reference semantics (search_permanently.py:137-188, workload.py:221-247):
 ``search(collection, data=[qvec]*nq, anns_field, metric, limit=topk, filter,
 output_fields, group_by_field)`` → per-query ranked hit list (id, distance).
 
-Spark plan shape:
+Spark plan shape of a batch (nq≥2):
     queries (tiny, broadcast) ⨯ base  →  score expression (codegen)
       →  WindowGroupLimit Partial      (map-side top-k per query, pre-shuffle)
       →  Exchange on query_id          (≤ nq × k × num_partitions rows)
@@ -12,15 +12,26 @@ Spark plan shape:
 
 The two-phase top-k is the 100-TB design point: a naive window over
 ``partitionBy(query_id)`` would shuffle the *entire* scored table into nq
-partitions (catastrophic skew at nq=1). Catalyst's InferWindowGroupLimit
-rewrite (Spark 3.5+) turns the declarative ``row_number() <= k`` filter into
-exactly the two-phase plan: a *Partial* group-limit prunes each map
-partition to k rows per query before the exchange, so the shuffle carries at
-most nq × k × num_partitions rows. (An earlier hand-rolled
-spark_partition_id() local window bought the same pruning at the cost of an
-extra full hash shuffle + sort — measured 2× slower at the reference's
+partitions. Catalyst's InferWindowGroupLimit rewrite (Spark 3.5+) turns
+the declarative ``row_number() <= k`` filter into exactly the two-phase
+plan: a *Partial* group-limit prunes each map partition to k rows per
+query before the exchange, so the shuffle carries at most
+nq × k × num_partitions rows. (An earlier hand-rolled
+spark_partition_id() local window bought the same pruning at the cost of
+an extra full hash shuffle + sort — measured 2× slower at the reference's
 top_k=15000 operating point; plan guards now pin the native rewrite
 instead.)
+
+Plan shape of one query (a one-row local query side, the reference's
+ad-hoc serving request):
+    base  →  score expression against the query vector as a literal
+      →  TakeOrderedAndProject(k)      (per-partition top-k, merged in one
+                                        task, emitted in rank order)
+      →  rank = position in that one partition
+
+There is nothing to broadcast and no query_id to shuffle by: the query
+row is read on the driver without a job, and a warm request on a cached
+collection runs one Spark job (the batch shape runs three).
 
 Exact brute-force is the *declared* semantics (the correctness oracle);
 the IVF index in ``ann_index.py`` is the opt-in approximate physical path,
@@ -53,9 +64,10 @@ def local_relation(spark, rows: list[tuple],
     on the driver (up to ``spark.sql.execution.arrow.localRelationThreshold``,
     48 MB by default; larger tables are parallelized). The values cross as
     Arrow buffers, so doubles arrive bit-exact (``-0.0``, NaN, extreme
-    magnitudes) with no literal parsing, and the columns stay relation
-    attributes: a ``query_id`` here is never a foldable literal, so top-k
-    windows keep their partition spec."""
+    magnitudes) with no literal parsing. A batch's columns stay relation
+    attributes, so its top-k windows keep query_id as their partition
+    spec; a one-row relation is read back on the driver, still without a
+    job, and scored as a literal (see :func:`knn_search`)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     if isinstance(schema, str):
@@ -69,7 +81,11 @@ def local_relation(spark, rows: list[tuple],
 
 
 def queries_df(spark, vectors: list[list[float]]) -> DataFrame:
-    """Build the (query_id, qvec) side from literal query vectors."""
+    """Build the (query_id, qvec) side from literal query vectors, as a
+    driver-local relation (:func:`local_relation`). One vector makes the
+    one-query side that :func:`knn_search` scores as a literal with a
+    take-ordered top-k; two or more make a batch, broadcast and ranked
+    per query."""
     return local_relation(
         spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(vectors)],
@@ -109,32 +125,69 @@ def prepare_search_pool(base: DataFrame, query_sides: list[DataFrame],
 
 
 def _ranked(scored: DataFrame, id_col: str, asc: bool, k: int,
-            extra_partition: list[str] | None = None) -> DataFrame:
-    """Per-query top-k via a ranked window.
+            single: bool = False) -> DataFrame:
+    """Per-query top-k of ``scored`` (query_id, id, ..., score), numbered
+    1..k in a ``rank`` column, ties broken by id ascending.
 
-    The scale path is Catalyst's WindowGroupLimit rewrite (Spark 3.5+,
-    InferWindowGroupLimit): a ``row_number() <= k`` filter over this window
-    plans as a *Partial* group-limit on the map side — each input partition
-    forwards at most k rows per query into the exchange — followed by a
-    Final group-limit after it. That is the two-phase top-k; expressing it
-    declaratively (instead of a hand-rolled spark_partition_id() local
-    window, which this replaces) saves a whole extra hash shuffle + sort
-    and lets the rewrite skip the prune when k exceeds the partition size.
-    Guarded by tests/test_plans.py (partial group-limit below the
-    exchange)."""
+    A batch (nq≥2) ranks through a window partitioned by query_id.
+    Catalyst's WindowGroupLimit rewrite (Spark 3.5+, InferWindowGroupLimit)
+    plans its ``row_number() <= k`` filter as a *Partial* group-limit on
+    the map side — each input partition forwards at most k rows per query
+    into the exchange — and a Final group-limit after it: the two-phase
+    top-k, guarded by tests/test_plans.py (partial group-limit below the
+    exchange).
+
+    ``single`` (the caller's query side holds exactly one query, so
+    query_id is one literal) takes the top k through Catalyst's
+    take-ordered limit instead: ``orderBy(score, id).limit(k)`` plans as
+    ``TakeOrderedAndProject``, a per-partition top-k merged in one task,
+    with no exchange keyed by query_id. That operator emits its k rows as
+    one partition in sort order (its declared output ordering), so a
+    row's position there is its rank: ``monotonically_increasing_id()``
+    of partition 0 counts 0..k-1. No window numbers them — an
+    unpartitioned window logs "No Partition Defined" on every execution.
+    A take-ordered limit cannot rank per query, so a batch never takes
+    this path."""
     # NULL scores never rank: order NULLS LAST in BOTH directions (a bare
     # .asc() is NULLS FIRST — a corrupt row would rank #1 under L2), and
-    # drop them ABOVE the window, where the predicate references the
+    # drop them ABOVE the ranking, where the predicate references the
     # projected attribute and cannot be pushed back into the join to
     # re-evaluate the metric expression (the r07 2× regression; filters
-    # on non-partition columns do not push through a Window).
-    order = [F.col("score").asc_nulls_last() if asc
-             else F.col("score").desc_nulls_last(),
+    # on non-partition columns do not push through a Window or a Limit).
+    score = F.col("score")
+    order = [score.asc_nulls_last() if asc else score.desc_nulls_last(),
              F.col(id_col).asc()]
-    part = ["query_id", *(extra_partition or [])]
-    w = Window.partitionBy(*part).orderBy(*order)
+    if single:
+        return (scored.orderBy(*order).limit(k).filter(score.isNotNull())
+                .withColumn("rank", (F.monotonically_increasing_id() + 1)
+                            .cast("int")))
+    w = Window.partitionBy("query_id").orderBy(*order)
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter((F.col("rank") <= k) & F.col("score").isNotNull()))
+            .filter((F.col("rank") <= k) & score.isNotNull()))
+
+
+def _single_query(queries: DataFrame) -> Column | None:
+    """The query side's only row as one struct literal, when ``queries``
+    is a one-row driver-local relation — the ``LocalRelation`` that
+    :func:`local_relation` and :func:`queries_df` build — else None.
+
+    The row is read from the analyzed plan on the driver, so no Spark job
+    runs. The literal holds the relation's own internal row, so every
+    double stays bit-exact (``-0.0``, NaN, ±Infinity, subnormals) with
+    no SQL text to parse and a fixed handful of py4j calls per request,
+    not one per element. Catalyst folds the literal's fields into the
+    scoring expression."""
+    plan = queries._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LocalRelation":
+        return None
+    rows = plan.data()
+    if rows.size() != 1:
+        return None
+    spark = queries.sparkSession
+    literal, column = session_memo(spark, ("literal_column",), lambda: (
+        spark._jvm.org.apache.spark.sql.catalyst.expressions.Literal,
+        spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column))
+    return Column(column(literal(rows.apply(0).copy(), plan.schema())))
 
 
 def knn_score(spark, metric: str, vec_col: str) -> tuple[Column, bool]:
@@ -156,6 +209,13 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
 
     ``queries`` must have (query_id, qvec). Returns
     (query_id, <id_col>, [output_fields...], score, rank) with rank 1..k.
+
+    A one-row driver-local ``queries`` (:func:`queries_df` of one vector)
+    is one query: its row is read on the driver, the vector is scored as a
+    literal and the top k is a take-ordered limit (:func:`_ranked`).
+    Any other query side — a batch, or one derived from a table, as in
+    :func:`search_by_pk` — is broadcast and ranked per query. Grouping
+    always takes the broadcast shape, since it ranks through windows.
 
     Grouping search (group_by != None): top ``group_size`` hits per
     (query, group), then the best-``k`` *groups* per query, matching Milvus
@@ -179,22 +239,33 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
         base = base.filter(pred)  # pre-filter before ranking (V2)
     score, asc = knn_score(base.sparkSession, metric, vec_col)
     keep = list(dict.fromkeys([id_col, *(output_fields or []), *gb]))
-    # nullable vectors (3.0 roadmap §4) never rank. Both relation-side null
-    # checks are cheap per-row predicates evaluated BEFORE the join: the
-    # base side drops stored-NULL vectors, the (tiny) queries side drops
-    # NULL query vectors — e.g. search_by_pk on a PK whose stored vector is
-    # NULL. r07 filtered score.isNotNull() AFTER scoring instead; predicate
-    # pushdown folded that into the join condition, and higher-order scores
-    # are never CSE'd, so the whole cosine aggregate evaluated TWICE per
-    # (row × query) — the measured 0.87s → 1.7s batched-nq16 regression
-    # (plan-guarded now). Residual NULL-score sources the side filters
-    # can't see (NULL vector *elements*, 0/0 under COSINE) are excluded
-    # above the window in _ranked, where the predicate references the
-    # projected attribute and cannot push back through the Window.
-    scored = (base.filter(F.col(vec_col).isNotNull())
-              .crossJoin(F.broadcast(
-                  queries.filter(F.col("qvec").isNotNull())))
-              .select("query_id", *keep, score.alias("score")))
+    # grouping ranks through windows partitioned by query_id, which a
+    # literal query_id would fold away
+    q = None if gb else _single_query(queries)
+    if q is None:
+        # nullable vectors (3.0 roadmap §4) never rank. Both relation-side
+        # null checks are cheap per-row predicates evaluated BEFORE the
+        # join: the base side drops stored-NULL vectors, the (tiny)
+        # queries side drops NULL query vectors — e.g. search_by_pk on a
+        # PK whose stored vector is NULL. r07 filtered score.isNotNull()
+        # AFTER scoring instead; predicate pushdown folded that into the
+        # join condition, and higher-order scores are never CSE'd, so the
+        # whole cosine aggregate evaluated TWICE per (row × query) — the
+        # measured 0.87s → 1.7s batched-nq16 regression (plan-guarded
+        # now). Residual NULL-score sources the side filters can't see
+        # (NULL vector *elements*, 0/0 under COSINE) are excluded above
+        # the window in _ranked, where the predicate references the
+        # projected attribute and cannot push back through the Window.
+        scored = (base.filter(F.col(vec_col).isNotNull())
+                  .crossJoin(F.broadcast(
+                      queries.filter(F.col("qvec").isNotNull())))
+                  .select("query_id", *keep, score.alias("score")))
+    else:
+        # one query needs no side filters: a NULL stored or query vector
+        # scores NULL, and _ranked drops NULL scores above the limit
+        scored = (base.withColumns({"query_id": q["query_id"],
+                                    "qvec": q["qvec"]})
+                  .select("query_id", *keep, score.alias("score")))
     if gb:
         # best `group_size` hits per (query, group) — the group key spreads
         # the window shuffle evenly, no skew concentration. NULLS LAST +
@@ -216,7 +287,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
             *[F.col(g).asc() for g in gb])
         return (best.withColumn("group_rank", F.dense_rank().over(rw))
                 .filter(F.col("group_rank") <= k).drop("_gs"))
-    return _ranked(scored, id_col, asc, k)
+    return _ranked(scored, id_col, asc, k, single=q is not None)
 
 
 def search_by_pk(base: DataFrame, pks: list, vec_col: str, id_col: str,
